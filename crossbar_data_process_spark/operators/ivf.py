@@ -545,7 +545,8 @@ def write_assigned_corpus(
     """The 100 TB silver layout: assign every vector to its list ONCE (a
     pure projection — no join) and write partitioned BY the cluster id.
     Probe-time reads then touch only the probed lists' directories (static
-    or dynamic partition pruning) instead of scanning the corpus.
+    partition pruning, :func:`ivf_topk_assigned`) instead of scanning the
+    corpus.
 
     ``stream_seed_batch_id`` writes the STREAMED layout instead —
     ``(cluster, __batch_id=<seed>)`` — so a streaming sink
@@ -699,11 +700,21 @@ def ivf_topk_assigned(
     quantized: bool = False,
 ) -> DataFrame:
     """IVF top-k over a pre-assigned, cluster-partitioned corpus (see
-    :func:`write_assigned_corpus`): the probe join keys on the PARTITION
-    column, so Spark's dynamic partition pruning restricts the scan to the
-    probed lists — the I/O is ≈ nprobe/nlist of the corpus, not a full
-    scan followed by a filter (pinned in tests/test_ivf_ann.py by the
-    ``dynamicpruning`` marker in the scan node).
+    :func:`write_assigned_corpus`). The probe lists are chosen on the
+    DRIVER: the queries are the small, driver-sized side (they were the
+    broadcast side of the old probe join), so they are collected, and
+    :func:`_driver_probe_lists` picks each query's ``nprobe`` lists with
+    :func:`_probe_list`'s exact arithmetic. The silver read then names
+    only the probed lists' directories — static partition pruning, no
+    runtime filter (pinned in tests/test_ivf_ann.py by the scan's file
+    index) — so the I/O is ≈ nprobe/nlist of the corpus, and the plan
+    carries no nlist×dim centroid literal and no broadcast join: each
+    corpus row meets the queries probing its list through ONE parsed
+    literal (:func:`_probing_queries`).
+
+    Query vectors must be non-NULL arrays of ``dim`` non-NULL numbers
+    (NaN/inf components pick lists exactly as ``_probe_list`` would);
+    anything else raises ValueError instead of probing arbitrary lists.
 
     ``quantized=True`` reads an int8 silver layout (4x less probe I/O) and
     ranks against the raw codes — cosine is scale-invariant, so qscale
@@ -721,23 +732,28 @@ def ivf_topk_assigned(
         read_assigned_silver,
     )
 
-    corpus = read_assigned_silver(spark, path).select(
+    q = queries.select(id_col, vec_col)
+    rows = q.collect()
+    probes = _driver_probe_lists([r[1] for r in rows], centroids, nprobe)
+    corpus = read_assigned_silver(
+        spark, path, clusters={c for p in probes for c in p}
+    ).select(
         F.col(id_col).alias("neighbor_id"),
         F.col("qvec" if quantized else vec_col).alias("cv"),
         F.col("cluster").cast("int").alias("cluster"),
     )
-    probes = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(
-            _probe_list(F.col(vec_col), centroids, nprobe)
-        ).alias("cluster"),
+    matches = _probing_queries(
+        [r[0] for r in rows], [r[1] for r in rows], probes,
+        q.schema[id_col].dataType,
     )
     scored = (
-        corpus.join(F.broadcast(probes), "cluster")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
-        .select("query_id", "neighbor_id", "cosine")
+        corpus.select("neighbor_id", "cv", F.explode(matches).alias("q"))
+        .filter(F.col("neighbor_id") != F.col("q.query_id"))
+        .select(
+            F.col("q.query_id").alias("query_id"),
+            "neighbor_id",
+            cosine(F.col("q.qv"), F.col("cv")).alias("cosine"),
+        )
     )
     return top_k_per_group(
         scored,
@@ -746,6 +762,34 @@ def ivf_topk_assigned(
         k,
         rank_col="rnk",
     )
+
+
+def _probing_queries(ids, vecs, probes, id_type) -> Column:
+    """Per corpus row, the array of (query_id, qv) structs whose probe
+    list holds the row's ``cluster``, from two literals: for each list id
+    the indices of the queries probing it, and the queries themselves
+    (ids in the id column's type, vectors as doubles). Each is ONE JSON
+    string that ``from_json`` parses once, when the optimizer folds it:
+    the same values as SQL literals would be analysed node by node — 5 s
+    for 1000 × 64 queries. ``repr``-exact floats and NaN/±Infinity
+    round-trip through JSON unchanged."""
+    import json
+
+    n_lists = 1 + max((c for p in probes for c in p), default=-1)
+    by_list: list[list[int]] = [[] for _ in range(n_lists)]
+    for qi, p in enumerate(probes):
+        for c in p:
+            by_list[c].append(qi)
+    strict = {"mode": "FAILFAST"}
+    lists = F.from_json(
+        F.lit(json.dumps(by_list)), "array<array<int>>", strict
+    )
+    qlit = F.from_json(
+        F.lit(json.dumps([{"query_id": i, "qv": v} for i, v in zip(ids, vecs)])),
+        f"array<struct<query_id:{id_type.simpleString()},qv:array<double>>>",
+        strict,
+    )
+    return F.transform(F.get(lists, F.col("cluster")), lambda qi: qlit[qi])
 
 
 class TwoLevelQuantizer:
@@ -1206,6 +1250,47 @@ def _probe_list(vec: Column, centroids: list[list[float]], nprobe: int) -> Colum
     return F.transform(
         F.slice(F.array_sort(scored), 1, nprobe), lambda s: s["j"]
     )
+
+
+def _driver_probe_lists(
+    vecs: list, centroids: list[list[float]], nprobe: int
+) -> list[list[int]]:
+    """Driver twin of :func:`_probe_list`, one probe list per vector,
+    equal to it element for element: each score is the same left-to-right
+    double sum from 0.0 of component products (column-wise ``+=``, never
+    a BLAS dot, whose blocked summation rounds differently), and lists
+    are ordered by (−score, id) under Spark's double ordering — NaN above
+    every number, −0.0 equal to 0.0. A NULL vector, a NULL component or
+    a length other than the centroids' dim raises ValueError: in Spark
+    those score NULL and probe arbitrary lists."""
+    import numpy as np
+
+    if nprobe < 0:
+        raise ValueError(f"nprobe must be >= 0, got {nprobe}")
+    cents = np.asarray(centroids, dtype=np.float64)
+    dim = cents.shape[1]
+    for v in vecs:
+        if v is None or len(v) != dim or any(x is None for x in v):
+            raise ValueError(
+                f"IVF probe expects query vectors of {dim} non-NULL "
+                f"numbers, got "
+                f"{'NULL' if v is None else f'{len(v)}: {v!r:.80}'}"
+            )
+    out: list[list[int]] = []
+    # bounded driver memory: ≤ 2^22 scores per block of queries
+    step = max(1, (1 << 22) // len(cents))
+    for lo in range(0, len(vecs), step):
+        qs = np.asarray(vecs[lo : lo + step], dtype=np.float64)
+        scores = np.zeros((len(qs), len(cents)))
+        with np.errstate(all="ignore"):  # inf/NaN are IEEE, as in Spark
+            for d in range(dim):
+                scores += qs[:, d, None] * cents[None, :, d]
+        neg = -scores
+        nan = np.isnan(neg)
+        neg[nan] = 0.0
+        ids = np.broadcast_to(np.arange(len(cents)), neg.shape)
+        out += np.lexsort((ids, neg, nan), axis=-1)[:, :nprobe].tolist()
+    return out
 
 
 def ivf_topk(

@@ -1610,8 +1610,8 @@ def q27_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q54_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION silver-layout path, not the in-memory shortcut:
     fit → write_assigned_corpus (corpus partitioned by cluster id) →
-    ivf_topk_assigned (probe join keys on the partition column, so the
-    scan is dynamically pruned to the probed lists). nprobe == nlist makes
+    ivf_topk_assigned (probe lists chosen on the driver, so the scan is
+    statically pruned to the probed lists). nprobe == nlist makes
     it exactly brute-force, hash-checked against the same oracle as q27."""
     import atexit
     import os

@@ -6,13 +6,13 @@ per-batch QUANTIZER-DRIFT gauge so a corpus that drifts away from the
 fitted centroids is detected instead of silently degrading recall.
 
 Layout: ``partitionBy(cluster, __batch_id)`` — the FIRST level keeps the
-probe-time dynamic partition pruning of ``write_assigned_corpus`` (reads
-touch only probed lists), the second makes every batch's write land in
-its own leaf partitions so a replayed ``foreachBatch`` (at-least-once
-delivery) atomically replaces exactly its own data: exactly-once silver,
-same contract as the text ingest. ``ivf_topk_assigned`` works on this
-layout unchanged (it selects id/vector/cluster and never reads the batch
-column).
+probe-time static partition pruning of ``write_assigned_corpus`` (reads
+list only the probed lists' leaves), the second makes every batch's
+write land in its own leaf partitions so a replayed ``foreachBatch``
+(at-least-once delivery) atomically replaces exactly its own data:
+exactly-once silver, same contract as the text ingest.
+``ivf_topk_assigned`` works on this layout unchanged (it selects
+id/vector/cluster and never reads the batch column).
 
 Drift gauge (scale-correct monitoring): ``mean_top1`` — the mean cosine
 between a batch's unit vectors and their ASSIGNED centroid — costs one
@@ -40,8 +40,11 @@ scale path").
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from crossbar_data_process_spark.streaming.ingest import (
     BATCH_COL,
@@ -281,7 +284,7 @@ def ivf_ingest_writer(
         # (flat) layout: the mixed tree makes the batch-leaf read set drop
         # the flat rows (the reader now fails loudly on it, but the right
         # place to stop the mixing is before the first write — r11 review)
-        _batched, _flat = _list_silver_leaves(spark, silver_dir)
+        _batched, _flat, _ = _list_silver_leaves(spark, silver_dir)
         if _flat:
             raise ValueError(
                 f"silver at {silver_dir} holds a one-shot "
@@ -677,8 +680,8 @@ def _silver_has_data(spark: SparkSession, silver_dir: str) -> bool:
 
 def _list_silver_leaves(
     spark: SparkSession, silver_dir: str
-) -> tuple[dict[int, dict[int, str]], dict[int, str]]:
-    """ONE listing walk over the silver: ``(batched, flat)`` where
+) -> tuple[dict[int, dict[int, str]], dict[int, str], tuple]:
+    """ONE listing walk over the silver: ``(batched, flat, stamp)`` where
     ``batched`` is ``{cluster: {batch_id: leaf_uri}}`` for the streamed
     ``cluster=/.../__batch_id=`` layout and ``flat`` is
     ``{cluster: dir_uri}`` for cluster directories holding data files
@@ -687,12 +690,16 @@ def _list_silver_leaves(
     compaction-exclusion decision from this single snapshot (each
     cluster directory is one atomic ``listStatus``), instead of mixing
     a file listing taken at one time with ``fs.exists`` probes taken at
-    another (r10 ADVICE)."""
+    another (r10 ADVICE). ``stamp`` identifies the snapshot's contents:
+    every streamed leaf directory and every one-shot data file with its
+    modification time (and the file's length) — a rewrite at the same
+    path changes it, which is what the schema memo keys on."""
     fs, root = _fs_and_path(spark, silver_dir)
     batched: dict[int, dict[int, str]] = {}
     flat: dict[int, str] = {}
+    stamp: list[tuple] = []
     if not fs.exists(root):
-        return batched, flat
+        return batched, flat, ()
     for st in fs.listStatus(root):
         name = st.getPath().getName()
         if not (st.isDirectory() and name.startswith(f"{_CLUSTER_COL}=")):
@@ -707,6 +714,12 @@ def _list_silver_leaves(
                 has_batch = True
             elif leaf.isFile() and not lname.startswith(("_", ".")):
                 has_loose_data = True
+            else:
+                continue
+            stamp.append(
+                (leaf.getPath().toString(), leaf.getModificationTime(),
+                 leaf.getLen())
+            )
         if has_batch and has_loose_data:
             # a one-shot (flat) silver that later received streamed
             # batches: the loose files are REAL rows that the batch-leaf
@@ -724,13 +737,37 @@ def _list_silver_leaves(
             )
         if not has_batch:
             flat[c] = st.getPath().toString()
-    return batched, flat
+    return batched, flat, tuple(sorted(stamp))
+
+
+# silver_dir -> (listing stamp, inferred schema): schema inference is a
+# Spark job on every parquet read, and a probe reads the same silver over
+# and over. Shared by every caller in the process, which is safe because
+# a hit needs the same listing contents; one entry per path, a new stamp
+# replaces it.
+_SCHEMA_MEMO: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _silver_schema(
+    spark: SparkSession, silver_dir: str, stamp: tuple, paths: list[str]
+) -> StructType:
+    """The schema a read of ALL of ``paths`` infers, memoised on the
+    listing ``stamp`` — a pruned read then gets the same columns and
+    types as a full one, and a silver rewritten at the same path (a new
+    stamp) is inferred afresh."""
+    hit = _SCHEMA_MEMO.get(silver_dir)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    schema = spark.read.option("basePath", silver_dir).parquet(*paths).schema
+    _SCHEMA_MEMO[silver_dir] = (stamp, schema)
+    return schema
 
 
 def read_assigned_silver(
     spark: SparkSession,
     silver_dir: str,
     exclude_batch_id: int | None = None,
+    clusters: Iterable[int] | None = None,
 ) -> DataFrame:
     """The streamed silver without its replay bookkeeping column — same
     shape ``write_assigned_corpus`` produces (``ivf_topk_assigned`` needs
@@ -755,10 +792,17 @@ def read_assigned_silver(
     ``exclude_batch_id`` drops one batch's own partitions before the
     bookkeeping column is removed — the replay-safety view a
     ``foreachBatch`` re-run needs when checking its batch against
-    everything ALREADY landed (its own previous attempt must not count)."""
+    everything ALREADY landed (its own previous attempt must not count).
+
+    ``clusters`` restricts the read to those lists' leaves (static
+    partition pruning — the scan's file index names only their
+    directories; a listed cluster with no rows reads as empty). The
+    exactly-once exclusions apply unchanged within them. The schema is
+    inferred once per listing snapshot over the whole silver
+    (:func:`_silver_schema`), so repeated reads launch no schema job."""
     import json
 
-    batched, flat = _list_silver_leaves(spark, silver_dir)
+    batched, flat, stamp = _list_silver_leaves(spark, silver_dir)
     if flat and batched:
         raise ValueError(
             f"IVF silver at {silver_dir} mixes batch-partitioned and "
@@ -779,14 +823,28 @@ def read_assigned_silver(
                 f"exclude_batch_id={exclude_batch_id} cannot be honored; "
                 "read without exclusion, or rebuild as a streamed silver"
             )
-        return spark.read.option("basePath", silver_dir).parquet(
-            *[flat[c] for c in sorted(flat)]
+        paths = [flat[c] for c in sorted(flat)]
+        schema = _silver_schema(spark, silver_dir, stamp, paths)
+        if clusters is not None:
+            paths = [flat[c] for c in sorted(set(clusters) & set(flat))]
+        return (
+            spark.read.schema(schema)
+            .option("basePath", silver_dir)
+            .parquet(*paths)
         )
     if not batched:
         raise ValueError(
             f"IVF silver at {silver_dir} has no landed data partitions "
             f"(no {_CLUSTER_COL}=* leaves to read)"
         )
+    schema = _silver_schema(
+        spark,
+        silver_dir,
+        stamp,
+        [uri for c in sorted(batched) for _, uri in sorted(batched[c].items())],
+    )
+    if clusters is not None:
+        batched = {c: batched[c] for c in set(clusters) & set(batched)}
     manifest = None
     fs, mpath = _fs_and_path(spark, f"{silver_dir}/{_MANIFEST_FILE}")
     if fs.exists(mpath):
@@ -801,7 +859,11 @@ def read_assigned_silver(
         for c in sorted(batched)
         for _, uri in sorted(batched[c].items())
     ]
-    df = spark.read.option("basePath", silver_dir).parquet(*paths)
+    df = (
+        spark.read.schema(schema)
+        .option("basePath", silver_dir)
+        .parquet(*paths)
+    )
     if exclude_batch_id is not None:
         df = df.filter(F.col(BATCH_COL) != int(exclude_batch_id))
     if manifest is not None:

@@ -114,10 +114,35 @@ def test_centroid_save_load_roundtrip(spark, clustered, tmp_path):
     assert {(r.vec_id, r.c) for r in a1} == {(r.vec_id, r.c) for r in a2}
 
 
+def _scanned_cluster_dirs(df) -> set[str]:
+    """The ``cluster=`` directories the plan's file scans list — the
+    static-pruning observable (an unpruned scan lists the silver root or
+    every cluster)."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    dirs = set()
+    for i in range(leaves.size()):
+        roots = leaves.apply(i).relation().location().rootPaths()
+        dirs |= {roots.apply(j).getName() for j in range(roots.size())}
+    return dirs
+
+
+def _probed_cluster_dirs(q, centroids, nprobe: int) -> set[str]:
+    """The lists ``q`` probes, chosen in Spark by ``_probe_list``."""
+    from crossbar_data_process_spark.operators.ivf import _probe_list
+
+    return {
+        f"cluster={c}"
+        for r in q.select(
+            _probe_list(F.col("embedding"), centroids, nprobe).alias("p")
+        ).collect()
+        for c in r.p
+    }
+
+
 def test_assigned_corpus_partition_pruning(spark, clustered, tmp_path):
     """The silver-table scale path: corpus written partitionBy(cluster),
-    probe join keys on the partition column — results identical to the
-    in-memory form AND the scan is dynamically pruned to the probed lists."""
+    probe lists chosen on the driver — results identical to the in-memory
+    form AND the scan's file index lists only the probed lists."""
     from crossbar_data_process_spark.operators.ivf import (
         ivf_topk,
         ivf_topk_assigned,
@@ -138,8 +163,11 @@ def test_assigned_corpus_partition_pruning(spark, clustered, tmp_path):
     assert {(r.query_id, r.neighbor_id, r.rnk) for r in assigned.collect()} == {
         (r.query_id, r.neighbor_id, r.rnk) for r in inmem.collect()
     }
-    plan = assigned._jdf.queryExecution().executedPlan().toString().lower()
-    assert "dynamicpruning" in plan, "probe join must prune corpus partitions"
+    assert _scanned_cluster_dirs(assigned) == _probed_cluster_dirs(q, fitted, 2)
+    one = q.filter(F.col("vec_id") == 0)
+    single = ivf_topk_assigned(spark, path, one, fitted, k=10, nprobe=2)
+    assert _scanned_cluster_dirs(single) == _probed_cluster_dirs(one, fitted, 2)
+    assert len(_scanned_cluster_dirs(single)) == 2
 
 
 def test_ivf_driver_fit_matches_distributed_on_full_sample(spark, clustered):
@@ -178,7 +206,7 @@ def test_ivf_driver_fit_bounded_sample_recalls(spark, clustered):
 def test_quantized_silver_layout_recalls_and_prunes(spark, clustered, tmp_path):
     """IVF + int8: the quantized silver table (4x smaller) must rank almost
     identically to the float layout — per-query top-10 overlap >= 0.9 at the
-    same nprobe — keep the tinyint schema on disk, and keep dynamic
+    same nprobe — keep the tinyint schema on disk, and keep static
     partition pruning (the two scale levers compose)."""
     import pyarrow.parquet as pq
     import glob as _glob
@@ -215,8 +243,7 @@ def test_quantized_silver_layout_recalls_and_prunes(spark, clustered, tmp_path):
     assert sum(overlaps) / len(overlaps) >= 0.85, overlaps
     assert min(overlaps) >= 0.7, overlaps
 
-    plan = quant._jdf.queryExecution().executedPlan().toString().lower()
-    assert "dynamicpruning" in plan
+    assert _scanned_cluster_dirs(quant) == _probed_cluster_dirs(q, fitted, 2)
 
 
 def test_fit_diagnostics_separate_clustered_from_isotropic(spark, clustered):
@@ -602,3 +629,234 @@ def test_nan_vectors_refused_on_both_backends(spark, clustered):
     bad[0][0] = float("nan")
     with pytest.raises(ValueError, match="non-finite"):
         assign_frame_arrow(clustered, "embedding", bad)
+
+
+# ---------- driver-chosen probe lists (ivf_topk_assigned)
+
+from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import strategies as st  # noqa: E402
+
+# ties (repeated and signed-zero values), negative scores, sums whose
+# value depends on the summation order (1e16 ± small terms), overflow to
+# ±inf and NaN (inf·0, inf − inf) all come out of this alphabet
+_component = st.sampled_from(
+    [0.0, -0.0, 1.0, -1.0, 0.1, 3.0, 1e16, -1e16, 1e300, -1e300,
+     float("nan"), float("inf"), float("-inf")]
+)
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
+)
+@given(data=st.data())
+def test_driver_probe_lists_equal_spark_probe_list(spark, data):
+    """_driver_probe_lists is _probe_list evaluated on the driver: same
+    lists in the same order, for double and float32 query arrays and for
+    nprobe anywhere in 0..nlist+2."""
+    from crossbar_data_process_spark.operators.ivf import (
+        _driver_probe_lists,
+        _probe_list,
+    )
+
+    nlist = data.draw(st.integers(1, 6))
+    dim = data.draw(st.integers(1, 8))
+    vec = st.lists(_component, min_size=dim, max_size=dim)
+    cents = data.draw(st.lists(vec, min_size=nlist, max_size=nlist))
+    queries = data.draw(st.lists(vec, min_size=1, max_size=4))
+    nprobe = data.draw(st.integers(0, nlist + 2))
+    for elem in ("double", "float"):
+        rows = sorted(
+            spark.createDataFrame(
+                list(enumerate(queries)), f"id long, v array<{elem}>"
+            )
+            .select("id", "v", _probe_list(F.col("v"), cents, nprobe).alias("p"))
+            .collect()
+        )
+        assert [list(r.p) for r in rows] == _driver_probe_lists(
+            [r.v for r in rows], cents, nprobe
+        ), (elem, cents, [r.v for r in rows], nprobe)
+
+
+def test_driver_probe_lists_keep_spark_summation_order(spark):
+    """Scores are left-to-right sums, as in Spark: for this query the
+    sequential sum against centroid 0 is 7 (each +1 is absorbed by
+    1e16), below centroid 1's 8, while a blocked BLAS dot returns 11-14
+    and would rank them the other way."""
+    from crossbar_data_process_spark.operators.ivf import (
+        _driver_probe_lists,
+        _probe_list,
+    )
+
+    q = [1e16] + [1.0] * 7 + [-1e16] + [1.0] * 7
+    cents = [[1.0] * 16, [0.0, 8.0] + [0.0] * 14]
+    spark_lists = [
+        list(r.p)
+        for r in spark.createDataFrame([(q,)], "v array<double>")
+        .select(_probe_list(F.col("v"), cents, 2).alias("p"))
+        .collect()
+    ]
+    assert spark_lists == _driver_probe_lists([q], cents, 2) == [[1, 0]]
+
+
+def _join_probe_topk(spark, path, queries, centroids, k, nprobe, quantized):
+    """The probe-join form ivf_topk_assigned replaced: probe lists chosen
+    in Spark by _probe_list, broadcast equi-join on the cluster id."""
+    from crossbar_data_process_spark.operators.ivf import _probe_list
+    from crossbar_data_process_spark.operators.similarity import cosine
+    from crossbar_data_process_spark.operators.topk import top_k_per_group
+
+    corpus = spark.read.parquet(path).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("qvec" if quantized else "embedding").alias("cv"),
+        F.col("cluster").cast("int").alias("cluster"),
+    )
+    probes = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        F.explode(_probe_list(F.col("embedding"), centroids, nprobe)).alias(
+            "cluster"
+        ),
+    )
+    scored = (
+        corpus.join(F.broadcast(probes), "cluster")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
+        .select("query_id", "neighbor_id", "cosine")
+    )
+    return top_k_per_group(
+        scored, ["query_id"], [F.desc("cosine"), F.asc("neighbor_id")], k
+    )
+
+
+def test_assigned_topk_equals_probe_join(spark, clustered, tmp_path):
+    """Driver-chosen lists give the probe join's exact rows: float32 and
+    double queries, float and int8-quantized silvers."""
+    from crossbar_data_process_spark.operators.ivf import (
+        ivf_topk_assigned,
+        write_assigned_corpus,
+    )
+
+    fitted = ivf_fit(clustered, dim=32, nlist=8, iters=2)
+    q32 = clustered.filter(F.col("vec_id") % 100 == 7)
+    q64 = q32.withColumn("embedding", F.col("embedding").cast("array<double>"))
+    for quantized in (False, True):
+        path = str(tmp_path / f"silver_{quantized}")
+        write_assigned_corpus(clustered, fitted, path, quantize=quantized)
+        for q in (q32, q64):
+            got = ivf_topk_assigned(
+                spark, path, q, fitted, k=7, nprobe=3, quantized=quantized
+            ).collect()
+            want = _join_probe_topk(spark, path, q, fitted, 7, 3, quantized)
+            assert sorted(map(tuple, got)) == sorted(map(tuple, want.collect()))
+
+
+def test_malformed_query_vectors_fail_loudly(spark, clustered, tmp_path):
+    """A NULL vector, a NULL component or a wrong length would score NULL
+    against every centroid and probe arbitrary lists: refused instead."""
+    from crossbar_data_process_spark.operators.ivf import (
+        ivf_topk_assigned,
+        write_assigned_corpus,
+    )
+
+    fitted = ivf_fit(clustered, dim=32, nlist=8, iters=2)
+    path = str(tmp_path / "silver")
+    write_assigned_corpus(clustered, fitted, path)
+    for bad in (None, [1.0] * 31, [1.0] * 31 + [None]):
+        q = spark.createDataFrame(
+            [(10**6, bad)], "vec_id long, embedding array<double>"
+        )
+        with pytest.raises(ValueError, match="query vectors of 32"):
+            ivf_topk_assigned(spark, path, q, fitted)
+
+
+def test_probe_sees_silver_rewritten_with_new_schema(spark, clustered, tmp_path):
+    """The silver's schema is memoised per listing snapshot: a warm probe
+    launches no schema job, and a silver overwritten at the same path
+    with another schema (float → int8 codes) is read with the new one."""
+    from crossbar_data_process_spark.operators.ivf import (
+        ivf_topk_assigned,
+        write_assigned_corpus,
+    )
+    from crossbar_data_process_spark.streaming.ann_ingest import (
+        read_assigned_silver,
+    )
+
+    fitted = ivf_fit(clustered, dim=32, nlist=8, iters=2)
+    path = str(tmp_path / "silver")
+    q = spark.createDataFrame(
+        clustered.filter(F.col("vec_id") % 300 == 0).collect(),
+        clustered.schema,
+    )
+    st_ = spark.sparkContext.statusTracker()
+
+    def jobs_to_plan(quantized: bool) -> int:
+        before = set(st_.getJobIdsForGroup(None))
+        ivf_topk_assigned(spark, path, q, fitted, k=5, nprobe=2, quantized=quantized)
+        return len(set(st_.getJobIdsForGroup(None)) - before)
+
+    write_assigned_corpus(clustered, fitted, path)
+    assert jobs_to_plan(False) == 2  # query collect + schema inference
+    assert jobs_to_plan(False) == 1  # query collect only
+    write_assigned_corpus(clustered, fitted, path, quantize=True)
+    assert "qvec" in read_assigned_silver(spark, path).columns
+    got = ivf_topk_assigned(
+        spark, path, q, fitted, k=5, nprobe=2, quantized=True
+    ).collect()
+    want = _join_probe_topk(spark, path, q, fitted, 5, 2, True).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def test_assigned_topk_string_ids(spark, clustered, tmp_path):
+    """Query ids ride the parsed literal back in their own type: string
+    ids with quotes and backslashes round-trip, and self-matches are
+    still excluded."""
+    from crossbar_data_process_spark.operators.ivf import (
+        ivf_topk_assigned,
+        write_assigned_corpus,
+    )
+
+    named = clustered.withColumn(
+        "vec_id", F.concat(F.lit("it's\\\\"), F.col("vec_id").cast("string"))
+    )
+    fitted = ivf_fit(clustered, dim=32, nlist=8, iters=2)
+    path = str(tmp_path / "silver")
+    write_assigned_corpus(named, fitted, path)
+    q = named.filter(F.col("vec_id").endswith("00"))
+    got = ivf_topk_assigned(spark, path, q, fitted, k=4, nprobe=2).collect()
+    want = _join_probe_topk(spark, path, q, fitted, 4, 2, False).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert got and all(r.query_id.startswith("it's\\\\") for r in got)
+    assert all(r.query_id != r.neighbor_id for r in got)
+
+
+def test_probing_queries_literal_is_exact(spark):
+    """The query literal carries every double bit for bit — signed zero,
+    subnormals, NaN, ±inf, float32 values — plus ids of the id column's
+    type, and maps each list id to exactly the queries probing it (none
+    for an unprobed list, inside or past the probed range)."""
+    import struct
+
+    from pyspark.sql.types import LongType
+
+    from crossbar_data_process_spark.operators.ivf import _probing_queries
+
+    vecs = [
+        [-0.0, 5e-324, float("nan"), float("inf")],
+        [float("-inf"), 0.1, 1e308, float(np.float32(0.3))],
+    ]
+    matches = _probing_queries([7, -2**63], vecs, [[2, 0], [2]], LongType())
+    rows = (
+        spark.range(5)
+        .select(F.col("id").cast("int").alias("cluster"))
+        .select("cluster", F.explode(matches).alias("q"))
+        .collect()
+    )
+    bits = lambda v: [struct.pack("<d", x) for x in v]
+    got = sorted((r.cluster, r.q.query_id, tuple(bits(r.q.qv))) for r in rows)
+    want = sorted(
+        [(0, 7, tuple(bits(vecs[0]))), (2, 7, tuple(bits(vecs[0]))),
+         (2, -2**63, tuple(bits(vecs[1])))]
+    )
+    assert got == want

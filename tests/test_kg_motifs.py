@@ -203,3 +203,84 @@ def test_chain_frontier_intermediate_bounded(spark):
         chain_frontier([e1, e2], score="s", aggregate_hops=False).count()
         == fan * fan
     )
+
+
+# ---------- plan and job pins: one source-key exchange per chain
+
+def _parquet_hops(spark, tmp_path):
+    """3 hops read from parquet, so their sizes are known at planning and
+    each is broadcastable — the shape of the gold edge tables."""
+    hops = []
+    for i, rows in enumerate(
+        [
+            [("d1", "t1", 0.5), ("d1", "t2", 1.0), ("d2", "t1", 0.3)],
+            [("t1", "p1", 0.8), ("t2", "p1", 0.5), ("t2", "p2", 0.5)],
+            [("p1", "x1", 1.0), ("p1", "x2", 0.1), ("p2", "x2", 0.7)],
+        ]
+    ):
+        path = str(tmp_path / f"hop{i}")
+        spark.createDataFrame(rows, "src string, dst string, s double").write.parquet(
+            path
+        )
+        hops.append(spark.read.parquet(path))
+    return hops
+
+
+def _exchanges_and_jobs(spark, df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    rows = sorted(map(tuple, df.collect()))
+    jobs = len(set(st.getJobIdsForGroup(None)) - before)
+    return (
+        plan.count("Exchange hashpartitioning"),
+        plan.count("BroadcastExchange"),
+        jobs,
+        rows,
+    )
+
+
+def test_chain_over_broadcast_hops_runs_one_exchange(spark, tmp_path):
+    """Over broadcastable hops the folded 3-hop chain repartitions on the
+    source once; both folds' worth of grouping, the later hop join, the
+    endpoint aggregation and the top-k window reuse it: 1 shuffle and 2
+    broadcasts — 4 jobs. The 2-hop form keeps 1 broadcast + 1 shuffle."""
+    from crossbar_data_process_spark.plans.kg import chain_paths
+
+    e1, e2, e3 = _parquet_hops(spark, tmp_path)
+    chain = lambda: chain_paths([e1, e2, e3], score="s", k=2, aggregate_hops=True)
+    _exchanges_and_jobs(spark, chain())  # warm-up: codegen, first-use jobs
+    shuffles, broadcasts, jobs, rows = _exchanges_and_jobs(spark, chain())
+    assert (shuffles, broadcasts, jobs) == (1, 2, 4)
+    assert rows == [
+        ("d1", "x1", 2, 0.5, 1),
+        ("d1", "x2", 3, 0.35, 2),
+        ("d2", "x1", 1, 0.24, 1),
+        ("d2", "x2", 1, 0.024, 2),
+    ]
+    two = two_hop_paths(
+        e1.withColumnRenamed("dst", "mid"), e2.withColumnRenamed("src", "mid"), k=3
+    )
+    assert _exchanges_and_jobs(spark, two)[:2] == (1, 1)
+
+
+def test_forced_sort_merge_chain_no_more_exchanges(spark, tmp_path):
+    """With broadcasts off every hop join shuffles both sides; the source
+    repartition must still not add exchanges over the shape it replaced,
+    which folded after every hop (8 exchanges folded, 5 unfolded)."""
+    from crossbar_data_process_spark.plans.kg import chain_paths
+
+    hops = _parquet_hops(spark, tmp_path)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        folded = _exchanges_and_jobs(
+            spark, chain_paths(hops, score="s", k=2, aggregate_hops=True)
+        )
+        unfolded = _exchanges_and_jobs(spark, chain_paths(hops, score="s", k=2))
+    finally:
+        spark.conf.set(key, old)
+    assert folded[1] == unfolded[1] == 0
+    assert folded[0] <= 8 and unfolded[0] <= 5
+    assert folded[3] == unfolded[3]
