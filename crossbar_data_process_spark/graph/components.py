@@ -1,10 +1,12 @@
 """Connected components via iterative min-label propagation (the GraphX/
 Pregel algorithm expressed as DataFrame joins).
 
-Each node starts labeled with its own id; every iteration each node adopts
+Each node starts labeled with its own id; every superstep each node adopts
 the min label among itself and its neighbors; stop when no label changes.
-Per iteration: one shuffle keyed on node id (groupBy min), one broadcast-or-
-shuffle join labels⋈edges. Converges in O(diameter) iterations — large-
+Only labels that changed in the previous superstep send messages (labels
+only decrease, so an unchanged label has already reached its neighbors).
+Per superstep: one shuffle keyed on node id (groupBy min), one broadcast-or-
+shuffle join labels⋈edges. Converges in O(diameter) supersteps — large-
 diameter graphs would want the alternating small-star/large-star algorithm;
 biomedical KGs and similarity graphs are low-diameter, so plain propagation
 is the right trade.
@@ -15,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crossbar_data_process_spark.graph.pregel import supersteps
+
 
 def connected_components(
     nodes: DataFrame,
@@ -23,7 +27,6 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iters: int = 30,
-    checkpoint_every: int = 5,
     driver_max_edges: int | None = 500_000,
     endpoints_in_nodes: bool = False,
 ) -> DataFrame:
@@ -61,13 +64,8 @@ def connected_components(
     semi-joins — the probe is then one narrow limit+collect over the
     edge table.
 
-    Cache hygiene (loop path): the superseded iteration's labels are
-    unpersisted only after the new iteration is FULLY materialized
-    (``count()`` — an ``isEmpty`` probe alone computes partitions only up
-    to the first hit), so storage is O(1) in iteration count with no
-    recompute cascade; lineage is truncated with ``localCheckpoint``
-    every ``checkpoint_every`` iterations so long propagation chains
-    don't grow the plan unboundedly.
+    The loop path runs on ``pregel.supersteps``, which owns its cache
+    hygiene.
     """
     if driver_max_edges:
         pruned = edges.select(
@@ -129,44 +127,24 @@ def connected_components(
     ).unionByName(
         edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
     )
-    labels = nodes.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("component")
-    ).persist()
-    prev = labels
-    for i in range(max_iters):
+
+    def step(labels: DataFrame) -> DataFrame:
+        senders = labels.filter(F.col("__changed"))
         neighbor_min = (
-            sym.join(labels, sym["a"] == labels["id"])
-            .groupBy(F.col("b").alias("id2"))
+            sym.join(senders, sym["a"] == senders["id"])
+            .groupBy(F.col("b").alias("id"))
             .agg(F.min("component").alias("nbr_comp"))
         )
-        updated = (
-            labels.join(neighbor_min, labels["id"] == neighbor_min["id2"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_comp"), F.col("component"))
-                ).alias("component"),
-                (F.coalesce(F.col("nbr_comp"), F.col("component")) < F.col("component")).alias(
-                    "__changed"
-                ),
-            )
+        # no message (NULL) or no smaller label: unchanged, not a sender
+        return labels.join(neighbor_min, "id", "left").select(
+            "id",
+            F.least("component", "nbr_comp").alias("component"),
+            (F.col("nbr_comp") < F.col("component")).alias("__changed"),
         )
-        if (i + 1) % checkpoint_every == 0:
-            updated = updated.localCheckpoint(eager=True)
-            changed = not updated.filter(F.col("__changed")).isEmpty()
-            released, prev = prev, None
-        else:
-            updated = updated.persist()
-            # ONE job doubling as materialization and convergence probe:
-            # counting the changed rows scans EVERY partition of `updated`
-            # into the cache (an isEmpty probe alone stops at the first hit,
-            # leaving most partitions uncomputed — dropping the predecessor
-            # then forces a recompute cascade through uncached lineage).
-            changed = updated.filter(F.col("__changed")).count() > 0
-            released, prev = prev, updated
-        if released is not None:
-            released.unpersist(blocking=False)
-        labels = updated.drop("__changed")
-        if not changed:
-            break
-    return labels
+
+    labels = nodes.select(
+        F.col(id_col).alias("id"),
+        F.col(id_col).alias("component"),
+        F.lit(True).alias("__changed"),
+    )
+    return supersteps(labels, step, max_iters, active="__changed")

@@ -4,8 +4,9 @@ disease.py:231-238, go.py:465-476, ec.py:274-313).
 ``transitive_closure`` computes ancestor→descendant reachability by iterated
 join (doubling would halve iterations; linear join keeps per-step size
 bounded for shallow ontologies, which is the real workload: GO/MONDO depth
-≈ 15). Each iteration: newfrontier = frontier ⋈ edges, shuffle on the join
-key only; results accumulate via distinct union.
+≈ 15). The closure is one frame whose ``__new`` flag marks the frontier:
+each superstep extends only the frontier by one edge (shuffle on the join
+key only) and appends the pairs the closure lacks as the next frontier.
 """
 
 from __future__ import annotations
@@ -13,72 +14,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crossbar_data_process_spark.graph.pregel import supersteps
+
 
 def transitive_closure(
     edges: DataFrame,
     parent_col: str = "parent",
     child_col: str = "child",
     max_iters: int = 20,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """All (ancestor, descendant) pairs reachable via parent→child edges.
 
-    Stops early when an iteration adds no new pairs.
-
-    Cache hygiene: each iteration fully materializes the new closure, then
-    releases the superseded closure and frontier caches, so storage stays
-    O(1) in depth; every ``checkpoint_every`` iterations BOTH the closure and
-    the frontier lineages are truncated with ``localCheckpoint``. The
-    frontier is the recursion carrier — its plan embeds the previous closure,
-    which embeds all prior frontiers, so skipping it makes the logical plan
-    (and driver-side analysis cost) grow exponentially with depth even
-    though every step is cached.
+    Stops early when a superstep adds no new pairs. The frontier lives in
+    the closure frame, so ``pregel.supersteps``' checkpoints truncate its
+    lineage too (a separate frontier's plan would embed the previous
+    closure, which embeds all prior frontiers).
     """
     base = edges.select(
         F.col(parent_col).alias("ancestor"), F.col(child_col).alias("descendant")
     ).distinct()
-    base = base.persist()  # joined every iteration — cached for the whole loop
-    closure = base
-    frontier = base
-    prev_frontier = None
-    for i in range(max_iters):
-        ext = (
-            frontier.alias("f")
-            .join(base.alias("e"), F.col("f.descendant") == F.col("e.ancestor"))
-            .select(
-                F.col("f.ancestor").alias("ancestor"),
-                F.col("e.descendant").alias("descendant"),
-            )
+
+    def step(closure: DataFrame) -> DataFrame:
+        f = closure.filter(F.col("__new")).alias("f")
+        fresh = (
+            f.join(base.alias("e"), F.col("f.descendant") == F.col("e.ancestor"))
+            .select(F.col("f.ancestor").alias("ancestor"), F.col("e.descendant"))
             .distinct()
+            .join(closure, ["ancestor", "descendant"], "left_anti")
         )
-        new = ext.join(closure, ["ancestor", "descendant"], "left_anti").persist()
-        done = new.isEmpty()
-        if prev_frontier is not None:
-            prev_frontier.unpersist(blocking=False)
-            prev_frontier = None
-        if done:
-            new.unpersist(blocking=False)
-            break
-        superseded = closure
-        closure = closure.unionByName(new)
-        if (i + 1) % checkpoint_every == 0:
-            closure = closure.localCheckpoint(eager=True)
-            truncated = new.localCheckpoint(eager=True)
-            new.unpersist(blocking=False)
-            new = truncated
-        else:
-            closure = closure.persist()
-            closure.count()  # materialize before releasing the predecessor
-        if superseded is not base:  # base stays cached for the loop's joins
-            superseded.unpersist(blocking=False)
-        frontier = new
-        prev_frontier = new
-    if closure is not base:
-        base.unpersist(blocking=False)
-    return closure
+        return closure.select(
+            "ancestor", "descendant", F.lit(False).alias("__new")
+        ).unionByName(fresh.withColumn("__new", F.lit(True)))
 
-
-def ancestors_of(closure: DataFrame, node: str) -> DataFrame:
-    """All ancestors of one term (the reference's per-term ontology walks,
-    e.g. GO ancestor queries go.py:465-476)."""
-    return closure.filter(F.col("descendant") == node).select("ancestor")
+    return supersteps(
+        base.withColumn("__new", F.lit(True)), step, max_iters, active="__new"
+    )

@@ -2,7 +2,7 @@
 
 Fixed iteration count for determinism (no float-tolerance convergence test —
 results must be reproducible for the correctness harness). Contributions
-aggregate with a groupBy on dst (one shuffle per iteration); dangling-node
+aggregate with a groupBy on dst (one shuffle per superstep); dangling-node
 mass is redistributed uniformly, matching the standard formulation.
 """
 
@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from crossbar_data_process_spark.graph.pregel import supersteps
 
 
 def pagerank(
@@ -20,28 +22,20 @@ def pagerank(
     dst_col: str = "dst",
     damping: float = 0.85,
     iters: int = 10,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Returns (id, rank), sum of ranks = 1. Deterministic given fixed iters:
     the per-destination contribution sum accumulates in DECIMAL(38,18) so the
     result is independent of partitioning/reduction order (same rule as the
     engine's ``_dsum`` convention), which is what makes a cross-engine SQL
-    oracle possible for an iterative float algorithm.
-
-    Cache hygiene: each iteration materializes its ranks, then releases the
-    superseded iteration's cache (storage stays O(1) in ``iters``, not
-    O(iters)); every ``checkpoint_every`` iterations the lineage is truncated
-    with ``localCheckpoint`` so the plan doesn't grow unboundedly."""
+    oracle possible for an iterative float algorithm. The ``iters``
+    supersteps run on ``pregel.supersteps``, which owns the cache hygiene."""
     n_nodes = nodes.count()
     out_deg = edges.groupBy(F.col(src_col).alias("id")).agg(
         F.count(F.lit(1)).alias("out_deg")
     )
-    ranks = nodes.select(
-        F.col(id_col).alias("id"), F.lit(1.0 / n_nodes).alias("rank")
-    )
     e = edges.select(F.col(src_col).alias("esrc"), F.col(dst_col).alias("edst"))
-    prev = None  # the persisted DataFrame superseded by this iteration
-    for i in range(iters):
+
+    def step(ranks: DataFrame) -> DataFrame:
         with_deg = ranks.join(out_deg, "id", "left")
         contribs = (
             e.join(with_deg, e["esrc"] == with_deg["id"])
@@ -54,15 +48,15 @@ def pagerank(
             )
         )
         # dangling mass stays a 1-row DataFrame broadcast into the update —
-        # no per-iteration driver collect (anti-pattern at scale; the whole
-        # loop remains one lazy plan per iteration)
+        # no per-superstep driver collect (anti-pattern at scale; the whole
+        # loop remains one lazy plan per superstep)
         dangling = with_deg.filter(F.col("out_deg").isNull()).agg(
             F.coalesce(
                 F.sum(F.col("rank").cast("decimal(38,18)")).cast("double"),
                 F.lit(0.0),
             ).alias("__dangling")
         )
-        new_ranks = (
+        return (
             nodes.select(F.col(id_col).alias("id"))
             .join(contribs, "id", "left")
             .crossJoin(F.broadcast(dangling))
@@ -78,17 +72,8 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            # eager localCheckpoint: materializes AND truncates lineage; its
-            # block storage is owned by the checkpointed RDD (released by the
-            # context cleaner when the DataFrame goes out of scope)
-            new_ranks = new_ranks.localCheckpoint(eager=True)
-            released, prev = prev, None
-        else:
-            new_ranks = new_ranks.persist()
-            new_ranks.count()  # materialize BEFORE releasing the predecessor
-            released, prev = prev, new_ranks
-        if released is not None:
-            released.unpersist(blocking=False)
-        ranks = new_ranks
-    return ranks
+
+    ranks = nodes.select(
+        F.col(id_col).alias("id"), F.lit(1.0 / n_nodes).alias("rank")
+    )
+    return supersteps(ranks, step, iters)

@@ -23,6 +23,9 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
+from pyspark.sql import SparkSession
+
 
 def run_concurrently(
     thunks: list[Callable[[], None]], max_workers: int = 4
@@ -32,7 +35,9 @@ def run_concurrently(
     not interrupted mid-write by a sibling's failure, which keeps every
     output either fully written or fully absent per its own commit
     protocol). FIFO scheduling (Spark's default) gives exactly the
-    back-fill behavior the guide describes."""
+    back-fill behavior the guide describes. Each thunk runs with the
+    caller's local properties (job group, scheduler pool), so its jobs
+    are listed under the caller's group."""
     if len(thunks) <= 1:
         for t in thunks:
             t()
@@ -40,7 +45,11 @@ def run_concurrently(
     with ThreadPoolExecutor(
         max_workers=min(max_workers, len(thunks))
     ) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        # one wrap per thunk: each gets its own copy of the properties
+        session = SparkSession.active()
+        futures = [
+            pool.submit(inheritable_thread_target(session)(t)) for t in thunks
+        ]
         first_err: BaseException | None = None
         for f in futures:
             try:

@@ -9,7 +9,9 @@ at production scale).
 from __future__ import annotations
 
 import gc
+import re
 import time
+from pathlib import Path
 
 import pytest
 
@@ -18,6 +20,7 @@ from pyspark.sql import functions as F
 from crossbar_data_process_spark.graph.components import connected_components
 from crossbar_data_process_spark.graph.hierarchy import transitive_closure
 from crossbar_data_process_spark.graph.pagerank import pagerank
+from crossbar_data_process_spark.graph.pregel import CHECKPOINT_EVERY, supersteps
 from crossbar_data_process_spark.operators.mapping import broadcast_map, fallback_map
 
 
@@ -25,13 +28,25 @@ def _storage_entries(spark) -> int:
     return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
 
-def _settled_storage_delta(spark, before: int, timeout_s: float = 20.0) -> int:
+def _quiet_storage_entries(spark) -> int:
+    """Storage entries once earlier tests' unreferenced checkpoint blocks
+    had a chance to be cleaned, so their release can't mask a leak."""
+    for _ in range(3):
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+    return _storage_entries(spark)
+
+
+def _settled_storage_delta(
+    spark, before: int, timeout_s: float = 20.0, at_most: int = 0
+) -> int:
     """Storage-entry delta after giving the async unpersist + ContextCleaner
     a chance to run (non-blocking unpersist and GC-driven checkpoint cleanup
-    are both asynchronous)."""
+    are both asynchronous); stops waiting once the delta is ``at_most``."""
     deadline = time.monotonic() + timeout_s
     delta = _storage_entries(spark) - before
-    while delta > 0 and time.monotonic() < deadline:
+    while delta > at_most and time.monotonic() < deadline:
         gc.collect()
         spark.sparkContext._jvm.System.gc()
         time.sleep(0.5)
@@ -53,7 +68,7 @@ def test_components_30_iters_storage_bounded(spark):
     # the r16 small-graph fast path would otherwise resolve this tiny
     # graph driver-side and exercise nothing
     out = connected_components(
-        nodes, edges, max_iters=30, checkpoint_every=5, driver_max_edges=None
+        nodes, edges, max_iters=30, driver_max_edges=None
     )
     rows = out.collect()
     assert len(rows) == n
@@ -130,7 +145,7 @@ def test_pagerank_storage_bounded_and_converges(spark):
         [(i, (i + 1) % (n - 1)) for i in range(n - 1)], "src int, dst int"
     )
     before = _storage_entries(spark)
-    out = pagerank(nodes, edges, iters=12, checkpoint_every=5)
+    out = pagerank(nodes, edges, iters=12)
     total = out.agg(F.sum("rank").alias("s")).collect()[0]["s"]
     assert abs(total - 1.0) < 1e-9
     assert _settled_storage_delta(spark, before) <= 8
@@ -143,10 +158,82 @@ def test_transitive_closure_storage_bounded(spark):
         [(f"n{i}", f"n{i+1}") for i in range(18)], "parent string, child string"
     )
     before = _storage_entries(spark)
-    out = transitive_closure(edges, max_iters=20, checkpoint_every=5)
+    out = transitive_closure(edges, max_iters=20)
     # closure of a chain of 19 nodes = 19*18/2 pairs
     assert out.count() == 19 * 18 // 2
     assert _settled_storage_delta(spark, before) <= 10
+
+
+def test_supersteps_release_stop_and_one_job_per_superstep(spark):
+    """The shared loop over a narrow step: every row's counter rises by
+    one per superstep until it reaches 5, so supersteps 1-5 change rows
+    and superstep 6 changes nothing — the loop must stop right there
+    (crossing the CHECKPOINT_EVERY-th superstep on the way), release the
+    superseded states, and materialize each non-checkpoint superstep with
+    exactly one job."""
+    assert CHECKPOINT_EVERY == 5
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "pregel-supersteps-pin"
+    marks = []  # group job count when each superstep is planned
+
+    def step(state):
+        marks.append(len(tracker.getJobIdsForGroup(group)))
+        return state.select(
+            "id",
+            F.least(F.col("v") + 1, F.lit(5)).alias("v"),
+            (F.col("v") < 5).alias("__changed"),
+        )
+
+    state = spark.range(64).select("id", F.lit(0).alias("v"))
+    before = _quiet_storage_entries(spark)
+    sc.setJobGroup(group, "supersteps pin")
+    try:
+        out = supersteps(state, step, max_iters=20, active="__changed")
+        marks.append(len(tracker.getJobIdsForGroup(group)))
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(marks) == 6 + 1  # 6 supersteps, then the end mark
+    jobs = [b - a for a, b in zip(marks, marks[1:])]
+    assert [j for i, j in enumerate(jobs, 1) if i % CHECKPOINT_EVERY] == [
+        1
+    ] * 5, jobs
+    assert out.columns == ["id", "v"]
+    assert {r.v for r in out.collect()} == {5}
+    # what stays is the result's cache and the superstep-5 checkpoint its
+    # lineage reads; supersteps 1-4 are released (unreleased: 6 entries)
+    assert _settled_storage_delta(spark, before, at_most=2) <= 2
+
+
+def test_transitive_closure_releases_frontier_at_max_iters(spark):
+    """Stopping at ``max_iters`` (q29 uses 3) must not leave the last
+    frontier persisted next to the returned closure."""
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{i+1}") for i in range(10)], "parent string, child string"
+    )
+    before = _quiet_storage_entries(spark)
+    out = transitive_closure(edges, max_iters=3)
+    # paths of length 1..4 in an 11-node chain
+    assert out.count() == 10 + 9 + 8 + 7
+    assert _settled_storage_delta(spark, before, at_most=1) <= 1
+
+
+def test_cache_policy_lives_in_pregel_only():
+    """Only graph/pregel.py may persist, release or checkpoint: every
+    other graph module states its algorithm as a ``step``."""
+    graph_dir = (
+        Path(__file__).resolve().parent.parent
+        / "crossbar_data_process_spark"
+        / "graph"
+    )
+    calls = re.compile(r"\.(persist|unpersist|localCheckpoint)\(")
+    offenders = [
+        f.name
+        for f in sorted(graph_dir.glob("*.py"))
+        if f.name != "pregel.py" and calls.search(f.read_text())
+    ]
+    assert offenders == []
+    assert calls.search((graph_dir / "pregel.py").read_text())
 
 
 def _spark_plan(df) -> str:
