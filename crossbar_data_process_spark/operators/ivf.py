@@ -306,7 +306,8 @@ def _md5_smallest(train: DataFrame, n: int, total: int | None = None) -> list:
     ``TakeOrderedAndProject``, which ships the top-``n`` of EVERY
     partition to the driver — at n=80k over a 5M-row corpus that is
     partitions×n rows (~1 GB) and kills the job on
-    ``spark.driver.maxResultSize`` (measured r13, ivf_assign_probe).
+    ``spark.driver.maxResultSize`` (measured r13, ``git show
+    8f7ca59:scripts/ivf_assign_probe.py``).
     Instead: md5 is uniform over hex strings, so the n smallest keys of
     N rows all sit below the ``4n/N`` quantile with overwhelming odds —
     pre-filter to that threshold (scan-side, no shuffle), leaving ~4n
@@ -1021,8 +1022,8 @@ def assign_frame_arrow(
     functions — ``transform``/``aggregate``/``array_sort`` run on the
     interpreted ``eval`` path (``SimpleHigherOrderFunction.eval`` +
     ``InterpretedOrdering``, confirmed by jstack under
-    ``scripts/ivf_assign_probe.py``), so every HOF dot product pays
-    per-element boxing: ~13 ms/row at 5M rows / nlist=20000 for the
+    ``git show 8f7ca59:scripts/ivf_assign_probe.py``), so every HOF dot
+    product pays per-element boxing: ~13 ms/row at 5M rows / nlist=20000 for the
     two-level JVM path (2962 s on 32 cores). The same arithmetic as
     chunked numpy matmuls over Arrow batches runs at BLAS speed —
     measured ~50-100× faster end-to-end (BASELINE r13 table) — which is

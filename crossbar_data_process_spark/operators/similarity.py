@@ -599,7 +599,7 @@ def neighbor_pairs_ivf(
     # ~cluster_size candidates, and cosine() would recompute BOTH norms
     # per PAIR — carrying the scalar norm makes each candidate one dot
     # product plus a scalar divide, ~3x less array work on the pair
-    # stage (scripts/semdedup_probe.py). (Not done by pre-dividing into
+    # stage (git show 8f7ca59:scripts/semdedup_probe.py). (Not done by pre-dividing into
     # unit vectors: a transform lambda that captures an outer column
     # miscompiles under self-join attribute dedup — INTERNAL_ERROR
     # ATTRIBUTE_NOT_FOUND on generated-expression sources.)

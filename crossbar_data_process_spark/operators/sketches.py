@@ -55,12 +55,6 @@ def rollup_distinct(
     return sketches.agg(*agg)
 
 
-def sketch_estimate(sketch: Column | str) -> Column:
-    """Point estimate for a single stored sketch cell."""
-    c = F.col(sketch) if isinstance(sketch, str) else sketch
-    return F.hll_sketch_estimate(c)
-
-
 # --------------------------------------------------------------------------
 # Mergeable QUANTILE sketch: log-spaced histogram. The distribution twin of
 # the HLL silver above — persist per-cell bin counts once, answer any

@@ -232,21 +232,6 @@ def _signatures_from_index(idx: DataFrame, num_hashes: int) -> DataFrame:
     return hashed.select("doc", sig.alias("sig"))
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 12,
-) -> DataFrame:
-    """MinHash signature per document: k independent linear permutations over
-    32-bit shingle hashes, min per permutation. Pure Column expressions
-    (transform + array_min) — no UDF, no shuffle."""
-    return _signatures_from_index(
-        _shingle_index(docs, text_col, id_col, n), num_hashes
-    )
-
-
 def _band_buckets(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(doc, band, key) LSH band-bucket memberships from a (doc, sig)
     signature frame: band key = ``rows_per_band`` consecutive min-hashes

@@ -5,7 +5,9 @@ jobs *outside* the query engine: they land raw payloads in a bronze
 directory, and everything after that is ``spark.read``. This package covers
 the Spark-side surface: tabular readers (parquet/csv/json/text with explicit
 schemas), the KEGG-style flat-text record parser as DataFrame expressions,
-and sinks (parquet gold layer, chunked CSV, BioCypher tuple iterator).
+sinks (chunked CSV, BioCypher tuple iterator, training shards), and
+``synthetic.gen_sources``, the deterministic raw tables the composed gold
+build (``plans/gold.py``) runs on.
 """
 
 from crossbar_data_process_spark.sources.readers import (
@@ -15,7 +17,6 @@ from crossbar_data_process_spark.sources.readers import (
 from crossbar_data_process_spark.sources.writers import (
     biocypher_tuples,
     write_chunked_csv,
-    write_gold,
 )
 
 __all__ = [
@@ -23,5 +24,4 @@ __all__ = [
     "read_table",
     "read_testdata",
     "write_chunked_csv",
-    "write_gold",
 ]

@@ -1,6 +1,5 @@
 """Sinks (SURVEY.md §2.1 S6/S7).
 
-- Gold layer: partitioned parquet, the canonical output.
 - Chunked CSV: the reference's memory-bound 100k-rows-per-file writer
   (uniprot.py:115-167) becomes a single ``maxRecordsPerFile`` option — the
   executors stream partitions out; nothing ever holds the whole table.
@@ -27,13 +26,6 @@ def _props_dict(value) -> dict:
     if isinstance(value, Row):
         return value.asDict()
     return dict(value)
-
-
-def write_gold(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
 
 
 def write_chunked_csv(df: DataFrame, path: str, rows_per_file: int = 100_000) -> None:

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Composed LLM training-data build (VERDICT r11 #2): the charter's
 pipeline surfaces chained end-to-end in ONE session — the training-data
-twin of ``scripts/kg_build.py``'s adapter sweep:
+twin of ``plans/gold.py``'s adapter sweep:
 
     distribution gate → curate (quality/lang + decontaminate + exact +
     near-dup text dedup) → SEMANTIC dedup (feature-hash embeddings,

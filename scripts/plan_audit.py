@@ -64,7 +64,7 @@ def main() -> None:
         "row reads 0 exchanges. The sink's executed work is pinned by "
         "tests/test_incremental_dedup.py (per-batch jobs/stages constant "
         "as the index grows) and its wall-clock curve by "
-        "scripts/ingest_probe.py (BASELINE.md).",
+        "git show 8f7ca59:scripts/ingest_probe.py (BASELINE.md).",
         "",
         "| query | exch | bcast | smj | shj | nlj | cart | py | push | oracle |",
         "|---|---|---|---|---|---|---|---|---|---|",

@@ -225,7 +225,7 @@ def test_ingest_per_batch_work_constant_as_index_grows(spark, tmp_path):
     batch-sized joins. Four identically-shaped batches; the later batches
     (bigger index) may not execute more jobs, and at most AQE-level stage
     jitter. The wall-clock version of this curve is
-    scripts/ingest_probe.py (BASELINE.md table)."""
+    ``git show 8f7ca59:scripts/ingest_probe.py`` (BASELINE.md table)."""
     from crossbar_data_process_spark.streaming.ingest import (
         dedup_ingest_writer,
         seed_dedup_index,
