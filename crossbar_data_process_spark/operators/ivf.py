@@ -97,9 +97,10 @@ def checked_vec(vec: Column, dim: int, vec_name: str) -> Column:
     otherwise assigns SILENTLY — Spark treats NaN as greatest and
     NaN = NaN, so ``array_position(scores, array_max(scores))`` lands on
     cluster 0 — poisoning the partitioned silver just as insidiously as
-    a NULL, and diverging from the arrow backend's refusal.
+    a NULL.
 
-    Callers must BIND the result in its own projection before handing it
+    :func:`assign_clusters` binds it for every corpus assignment. Other
+    callers must BIND the result in its own projection before handing it
     to ``ivf_assign`` (the ``__n`` idiom): inside the assign's per-
     centroid transform lambda the guard would re-evaluate once per
     centroid (nlist× per row — the HOF no-CSE trap this repo keeps
@@ -355,10 +356,9 @@ def _numpy_lloyds(x, nlist: int, iters: int) -> list[list[float]]:
     bincount), not a per-cluster mask loop: the loop scans the whole
     sample once PER CLUSTER — O(nlist·N) python — which at the SemDeDup
     production granularity (nlist = 20000, N = 80000 sample) measured
-    ~50 s/iteration and made FIT the scale path's bottleneck once
-    assignment moved to BLAS (r13: 111 s fit vs 25 s assignment at 5M
-    rows). Scatter-add is one pass; summation is per-row in index order
-    — deterministic, same fit in → same centroids out."""
+    ~50 s/iteration (r13: a 111 s fit at 5M rows). Scatter-add is one pass;
+    summation is per-row in index order — deterministic, same fit in →
+    same centroids out."""
     import numpy as np
 
     cents = x[:nlist].copy()
@@ -540,7 +540,6 @@ def write_assigned_corpus(
     diagnostics: dict[str, float] | None = None,
     require_clustered: bool = False,
     two_level: "TwoLevelQuantizer | None" = None,
-    assign_backend: str = "jvm",
     stream_seed_batch_id: int | None = None,
 ) -> None:
     """The 100 TB silver layout: assign every vector to its list ONCE (a
@@ -590,41 +589,17 @@ def write_assigned_corpus(
                 "decision rule); refusing to ship the index"
             )
         metadata = dict(diagnostics, nlist=nlist, dim=dim, regime=regime)
-    # length/NULL-check at the PARTITION-KEY source: a NULL assignment
-    # would land rows under cluster=__HIVE_DEFAULT_PARTITION__ and poison
-    # every later silver read (r11 ADVICE; the PQ path gets the same
-    # check from pq._with_subvecs). Bound in its OWN projection so the
-    # guard runs once per row, not once per centroid inside the assign
-    # transform (r12 review).
     # two_level swaps the O(nlist)-dots-per-row flat assignment for the
-    # O(√nlist) probe-then-score shape (VERDICT r12 #1); the quantizer
-    # must wrap THESE centroids or the stamped identity would certify
-    # assignments made under a different leaf set (assign_with_backend
-    # re-checks; this site keeps the silver-specific message)
-    if two_level is not None and two_level.centroids != centroids:
-        raise ValueError(
-            "two_level quantizer wraps different leaf centroids than the "
-            "ones being stamped on this silver — refusing to write an "
-            "index whose identity metadata would lie"
-        )
-    if assign_backend == "arrow":
-        # Arrow/BLAS projection — the scale-run backend; its python-side
-        # checks (null/length/finiteness) subsume checked_vec, and
-        # skipping the duplicate guarded column halves the vector bytes
-        # crossing the Arrow boundary (r13 review)
-        assigned = assign_with_backend(
-            vectors, vec_col, centroids,
-            two_level=two_level, backend="arrow",
-        )
-    else:
-        bound = vectors.withColumn(
-            "__checked_vec",
-            checked_vec(F.col(vec_col), len(centroids[0]), vec_col),
-        )
-        assigned = assign_with_backend(
-            bound, "__checked_vec", centroids,
-            two_level=two_level, backend="jvm",
-        ).drop("__checked_vec")
+    # O(√nlist) probe-then-score shape (VERDICT r12 #1). assign_clusters
+    # refuses a quantizer over other leaves (the stamped identity would
+    # certify assignments made under a different leaf set) and binds
+    # checked_vec at the PARTITION-KEY source: a NULL assignment would
+    # land rows under cluster=__HIVE_DEFAULT_PARTITION__ and poison every
+    # later silver read (r11 ADVICE; the PQ path gets the same check from
+    # pq._with_subvecs)
+    assigned = assign_clusters(
+        vectors, vec_col, centroids, two_level=two_level
+    )
     if quantize:
         from crossbar_data_process_spark.operators.similarity import (
             quantize_embeddings,
@@ -852,12 +827,7 @@ class TwoLevelQuantizer:
             raise ValueError(f"assign_probes must be >= 1, got {assign_probes}")
         self.centroids = centroids
         self.top = top
-        # Sorted ascending per group (r13 ADVICE): the arrow two-level
-        # kernel's within-group tie-break (first max == smallest leaf id)
-        # assumes ascending member lists; fit_two_level already produces
-        # them sorted, but a hand-constructed quantizer must not silently
-        # diverge from the JVM array_min((-score, id)) rule.
-        self.groups = [sorted(g) for g in groups]
+        self.groups = groups
         self.assign_probes = min(assign_probes, len(top))
 
     def _group_literal(self) -> Column:
@@ -1007,213 +977,57 @@ def fit_two_level(
     )
 
 
-def assign_frame_arrow(
+def assign_clusters(
     df: DataFrame,
     vec_col: str,
     centroids: list[list[float]],
     out_col: str = "cluster",
     two_level: "TwoLevelQuantizer | None" = None,
 ) -> DataFrame:
-    """Coarse assignment as an Arrow-batched BLAS projection
-    (``mapInPandas``) — the 100 TB throughput backend for both the flat
-    and the two-level quantizer.
+    """THE corpus assignment: ``df`` plus ``out_col``, the 0-based list
+    each ``vec_col`` vector is filed under. Every consumer —
+    ``write_assigned_corpus``, the streaming sink, ``neighbor_pairs_ivf``,
+    ``cluster_cap_stats``, ``flag_semantic_dups`` — routes through it, so
+    its guards cannot be dropped at any single call site:
 
-    Why this exists (r13, measured): Spark NEVER codegens higher-order
-    functions — ``transform``/``aggregate``/``array_sort`` run on the
-    interpreted ``eval`` path (``SimpleHigherOrderFunction.eval`` +
-    ``InterpretedOrdering``, confirmed by jstack under
-    ``git show 8f7ca59:scripts/ivf_assign_probe.py``), so every HOF dot
-    product pays per-element boxing: ~13 ms/row at 5M rows / nlist=20000 for the
-    two-level JVM path (2962 s on 32 cores). The same arithmetic as
-    chunked numpy matmuls over Arrow batches runs at BLAS speed —
-    measured ~50-100× faster end-to-end (BASELINE r13 table) — which is
-    exactly the charter's sanctioned drop-to-Arrow case: the built-in
-    operators genuinely cannot express dense linear algebra efficiently.
+    - a centroid with a NaN/inf component is refused with ValueError
+      (centroids can come from ``load_centroids``; Spark orders NaN
+      above every number, so one NaN component would pull rows into
+      that list silently);
+    - a ``two_level`` wrapping DIFFERENT leaves than ``centroids`` is
+      refused (it would partition under an identity the stamps and
+      stats lie about);
+    - each vector passes :func:`checked_vec` (non-NULL, ``dim`` finite
+      components), bound in its own projection — inside the assign's
+      per-centroid transform lambda the guard would re-evaluate once per
+      centroid (the HOF no-CSE trap) — and dropped after assignment.
 
-    Semantics: identical argmax-with-smallest-id-tie-break as
-    ``ivf_assign`` (flat) / ``TwoLevelQuantizer.assign`` (two-level) —
-    max dot product, ties broken to the smallest leaf id; the two-level
-    probe order is score-desc-then-group-id-asc (numpy stable argsort ≡
-    the JVM (−score, id) struct sort). The ONLY divergence surface is
-    float summation order: the JVM folds element-by-element while BLAS
-    sums pairwise/SIMD, so two centroids within ~1 ulp of each other can
-    flip — real fitted centroids are separated by margins enormously
-    wider than that, and the backends agree bit-for-bit on every test
-    corpus (tests/test_ivf_ann.py). Hash-gated registry queries keep the
-    JVM path; this backend is the declared posture for scale runs
-    (probes, ``llm_build --scale``, streaming ANN silvers past ~10M
-    rows).
-
-    Scale shape: a pure projection — no shuffle, no join; per-row result
-    depends only on the row, so partitioning/batching cannot change the
-    output. The centroid matrix ships once per task via the function
-    closure: nlist×dim float64 = 10 MB at nlist=20000 and bounded by the
-    engine's practical nlist ≤ 65536 cap (≤ 32 MB at dim 64) — never
-    data-sized. Rows must carry non-null, dim-length vectors (bind
-    ``checked_vec`` upstream, or let this raise with the same intent)."""
+    ``two_level`` assigns through its broadcast-join ``assign_frame``;
+    otherwise the flat literal-matrix expression :func:`ivf_assign`."""
     import numpy as np
 
-    if two_level is not None and two_level.centroids != centroids:
+    if not np.isfinite(np.asarray(centroids, dtype=np.float64)).all():
         raise ValueError(
-            "two_level quantizer wraps different leaf centroids than the "
-            "ones passed to assign_frame_arrow"
-        )
-    c_mat = np.asarray(centroids, dtype=np.float64)
-    nlist, dim = c_mat.shape
-    # a NaN/inf CENTROID component would silently void its whole block
-    # (flat) or probe group (two-level) from the argmax — NaN falls out
-    # of every strict comparison (r13 review pass 2). The arrow posture
-    # is to refuse degenerate quantizers loudly; the JVM path's NaN
-    # semantics (NaN greatest) stay available for forensics.
-    if not np.isfinite(c_mat).all():
-        raise ValueError(
-            "assign_frame_arrow: centroids contain non-finite components "
-            "— refusing (refit the quantizer; a NaN centroid means the "
-            "fit saw NaN vectors or an empty unit-normalization)"
-        )
-    if two_level is not None:
-        top_mat = np.asarray(two_level.top, dtype=np.float64)
-        group_ids = [np.asarray(g, dtype=np.int64) for g in two_level.groups]
-        leaf_mats = [c_mat[g] for g in group_ids]
-        probes = min(two_level.assign_probes, len(top_mat))
-    # nullable int, matching the JVM paths' cast("int") schema exactly —
-    # silver appends and schema-compare tests must not see a flag diff.
-    # (A fresh StructType: df.schema is cached on the DataFrame and
-    # StructType.add MUTATES in place — appending to it corrupts df's
-    # own column list.)
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    out_schema = StructType(
-        df.schema.fields + [StructField(out_col, IntegerType(), True)]
-    )
-    in_cols = df.columns
-
-    def _stack(pdf) -> "np.ndarray":
-        vecs = pdf[vec_col].to_numpy()
-        try:
-            v = np.stack([np.asarray(x, dtype=np.float64) for x in vecs])
-        except (TypeError, ValueError) as e:
-            raise ValueError(
-                f"assign_frame_arrow: column '{vec_col}' must hold "
-                f"non-null length-{dim} numeric vectors"
-            ) from e
-        # ndim check first: an ALL-NULL batch stacks 0-d nan scalars into
-        # a 1-d array and v.shape[1] would raise an opaque IndexError
-        # (r13 review pass 2)
-        if v.ndim != 2 or v.shape[1] != dim:
-            got = v.shape[1] if v.ndim == 2 else "NULL (vectors are NULL)"
-            raise ValueError(
-                f"assign_frame_arrow: vector length {got} != "
-                f"centroid dim {dim}"
-            )
-        # NaN/inf guard (r13 review): a NaN row would otherwise fall out
-        # of every score comparison and land in a cluster no valid leaf
-        # produces (two-level: int64-max wrapped to -1; flat: silently 0)
-        # — the checked_vec posture is to refuse loudly at the sink, so
-        # the arrow path refuses too
-        if not np.isfinite(v).all():
-            raise ValueError(
-                f"assign_frame_arrow: column '{vec_col}' contains "
-                "non-finite components (NaN/inf) — refusing to assign"
-            )
-        return v
-
-    def _flat(it):
-        # centroid-block chunking bounds the score matrix at
-        # rows×block×8 B (~160 MB at the default 10k-row Arrow batch)
-        block = 2048
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            v = _stack(pdf)
-            n = len(v)
-            best = np.full(n, -np.inf)
-            best_j = np.zeros(n, dtype=np.int64)
-            for s in range(0, nlist, block):
-                scores = v @ c_mat[s : s + block].T
-                bj = scores.argmax(axis=1)  # first max == smallest id
-                bs = scores[np.arange(n), bj]
-                # strict > : earlier block wins ties == global smallest id
-                upd = bs > best
-                best[upd] = bs[upd]
-                best_j[upd] = bj[upd] + s
-            pdf[out_col] = best_j.astype(np.int32)
-            yield pdf
-
-    def _two(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            v = _stack(pdf)
-            n = len(v)
-            top_scores = v @ top_mat.T
-            # stable argsort of -scores: ties keep ascending group id —
-            # the JVM (−score, id) struct-sort order exactly
-            probe = np.argsort(-top_scores, axis=1, kind="stable")[:, :probes]
-            best = np.full(n, -np.inf)
-            best_j = np.full(n, np.iinfo(np.int64).max)
-            for g in range(len(leaf_mats)):
-                rows = np.nonzero((probe == g).any(axis=1))[0]
-                if rows.size == 0:
-                    continue
-                scores = v[rows] @ leaf_mats[g].T
-                bj = scores.argmax(axis=1)
-                bs = scores[np.arange(rows.size), bj]
-                gj = group_ids[g][bj]
-                cur_s, cur_j = best[rows], best_j[rows]
-                # max score, then min leaf id — the array_min((−s, j)) rule
-                upd = (bs > cur_s) | ((bs == cur_s) & (gj < cur_j))
-                r_upd = rows[upd]
-                best[r_upd] = bs[upd]
-                best_j[r_upd] = gj[upd]
-            pdf[out_col] = best_j.astype(np.int32)
-            yield pdf
-
-    fn = _flat if two_level is None else _two
-    # column order is part of the Arrow contract: emit exactly out_schema
-    return df.mapInPandas(
-        lambda it: (pdf[in_cols + [out_col]] for pdf in fn(it)), out_schema
-    )
-
-
-def assign_with_backend(
-    df: DataFrame,
-    vec_col: str,
-    centroids: list[list[float]],
-    out_col: str = "cluster",
-    two_level: "TwoLevelQuantizer | None" = None,
-    backend: str = "jvm",
-) -> DataFrame:
-    """THE assignment dispatch (r13 review): every consumer of corpus
-    assignment — ``write_assigned_corpus``, the streaming sink,
-    ``neighbor_pairs_ivf``, ``cluster_cap_stats`` — routes through this
-    one ladder, so the backend validation and the centroid-identity guard
-    (a ``two_level`` wrapping DIFFERENT leaves than ``centroids`` would
-    partition under an identity the stamps/stats lie about) cannot be
-    dropped at any single call site.
-
-    Ladder: ``backend="arrow"`` → :func:`assign_frame_arrow` (BLAS, both
-    quantizer depths; validates null/length/finiteness python-side);
-    else ``two_level`` → its broadcast-join ``assign_frame``; else the
-    flat literal-matrix expression. Callers needing the JVM
-    ``checked_vec`` guard bind it BEFORE calling (its own projection —
-    the HOF no-CSE rule); the arrow path needs no extra column."""
-    if backend not in ("jvm", "arrow"):
-        raise ValueError(
-            f"assignment backend must be 'jvm' or 'arrow', got {backend!r}"
+            "IVF assignment refuses centroids with non-finite components "
+            "— refit the quantizer (a NaN centroid means the fit saw NaN "
+            "vectors or an empty unit-normalization)"
         )
     if two_level is not None and two_level.centroids != centroids:
         raise ValueError(
             "two_level quantizer wraps different leaf centroids than the "
             "ones passed for assignment"
         )
-    if backend == "arrow":
-        return assign_frame_arrow(
-            df, vec_col, centroids, out_col=out_col, two_level=two_level
-        )
+    bound = df.withColumn(
+        "__checked_vec",
+        checked_vec(F.col(vec_col), len(centroids[0]), vec_col),
+    )
     if two_level is not None:
-        return two_level.assign_frame(df, vec_col, out_col=out_col)
-    return df.withColumn(out_col, ivf_assign(F.col(vec_col), centroids))
+        out = two_level.assign_frame(bound, "__checked_vec", out_col=out_col)
+    else:
+        out = bound.withColumn(
+            out_col, ivf_assign(F.col("__checked_vec"), centroids)
+        )
+    return out.drop("__checked_vec")
 
 
 def save_centroids(

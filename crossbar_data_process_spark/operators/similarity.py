@@ -360,155 +360,6 @@ def cosine_topk_quantized(
     )
 
 
-def _pairs_arrow_grouped(
-    df: DataFrame,
-    keys: list[str],
-    threshold: float,
-    id_type,
-    two_sided: bool,
-    cross_pairs: bool = False,
-) -> DataFrame:
-    """The pair stage as a grouped BLAS kernel (r13): each grid cell
-    (cluster[, __ga, __gb]) scores every cross pair in ONE numpy matmul
-    — S = (Vₐ @ V_b.T) / outer(nₐ, n_b) — instead of one
-    interpreted-HOF dot per candidate row (HOFs never codegen; the
-    per-candidate eval tax is the pair stage's analogue of the
-    assignment tax ``assign_frame_arrow`` retires).
-
-    Transport: ONE ``groupBy(cell).applyInPandas`` over a side-tagged
-    union (``two_sided``, the sharded grid — a cogroup of a frame with
-    itself trips the ambiguous-self-join analyzer check, and the union
-    shuffles the same bytes) or over the bare assigned frame
-    (``two_sided=False``, the unsharded case — HALF the shuffle of the
-    JVM self-join, since each row ships once and the kernel reads it as
-    both sides). Cell memory is bounded by ``shard_target`` rows per
-    side; an unsharded mega-cluster is the caller's documented hazard on
-    BOTH backends. A-side rows are chunked so the score block stays
-    ≤ ~64 MB whatever the cell shape.
-
-    Parity: the divisor reuses the JVM-computed ``n`` norm column
-    verbatim; rounding is EXACTLY ``F.round``'s rule — HALF_UP on the
-    shortest-repr decimal, via a sparse Decimal path for the rare
-    half-boundary values where the vectorized floor-form splits from it
-    (r13 review); non-finite scores (zero-norm vectors) drop exactly
-    like try_divide's NULLs; the ``id <`` order filter applies inside the
-    kernel. The only divergence surface is sub-ulp dot-product summation
-    order — byte-identical pair sets on every test corpus
-    (tests/test_semantic_dedup.py, incl. a planted half-boundary case).
-
-    ``cross_pairs=True`` (r15, the dedup-sink flag kernel): the two sides
-    are DIFFERENT populations (side 0 = silver/corpus, side 1 = incoming
-    batch) and every (left, right) pair is a candidate — the ``id <``
-    order filter is dropped (comparing a silver id against a batch id
-    orders nothing; the sharded grid already lands each cross pair in
-    exactly one cell). Requires ``two_sided=True``."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    if cross_pairs and not two_sided:
-        raise ValueError(
-            "cross_pairs scoring needs a side-tagged union (two_sided=True)"
-        )
-    out_schema = StructType(
-        [
-            StructField("vec_a", id_type, True),
-            StructField("vec_b", id_type, True),
-            StructField("cosine", DoubleType(), True),
-        ]
-    )
-
-    def _round6_exact(v: float) -> float:
-        """Spark F.round(x, 6) exactly: HALF_UP on the SHORTEST-REPR
-        decimal of the double (scala BigDecimal(double) ≡ Double.toString
-        ≡ python repr). The vectorized floor(abs·1e6+0.5) emulation
-        diverges on half-boundary doubles (~5k/1M measured, r13 review:
-        0.0005045 → Spark 0.000505, floor-form 0.000504), so those go
-        through Decimal. Documented residual: pre-JDK-19 Double.toString
-        (JDK-4511638, fixed by Ryu in 19) occasionally emits MORE digits
-        than the shortest repr; parity then needs that longer decimal and
-        python's repr to round the same way at 6 dp — they differ only
-        when a value sits within ~1 double-ulp of a half boundary, which
-        the planted battery and test corpora never produce. The parity
-        test pins the running JDK."""
-        from decimal import ROUND_HALF_UP, Decimal
-
-        return float(
-            Decimal(repr(float(v))).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP
-            )
-        )
-    empty = {
-        "vec_a": pd.Series([], dtype="object"),
-        "vec_b": pd.Series([], dtype="object"),
-        "cosine": pd.Series([], dtype="float64"),
-    }
-
-    def _score(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if two_sided:
-            left = pdf[pdf["__side"] == 0]
-            right = pdf[pdf["__side"] == 1]
-        else:
-            left = right = pdf
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(empty)
-        vb = np.stack(
-            [np.asarray(x, dtype=np.float64) for x in right["v"].to_numpy()]
-        )
-        ids_a = left["id"].to_numpy()
-        ids_b = right["id"].to_numpy()
-        na_all = left["n"].to_numpy()
-        nb = right["n"].to_numpy()
-        va_all = left["v"].to_numpy()
-        out_a, out_b, out_s = [], [], []
-        # chunk the A side: score block ≤ ~64 MB regardless of cell shape
-        block = max(1, 8_000_000 // max(len(right), 1))
-        for s0 in range(0, len(left), block):
-            sl = slice(s0, s0 + block)
-            va = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in va_all[sl]]
-            )
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = (va @ vb.T) / np.outer(na_all[sl], nb)
-            # pre-filter on the RAW scores with a half-ulp guard band
-            # (rounding moves a value by ≤ 5e-7), so the exact-rounding
-            # work below touches only near-threshold survivors
-            pre = np.isfinite(s) & (s >= threshold - 1e-6)
-            if not cross_pairs:
-                pre &= ids_a[sl][:, None] < ids_b[None, :]
-            ia, ib = np.nonzero(pre)
-            vals = s[ia, ib]
-            # HALF_UP at 6 dp: vectorized floor-form for the bulk, exact
-            # shortest-repr Decimal (≡ Spark F.round) for the rare values
-            # within 1e-7 of a .5 boundary where the two rules can split
-            frac = np.abs(vals) * 1e6
-            rounded = np.copysign(np.floor(frac + 0.5), vals) / 1e6
-            danger = np.abs(frac + 0.5 - np.round(frac + 0.5)) < 1e-7
-            if danger.any():
-                rounded[danger] = np.fromiter(
-                    (_round6_exact(v) for v in vals[danger]),
-                    dtype=np.float64,
-                )
-            # BigDecimal has no signed zero: F.round(-2e-7, 6) is +0.0,
-            # copysign's floor form gives -0.0 — normalize so the cosine
-            # column is byte-identical, not just ==-identical (r13 review
-            # pass 2; the mask catches both zeros since -0.0 == 0.0)
-            rounded[rounded == 0.0] = 0.0
-            keep = rounded >= threshold
-            out_a.append(ids_a[sl][ia[keep]])
-            out_b.append(ids_b[ib[keep]])
-            out_s.append(rounded[keep])
-        return pd.DataFrame(
-            {
-                "vec_a": np.concatenate(out_a),
-                "vec_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_s),
-            }
-        )
-
-    return df.groupby(*keys).applyInPandas(_score, out_schema)
-
-
 def neighbor_pairs_ivf(
     vectors: DataFrame,
     centroids: list[list[float]],
@@ -518,8 +369,6 @@ def neighbor_pairs_ivf(
     max_cluster_size: int | None = None,
     shard_target: int | None = 2000,
     two_level=None,
-    assign_backend: str = "jvm",
-    pair_backend: str = "jvm",
     cap_stats_sink: dict | None = None,
     cluster_col: str | None = None,
 ) -> DataFrame:
@@ -562,17 +411,8 @@ def neighbor_pairs_ivf(
       no longer the default skew posture.
 
     Returns (vec_a, vec_b, cosine) with vec_a < vec_b, cosine ≥ threshold.
-    ``assign_backend="arrow"`` swaps the JVM assignment expression for
-    the Arrow-batched BLAS projection (``ivf.assign_frame_arrow`` —
-    measured ~50-100× faster; HOFs never codegen). Same argmax/tie
-    semantics, agreement pinned in tests; the scale-run posture, while
-    hash-gated registry queries keep the JVM default.
-    ``pair_backend="arrow"`` does the same for the PAIR stage: each grid
-    cell scores as one numpy matmul via a side-tagged union + grouped
-    ``applyInPandas`` (:func:`_pairs_arrow_grouped`) instead of one
-    interpreted dot per candidate — same shuffle shape, same pair set
-    (pinned), the arithmetic engine swapped. Scale runs take both
-    backends together.
+    Vectors are assigned through ``ivf.assign_clusters``, which refuses
+    NULL, wrong-length and non-finite vectors.
 
     Cross-cluster near-dups (borderline vectors quantized apart) are the
     recall trade vs the LSH multiprobe variant — measured in
@@ -585,16 +425,8 @@ def neighbor_pairs_ivf(
     to the standalone form by construction (shared
     ``_cluster_cap_totals``; assignment is deterministic).
     """
-    from crossbar_data_process_spark.operators.ivf import assign_with_backend
+    from crossbar_data_process_spark.operators.ivf import assign_clusters
 
-    if assign_backend not in ("jvm", "arrow"):
-        raise ValueError(
-            f"assign_backend must be 'jvm' or 'arrow', got {assign_backend!r}"
-        )
-    if pair_backend not in ("jvm", "arrow"):
-        raise ValueError(
-            f"pair_backend must be 'jvm' or 'arrow', got {pair_backend!r}"
-        )
     # Precompute the norm ONCE per vector: every vector meets
     # ~cluster_size candidates, and cosine() would recompute BOTH norms
     # per PAIR — carrying the scalar norm makes each candidate one dot
@@ -608,12 +440,12 @@ def neighbor_pairs_ivf(
     if cluster_col is not None:
         # PRE-ASSIGNED input (r16 optimization round): the caller already
         # holds this batch's cluster assignment — materialized, computed
-        # through the same assign_with_backend dispatch (the dedup sink
+        # through the same assign_clusters entry (the dedup sink
         # assigns ONCE per batch and shares it with the flag and the
         # write). Re-assigning here would be a second full pass of the
         # most expensive per-row arithmetic in the pipeline. The caller
         # contract mirrors cap_stats' "assignment is deterministic": the
-        # column must be the dispatch's own output for these centroids.
+        # column must be assign_clusters' own output for these centroids.
         assigned = vectors.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).alias("v"),
@@ -626,16 +458,13 @@ def neighbor_pairs_ivf(
             F.col(vec_col).alias("v"),
             norm(F.col(vec_col)).alias("n"),
         )
-        # ONE dispatch for all assignment consumers (r13 review): backend
-        # ladder + the two_level centroid-identity guard live in
-        # assign_with_backend so no call site can drop either. (Two-level
-        # JVM rides the broadcast-join transport — plan size stays
-        # O(ntop) however large nlist grows.)
+        # ONE entry for all assignment consumers (r13 review): the vector
+        # and centroid guards and the two_level centroid-identity guard
+        # live in assign_clusters so no call site can drop them. (Two-level
+        # rides the broadcast-join transport — plan size stays O(ntop)
+        # however large nlist grows.)
         assigned = materialize(
-            assign_with_backend(
-                base_cols, "v", centroids,
-                two_level=two_level, backend=assign_backend,
-            )
+            assign_clusters(base_cols, "v", centroids, two_level=two_level)
         )
     need_sizes = max_cluster_size is not None or shard_target is not None
     if need_sizes or cap_stats_sink is not None:
@@ -689,19 +518,6 @@ def neighbor_pairs_ivf(
             assigned = assigned.drop("__csz")
         a_raw, b_raw = assigned, assigned
         keys = ["cluster"]
-    if pair_backend == "arrow":
-        if shard_target is not None:
-            tagged = a_raw.withColumn(
-                "__side", F.lit(0)
-            ).unionByName(b_raw.withColumn("__side", F.lit(1)))
-            two_sided = True
-        else:
-            tagged = a_raw  # one copy per row; kernel reads it as both sides
-            two_sided = False
-        return _pairs_arrow_grouped(
-            tagged, keys, threshold,
-            vectors.schema[id_col].dataType, two_sided,
-        )
     a = a_raw.alias("a")
     b = b_raw.alias("b")
     join_cond = F.col("a.id") < F.col("b.id")
@@ -743,7 +559,6 @@ def cluster_cap_stats(
     max_cluster_size: int | None = None,
     shard_target: int | None = 2000,
     two_level=None,
-    assign_backend: str = "jvm",
 ) -> DataFrame:
     """The `no silent caps` report for the SemDeDup pair stage (VERDICT
     r12 #3): ONE row quantifying what the skew levers actually did —
@@ -770,18 +585,16 @@ def cluster_cap_stats(
     from the population table the pass already computes — this standalone
     function re-assigns the whole corpus, which at 5M docs cost as much
     as the dedup it reported on."""
-    from crossbar_data_process_spark.operators.ivf import assign_with_backend
+    from crossbar_data_process_spark.operators.ivf import assign_clusters
 
-    # the shared dispatch (r13 review) — this report previously skipped
-    # the two_level centroid-identity guard on its JVM branch, i.e. the
-    # `no silent caps` report could itself describe a partition the pair
-    # stage never used; assign_with_backend makes that impossible
-    assigned = assign_with_backend(
+    # the pair stage's own entry (r13 review): its two_level
+    # centroid-identity guard keeps this report from describing a
+    # partition the pair stage never used
+    assigned = assign_clusters(
         vectors.select(F.col(vec_col).alias("__v")),
         "__v",
         centroids,
         two_level=two_level,
-        backend=assign_backend,
     ).select("cluster")
     sizes = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("csz"))
     return _cluster_cap_totals(sizes, max_cluster_size, shard_target)
@@ -830,8 +643,6 @@ def semantic_dedup(
     max_cluster_size: int | None = None,
     shard_target: int | None = 2000,
     two_level=None,
-    assign_backend: str = "jvm",
-    pair_backend: str = "jvm",
     cap_stats_sink: dict | None = None,
     cluster_col: str | None = None,
 ) -> DataFrame:
@@ -863,8 +674,6 @@ def semantic_dedup(
         max_cluster_size,
         shard_target=shard_target,
         two_level=two_level,
-        assign_backend=assign_backend,
-        pair_backend=pair_backend,
         cap_stats_sink=cap_stats_sink,
         cluster_col=cluster_col,
     )

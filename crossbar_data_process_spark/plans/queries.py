@@ -1857,28 +1857,8 @@ def q73_semantic_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shutil.rmtree(silver, ignore_errors=True)
     atexit.register(shutil.rmtree, silver, ignore_errors=True)
-    # Full-arrow registration: this row gates the PRODUCTION dedup-mode
-    # sink, whose production arithmetic is the r15 Arrow pair kernel —
-    # registering it here puts that kernel under the driver's hash gate
-    # (inverting the keep-JVM-defaults registry convention FOR THIS ROW;
-    # REGISTRY.md records why). r16: assign_backend joins pair_backend
-    # on arrow — the r15 ADVICE threaded the sink's assign engine into
-    # the flag's probe-side candidacy, so the old jvm/arrow mix would
-    # put the flag's batch assignment back on the interpreted
-    # O(nlist·dim) walk (the sf1-slope class the arrow registration
-    # exists to avoid); full-arrow is also exactly llm_build's scale
-    # posture. Byte-identity with the JVM engine is separately pinned
-    # (tests/test_ann_ingest.py, test_semantic_dedup), and the
-    # interpreted JVM within-batch path scales as the measured r12
-    # curve (~21 s at 10k rows), which would be the row's sf1 wall.
-    sink = ivf_ingest_writer(
-        spark,
-        cents,
-        silver,
-        dedup_threshold=0.999,
-        assign_backend="arrow",
-        pair_backend="arrow",
-    )
+    # the production dedup-mode sink on the engine's only IVF arithmetic
+    sink = ivf_ingest_writer(spark, cents, silver, dedup_threshold=0.999)
     plants = (
         q.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
         .unionByName(

@@ -17,10 +17,10 @@ id/vector/cluster and never reads the batch column).
 Drift gauge (scale-correct monitoring): ``mean_top1`` — the mean cosine
 between a batch's unit vectors and their ASSIGNED centroid — costs one
 batch-sized agg job at any batch size (NO collect, no sample) through
-whichever transport the sink assigns with: flat JVM keeps the single
+whichever transport the sink assigns with: a flat sink keeps the single
 ``avg(array_max(scores))`` Column pass (for flat assignment the max IS
-the assigned centroid's cosine), while arrow/two-level sinks re-assign
-through the same O(√nlist)/BLAS transport and dot against a broadcast
+the assigned centroid's cosine), while a two-level sink re-assigns
+through the same O(√nlist) transport and dots against a broadcast
 centroid lookup (r14 — the flat walk was the measured sink bottleneck at
 nlist=4096). Under flat assignment the value equals the nearest-centroid
 cosine ``operators/ivf.ivf_fit_diagnostics`` computes driver-side at fit
@@ -145,8 +145,6 @@ def ivf_ingest_writer(
     pq_codebooks: list[list[list[float]]] | None = None,
     pq_residual_centers: list[list[float]] | None = None,
     two_level=None,
-    assign_backend: str = "jvm",
-    pair_backend: str = "jvm",
 ):
     """``foreachBatch`` factory. Per (batch_df, batch_id):
 
@@ -209,23 +207,16 @@ def ivf_ingest_writer(
     ``1 − n_landed/n_vectors`` is monitorable without re-running
     anything.
 
-    ``pair_backend="arrow"`` (r15) moves BOTH dedup stages off the
-    interpreted expression engine: the within-batch ``semantic_dedup``
-    scores through ``similarity._pairs_arrow_grouped`` and the
-    cross-silver flag through its ``cross_pairs`` form — one numpy
-    matmul per (cluster, shard) cell instead of one interpreted JVM dot
-    per candidate (measured 183–201 s → plain-sink-class per 200k-row
-    batch; flags byte-identical, pinned). ``assign_backend`` governs
-    the ASSIGNMENT arithmetic everywhere a batch vector is filed into a
-    cluster — the write-side landing AND (r16, the r15 ADVICE) the
-    cross-silver flag's probe side, so candidacy matches the silver's
-    filing by construction rather than by the cross-backend argmax pins
-    alone; ``pair_backend`` governs pair SCORING only.
+    Batch vectors are filed into clusters by
+    ``operators.ivf.assign_clusters``. In dedup mode that runs ONCE per
+    batch, and the write, the within-batch dedup, the cross-silver
+    flag's probe side and the two-level drift gauge all read that one
+    column, so candidacy matches the silver's filing by construction.
     """
     from crossbar_data_process_spark.operators.ivf import (
         _centroid_scores,
         _unit,
-        checked_vec,
+        assign_clusters,
     )
 
     # ``two_level`` (operators.ivf.TwoLevelQuantizer over the SAME
@@ -240,14 +231,6 @@ def ivf_ingest_writer(
             "two_level quantizer wraps different leaf centroids than the "
             "ones stamped on this silver — assignments would not match "
             "the stored identity"
-        )
-    if assign_backend not in ("jvm", "arrow"):
-        raise ValueError(
-            f"assign_backend must be 'jvm' or 'arrow', got {assign_backend!r}"
-        )
-    if pair_backend not in ("jvm", "arrow"):
-        raise ValueError(
-            f"pair_backend must be 'jvm' or 'arrow', got {pair_backend!r}"
         )
 
     if pq_codebooks is not None:
@@ -426,12 +409,10 @@ def ivf_ingest_writer(
 
     # nlist-row centroid lookup table for the drift gauge's broadcast
     # join — built once at factory time, hyperparameter-sized. Only the
-    # arrow/two-level gauge branch reads it; the flat-JVM gauge keeps
-    # the single array_max walk (r14 review: don't hold dead state)
+    # two-level gauge branch reads it; the flat gauge keeps the single
+    # array_max walk (r14 review: don't hold dead state)
     cent_df = None
-    if metrics_dir is not None and not (
-        assign_backend == "jvm" and two_level is None
-    ):
+    if metrics_dir is not None and two_level is not None:
         cent_df = spark.createDataFrame(
             [(j, [float(x) for x in c]) for j, c in enumerate(centroids)],
             "__mc int, __mcent array<double>",
@@ -440,37 +421,17 @@ def ivf_ingest_writer(
     def _has_data() -> bool:
         return _silver_has_data(spark, silver_dir)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        incoming = batch_df
-        # length/NULL-check at the partition-key source (r11 ADVICE): a
-        # NULL assignment lands rows under __HIVE_DEFAULT_PARTITION__ and
-        # poisons every later read of the silver. Bound in its own
-        # projection so the guard runs once per row, not once per
-        # centroid inside the assign transform (r12 review).
-        from crossbar_data_process_spark.operators.ivf import (
-            assign_with_backend,
+    def _assign(df: DataFrame, out_col: str = _CLUSTER_COL) -> DataFrame:
+        # checked_vec at the partition-key source (inside assign_clusters,
+        # r11 ADVICE): a NULL assignment lands rows under
+        # __HIVE_DEFAULT_PARTITION__ and poisons every later read of the
+        # silver
+        return assign_clusters(
+            df, vec_col, centroids, out_col=out_col, two_level=two_level
         )
 
-        def _assign(df: DataFrame) -> DataFrame:
-            if assign_backend == "arrow":
-                # Arrow/BLAS projection (r13) — the scale-silver posture;
-                # its python-side checks (null/length/finiteness) subsume
-                # checked_vec, and skipping the duplicate guarded column
-                # halves the vector bytes crossing the Arrow boundary
-                return assign_with_backend(
-                    df, vec_col, centroids,
-                    out_col=_CLUSTER_COL, two_level=two_level,
-                    backend="arrow",
-                )
-            bound = df.withColumn(
-                "__checked_vec",
-                checked_vec(F.col(vec_col), len(centroids[0]), vec_col),
-            )
-            return assign_with_backend(
-                bound, "__checked_vec", centroids,
-                out_col=_CLUSTER_COL, two_level=two_level, backend="jvm",
-            ).drop("__checked_vec")
-
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        incoming = batch_df
         pre = None
         if dedup_threshold is not None:
             from crossbar_data_process_spark.operators.materialize import (
@@ -483,13 +444,13 @@ def ivf_ingest_writer(
             # ONE assignment per batch (r16 optimization round, guide
             # §1.2): the dedup sink previously filed the same vectors
             # 3-4 times — within-batch candidacy, the cross-silver
-            # flag's probe side, the write, and (arrow/two-level
-            # metrics) the drift gauge each ran the full
-            # assign_with_backend pass. Assignment is the most expensive
-            # per-row arithmetic in the sink (O(√nlist·dim) per row),
-            # and all four consumers need the IDENTICAL partition by
-            # contract — so it runs once over the incoming batch,
-            # materialized, and every consumer reads the column.
+            # flag's probe side, the write, and (two-level metrics) the
+            # drift gauge each ran the full assignment pass. Assignment
+            # is the most expensive per-row arithmetic in the sink
+            # (O(√nlist·dim) per row), and all four consumers need the
+            # IDENTICAL partition by contract — so it runs once over the
+            # incoming batch, materialized, and every consumer reads the
+            # column.
             pre = materialize(_assign(batch_df))
             survivors = semantic_dedup(
                 pre,
@@ -498,13 +459,6 @@ def ivf_ingest_writer(
                 id_col=id_col,
                 vec_col=vec_col,
                 two_level=two_level,
-                # one engine files every batch vector into a cluster
-                # (r16): within-batch candidacy is self-consistent under
-                # any single engine, but the survivors LAND under
-                # assign_backend — keep the whole sink on one filing
-                # arithmetic so the contract reads the same everywhere
-                assign_backend=assign_backend,
-                pair_backend=pair_backend,
                 cluster_col=_CLUSTER_COL,
             ).select(id_col)
             assigned = pre.join(survivors, id_col, "left_semi")
@@ -519,13 +473,7 @@ def ivf_ingest_writer(
                     vec_col=vec_col,
                     exclude_batch_id=int(batch_id),
                     quantized=quantize,
-                    pair_backend=pair_backend,
                     two_level=two_level,
-                    # the silver's write-side engine (r16, the r15
-                    # ADVICE): probe-side candidacy must file each batch
-                    # vector where THIS sink's writer filed its landed
-                    # twin, whatever engine scores the pairs
-                    assign_backend=assign_backend,
                     cluster_col=_CLUSTER_COL,
                 ).select(id_col)
                 assigned = assigned.join(flags, id_col, "left_anti")
@@ -595,44 +543,37 @@ def ivf_ingest_writer(
             # cheapest form each transport allows (r14 review: the first
             # rewrite re-ran assignment even on the flat-JVM path, where
             # the old single array_max walk was already optimal):
-            # - flat JVM: ONE O(nlist·dim) scores walk + array_max — for
-            #   flat assignment the max IS the assigned centroid's
-            #   cosine, bit-identical to re-assigning, with no extra
-            #   join. This is the registry/test shape (small nlist).
-            # - arrow or two-level: re-assign through the SAME transport
-            #   as the silver (O(√nlist) or BLAS — the r14 1M-row probe
-            #   measured the flat walk as the sink bottleneck at
-            #   nlist=4096) and dot against a broadcast centroid lookup,
-            #   O(dim) per row, no nlist-sized literals in the plan.
-            #   Under two-level the gauge is the cosine to what the
-            #   silver ACTUALLY stored — ≤ the global max when pruning
-            #   misses the nearest leaf, i.e. (slightly conservatively)
-            #   the quantity pruned-probe recall depends on.
-            if assign_backend == "jvm" and two_level is None:
+            # - flat: ONE O(nlist·dim) scores walk + array_max — for flat
+            #   assignment the max IS the assigned centroid's cosine,
+            #   bit-identical to re-assigning, with no extra join. This
+            #   is the registry/test shape (small nlist).
+            # - two-level: re-assign through the SAME O(√nlist) transport
+            #   as the silver (the r14 1M-row probe measured the flat
+            #   walk as the sink bottleneck at nlist=4096) and dot
+            #   against a broadcast centroid lookup, O(dim) per row, no
+            #   nlist-sized literals in the plan. The gauge is then the
+            #   cosine to what the silver ACTUALLY stored — ≤ the global
+            #   max when pruning misses the nearest leaf, i.e. (slightly
+            #   conservatively) the quantity pruned-probe recall depends
+            #   on.
+            if two_level is None:
                 top1 = F.array_max(
                     _centroid_scores(F.col("__u"), centroids)
                 )
                 gauged = _unit(incoming, vec_col, "__u")
             else:
-                # assign_with_backend is already bound by the main
-                # assignment import above — the gauge must stay on the
-                # same dispatch (r14 review)
                 from crossbar_data_process_spark.operators.similarity import (
                     dot,
                 )
 
                 if pre is not None:
-                    # dedup mode (r16): `pre` IS the dispatch's
-                    # assignment of the full incoming batch,
-                    # materialized — the gauge reads its column instead
-                    # of running a fourth assignment pass
+                    # dedup mode (r16): `pre` IS the assignment of the
+                    # full incoming batch, materialized — the gauge reads
+                    # its column instead of running a fourth assignment
+                    # pass
                     massigned = pre.withColumnRenamed(_CLUSTER_COL, "__mc")
                 else:
-                    massigned = assign_with_backend(
-                        incoming, vec_col, centroids,
-                        out_col="__mc", two_level=two_level,
-                        backend=assign_backend,
-                    )
+                    massigned = _assign(incoming, out_col="__mc")
                 top1 = dot(F.col("__u"), F.col("__mcent"))
                 gauged = _unit(massigned, vec_col, "__u").join(
                     F.broadcast(cent_df), "__mc"
@@ -1094,10 +1035,7 @@ def flag_semantic_dups(
     vec_col: str = "embedding",
     exclude_batch_id: int | None = None,
     quantized: bool = False,
-    pair_backend: str = "jvm",
     two_level=None,
-    silver_shard_target: int = 4096,
-    assign_backend: str | None = None,
     cluster_col: str | None = None,
 ) -> DataFrame:
     """Check an embedding batch against the landed IVF silver — the
@@ -1127,62 +1065,22 @@ def flag_semantic_dups(
     m/254-per-component rounding moves near-``threshold`` cosines, so
     set the threshold with that band in mind.
 
-    ``pair_backend="arrow"`` (r15, VERDICT r14 #1) swaps the arithmetic
-    engine, not the shape: the per-candidate JVM dot is an interpreted
-    HOF eval (HOFs never codegen) and at production geometry the flag
-    paid Σ_c silver_c·batch_c ≈ 100M+ interpreted dots per batch —
-    measured 183–201 s at 200k-row batches vs the plain sink's 25 s.
-    The arrow path scores each (cluster, silver-shard) cell as ONE numpy
-    matmul via the side-tagged :func:`similarity._pairs_arrow_grouped`
-    transport (``cross_pairs=True`` — batch ⊕ silver cells, no id-order
-    filter). Candidacy, divisors (JVM-computed norms carried verbatim),
-    rounding (exact ``F.round`` HALF_UP parity) and the witness agg are
-    unchanged — flags byte-identical to the JVM path (pinned in
-    tests/test_ann_ingest.py incl. zero-vector and int8 silvers). The
-    silver scan is pruned to the batch's clusters by a STATIC partition
-    filter (the probed cluster set is collected — ≤ nlist ints, the same
-    hyperparameter-sized driver bound as the centroid matrix itself);
-    cell memory is bounded by hashing each over-target silver cluster
-    into ⌈pop/``silver_shard_target``⌉ shards and fanning the (smaller)
-    batch side across them — every cross pair lands in exactly one cell,
-    replication ≈ candidates/target rows, linear and paid only by
-    over-target clusters.
-
     ``two_level`` (the sink's quantizer, threaded from
     ``ivf_ingest_writer``) makes the batch probe use the SAME assignment
     transport the silver was written under — probing the flat argmax
     cluster for a vector the two-level writer filed elsewhere would miss
     its duplicates.
 
-    ``assign_backend`` (r16, the r15 ADVICE): the ARITHMETIC ENGINE of
-    the probe's cluster assignment, threaded from the sink so it matches
-    the engine the silver was LANDED under — same-cluster candidacy is
-    correct by construction instead of resting on the cross-backend
-    argmax byte-identity pins (which stay, as the second line of
-    defense: tests/test_ivf_ann.py). ``None`` keeps the pre-r16
-    behavior (assignment rides ``pair_backend``) for direct callers;
-    ``ivf_ingest_writer`` always threads its own.
-
     ``cluster_col`` (r16 optimization round): the batch already carries
     its cluster assignment in this column — computed ONCE by the caller
-    through the same ``assign_with_backend`` dispatch and materialized
-    (the dedup sink's one-assignment-per-batch consolidation). The
-    probe-side assignment pass is skipped; candidacy is identical by the
-    caller contract (same dispatch, same centroids, same transport).
+    through ``operators.ivf.assign_clusters`` and materialized (the
+    dedup sink's one-assignment-per-batch consolidation). The probe-side
+    assignment pass is skipped; candidacy is identical by the caller
+    contract (same entry, same centroids, same transport).
     """
-    from crossbar_data_process_spark.operators.ivf import assign_with_backend
+    from crossbar_data_process_spark.operators.ivf import assign_clusters
     from crossbar_data_process_spark.operators.similarity import dot, norm
 
-    if pair_backend not in ("jvm", "arrow"):
-        raise ValueError(
-            f"pair_backend must be 'jvm' or 'arrow', got {pair_backend!r}"
-        )
-    if assign_backend is None:
-        assign_backend = pair_backend
-    if assign_backend not in ("jvm", "arrow"):
-        raise ValueError(
-            f"assign_backend must be 'jvm' or 'arrow', got {assign_backend!r}"
-        )
     check_centroid_meta(spark, silver_dir, centroids)
     # norms are precomputed ONCE per vector on each side and carried as
     # scalars into the join — cosine() would recompute BOTH array norms
@@ -1200,15 +1098,13 @@ def flag_semantic_dups(
         norm(F.col(sv_col)).alias("__sn"),
         F.col(_CLUSTER_COL).cast("int").alias(_CLUSTER_COL),
     )
-    # batch assignment through THE dispatch (assign_with_backend): the
-    # probe must use the same transport (two_level) AND the same
-    # arithmetic engine (assign_backend) the silver was written under —
-    # a vector filed in cluster c by the writer must probe cluster c.
-    # With `cluster_col` the caller already ran that exact dispatch once
-    # for this batch (materialized) — reuse it instead of a second
-    # full assignment pass.
-    pre_assigned = cluster_col is not None
-    if pre_assigned:
+    # batch assignment through THE entry (assign_clusters): the probe
+    # must use the same transport (two_level) the silver was written
+    # under — a vector filed in cluster c by the writer must probe
+    # cluster c. With `cluster_col` the caller already ran that exact
+    # assignment once for this batch (materialized) — reuse it instead
+    # of a second full assignment pass.
+    if cluster_col is not None:
         probes = batch_df.select(
             F.col(id_col).alias("__bid"),
             F.col(vec_col).alias("bv"),
@@ -1216,7 +1112,7 @@ def flag_semantic_dups(
             F.col(cluster_col).alias(_CLUSTER_COL),
         )
     else:
-        probes = assign_with_backend(
+        probes = assign_clusters(
             batch_df.select(
                 F.col(id_col).alias("__bid"),
                 F.col(vec_col).alias("bv"),
@@ -1226,90 +1122,6 @@ def flag_semantic_dups(
             centroids,
             out_col=_CLUSTER_COL,
             two_level=two_level,
-            backend=assign_backend,
-        )
-    if pair_backend == "arrow":
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        from crossbar_data_process_spark.operators.materialize import (
-            materialize,
-        )
-        from crossbar_data_process_spark.operators.similarity import (
-            _pairs_arrow_grouped,
-        )
-
-        id_type = batch_df.schema[id_col].dataType
-        # assignment feeds the cluster-set collect AND the union side —
-        # materialize so the Arrow projection runs once per batch. A
-        # pre-assigned batch is already materialized by the caller, and
-        # `probes` is then a cheap projection over its blocks.
-        if not pre_assigned:
-            probes = materialize(probes)
-        bcl = [
-            r[0] for r in probes.select(_CLUSTER_COL).distinct().collect()
-        ]
-        if not bcl:
-            return spark.createDataFrame(
-                [],
-                StructType(
-                    [
-                        StructField(id_col, id_type),
-                        StructField("matched_vec", id_type),
-                        StructField("cosine", DoubleType()),
-                    ]
-                ),
-            )
-        # STATIC partition filter — the probed cluster set is ≤ nlist
-        # ints (hyperparameter-sized, same driver bound as the centroid
-        # matrix), so pruning never rides on runtime DPP
-        silver_p = silver.filter(F.col(_CLUSTER_COL).isin(bcl))
-        sizes = silver_p.groupBy(_CLUSTER_COL).agg(
-            F.count(F.lit(1)).alias("__csz")
-        )
-        shards = F.greatest(
-            F.lit(1), F.ceil(F.col("__csz") / silver_shard_target)
-        ).cast("int")
-        # silver side: each row in ONE hash shard of its cluster; batch
-        # side: fanned across all of that cluster's shards — every
-        # (silver, batch) cross pair meets in exactly one (cluster, __ga)
-        # cell, silver rows per cell ≤ ~silver_shard_target
-        a_side = (
-            silver_p.join(F.broadcast(sizes), _CLUSTER_COL)
-            .select(
-                F.col(_CLUSTER_COL),
-                F.pmod(
-                    F.xxhash64(F.col("matched_vec"), F.lit(41)), shards
-                )
-                .cast("int")
-                .alias("__ga"),
-                F.col("matched_vec").alias("id"),
-                F.col("sv").cast("array<double>").alias("v"),
-                F.col("__sn").alias("n"),
-                F.lit(0).alias("__side"),
-            )
-        )
-        b_side = (
-            probes.join(F.broadcast(sizes), _CLUSTER_COL)
-            .select(
-                F.col(_CLUSTER_COL),
-                F.explode(F.sequence(F.lit(0), shards - 1)).alias("__ga"),
-                F.col("__bid").alias("id"),
-                F.col("bv").cast("array<double>").alias("v"),
-                F.col("__bn").alias("n"),
-                F.lit(1).alias("__side"),
-            )
-        )
-        matches = _pairs_arrow_grouped(
-            a_side.unionByName(b_side),
-            [_CLUSTER_COL, "__ga"],
-            threshold,
-            id_type,
-            two_sided=True,
-            cross_pairs=True,
-        )
-        return matches.groupBy(F.col("vec_b").alias(id_col)).agg(
-            F.min("vec_a").alias("matched_vec"),
-            F.min_by("cosine", "vec_a").alias("cosine"),
         )
     matches = (
         silver.join(F.broadcast(probes), _CLUSTER_COL)
@@ -1748,7 +1560,6 @@ def refit_ivf_silver(
     vec_col: str = "embedding",
     driver_fit_rows: int | None = None,  # None → max(8·nlist, 2048);
     # an explicit value is honored as-given (the caller's driver bound)
-    assign_backend: str = "arrow",
     two_level_min_nlist: int = 64,
     require_clustered: bool = True,
     seed_batch_id: int = -1,
@@ -1917,7 +1728,6 @@ def refit_ivf_silver(
         diagnostics=diags,
         require_clustered=require_clustered,
         two_level=tl,
-        assign_backend=assign_backend,
         stream_seed_batch_id=seed_batch_id,
     )
     if not check_centroid_meta(spark, out_dir, centroids):

@@ -298,10 +298,6 @@ def build(
         # measured /tmp-spill killer at --scale 100; two-level is
         # O(√nlist) per row with recall pinned in tests
         tl = fit_two_level(cents) if nl >= 64 else None
-        # Arrow/BLAS backends (r13): assignment AND pair scoring as numpy
-        # matmuls — the scale-run posture (this is a scale script, not a
-        # hash-gated registry query). Measured: 500k-vector SemDeDup
-        # 217 s → 9 s, slope 5.77 → 1.16 per 10× (BASELINE r13)
         # `no silent caps` as a SIDE-PRODUCT (VERDICT r14 #2): the skew
         # report comes from the population table the pair stage already
         # computes over its checkpointed assignment — the r14 form
@@ -313,8 +309,6 @@ def build(
             threshold=semantic_threshold,
             id_col="doc_id",
             two_level=tl,
-            assign_backend="arrow",
-            pair_backend="arrow",
             cap_stats_sink=cstats,
         )
         curated.join(survivors.select("doc_id"), "doc_id", "left_semi").write.mode(

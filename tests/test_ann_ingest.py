@@ -1047,38 +1047,6 @@ def test_pq_identity_check_tolerates_tuple_and_numpy_books(
     assert out.count() == 9
 
 
-def test_arrow_assign_backend_silver_is_identical(
-    spark, clustered, centroids, tmp_path
-):
-    """assign_backend='arrow' (r13 BLAS projection) must land every row in
-    the same cluster partition as the JVM sink — (vec_id, cluster) sets
-    identical across the full silver, with and without two-level."""
-    from crossbar_data_process_spark.operators.ivf import fit_two_level
-
-    tl = fit_two_level(centroids)
-    for two_level in (None, tl):
-        jvm_dir = str(tmp_path / f"jvm_{two_level is not None}")
-        arrow_dir = str(tmp_path / f"arrow_{two_level is not None}")
-        for d, backend in ((jvm_dir, "jvm"), (arrow_dir, "arrow")):
-            sink = ivf_ingest_writer(
-                spark, centroids, d,
-                two_level=two_level, assign_backend=backend,
-            )
-            sink(clustered.filter(F.col("vec_id") % 2 == 0), 0)
-            sink(clustered.filter(F.col("vec_id") % 2 == 1), 1)
-        want = {
-            (r.vec_id, r.cluster)
-            for r in spark.read.parquet(jvm_dir)
-            .select("vec_id", "cluster").collect()
-        }
-        got = {
-            (r.vec_id, r.cluster)
-            for r in spark.read.parquet(arrow_dir)
-            .select("vec_id", "cluster").collect()
-        }
-        assert want == got and len(got) == clustered.count()
-
-
 def test_drift_refit_end_to_end(spark, clustered, centroids, tmp_path):
     """The composed maintenance path (r13 VERDICT #5): stream a SHIFTED
     batch → drift_verdict flags it → refit_ivf_silver refits on the
@@ -1126,9 +1094,7 @@ def test_drift_refit_end_to_end(spark, clustered, centroids, tmp_path):
 
     # refit at the grown corpus's granularity (16 true clusters now)
     silver2 = str(tmp_path / "silver2")
-    report = refit_ivf_silver(
-        spark, silver, silver2, nlist=16, iters=3, assign_backend="arrow"
-    )
+    report = refit_ivf_silver(spark, silver, silver2, nlist=16, iters=3)
     assert report["rows"] == 1200
     assert report["regime"] == "clustered", report
     assert report["new_fingerprint"] != report["old_fingerprint"]
@@ -1204,137 +1170,39 @@ def test_refit_roundtrips_int8_silver(spark, clustered, centroids, tmp_path):
     assert {"qvec", "qscale"} <= set(out.columns)  # still int8 storage
 
 
-def test_drift_gauge_arrow_branch_matches_flat_jvm(
+def test_drift_gauge_two_level_branch_matches_flat(
     spark, clustered, centroids, tmp_path
 ):
-    """The gauge's two dispatch branches must agree: an arrow-backend
-    sink (re-assign + broadcast centroid dot) and the flat-JVM sink
-    (single array_max walk) compute the SAME per-batch metrics on a
-    flat quantizer — arrow flat assignment is pinned identical to jvm,
-    and for flat assignment the max cosine IS the assigned centroid's
-    (r14 review: the arrow branch was otherwise test-dead)."""
+    """The gauge's two branches must agree: a two-level sink probing every
+    group (re-assign + broadcast centroid dot; two-level assignment is
+    exact at full probes) and a flat sink (single array_max walk) compute
+    the SAME per-batch metrics over the same 800 vectors — for flat
+    assignment the max cosine IS the assigned centroid's (r14 review: the
+    re-assign branch is otherwise test-dead)."""
     import math
 
+    from crossbar_data_process_spark.operators.ivf import fit_two_level
+
+    quantizers = {
+        "flat": None,
+        "two_level": fit_two_level(centroids, assign_probes=10**6),
+    }
     vals = {}
-    for backend in ("jvm", "arrow"):
-        metrics = str(tmp_path / f"metrics_{backend}")
+    for name, two_level in quantizers.items():
+        metrics = str(tmp_path / f"metrics_{name}")
         sink = ivf_ingest_writer(
             spark,
             centroids,
-            str(tmp_path / f"silver_{backend}"),
+            str(tmp_path / f"silver_{name}"),
             metrics_dir=metrics,
-            assign_backend=backend,
+            two_level=two_level,
         )
         sink(clustered, 0)
-        vals[backend] = spark.read.parquet(metrics).collect()[0]
-    assert vals["jvm"]["n_vectors"] == vals["arrow"]["n_vectors"] == 800
-    assert math.isclose(
-        vals["jvm"]["mean_top1"], vals["arrow"]["mean_top1"], rel_tol=1e-12
-    )
-    assert math.isclose(
-        vals["jvm"]["min_top1"], vals["arrow"]["min_top1"], rel_tol=1e-12
-    )
-
-
-def test_flag_arrow_backend_byte_identical_to_jvm(
-    spark, clustered, centroids, tmp_path
-):
-    """VERDICT r14 #1: the Arrow cross-pair kernel must reproduce the JVM
-    flag EXACTLY — same flagged ids, same witnesses, byte-identical
-    cosines — on a float silver AND an int8 silver, with zero vectors on
-    both sides (dropped by both engines: try_divide NULL vs non-finite
-    mask) and with the silver-shard grid forced on (tiny target)."""
-    from crossbar_data_process_spark.streaming.ann_ingest import (
-        flag_semantic_dups,
-    )
-
-    base = {r.vec_id: r.embedding for r in clustered.limit(3).collect()}
-    (id0, v0), (id1, v1) = list(base.items())[:2]
-    batch = spark.createDataFrame(
-        [
-            (9000, [float(x) for x in v0]),                 # exact copy
-            (9001, [float(x) + 0.001 for x in v1]),         # near-dup
-            (9002, [float((i * 37) % 11 - 5) for i in range(32)]),  # novel
-            (9003, [0.0] * 32),                             # zero vector
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    for quant in (False, True):
-        silver = str(tmp_path / f"silver_q{quant}")
-        sink = ivf_ingest_writer(spark, centroids, silver, quantize=quant)
-        sink(clustered, 0)
-        # a zero SILVER vector too — its norm is 0 on the corpus side
-        sink(
-            spark.createDataFrame(
-                [(8999, [0.0] * 32)], "vec_id long, embedding array<float>"
-            ),
-            1,
-        )
-        out = {}
-        for backend in ("jvm", "arrow"):
-            out[backend] = sorted(
-                (r.vec_id, r.matched_vec, r.cosine)
-                for r in flag_semantic_dups(
-                    spark,
-                    silver,
-                    batch,
-                    centroids,
-                    threshold=0.995,
-                    quantized=quant,
-                    pair_backend=backend,
-                    silver_shard_target=37,  # force multi-shard cells
-                ).collect()
-            )
-        assert out["jvm"] == out["arrow"], (quant, out)
-        assert {t[0] for t in out["jvm"]} == {9000, 9001}
-    # replay safety parity: excluding the only batches empties the view
-    none = flag_semantic_dups(
-        spark,
-        str(tmp_path / "silver_qFalse"),
-        batch.limit(0),
-        centroids,
-        threshold=0.995,
-        pair_backend="arrow",
-    )
-    assert none.count() == 0
-    assert set(none.columns) == {"vec_id", "matched_vec", "cosine"}
-
-
-def test_dedup_ingest_arrow_pair_backend_silver_identical(
-    spark, clustered, centroids, tmp_path
-):
-    """The dedup-mode sink with pair_backend='arrow' (within-batch
-    semantic_dedup AND the cross-silver flag on the matmul kernel) lands
-    the exact same silver as the JVM default — ids, clusters, vectors."""
-    sv0 = clustered.limit(1).collect()[0].embedding
-    b0 = clustered.filter(F.col("vec_id") < 700)
-    b1 = spark.createDataFrame(
-        [
-            (20_000, [float(x) for x in sv0]),  # cross-batch re-ingest
-            (20_001, [float((i * 37) % 11 - 5) for i in range(32)]),  # novel
-            (20_002, [float((i * 37) % 11 - 5) for i in range(32)]),  # within-batch dup
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    landed = {}
-    for backend in ("jvm", "arrow"):
-        silver = str(tmp_path / f"silver_{backend}")
-        sink = ivf_ingest_writer(
-            spark,
-            centroids,
-            silver,
-            dedup_threshold=0.999,
-            pair_backend=backend,
-        )
-        sink(b0, 0)
-        sink(b1, 1)
-        landed[backend] = sorted(
-            (r.vec_id, r.cluster, tuple(r.embedding))
-            for r in read_assigned_silver(spark, silver).collect()
-        )
-    assert landed["jvm"] == landed["arrow"]
-    ids = {t[0] for t in landed["jvm"]}
-    assert 20_001 in ids and 20_000 not in ids and 20_002 not in ids
+        vals[name] = spark.read.parquet(metrics).collect()[0]
+    flat, two = vals["flat"], vals["two_level"]
+    assert flat["n_vectors"] == two["n_vectors"] == 800
+    assert math.isclose(flat["mean_top1"], two["mean_top1"], rel_tol=1e-12)
+    assert math.isclose(flat["min_top1"], two["min_top1"], rel_tol=1e-12)
 
 
 def test_refit_blue_green_guard_resolves_spellings(
@@ -1535,11 +1403,11 @@ def test_metrics_reader_merges_mixed_mode_schemas(
 def test_flag_probe_assignment_follows_the_silver_backend(
     spark, clustered, centroids, tmp_path
 ):
-    """r15 ADVICE: the flag's probe-side cluster assignment must run on
-    the engine the silver was LANDED under (assign_backend), with
-    pair_backend scoring only — the registered q73 mix (jvm write-side,
-    arrow pair-side) must flag byte-identically to the full-jvm path,
-    and the mixed-config SINK must land the same silver."""
+    """r15 ADVICE: the flag's probe side files each batch vector where the
+    sink filed its landed twin — the exact copy 9100 is flagged, the
+    shifted vector 9101 is not — on a float and on an int8 silver, with
+    a zero vector on both sides (its NULL cosine flags nothing and does
+    not abort under ANSI)."""
     from crossbar_data_process_spark.streaming.ann_ingest import (
         flag_semantic_dups,
     )
@@ -1549,50 +1417,24 @@ def test_flag_probe_assignment_follows_the_silver_backend(
         [
             (9100, [float(x) for x in sv[0].embedding]),  # exact copy
             (9101, [float(x) + 2.5 for x in sv[1].embedding]),  # novel
+            (9102, [0.0] * 32),  # zero vector
         ],
         "vec_id long, embedding array<float>",
     )
-    silver = str(tmp_path / "silver")
-    ivf_ingest_writer(spark, centroids, silver, assign_backend="jvm")(
-        clustered, 0
-    )
-    flags = {}
-    for ab, pb in (("jvm", "jvm"), ("jvm", "arrow"), (None, "jvm")):
-        flags[(ab, pb)] = sorted(
-            (r.vec_id, r.matched_vec, r.cosine)
-            for r in flag_semantic_dups(
-                spark,
-                silver,
-                batch,
-                centroids,
-                threshold=0.995,
-                pair_backend=pb,
-                assign_backend=ab,
-            ).collect()
+    for quant in (False, True):
+        silver = str(tmp_path / f"silver_q{quant}")
+        sink = ivf_ingest_writer(spark, centroids, silver, quantize=quant)
+        sink(clustered, 0)
+        sink(
+            spark.createDataFrame(
+                [(8999, [0.0] * 32)], "vec_id long, embedding array<float>"
+            ),
+            1,
         )
-    assert flags[("jvm", "arrow")] == flags[("jvm", "jvm")]
-    assert flags[(None, "jvm")] == flags[("jvm", "jvm")]
-    assert {t[0] for t in flags[("jvm", "jvm")]} == {9100}
-    # end-to-end: the mixed sink (the q73 registration) lands the same
-    # survivor silver as full-jvm
-    landed = {}
-    for tag, ab, pb in (("jj", "jvm", "jvm"), ("ja", "jvm", "arrow")):
-        sdir = str(tmp_path / f"silver_{tag}")
-        sink = ivf_ingest_writer(
-            spark,
-            centroids,
-            sdir,
-            dedup_threshold=0.999,
-            assign_backend=ab,
-            pair_backend=pb,
-        )
-        sink(clustered.filter(F.col("vec_id") < 700), 0)
-        sink(batch, 1)
-        landed[tag] = sorted(
-            (r.vec_id, r.cluster)
-            for r in read_assigned_silver(spark, sdir).collect()
-        )
-    assert landed["jj"] == landed["ja"]
+        flags = flag_semantic_dups(
+            spark, silver, batch, centroids, threshold=0.995, quantized=quant
+        ).collect()
+        assert {r.vec_id for r in flags} == {9100}, quant
 
 
 def test_suggest_nlist_posture_and_refit_sizing(

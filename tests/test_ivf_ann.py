@@ -527,86 +527,14 @@ def test_assign_frame_equals_assign_expression(spark, clustered):
         assert expr == framed, f"probes={probes}"
 
 
-# ------------------------------------------------------------ Arrow/BLAS
-# assignment backend (r13): Spark never codegens HOFs, so the JVM
-# assignment paths run interpreted (~13 ms/row measured at 5M rows /
-# nlist=20000 — jstack-confirmed SimpleHigherOrderFunction.eval). The
-# Arrow backend does the same argmax as chunked numpy matmuls — the
-# sanctioned drop-to-Arrow case. Contract: identical assignments (the
-# only divergence surface is <1-ulp centroid-score ties, which fitted
-# centroids don't produce), identical schema, pure projection.
-
-
-def test_arrow_backend_equals_jvm_flat_and_two_level(spark, clustered):
-    from crossbar_data_process_spark.operators.ivf import (
-        assign_frame_arrow,
-        fit_two_level,
-    )
-
-    cents = ivf_fit(clustered, dim=32, nlist=16, iters=2, driver_fit_rows=2048)
-    flat_jvm = {
-        r.vec_id: r.c
-        for r in clustered.select(
-            "vec_id", ivf_assign(F.col("embedding"), cents).alias("c")
-        ).collect()
-    }
-    flat_arrow = {
-        r.vec_id: r.cluster
-        for r in assign_frame_arrow(clustered, "embedding", cents).collect()
-    }
-    assert flat_jvm == flat_arrow
-    for probes in (1, 2, 16):
-        tl = fit_two_level(cents, assign_probes=probes)
-        two_jvm = {
-            r.vec_id: r.cluster
-            for r in tl.assign_frame(
-                clustered.select("vec_id", "embedding"), "embedding"
-            ).collect()
-        }
-        two_arrow = {
-            r.vec_id: r.cluster
-            for r in assign_frame_arrow(
-                clustered, "embedding", cents, two_level=tl
-            ).collect()
-        }
-        assert two_jvm == two_arrow, f"probes={probes}"
-
-
-def test_arrow_backend_schema_matches_jvm(spark, clustered):
-    from crossbar_data_process_spark.operators.ivf import assign_frame_arrow
-
-    cents = ivf_fit(clustered, dim=32, nlist=8, iters=1, driver_fit_rows=512)
-    jvm = clustered.withColumn(
-        "cluster", ivf_assign(F.col("embedding"), cents)
-    )
-    arrow = assign_frame_arrow(clustered, "embedding", cents)
-    assert arrow.schema == jvm.schema
-
-
-def test_arrow_backend_rejects_bad_input(spark, clustered):
-    from crossbar_data_process_spark.operators.ivf import (
-        assign_frame_arrow,
-        fit_two_level,
-    )
-
-    cents = ivf_fit(clustered, dim=32, nlist=8, iters=1, driver_fit_rows=512)
-    short = clustered.withColumn("embedding", F.slice("embedding", 1, 5))
-    with pytest.raises(Exception, match="vector length|length-32"):
-        assign_frame_arrow(short, "embedding", cents).collect()
-    other = ivf_fit(clustered, dim=32, nlist=4, iters=1, driver_fit_rows=256)
-    with pytest.raises(ValueError, match="different leaf centroids"):
-        assign_frame_arrow(
-            clustered, "embedding", cents, two_level=fit_two_level(other)
-        )
-
-
 def test_nan_vectors_refused_on_both_backends(spark, clustered):
-    """A NaN component must be refused LOUDLY by both sink guards — the
-    JVM checked_vec (Spark: NaN greatest + NaN = NaN would silently
-    assign cluster 0) and the arrow backend's python-side check — never
-    silently partitioned (r13 review pass 2)."""
+    """A NaN component must be refused LOUDLY — by checked_vec (Spark:
+    NaN greatest + NaN = NaN would silently assign cluster 0) and so by
+    the single assignment entry that binds it — never silently
+    partitioned (r13 review pass 2). A NaN CENTROID (load_centroids can
+    hand one over) is refused by the same entry before any job runs."""
     from crossbar_data_process_spark.operators.ivf import (
-        assign_frame_arrow,
+        assign_clusters,
         checked_vec,
     )
 
@@ -623,12 +551,19 @@ def test_nan_vectors_refused_on_both_backends(spark, clustered):
             checked_vec(F.col("embedding"), 32, "embedding").alias("v")
         ).collect()
     with pytest.raises(Exception, match="non-finite"):
-        assign_frame_arrow(poisoned, "embedding", cents).collect()
-    # and a NaN CENTROID is refused at construction on the arrow backend
+        assign_clusters(poisoned, "embedding", cents).collect()
     bad = [list(c) for c in cents]
     bad[0][0] = float("nan")
     with pytest.raises(ValueError, match="non-finite"):
-        assign_frame_arrow(clustered, "embedding", bad)
+        assign_clusters(clustered, "embedding", bad)
+    # and a two-level quantizer over other leaves, before any job runs
+    from crossbar_data_process_spark.operators.ivf import fit_two_level
+
+    other = ivf_fit(clustered, dim=32, nlist=4, iters=1, driver_fit_rows=256)
+    with pytest.raises(ValueError, match="different leaf centroids"):
+        assign_clusters(
+            clustered, "embedding", cents, two_level=fit_two_level(other)
+        )
 
 
 # ---------- driver-chosen probe lists (ivf_topk_assigned)
@@ -698,6 +633,34 @@ def test_driver_probe_lists_keep_spark_summation_order(spark):
         .collect()
     ]
     assert spark_lists == _driver_probe_lists([q], cents, 2) == [[1, 0]]
+
+
+def test_filing_matches_probing_on_the_summation_order_vector(
+    spark, tmp_path
+):
+    """A silver files each vector under the list a probe picks first for
+    it: the one-shot write and a streaming batch both hold the vector of
+    the test above under list 1, where _driver_probe_lists points an
+    nprobe=1 probe. Filing by a blocked BLAS dot would score centroid 0
+    at 11-13 and put the vector where that probe never looks."""
+    from crossbar_data_process_spark.operators.ivf import (
+        _driver_probe_lists,
+        write_assigned_corpus,
+    )
+    from crossbar_data_process_spark.streaming.ann_ingest import (
+        ivf_ingest_writer,
+    )
+
+    q = [1e16] + [1.0] * 7 + [-1e16] + [1.0] * 7
+    cents = [[1.0] * 16, [0.0, 8.0] + [0.0] * 14]
+    assert _driver_probe_lists([q], cents, 1) == [[1]]
+    df = spark.createDataFrame([(0, q)], "vec_id long, embedding array<double>")
+    oneshot, streamed = str(tmp_path / "oneshot"), str(tmp_path / "streamed")
+    write_assigned_corpus(df, cents, oneshot)
+    ivf_ingest_writer(spark, cents, streamed)(df, 0)
+    for path in (oneshot, streamed):
+        rows = spark.read.parquet(path).select("vec_id", "cluster").collect()
+        assert [(r.vec_id, r.cluster) for r in rows] == [(0, 1)], path
 
 
 def _join_probe_topk(spark, path, queries, centroids, k, nprobe, quantized):

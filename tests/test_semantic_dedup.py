@@ -231,83 +231,6 @@ def test_cluster_cap_stats_surfaces_dropped_and_sharded_mass(
     assert r2.n_sharded_docs == n and r2.n_dropped_docs == 0
 
 
-def test_arrow_backends_pairs_byte_identical(spark, corpus, cents):
-    """assign_backend='arrow' + pair_backend='arrow' (the BLAS scale
-    backends, r13) must produce the IDENTICAL pair set as the full JVM
-    path — flat and two-level, sharded and not, zero vector included
-    (numpy's inf/nan drop ≡ try_divide's NULL drop)."""
-    from crossbar_data_process_spark.operators.ivf import fit_two_level
-
-    with_zero = corpus.unionByName(
-        spark.createDataFrame(
-            [(99_999, [0.0] * DIM)], "vec_id long, embedding array<float>"
-        )
-    )
-    tl = fit_two_level(cents)
-    for two_level in (None, tl):
-        for target in (None, 10):
-            jvm = {
-                (r.vec_a, r.vec_b, r.cosine)
-                for r in neighbor_pairs_ivf(
-                    with_zero, cents, threshold=0.95,
-                    shard_target=target, two_level=two_level,
-                ).collect()
-            }
-            arrow = {
-                (r.vec_a, r.vec_b, r.cosine)
-                for r in neighbor_pairs_ivf(
-                    with_zero, cents, threshold=0.95,
-                    shard_target=target, two_level=two_level,
-                    assign_backend="arrow", pair_backend="arrow",
-                ).collect()
-            }
-            assert jvm == arrow, (two_level is not None, target)
-    with pytest.raises(ValueError, match="assign_backend"):
-        neighbor_pairs_ivf(corpus, cents, assign_backend="blas")
-    with pytest.raises(ValueError, match="pair_backend"):
-        neighbor_pairs_ivf(corpus, cents, pair_backend="blas")
-
-
-def test_arrow_kernel_rounding_matches_spark_round_on_half_boundaries(spark):
-    """The pair kernel's rounding must equal F.round(x, 6) EXACTLY —
-    including half-boundary doubles where the naive floor(abs*1e6+0.5)
-    form splits from Spark's shortest-repr HALF_UP (r13 review finding:
-    0.0005045 → Spark 0.000505, floor-form 0.000504). Exercise the
-    kernel end-to-end: planted 2-d vectors whose cosine lands exactly on
-    half-boundary doubles, compared pair-for-pair across backends."""
-    import math
-
-    # vectors (1,0) and (cos θ, sin θ): cosine == the planted double.
-    # array<DOUBLE> storage is load-bearing (r13 review pass 2): float32
-    # storage perturbs the planted values 10–60000× outside the 1e-7
-    # danger band, so the sparse Decimal path would never run and the
-    # test would pass with the parity fix reverted. With doubles the
-    # planted cosines sit ~1e-14 from their half boundaries and MUST
-    # take the exact path.
-    planted = [0.0005045, 0.1234565, 0.9999875, 0.5000005, 0.0000005]
-    rows = [(0, [1.0, 0.0])]
-    for i, c in enumerate(planted):
-        rows.append((i + 1, [c, math.sqrt(max(0.0, 1.0 - c * c))]))
-    corpus = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    cents = [[1.0, 0.0]]
-    jvm = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in neighbor_pairs_ivf(
-            corpus, cents, threshold=0.0, shard_target=None
-        ).collect()
-    }
-    arrow = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in neighbor_pairs_ivf(
-            corpus, cents, threshold=0.0, shard_target=None,
-            pair_backend="arrow",
-        ).collect()
-    }
-    assert jvm == arrow and len(jvm) >= len(planted)
-
-
 def test_cluster_cap_side_product_matches_standalone(spark, corpus, cents):
     """VERDICT r14 #2: semantic_dedup(..., cap_stats_sink=d) must fill
     the EXACT numbers the standalone cluster_cap_stats re-assignment
