@@ -776,7 +776,7 @@ class TwoLevelQuantizer:
     The measured wall: flat ``ivf_assign`` is a literal-matrix expression
     costing O(nlist) dot products PER ROW, and SemDeDup wants
     nlist ≈ n/250 (constant expected cluster size), so corpus assignment
-    is O(n·nlist) = O(n^1.5) overall — ``llm_build --scale 100`` died on
+    is O(n·nlist) = O(n^1.5) overall — a 500k-document corpus build died on
     /tmp spill before the cluster-size policy landed (BASELINE r12 memory
     traps). The standard fix (FAISS's IMI/two-level shape): cluster the
     nlist leaf centroids themselves into ntop ≈ √nlist top-level groups

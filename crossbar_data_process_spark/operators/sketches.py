@@ -128,11 +128,10 @@ def check_quantile_expectations(
     hist: DataFrame,
     rules: dict[str, tuple[float, "callable"]],
 ) -> DataFrame:
-    """Distribution-level data-quality gate over the HISTOGRAM SILVER —
-    the quantile twin of ``profiling.check_expectations``: assert shape
-    properties ("p95 doc length ≤ 50k", "median perplexity ≥ 2") from
-    kilobytes of bin counts instead of rescanning the corpus. ``rules``
-    maps a rule name to ``(q, check)`` where ``check`` is a
+    """Distribution-level data-quality gate over the HISTOGRAM SILVER:
+    assert shape properties ("p95 doc length ≤ 50k", "median perplexity
+    ≥ 2") from kilobytes of bin counts instead of rescanning the corpus.
+    ``rules`` maps a rule name to ``(q, check)`` where ``check`` is a
     Column→Column boolean on the quantile's value (upper-edge estimate,
     within one bin width — see :func:`rollup_quantiles`; a NULL estimate,
     i.e. the quantile falls in nonpositive mass, fails the rule: an

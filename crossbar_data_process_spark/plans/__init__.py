@@ -1,3 +1,4 @@
-from crossbar_data_process_spark.plans.queries import BENCH_QUERIES, ORACLES, QUERIES
-
-__all__ = ["BENCH_QUERIES", "ORACLES", "QUERIES"]
+"""Composed plans: the CROssBAR gold adapters, the gold build (``gold.py``),
+the KG path queries (``kg.py``) and the declared query registry
+(``queries.py``, imported directly by its users so the gold build never
+loads it)."""

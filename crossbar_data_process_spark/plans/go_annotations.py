@@ -41,7 +41,7 @@ def _aspect_label(aspect: Column) -> Column:
     m = F.create_map(
         *[x for k, v in ASPECT_NODE_LABEL.items() for x in (F.lit(k), F.lit(v))]
     )
-    return m.getItem(aspect)
+    return m[aspect]
 
 
 def _underscored(c: Column) -> Column:
@@ -114,7 +114,7 @@ def domain_go_edges(interpro2go: DataFrame, aspects: DataFrame) -> DataFrame:
     df = interpro2go.join(F.broadcast(aspects), "go_id", "inner")
     rel = F.create_map(
         *[x for k, v in DOMAIN_FUNCTION_LABEL.items() for x in (F.lit(k), F.lit(v))]
-    ).getItem(F.col("aspect"))
+    )[F.col("aspect")]
     label = F.concat_ws(
         "_", F.lit("protein_domain"), rel, _underscored(_aspect_label(F.col("aspect")))
     )

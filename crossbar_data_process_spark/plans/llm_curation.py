@@ -102,7 +102,7 @@ def curate_documents(
     stage's own bucket build — exact (what the LSH stage actually saw:
     the post-gate, post-exact-dedup stream) and free of the standalone
     gauge's signature-pipeline re-run. This supersedes estimating over
-    the curated output at pipeline scale (``scripts/llm_build.py``).
+    the curated output at pipeline scale.
 
     All default off so the q55 oracle pipeline is unchanged."""
     from crossbar_data_process_spark.functions.text import (

@@ -34,7 +34,7 @@ def effect_label(col) -> F.Column:
     m = F.create_map(
         *[x for k, v in EFFECT_LABELS.items() for x in (F.lit(k), F.lit(v))]
     )
-    return m.getItem(c)
+    return m[c]
 
 
 def collectri_process(

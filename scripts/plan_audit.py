@@ -48,8 +48,8 @@ def main() -> None:
         f"Generated by `scripts/plan_audit.py` at `{sf_dir}` "
         "(AQE-initial plans: what static planning commits to; AQE only "
         "improves from here). Columns count physical operators; "
-        "`push` = a parquet scan carries pushed filters; `py` = sanctioned "
-        "Arrow/Python stages (media codecs only by policy).",
+        "`push` = a parquet scan carries pushed filters; `py` = "
+        "Arrow/Python stages (none allowed in a declared query).",
         "",
         "NOTE on multi-consumer pipelines (q55/q26b/q63/...): the engine "
         "materializes shared intermediates via lazy localCheckpoint "

@@ -154,9 +154,8 @@ ZIPF_S = 1.07
 
 
 def zipf_texts(n_docs: int, seed: int = 20260814) -> list[str]:
-    """The Zipf corpus recipe as a reusable generator (r12: shared with
-    scripts/llm_build.py's --scale 100 corpus): ``n_docs`` texts with the
-    documented vocabulary/length/plant structure — a 90%-prefix near-dup
+    """The Zipf corpus recipe as a reusable generator: ``n_docs`` texts
+    with the documented vocabulary/length/plant structure — a 90%-prefix near-dup
     every 25th doc, an exact re-ingest double every 100th."""
     rng = np.random.default_rng(seed)
     ranks = np.arange(1, VOCAB_SIZE + 1, dtype=np.float64)

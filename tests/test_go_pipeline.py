@@ -65,3 +65,27 @@ def test_domain_go_edges(spark):
     assert len(out) == 1
     assert out[0].label == "protein_domain_enables_molecular_function"
     assert out[0].src == "interpro:IPR000001"
+
+
+def test_label_maps_index_without_deprecated_getitem(spark):
+    """The label maps of the GO and TF adapters index with a Column key.
+    ``Column.getItem(Column)`` is deprecated and emits a FutureWarning;
+    ``m[c]`` builds the same plan without one, so no warning may fire."""
+    import warnings
+
+    from pyspark.sql import functions as F
+
+    from crossbar_data_process_spark.plans.go_annotations import _aspect_label
+    from crossbar_data_process_spark.plans.tf_gen import effect_label
+
+    i2g = spark.createDataFrame([Row(interpro_id="IPR000001", go_id="GO:3")])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        effect = effect_label(F.col("effect"))
+        aspect = _aspect_label(F.col("aspect"))
+        edges = domain_go_edges(i2g, _aspects(spark))
+    row = spark.createDataFrame([Row(effect=-1, aspect="F")]).select(
+        effect.alias("effect"), aspect.alias("aspect")
+    ).first()
+    assert (row.effect, row.aspect) == ("Repression", "molecular function")
+    assert edges.first().label == "protein_domain_located_in_cellular_component"

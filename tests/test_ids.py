@@ -108,90 +108,3 @@ def test_large_registry_path_via_broadcast_map(spark):
         "FooDB": "foodb:9",
     }
 
-
-# ------------------------------------------------- URL canonicalization (r07)
-def test_canonicalize_url_collapses_equivalent_forms(spark):
-    from crossbar_data_process_spark.functions.urls import canonicalize_url
-
-    forms = [
-        "HTTP://Example.COM/Path/Page?a=1&utm_source=x#frag",
-        "https://example.com:443/Path/Page?a=1",
-        "https://example.com/Path/Page?a=1&fbclid=abc",
-        " https://example.com/Path/Page/?a=1&gclid=z ",
-    ]
-    df = spark.createDataFrame([(u,) for u in forms], "url string")
-    got = {r.c for r in df.select(canonicalize_url("url").alias("c")).collect()}
-    assert got == {"https://example.com/Path/Page?a=1"}, got
-
-
-def test_canonicalize_url_preserves_distinctions(spark):
-    """Different pages stay different: path CASE, real query params, and
-    hosts are all semantic."""
-    from crossbar_data_process_spark.functions.urls import canonicalize_url
-
-    urls = [
-        "https://example.com/page?a=1",
-        "https://example.com/page?a=2",
-        "https://example.com/PAGE?a=1",
-        "https://other.com/page?a=1",
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    assert df.select(canonicalize_url("url").alias("c")).distinct().count() == 4
-
-
-def test_canonicalize_url_tracking_match_is_anchored(spark):
-    """Parameter names CONTAINING a tracking name (href=, xref=) and path
-    segments like Amazon's /ref=sr_1 are NOT tracking params — an
-    unanchored match collided distinct pages into one dedup key (found in
-    r7 review: '?href=abc' and '?href=zzz' both canonicalized to '?h')."""
-    from crossbar_data_process_spark.functions.urls import canonicalize_url
-
-    urls = [
-        "https://ex.com/?href=abc",
-        "https://ex.com/?href=zzz",
-        "https://ex.com/?xref=1",
-        "https://ex.com/?xref=2",
-        "https://ex.com/dp/B01/ref=sr_1?k=shoes",
-        "https://ex.com/dp/B01/ref=x9?k=hats",
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = [r.c for r in df.select(canonicalize_url("url").alias("c")).collect()]
-    # every page stays distinct…
-    assert len(set(got)) == len(urls), got
-    # …and the non-tracking params survive verbatim
-    assert "https://ex.com?href=abc" in got
-    assert "https://ex.com/dp/B01/ref=sr_1?k=shoes" in got
-    # while REAL tracking params (?&-anchored) still strip cleanly,
-    # including consecutive ones and mid-string ones
-    tracked = [
-        "https://ex.com/p?utm_a=1&utm_b=2&k=3",
-        "https://ex.com/p?k=3&utm_a=1&utm_b=2",
-        "https://ex.com/p?utm_a=1&k=3&ref=feed",
-    ]
-    df2 = spark.createDataFrame([(u,) for u in tracked], "url string")
-    got2 = {r.c for r in df2.select(canonicalize_url("url").alias("c")).collect()}
-    assert got2 == {"https://ex.com/p?k=3"}, got2
-
-
-def test_url_host_extraction(spark):
-    from crossbar_data_process_spark.functions.urls import url_host
-
-    rows = [
-        ("https://WWW.Example.com/x", "example.com"),
-        ("http://sub.domain.org:8080/path", "sub.domain.org"),
-        ("not a url", None),
-    ]
-    df = spark.createDataFrame([(u,) for u, _ in rows], "url string")
-    got = [r.h for r in df.select(url_host("url").alias("h")).collect()]
-    assert got == [want for _, want in rows]
-
-
-def test_canonical_url_is_jvm_side(spark):
-    from crossbar_data_process_spark.functions.urls import canonicalize_url, url_host
-
-    df = spark.createDataFrame([("https://a.com/x",)], "url string")
-    plan = (
-        df.select(canonicalize_url("url"), url_host("url"))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Python" not in plan and "Arrow" not in plan

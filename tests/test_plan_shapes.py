@@ -307,7 +307,7 @@ def q01_agg(spark, sf_dir):
 
 
 # -------- side-product gauge pins (r16, VERDICT r15 #6): the r15 win —
-# cap stats as side-products of the pass (llm_build scale-1000 2,437 →
+# cap stats as side-products of the pass (a scale-1000 corpus build, 2,437 →
 # 1,269 s; the old standalone gauges re-ran corpus-sized pipelines to
 # report on them) — is equality-pinned for VALUES elsewhere, but nothing
 # pinned the COST. Job/stage counts CANNOT pin it: measured at sf0.001,
