@@ -10,6 +10,11 @@ first hit). Every ``CHECKPOINT_EVERY``-th superstep uses an eager
 ``localCheckpoint`` instead, which also truncates the lineage, so long
 chains don't grow the plan (and driver-side analysis) unboundedly; its
 blocks belong to the checkpointed RDD and are freed by the ContextCleaner.
+
+``driver_graph`` is the layer's one bounded-driver mode (Pregelix's point:
+pick the physical plan by graph size). A graph within ``DRIVER_MAX_EDGES``
+is collected once and solved in Python, which reproduces the loop's
+output exactly; a larger one runs ``supersteps``.
 """
 
 from __future__ import annotations
@@ -18,8 +23,39 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType
 
 CHECKPOINT_EVERY = 5
+DRIVER_MAX_EDGES = 500_000
+
+
+def driver_graph(
+    nodes: DataFrame, edges: DataFrame, id_col: str, src_col: str, dst_col: str
+) -> tuple[list, list[tuple]] | None:
+    """``(ids, pairs)``: every ``id_col`` value of ``nodes`` and every
+    ``(src, dst)`` of ``edges``, duplicates and NULLs kept, or None when
+    the graph takes the loop.
+
+    Each side is one ``limit(budget+1)`` collect, which stops reading past
+    the budget; either side over ``DRIVER_MAX_EDGES`` rows takes the loop.
+    So do id types other than all-integral or all-binary-string: only for
+    those is Python's ``==`` Spark's join equality (NaN, for one, equals
+    itself in a join and not in Python).
+    """
+    types = {nodes.schema[id_col].dataType}
+    types |= {edges.schema[c].dataType for c in (src_col, dst_col)}
+    if types != {StringType()} and not all(
+        isinstance(t, IntegralType) for t in types
+    ):
+        return None
+    budget = DRIVER_MAX_EDGES
+    pairs = edges.select(src_col, dst_col).limit(budget + 1).collect()
+    if len(pairs) > budget:
+        return None
+    ids = nodes.select(id_col).limit(budget + 1).collect()
+    if len(ids) > budget:
+        return None
+    return [r[0] for r in ids], pairs  # Rows are (src, dst) tuples
 
 
 def supersteps(

@@ -8,10 +8,12 @@ merge is declared once as (key, [CoalesceSpec...]) and folded left-to-right
 across any number of sources; the whole chain is one Catalyst plan, so the
 optimizer can reorder/broadcast and AQE splits skewed keys.
 
-Scale note: all sources in one chain shuffle on the same composite key, so
-consecutive sort-merge joins reuse the exchange (one shuffle per source, no
-re-partitioning between steps). For repeated runs over stable silver tables,
-bucketing those tables on the merge key removes the shuffles entirely.
+Scale note: each added source costs two shuffles (measured: 2 x 5 for
+``dti_edges``' 6 sources). A full outer join's key comes out as
+``coalesce(l.k, r.k)``, which is not hash-partitioned on the key, so the
+next sort-merge join re-shuffles both sides. For repeated runs over stable
+silver tables, bucketing those tables on the merge key spares the exchanges
+on the bucketed inputs.
 """
 
 from __future__ import annotations

@@ -550,10 +550,7 @@ def resolve_neardups(
         .distinct()
     )
     edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    # endpoints_in_nodes: `nodes` IS the endpoint set (built two lines
-    # up), so the fast path's membership semi-joins would be pure
-    # overhead here (r16 optimization round)
-    comps = connected_components(nodes, edges, endpoints_in_nodes=True)
+    comps = connected_components(nodes, edges)
     clusters = comps.groupBy("component").agg(
         F.min("id").alias(id_col), F.count(F.lit(1)).alias("cluster_size")
     )

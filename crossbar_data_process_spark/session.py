@@ -38,7 +38,8 @@ def _default_driver_mem() -> str:
             "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
         ):
             if os.path.exists(limit_file):
-                raw = open(limit_file).read().strip()
+                with open(limit_file) as f:
+                    raw = f.read().strip()
                 if raw.isdigit():  # "max" / huge sentinel = unlimited
                     limit_gb = int(raw) // (1024**3)
                     if 0 < limit_gb < (total_gb or limit_gb + 1):

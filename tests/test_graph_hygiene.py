@@ -9,19 +9,26 @@ at production scale).
 from __future__ import annotations
 
 import gc
+import importlib
+import random
 import re
 import time
+from collections import Counter
 from pathlib import Path
 
 import pytest
 
 from pyspark.sql import functions as F
 
+from crossbar_data_process_spark.graph import pregel
 from crossbar_data_process_spark.graph.components import connected_components
 from crossbar_data_process_spark.graph.hierarchy import transitive_closure
-from crossbar_data_process_spark.graph.pagerank import pagerank
+from crossbar_data_process_spark.graph.pagerank import _UNITS, _dec, pagerank
 from crossbar_data_process_spark.graph.pregel import CHECKPOINT_EVERY, supersteps
 from crossbar_data_process_spark.operators.mapping import broadcast_map, fallback_map
+
+# the package re-exports the function under the module's name
+pagerank_module = importlib.import_module("crossbar_data_process_spark.graph.pagerank")
 
 
 def _storage_entries(spark) -> int:
@@ -55,7 +62,7 @@ def _settled_storage_delta(
 
 
 @pytest.mark.slow
-def test_components_30_iters_storage_bounded(spark):
+def test_components_30_iters_storage_bounded(spark, monkeypatch):
     # Path graph: the min label travels one hop per iteration, so a 40-node
     # path does NOT converge within 30 iterations — the loop runs all 30.
     n = 40
@@ -64,12 +71,11 @@ def test_components_30_iters_storage_bounded(spark):
         [(i, i + 1) for i in range(n - 1)], "src int, dst int"
     )
     before = _storage_entries(spark)
-    # driver_max_edges=None: this test pins the LOOP's storage hygiene —
-    # the r16 small-graph fast path would otherwise resolve this tiny
-    # graph driver-side and exercise nothing
-    out = connected_components(
-        nodes, edges, max_iters=30, driver_max_edges=None
-    )
+    # a zero budget: this test pins the LOOP's storage hygiene — the
+    # bounded-driver mode would otherwise resolve this tiny graph on the
+    # driver and exercise nothing
+    monkeypatch.setattr(pregel, "DRIVER_MAX_EDGES", 0)
+    out = connected_components(nodes, edges, max_iters=30)
     rows = out.collect()
     assert len(rows) == n
     # after 30 iterations every node within 30 hops of node 0 carries label 0
@@ -80,64 +86,157 @@ def test_components_30_iters_storage_bounded(spark):
     assert _settled_storage_delta(spark, before) <= 10
 
 
-def test_components_fast_path_matches_loop(spark):
-    """The r16 small-graph fast path (bounded driver union-find +
-    broadcast map) must return the IDENTICAL (id, component) set as the
-    distributed propagation loop — including isolated nodes, duplicate
-    edges, self-loops, and edges whose endpoint is OUTSIDE ``nodes``
-    (which the loop cannot propagate through and the fast path must
-    filter out)."""
-    import random
+def _random_graph(spark, seed: int, id_type: str = "long"):
+    """A small random graph with every shape the loop's joins treat
+    specially: dangling nodes, self-loops, duplicate and NULL node ids,
+    NULL endpoints and endpoints outside ``nodes``."""
+    rng = random.Random(seed)
+    ids = [rng.randrange(20) for _ in range(rng.randint(1, 20))]
+    ids += rng.sample(ids, rng.randint(0, min(3, len(ids))))  # duplicates
+    ids += [None] * rng.randint(0, 2)
 
-    rng = random.Random(41)
-    nodes = spark.createDataFrame(
-        [(i,) for i in range(60)], "id long"
-    )
-    edge_rows = [(rng.randrange(60), rng.randrange(60)) for _ in range(50)]
-    # endpoints outside `nodes` must not link 3 and 7 (x=999 holds no
-    # label in the loop); duplicate + self-loop edges are harmless
-    edge_rows += [(3, 999), (999, 7), (5, 5), (10, 11), (10, 11)]
-    edges = spark.createDataFrame(edge_rows, "src long, dst long")
-    fast = {
-        (r.id, r.component)
-        for r in connected_components(nodes, edges).collect()
-    }
-    loop = {
-        (r.id, r.component)
-        for r in connected_components(
-            nodes, edges, driver_max_edges=None
-        ).collect()
-    }
-    assert fast == loop
-    # over-budget graphs fall back to the loop (same answer)
-    capped = {
-        (r.id, r.component)
-        for r in connected_components(
-            nodes, edges, driver_max_edges=3
-        ).collect()
-    }
-    assert capped == loop
-    # the endpoints_in_nodes contract (resolve_neardups' shape): when
-    # every endpoint IS in nodes, skipping the semi-joins changes nothing
-    in_nodes = spark.createDataFrame(
-        [(a, b) for a, b in edge_rows if a < 60 and b < 60],
+    def endpoint():
+        r = rng.random()
+        if r < 0.05:
+            return None
+        return rng.randrange(20, 24) if r < 0.15 else rng.randrange(20)
+
+    pairs = [(endpoint(), endpoint()) for _ in range(rng.randint(0, 40))]
+    pairs += [(v, v) for v in rng.sample(range(20), 2)]  # self-loops
+    if id_type == "string":
+        ids = [None if v is None else f"v{v}" for v in ids]
+        pairs = [tuple(None if v is None else f"v{v}" for v in p) for p in pairs]
+    nodes = spark.createDataFrame([(v,) for v in ids], f"id {id_type}")
+    edges = spark.createDataFrame(pairs, f"src {id_type}, dst {id_type}")
+    return nodes, edges
+
+
+def test_components_fast_path_matches_loop(spark, monkeypatch):
+    """The bounded-driver union-find must return the IDENTICAL (id,
+    component) rows as the distributed propagation loop — including
+    isolated nodes, duplicate edges, self-loops, duplicate and NULL node
+    ids, NULL endpoints and endpoints OUTSIDE ``nodes`` (which the loop
+    cannot propagate through and the driver step must filter out)."""
+
+    def rows(nodes, edges, budget=None):
+        with monkeypatch.context() as m:
+            if budget is not None:
+                m.setattr(pregel, "DRIVER_MAX_EDGES", budget)
+            return Counter(
+                (r.id, r.component)
+                for r in connected_components(nodes, edges).collect()
+            )
+
+    for seed in range(2):
+        nodes, edges = _random_graph(
+            spark, seed, "string" if seed % 2 else "long"
+        )
+        assert rows(nodes, edges) == rows(nodes, edges, budget=0), seed
+    # an endpoint outside `nodes` must not link 3 and 7 (999 holds no
+    # label in the loop); an over-budget graph takes the loop (same answer)
+    nodes = spark.createDataFrame([(i,) for i in range(12)], "id long")
+    edges = spark.createDataFrame(
+        [(3, 999), (999, 7), (5, 5), (10, 11), (10, 11), (1, 2)],
         "src long, dst long",
     )
-    assert {
-        (r.id, r.component)
-        for r in connected_components(
-            nodes, in_nodes, endpoints_in_nodes=True
-        ).collect()
-    } == {
-        (r.id, r.component)
-        for r in connected_components(
-            nodes, in_nodes, driver_max_edges=None
-        ).collect()
-    }
+    loop = rows(nodes, edges, budget=0)
+    assert loop[(7, 7)] == 1 and loop[(11, 10)] == 1
+    assert rows(nodes, edges) == loop
+    assert rows(nodes, edges, budget=3) == loop
+
+
+def test_pagerank_driver_matches_loop_bit_for_bit(spark, monkeypatch):
+    """The driver step reproduces the loop's double -> DECIMAL(38,18)
+    casts, exact decimal sums and update order: every rank is the same
+    double, on random graphs with every join corner case and 1-6
+    supersteps."""
+
+    def no_loop(*args, **kwargs):
+        raise AssertionError("a small graph must not run the loop")
+
+    def ranks(df):
+        return Counter((r.id, float.hex(r.rank)) for r in df.collect())
+
+    graphs = [
+        (seed, *_random_graph(spark, seed, "string" if seed % 4 == 3 else "long"))
+        for seed in range(20)
+    ]
+    graphs.append(
+        (20, spark.createDataFrame([(7,)], "id long"),
+         spark.createDataFrame([(7, 7), (7, 8)], "src long, dst long"))
+    )
+    for seed, nodes, edges in graphs:
+        # every count from 1 to 6, then 1 and 2: each loop superstep costs
+        # ~10 jobs, so the remaining graphs stay short
+        iters = 1 + seed % 6 if seed < 6 else 1 + seed % 2
+        with monkeypatch.context() as m:
+            m.setattr(pagerank_module, "supersteps", no_loop)
+            driver = ranks(pagerank(nodes, edges, iters=iters))
+        with monkeypatch.context() as m:
+            m.setattr(pregel, "DRIVER_MAX_EDGES", 0)
+            loop = ranks(pagerank(nodes, edges, iters=iters))
+        assert driver == loop, (seed, iters)
+
+
+def test_decimal_cast_matches_jvm(spark):
+    """``_dec`` is Spark's double -> DECIMAL(38,18) cast only while the
+    JVM's ``Double.toString`` gives Python's shortest ``repr`` digits (not
+    guaranteed before JDK 19, JDK-4511638). Compare it with the JVM's own
+    cast on seeded doubles shaped like ranks and ``rank / out_deg``
+    shares, and the cast back to double with ``units / 10**18``. On a
+    mismatch, fix ``_dec``, not this test."""
+    rng = random.Random(5)
+    xs = [0.1 + 0.9 * rng.random() for _ in range(20_000)]
+    xs += [rng.random() / rng.randint(1, 5000) / rng.randint(1, 60)
+           for _ in range(20_000)]
+    xs += [10 ** rng.uniform(-17, 0) for _ in range(10_000)]
+    xs += [1.0 / k for k in range(1, 2001)]
+    got = spark.createDataFrame([(x,) for x in xs], "x double").select(
+        "x",
+        F.col("x").cast("decimal(38,18)").alias("d"),
+        F.col("x").cast("decimal(38,18)").cast("double").alias("back"),
+    ).collect()
+    assert len(got) == len(xs) >= 50_000
+    bad = [
+        r.x for r in got
+        if _dec(r.x) != int(r.d.scaleb(18))
+        or float.hex(_dec(r.x) / _UNITS) != float.hex(r.back)
+    ]
+    assert bad == [], bad[:5]
+
+
+def test_graph_driver_path_job_counts(spark):
+    """On a 30-node graph both algorithms run as the bounded-driver mode:
+    one bounded collect of the edges and one of the node ids, whatever
+    the superstep count (the loop ran 37 jobs for PageRank's 3)."""
+    n = 30
+    # one partition each: a bounded collect of a k-partition input takes
+    # a number of jobs that depends on k (the default parallelism)
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "id int").coalesce(1)
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % (n - 1)) for i in range(n - 1)], "src int, dst int"
+    ).coalesce(1)
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(group, fn):
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            spark.sparkContext.setJobGroup(None, None)
+        return len(tracker.getJobIdsForGroup(group)), out
+
+    n_pr, pr = jobs("driver-pagerank", lambda: pagerank(nodes, edges, iters=3))
+    n_cc, cc = jobs("driver-components", lambda: connected_components(nodes, edges))
+    assert (n_pr, n_cc) == (2, 2)
+    assert abs(sum(r.rank for r in pr.collect()) - 1.0) < 1e-12
+    assert {r.component for r in cc.collect()} == {0, n - 1}  # n-1 is isolated
 
 
 @pytest.mark.slow
-def test_pagerank_storage_bounded_and_converges(spark):
+def test_pagerank_storage_bounded_and_converges(spark, monkeypatch):
+    # a zero budget keeps this on the loop (see the components test above)
+    monkeypatch.setattr(pregel, "DRIVER_MAX_EDGES", 0)
     n = 30
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id int")
     # ring + one dangling node (no out-edges) to exercise the dangling path
