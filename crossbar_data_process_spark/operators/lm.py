@@ -11,9 +11,8 @@ high = out-of-distribution (gibberish, boilerplate soup, wrong language).
 
 Scale shape (100 TB): the LM table is vocabulary-sized (tiny vs corpus);
 corpus totals ride a 1-row broadcast; scoring is one equi-join on the
-token plus one groupBy on the doc id — identical machinery, and the same
-Generate-projection and DECIMAL-determinism contracts, as the naive-Bayes
-classifier (operators/classifier.py).
+token plus one groupBy on the doc id, under the Generate-projection
+contract (``_token_stream``) and the DECIMAL-determinism contract.
 
 Versus the reference: no counterpart (no trained/statistical component
 anywhere in the reference) — engine charter, SURVEY.md §7 "beyond the
@@ -49,7 +48,7 @@ def unigram_logprob_table(
 ) -> DataFrame:
     """(token, logp): Lidstone-smoothed unigram log-probabilities,
     ``round(ln((c + α) / (T + αV)), scale)`` — rounded so the LM is an
-    engine-portable artifact (same convention as the classifier weights)."""
+    engine-portable artifact."""
     tok = _token_stream(_spread(docs), text_col)
     counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     totals = counts.agg(
@@ -117,7 +116,10 @@ def _token_stream(
     docs: DataFrame, text_col: str, id_col: str | None = None
 ) -> DataFrame:
     """Lowercased token occurrences, heavy exprs bound BELOW the explode
-    (the Generate-projection contract — see classifier._token_table)."""
+    (the Generate-projection contract: Spark splits a select that mixes a
+    generator with other expressions into Generate + a Project ABOVE it,
+    and CollapseProject never merges across Generate, so an expression
+    placed there runs once per TOKEN instead of once per document)."""
     cols = [F.col(id_col)] if id_col else []
     pre = docs.select(*cols, F.lower(F.col(text_col)).alias("__lt"))
     return pre.select(

@@ -4,10 +4,10 @@ LLM-pipeline charter).
 ``df.sample()`` draws from a per-partition RNG stream: the result changes
 with partitioning, task retries, and row order — unacceptable for a
 pretraining mix that must be reproducible bit-for-bit across reruns and
-cluster sizes. These operators decide membership per ROW from a hash of
-its id, so the same row makes the same decision everywhere: no RNG state,
-no partitioning sensitivity, retry-safe, and naturally consistent across
-tables (the same ``(key, salt)`` always lands in the same stratum).
+cluster sizes. ``deterministic_sample`` decides membership per ROW from a
+hash of its id, so the same row makes the same decision everywhere: no RNG
+state, no partitioning sensitivity, retry-safe, and naturally consistent
+across tables (the same ``(key, salt)`` always lands in the same stratum).
 
 Scale shape: pure scan-side Column expressions — membership is a filter
 pushed into the scan projection, no shuffle, no driver involvement.
@@ -55,119 +55,3 @@ def deterministic_sample(
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
     return df.filter(_bucket(F.col(key_col), salt) < int(fraction * _BUCKETS))
-
-
-def source_mix(
-    docs: DataFrame,
-    weights: dict[str, float],
-    source_col: str = "source",
-    key_col: str = "doc_id",
-    salt: str = "mix",
-) -> DataFrame:
-    """Training-mix downsampling: per-source keep fractions (e.g.
-    ``{"web": 0.1, "papers": 1.0}``) applied in ONE scan-side filter via a
-    CASE ladder over the source column — no per-source scans, no union.
-    Sources absent from ``weights`` are DROPPED (an explicit mix is a
-    whitelist)."""
-    for src, w in weights.items():
-        if not 0.0 <= w <= 1.0:
-            raise ValueError(f"weight for {src!r} must be in [0, 1], got {w}")
-    threshold = F.lit(None).cast("long")
-    for src, w in weights.items():
-        threshold = (
-            F.when(F.col(source_col) == src, F.lit(int(w * _BUCKETS)))
-            .otherwise(threshold)
-        )
-    return docs.filter(_bucket(F.col(key_col), salt) < threshold)
-
-
-def assign_split(
-    key: Column | str,
-    weights: dict[str, float],
-    salt: str = "split",
-) -> Column:
-    """Deterministic train/val/test (or any named) split as ONE scan-side
-    CASE column: the row's md5 bucket is compared against the cumulative
-    weight boundaries, so membership is a pure function of (key, salt) —
-    reproducible across runs, partitionings, and engines, and STABLE under
-    corpus growth (a row never migrates between splits when other rows
-    appear, unlike position- or RNG-based splitters). Weights must sum to
-    1 (±1e-6); split names assign in sorted order so the mapping is
-    independent of dict ordering."""
-    total = sum(weights.values())
-    if abs(total - 1.0) > 1e-6:
-        raise ValueError(f"weights must sum to 1, got {total}")
-    c = F.col(key) if isinstance(key, str) else key
-    b = _bucket(c, salt)
-    expr = None
-    acc = 0.0
-    names = sorted(weights)
-    for name in names[:-1]:
-        acc += weights[name]
-        cond = b < int(round(acc * _BUCKETS))
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    last = F.lit(names[-1])
-    return (last if expr is None else expr.otherwise(last)).alias("split")
-
-
-def source_mix_by_tokens(
-    docs: DataFrame,
-    budgets: dict[str, int],
-    token_col: str,
-    source_col: str = "source",
-    key_col: str = "doc_id",
-    salt: str = "mix",
-) -> tuple[DataFrame, dict[str, float]]:
-    """Training-mix downsampling specified the way mixes are actually
-    planned — PER-SOURCE TOKEN BUDGETS (e.g. ``{"web": 50_000_000_000,
-    "papers": 10_000_000_000}``) — compiled into :func:`source_mix`
-    fractions from the measured per-source token totals: fraction =
-    min(1, budget / total). Returns (sampled_df, derived_fractions) so
-    the compiled mix can be logged/frozen alongside the run.
-
-    A source's EXPECTED sampled token count is its budget exactly
-    (per-row hash membership is unbiased); the realized count differs by
-    sampling noise — O(sqrt(rows)) rows, negligible at corpus scale. A
-    budget at or above the source's total keeps the whole source;
-    sources absent from ``budgets`` are dropped (whitelist, as in
-    ``source_mix``).
-
-    Scale shape: ONE groupBy over (source) — a result bounded by the
-    number of sources, the bounded-collect contract (mirrors the IVF
-    fit / BPE vocab rule: driver state is hyperparameter-sized) — then
-    the same zero-shuffle scan-side CASE filter as ``source_mix``.
-    """
-    for src, b in budgets.items():
-        if b < 0:
-            raise ValueError(f"budget for {src!r} must be >= 0, got {b}")
-    totals = {
-        r["src"]: r["toks"]
-        for r in docs.filter(F.col(source_col).isin(list(budgets)))
-        .groupBy(F.col(source_col).alias("src"))
-        .agg(F.sum(F.col(token_col)).alias("toks"))
-        .collect()
-    }
-    def _fraction(src: str) -> float:
-        total = totals.get(src)
-        if total is None or not total:
-            # zero measured tokens — whether the source has 0-token/
-            # all-NULL rows or simply NO rows yet (it may not have
-            # arrived): budget >= total(0) means KEEP (costs 0 tokens,
-            # and a later-arriving source is then governed by its frozen
-            # 1.0 until the mix is recompiled). Only an explicit 0
-            # budget is a deliberate drop (r10 review + r10 ADVICE:
-            # the absent-source case must not silently freeze 0.0).
-            return 1.0 if budgets[src] > 0 else 0.0
-        return min(1.0, budgets[src] / total)
-
-    fractions = {src: _fraction(src) for src in budgets}
-    # a zero fraction drops the source — same as omitting it, but the
-    # returned dict documents the decision
-    sampled = source_mix(
-        docs,
-        {s: f for s, f in fractions.items() if f > 0.0},
-        source_col=source_col,
-        key_col=key_col,
-        salt=salt,
-    )
-    return sampled, fractions

@@ -2,9 +2,8 @@
 guide §2.6 "Overlap independent jobs"): Spark's scheduler happily runs
 several jobs at once inside one application — actions are only
 sequential because driver code calls them sequentially. A multi-table
-sink (dedup index: fingerprints/buckets/shingles; BM25 index:
-dl/df/stats) writes tables that share nothing but an ALREADY-MATERIALIZED
-upstream block set, so submitting them from a small thread pool lets the
+sink (dedup index: fingerprints/buckets/shingles) writes tables that
+share nothing but an ALREADY-MATERIALIZED upstream block set, so submitting them from a small thread pool lets the
 next write's tasks back-fill executors freed by the current write's
 straggler tail — wall time approaches max(write) instead of Σ(write),
 at identical results (disjoint output paths, deterministic inputs).

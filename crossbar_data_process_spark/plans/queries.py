@@ -29,7 +29,6 @@ from crossbar_data_process_spark.functions.text import (
     language_id,
     quality_score,
     token_count,
-    tokens,
 )
 from crossbar_data_process_spark.graph.components import connected_components
 from crossbar_data_process_spark.graph.hierarchy import transitive_closure
@@ -78,7 +77,7 @@ BENCH_QUERIES = [
     "q26b_simhash",
     # r14: q27_cosine_topk's bench slot follows the fold to the streaming
     # ANN ingest silver (2 sink batches + replay + full probe priced from
-    # day one — the q71 convention)
+    # day one)
     "q72_ann_streaming_ingest",
     "q28_events_hourly",
     "q41_sessionize",
@@ -87,7 +86,7 @@ BENCH_QUERIES = [
     "q52_kg_paths",
     # r15: q53_neardup_resolve's bench slot follows the fold to the
     # streaming semantic-dedup ingest (2 dedup-sink batches + replay +
-    # full probe priced from day one — the q71/q72 convention)
+    # full probe priced from day one — the q72 convention)
     "q73_semantic_dedup_ingest",
     # r04 additions
     "q54_ivf_topk",
@@ -103,12 +102,6 @@ BENCH_QUERIES = [
     # r07 addition: span-level segment dedup (q30_supplier_degree's folded
     # slot), benchmarked from day one
     "q59_segment_dedup",
-    # r07 addition: naive-Bayes token classifier (q37_numeric_parse's folded
-    # slot), benchmarked from day one
-    "q60_nb_quality",
-    # r13: q61_bm25's bench slot follows the fold to the indexed silver
-    # path (ingest + compaction + bucket-pruned probe priced from day one)
-    "q71_bm25_indexed",
     # r08 additions: snapshot diff (q14's folded slot) and incremental dedup
     # vs persisted index (q33's folded slot), benchmarked from day one
     "q62_snapshot_diff",
@@ -116,19 +109,16 @@ BENCH_QUERIES = [
     # r09 addition: end-to-end streaming ingest (q48_asof_join's folded
     # slot), benchmarked from day one
     "q64_streaming_ingest",
-    # r10 additions: benchmark decontamination (q04's folded slot) and
-    # deterministic mix sampling (q35's folded slot), benchmarked from day one
+    # r10 addition: benchmark decontamination (q04's folded slot),
+    # benchmarked from day one
     "q65_contamination",
-    "q66_mixture_sample",
     # r11 additions: PQ-ADC top-k (q39_ann_lsh's folded slot) and the
     # quantile-sketch rollup (q31's folded slot), benchmarked from day one
     "q67_pq_adc_topk",
     "q68_quantile_rollup",
-    # r12 additions: the IVF-PQ production silver path (q32's folded slot)
-    # and integer-exact RRF fusion (q47's folded slot), benchmarked from
-    # day one
+    # r12 addition: the IVF-PQ production silver path (q32's folded slot),
+    # benchmarked from day one
     "q69_ivfpq_silver",
-    "q70_rrf_fusion",
 ]
 
 
@@ -936,217 +926,6 @@ def q22_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Distributed multinomial naive-Bayes token classifier (the fastText-style
-# quality-classifier stage of LLM curation) trained SELF-SUPERVISED against
-# the engine's own heuristic quality gate (quality_score >= 0.82 — a
-# balanced ~52/48 split on this corpus, and the classifier recovers it at
-# ~90% vs a ~52% majority baseline: tests/test_classifier.py) and applied
-# corpus-wide in the same plan: ONE token groupBy to fit, one equi-join +
-# doc groupBy to score, totals/prior as 1-row broadcasts. Weights round at
-# 1e-6 and accumulate in DECIMAL (engine _dsum convention) so scores
-# hash-match DuckDB exactly. The label reuses the exact _QUALITY_SQL
-# expression the q22/q55 oracles share, so the heuristic being distilled
-# cannot drift from the declared gate.
-# r07: q37_numeric_parse's folded slot (merged into q15 — REGISTRY.md).
-def _nb_oracle(tau: float = 0.82) -> str:
-    return f"""
-WITH s AS (
-  SELECT doc_id, text,
-         len(list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '')) AS ntok,
-         len(regexp_extract_all(lower(text), '{_stop_pat()}')) AS swhits,
-         length(text) AS nch,
-         length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS njunk
-  FROM documents),
-lab AS (SELECT doc_id, text, ({_QUALITY_SQL} >= {tau}) AS y FROM s),
-tok AS (
-  SELECT doc_id, y,
-         unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                            x -> x <> '')) AS token
-  FROM lab),
-stats AS (
-  SELECT token,
-         COUNT(*) FILTER (WHERE y) AS c_pos,
-         COUNT(*) FILTER (WHERE NOT y) AS c_neg
-  FROM tok GROUP BY token),
-tot AS (
-  SELECT CAST(SUM(c_pos) AS DOUBLE) AS g_mass,
-         CAST(SUM(c_neg) AS DOUBLE) AS b_mass,
-         CAST(COUNT(*) AS DOUBLE) AS vocab
-  FROM stats),
-w AS (
-  -- floor-based fixed rounding (see the q22 lp CTE note): round()'s
-  -- half-cases are engine-specific; floor is exact in both
-  SELECT token,
-         floor(ln((c_pos + 1.0) * (b_mass + vocab)
-                  / ((c_neg + 1.0) * (g_mass + vocab))) * 1000000.0 + 0.5)
-           / 1000000.0 AS w
-  FROM stats, tot),
-prior AS (
-  SELECT floor(ln((COUNT(*) FILTER (WHERE y) + 1.0)
-               / (COUNT(*) FILTER (WHERE NOT y) + 1.0)) * 1000000.0 + 0.5)
-           / 1000000.0 AS prior
-  FROM lab),
-agg AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_scored_tokens,
-         SUM(CAST(w AS DECIMAL(28,6))) AS wsum
-  FROM tok JOIN w USING (token) GROUP BY doc_id)
-SELECT doc_id, n_scored_tokens,
-       CAST(wsum AS DOUBLE) + prior AS nb_score,
-       (CAST(wsum AS DOUBLE) + prior) > 0 AS nb_pred
-FROM agg, prior
-"""
-
-
-@query("q60_nb_quality", _nb_oracle())
-def q60_nb_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crossbar_data_process_spark.operators.classifier import nb_classify
-
-    d = _t(spark, sf_dir, "documents")
-    return nb_classify(d, label=quality_score("text") >= 0.82)
-
-
-# BM25 retrieval scoring (the search/RAG ranking half of a corpus pipeline)
-# as pure DataFrame aggs: inverted term stats in two groupBys, corpus
-# scalars on a 1-row broadcast, scoring via the query-term ⋈ tf access path
-# (never corpus × queries), 1e-6-rounded contributions DECIMAL-summed. The
-# query set derives deterministically from the corpus itself (every 97th
-# doc's first 4 tokens). NB: on this synthetic 31-word shared vocabulary no
-# term is discriminative, so self-retrieval is NOT guaranteed (and not
-# claimed) — the hash pins the exact scoring math; semantic ranking
-# behavior is pinned on planted corpora in tests/test_retrieval.py.
-# r07: q42_min_cost_supplier's folded slot (REGISTRY.md).
-# r12: the oracle's CTE chain is shared VERBATIM with q70_rrf_fusion (the
-# lexical arm of the fusion is this exact ranking) — one definition, two
-# oracles, so the two rows can never drift apart.
-_BM25_CTES = r"""dtok AS (
-  SELECT doc_id AS doc,
-         unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                            x -> x <> '')) AS term
-  FROM documents),
-tf AS (SELECT doc, term, COUNT(*) AS tf FROM dtok GROUP BY doc, term),
-dl AS (SELECT doc, CAST(SUM(tf) AS DOUBLE) AS dl FROM tf GROUP BY doc),
-stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs, AVG(dl) AS avgdl FROM dl),
-dfx AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-idf AS (
-  -- floor-based fixed rounding (see the q22 lp CTE note)
-  SELECT term,
-         floor(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) * 1000000.0 + 0.5)
-           / 1000000.0 AS idf,
-         avgdl
-  FROM dfx, stats),
-q AS (
-  -- FIXED query workload: the doc_id < 5000 bound keeps the query count
-  -- constant as the corpus grows (a benchmark whose query set scales with
-  -- the corpus measures Q x N growth, not per-query cost — the sf1 probe
-  -- measured slope 45 on the unbounded form because every term of this
-  -- 31-word vocabulary matches every document)
-  SELECT doc_id AS qid,
-         array_to_string(
-           (list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                        x -> x <> ''))[1:4], ' ') AS qt
-  FROM documents WHERE doc_id % 97 = 0 AND doc_id < 5000),
-qterms AS (
-  SELECT qid,
-         unnest(list_distinct(
-           list_filter(regexp_split_to_array(qt, '\s+'), x -> x <> ''))) AS term
-  FROM q),
-contrib AS (
-  SELECT qid, doc,
-         floor(((idf * (tf * 2.2))
-               / (tf + 1.2 * (0.25 + (0.75 * dl) / avgdl))) * 1000000.0 + 0.5)
-           / 1000000.0 AS c
-  FROM qterms JOIN tf USING (term) JOIN dl USING (doc) JOIN idf USING (term)),
-scored AS (
-  SELECT qid, doc,
-         CAST(SUM(CAST(c AS DECIMAL(28,6))) AS DOUBLE) AS score
-  FROM contrib GROUP BY qid, doc)"""
-
-
-# r13: q61_bm25 folded out of the registry → slot to q71_bm25_indexed
-# (REGISTRY.md). The function stays for tests and as the documented batch
-# form; its ranking math remains registry-oracled TWICE — q70_rrf_fusion's
-# lexical arm runs this exact bm25_topk call against the same _BM25_CTES
-# text, and q71's oracle IS the former q61 oracle verbatim (indexed
-# rankings ≡ batch rankings bit-for-bit, pinned in tests/test_retrieval.py).
-def q61_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crossbar_data_process_spark.operators.retrieval import bm25_topk
-
-    d = _t(spark, sf_dir, "documents")
-    q = d.filter((F.col("doc_id") % 97 == 0) & (F.col("doc_id") < 5000)).select(
-        F.col("doc_id").alias("query_id"),
-        F.array_join(F.slice(tokens(F.lower(F.col("text"))), 1, 4), " ").alias(
-            "query_text"
-        ),
-    )
-    return bm25_topk(d, q, top_k=10)
-
-
-# -------- persisted BM25 index silver (operators/retrieval.py:
-# bm25_index_ingest → compact_bm25_index → bm25_topk_indexed) under the
-# hash gate — r13 (VERDICT r12 #4), the retrieval twin of q63's
-# dedup_index and the q69 silver-path precedent. The corpus is ingested
-# into the index in TWO doc-disjoint batches (doc_id parity — per-batch
-# work is batch-sized, the existing index is never read), the FULL index
-# is COMPACTED (df/stats folds plus — r14 — the tf/dl bin-pack rewrite,
-# all under the staging-dir + pending-marker protocol), and the
-# probe runs against the persisted silver: qterms partition-prune the tf
-# scan on the term_bucket column, df(term) = Σ per-batch partials,
-# avgdl = Σ total_dl / Σ n_docs. Everything BM25 needs is additive over
-# disjoint batches and dl values are integer token counts (double sums
-# < 2^53 are exact), so indexed rankings equal the batch path's
-# bit-for-bit and q61's oracle applies VERBATIM — while the batch ingest,
-# compaction fold, meta identity check, and bucket-pruned probe all
-# execute under the driver's rows+schema+hash check. The same fixed query
-# carve as q61 (doc_id % 97 = 0 AND doc_id < 5000, _WORKLOAD_BOUNDS).
-@query(
-    "q71_bm25_indexed",
-    f"""
-WITH {_BM25_CTES}
-SELECT qid AS query_id, doc AS doc_id, score, rnk FROM (
-  SELECT *, row_number() OVER (PARTITION BY qid
-                               ORDER BY score DESC, doc) AS rnk
-  FROM scored)
-WHERE rnk <= 10
-""",
-)
-def q71_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ingest (2 disjoint batches) → compact → probe the persisted index.
-    A fresh pid-scoped silver per invocation (ingest APPENDS batch dirs,
-    so unlike q69's overwrite-reuse the dir must start empty or a rerun
-    would double-ingest); removed at interpreter exit."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from crossbar_data_process_spark.operators.retrieval import (
-        bm25_index_ingest,
-        bm25_topk_indexed,
-        compact_bm25_index,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    q = d.filter((F.col("doc_id") % 97 == 0) & (F.col("doc_id") < 5000)).select(
-        F.col("doc_id").alias("query_id"),
-        F.array_join(F.slice(tokens(F.lower(F.col("text"))), 1, 4), " ").alias(
-            "query_text"
-        ),
-    )
-    silver = os.path.join(
-        tempfile.gettempdir(), f"bm25_silver_q71_{os.getpid()}"
-    )
-    shutil.rmtree(silver, ignore_errors=True)
-    atexit.register(shutil.rmtree, silver, ignore_errors=True)
-    # single-file parquet scans arrive as ONE partition; tokenization is
-    # the CPU-heavy scan-side stage (the q69 _spread convention applies
-    # inside _doc_tf)
-    bm25_index_ingest(d.filter(F.pmod(F.col("doc_id"), F.lit(2)) == 0), silver, "b0")
-    bm25_index_ingest(d.filter(F.pmod(F.col("doc_id"), F.lit(2)) == 1), silver, "b1")
-    compact_bm25_index(spark, silver)
-    return bm25_topk_indexed(spark, silver, q)
-
-
-
 # The DECLARED form carries the stop-shingle cap (max_doc_freq=20): shingles
 # in more than 20 documents are dropped from candidate generation AND the
 # intersection count (jaccard becomes a lower bound — |A|,|B| stay full-size).
@@ -1676,8 +1455,8 @@ def q54_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q72_ann_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ingest (2 disjoint micro-batches) → replay batch 1 → full-probe
     top-k over the streamed silver. Fresh pid-scoped silver per
-    invocation (the q71 convention: a silver assigned under a previous
-    corpus' centroids would — correctly — trip the identity stamp)."""
+    invocation (a silver assigned under a previous corpus' centroids
+    would — correctly — trip the identity stamp)."""
     import atexit
     import os
     import shutil
@@ -2096,7 +1875,7 @@ def q34_blacklist_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------- A5 group + collect ordered list (uniprot.py:102-107)
-# r10: folded out of the registry → slot to q66_mixture_sample (REGISTRY.md).
+# r10: folded out of the registry (REGISTRY.md).
 # A5 group+collect stays hash-checked via q09_provenance_union (collect_set
 # pipe-union aggregation over the same grouped shape); this exact query's
 # former DuckDB oracle lives on in
@@ -2147,8 +1926,8 @@ def q36_nullify_conflict_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------- F5/F7 numeric surgery: prefix parse + comma-number round-trip.
 # r07 fold: the q37 registry row merged INTO q15_curie_ids (parsed_back /
 # phone_prefix columns — the same clean_number round-trip and split-cast,
-# still hash-checked compositionally); its slot went to q60_nb_quality
-# (REGISTRY.md). The function stays for unit tests.
+# still hash-checked compositionally) — REGISTRY.md. The function stays
+# for unit tests.
 def q37_numeric_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crossbar_data_process_spark.functions.ids import clean_number
 
@@ -2525,96 +2304,6 @@ def q69_ivfpq_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------- reciprocal-rank fusion (operators/retrieval.rrf_fuse) under the
-# hash gate — r12 (VERDICT r11 #3): the operator was built integer-exact
-# (per-system contributions as floor-rounded MICROS summed as longs)
-# specifically so fused rankings are engine-identical; this row gives it
-# the composed oracle it was designed for. The lexical arm is q61's BM25
-# ranking — the SAME _BM25_CTES text, so the two oracles can never drift —
-# and the dense arm is the q27-form cosine top-k over embeddings, both
-# restricted to the SHARED constant-bounded query carve (id % 97 = 0 AND
-# id < 5000, _WORKLOAD_BOUNDS). Fusion: micros = floor(1e6/(60+rank)+0.5)
-# per (system, query, doc), summed exactly as BIGINT, divided back to
-# rrf_score; n_systems counts contributing arms (1 or 2 — asymmetric
-# coverage is the realistic fusion shape); ties break on doc_id.
-_RRF_ORACLE = f"""
-WITH {_BM25_CTES},
-lex AS (
-  SELECT qid AS query_id, doc AS doc_id, rnk FROM (
-    SELECT *, row_number() OVER (PARTITION BY qid
-                                 ORDER BY score DESC, doc) AS rnk
-    FROM scored)
-  WHERE rnk <= 10),
-dq AS (
-  SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-  WHERE vec_id % 97 = 0 AND vec_id < 5000),
-dscored AS (
-  SELECT query_id, e.vec_id AS neighbor_id,
-         {_cosine_sql('qv', 'e.embedding')} AS cosine
-  FROM dq JOIN embeddings e ON e.vec_id <> dq.query_id),
-den AS (
-  SELECT query_id, neighbor_id AS doc_id, rnk FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) AS rnk
-    FROM dscored)
-  WHERE rnk <= 10),
-u AS (
-  SELECT query_id, doc_id,
-         CAST(floor(1000000.0 / (60 + rnk) + 0.5) AS BIGINT) AS micros
-  FROM lex
-  UNION ALL
-  SELECT query_id, doc_id,
-         CAST(floor(1000000.0 / (60 + rnk) + 0.5) AS BIGINT) AS micros
-  FROM den),
-fscored AS (
-  SELECT query_id, doc_id,
-         CAST(SUM(micros) AS DOUBLE) / 1000000.0 AS rrf_score,
-         CAST(COUNT(*) AS BIGINT) AS n_systems
-  FROM u GROUP BY query_id, doc_id)
-SELECT query_id, doc_id, rrf_score, n_systems, CAST(rnk AS BIGINT) AS rnk
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY rrf_score DESC, doc_id) AS rnk
-  FROM fscored)
-WHERE rnk <= 10
-"""
-
-
-@query("q70_rrf_fusion", _RRF_ORACLE)
-def q70_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 (q61's exact ranking) ⊕ dense cosine top-10, fused with
-    integer-micros RRF (k=60): union of two Q×10 rank tables, one small
-    groupBy, per-query top-10 window — the expensive work happened inside
-    the per-system retrievers. Queries carve: id % 97 = 0 AND id < 5000
-    on BOTH arms (_WORKLOAD_BOUNDS)."""
-    from crossbar_data_process_spark.operators.retrieval import (
-        bm25_topk,
-        rrf_fuse,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    q = d.filter((F.col("doc_id") % 97 == 0) & (F.col("doc_id") < 5000)).select(
-        F.col("doc_id").alias("query_id"),
-        F.array_join(F.slice(tokens(F.lower(F.col("text"))), 1, 4), " ").alias(
-            "query_text"
-        ),
-    )
-    lex = bm25_topk(d, q, top_k=10).select("query_id", "doc_id", "rnk")
-    e = _t(spark, sf_dir, "embeddings")
-    qe = e.filter((F.col("vec_id") % 97 == 0) & (F.col("vec_id") < 5000))
-    den = cosine_topk(e, qe, k=10).select(
-        "query_id", F.col("neighbor_id").alias("doc_id"), "rnk"
-    )
-    fused = rrf_fuse([lex, den], k=60, top_k=10)
-    return fused.select(
-        "query_id",
-        "doc_id",
-        "rrf_score",
-        "n_systems",
-        F.col("rnk").cast("long").alias("rnk"),
-    )
-
-
 # -------- the DECLARED embedding near-dup surface: LSH-bucketed threshold
 # pairs (operators.similarity.neighbor_pairs_lsh). q27b keeps the brute-force
 # all-pairs form as a bounded oracle fixture; this is the plan that survives
@@ -2793,7 +2482,7 @@ def q41_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r07 fold: the q42 registry row (keep_best-over-join — the same A2 window
 # q04 keeps oracled, plus a distinct q45 still covers) moved to
 # tests/test_operator_properties.py::test_min_cost_supplier_matches_oracle;
-# its slot went to q61_bm25 (REGISTRY.md). The function stays for tests.
+# REGISTRY.md has the fold. The function stays for tests.
 def q42_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crossbar_data_process_spark.operators.dedup import keep_best
 
@@ -2976,7 +2665,7 @@ def q45_set_ops_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------ P8 self-pair drop + A3 plain dedup + F2 first-xref pick combined
-# r12: folded out of the registry → slot to q70_rrf_fusion (REGISTRY.md).
+# r12: folded out of the registry (REGISTRY.md).
 # P8 self-pair exclusion stays registry-oracled via the `neighbor_id <>
 # query_id` join predicates of q27/q54/q67/q69 and the strict `a < b`
 # pair conditions of q25/q26/q49; A3 plain dedup via q21's exact-dedup
@@ -3378,7 +3067,7 @@ def q64_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # optional q55 stage: flag corpus documents sharing any 8-token n-gram with
 # an evaluation/benchmark set — the screen every pretraining mix runs before
 # freezing. The benchmark is carved from the corpus by a CONSTANT-bounded
-# predicate (doc_id % 7 = 0 AND doc_id < 5000 — the q61 workload-pinning
+# predicate (doc_id % 7 = 0 AND doc_id < 5000 — the workload-pinning
 # rule: the eval suite must NOT grow with the corpus, or scale probes
 # measure benchmark growth instead of engine scaling; real eval suites are
 # fixed-size by nature). Scale shape: the benchmark side is shingled,
@@ -3414,83 +3103,13 @@ def q65_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_flags(d.filter(~is_bench), d.filter(is_bench), n=8)
 
 
-# --------------------- deterministic training-mix sampling, driver-oracled
-# (r10). operators/sampling.py was pytest-only since r04: per-row md5-bucket
-# membership (no RNG — reproducible across runs, partitionings, retries, and
-# ENGINES, which is exactly what makes it oracle-able: DuckDB reproduces the
-# identical draw digit-by-digit). The declared form composes the two
-# production operators end-to-end: source_mix (per-source keep fractions in
-# ONE scan-side CASE filter; sources absent from the mix are dropped — a mix
-# is a whitelist, src16-19 exercise that) then assign_split (train/val/test
-# from cumulative bucket boundaries of an INDEPENDENT salt — membership in
-# the mix and the split assignment are separate draws on the same key).
-# Scale shape: pure scan-side expressions, ZERO shuffles (plan pinned in
-# tests/test_plan_shapes.py) — at 100 TB the mix is a filter pushed to the
-# scan, not a sampling job.
-_MIX_WEIGHTS = {f"src{i}": ((i * 7) % 10 + 1) / 10 for i in range(16)}
-_SPLIT_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
-
-
-def _bucket_sql(salt: str) -> str:
-    """DuckDB twin of sampling._bucket: 32-bit md5-prefix of
-    (salt, 0x1f, key) — the q26 hex-digit idiom — mod 1e6."""
-    return (
-        "list_sum(list_transform(range(1, 9), "
-        f"i -> (strpos('0123456789abcdef', md5('{salt}' || chr(31) || "
-        "CAST(doc_id AS VARCHAR))[i:i]) - 1) "
-        "* (1::BIGINT << (4 * (8 - i))))) % 1000000"
-    )
-
-
-def _mixture_oracle() -> str:
-    mix_case = (
-        "CASE "
-        + " ".join(
-            f"WHEN source = '{s}' THEN {int(w * 1_000_000)}"
-            for s, w in sorted(_MIX_WEIGHTS.items())
-        )
-        + " ELSE NULL END"
-    )
-    # assign_split semantics: names in sorted order against cumulative
-    # boundaries — sorted({train,val,test}) = [test, train, val].
-    return f"""
-WITH b AS (SELECT doc_id, source,
-                  {_bucket_sql("mix")} AS mb,
-                  {_bucket_sql("split")} AS sb
-           FROM documents)
-SELECT doc_id, source,
-       CASE WHEN sb < 100000 THEN 'test'
-            WHEN sb < 900000 THEN 'train'
-            ELSE 'val' END AS split
-FROM b WHERE mb < ({mix_case})
-"""
-
-
-@query("q66_mixture_sample", _mixture_oracle())
-def q66_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crossbar_data_process_spark.operators.sampling import (
-        assign_split,
-        source_mix,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    mixed = source_mix(
-        d, _MIX_WEIGHTS, source_col="source", key_col="doc_id", salt="mix"
-    )
-    return mixed.select(
-        "doc_id",
-        "source",
-        assign_split("doc_id", _SPLIT_WEIGHTS, salt="split"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Registration-order defense + registry discipline. The driver records
-# CORRECTNESS rows for AT MOST the first 50 registered queries, so the
-# declared set stays at EXACTLY 50 — to add a query, FOLD a redundant row
-# out. The full fold history and rationale live in REGISTRY.md (the single
-# source of truth; COVERAGE.md and this comment only point there).
-# `tests/test_plan_shapes.py::test_registry_is_exactly_fifty` pins the count.
+# CORRECTNESS rows for AT MOST the first 50 registered queries, so 50 is a
+# ceiling: never register past it. The full fold and retirement history
+# lives in REGISTRY.md (the single source of truth; COVERAGE.md and this
+# comment only point there).
+# `tests/test_plan_shapes.py::test_registry_size_is_pinned` pins the count.
 # The newest/reshaped surfaces are moved to the FRONT of the registration
 # order, so any harness truncation falls on queries with multi-round green
 # history rather than the coverage-critical ones.
@@ -3499,17 +3118,13 @@ _FRONT = [
     "q73_semantic_dedup_ingest",
     # r14 new surface
     "q72_ann_streaming_ingest",
-    # r13 new surface
-    "q71_bm25_indexed",
     # r12 new surfaces
     "q69_ivfpq_silver",
-    "q70_rrf_fusion",
     # r11 new surfaces
     "q68_quantile_rollup",
     "q67_pq_adc_topk",
     # r10 new surfaces
     "q65_contamination",
-    "q66_mixture_sample",
     # r09 new surface
     "q64_streaming_ingest",
     # r08 new/reshaped surfaces
@@ -3517,7 +3132,6 @@ _FRONT = [
     "q62_snapshot_diff",
     "q34_blacklist_topk",
     # r07 new/reshaped surfaces
-    "q60_nb_quality",
     "q59_segment_dedup",
     "q58_pack_documents",
     "q57_asof_two_table",

@@ -113,7 +113,7 @@ def write_training_shards(
 
     - no RNG anywhere: the same corpus + salt yields byte-identical shard
       contents on any cluster size, input partitioning, or engine (md5 is
-      portable — same rationale as operators/sampling.py);
+      portable, so DuckDB reproduces the draw digit for digit);
     - the hash order is a high-quality shuffle: adjacent source documents
       land in unrelated shards/positions, so sequential shard reads see a
       decorrelated stream (vary ``salt`` per epoch for a fresh permutation);

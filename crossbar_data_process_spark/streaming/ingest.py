@@ -243,13 +243,18 @@ def dedup_ingest_writer(
         # fingerprint column is KEPT on the survivors (r16 optimization
         # round): the flag stage and the index delta need the same
         # per-doc fingerprint again — carrying it forward replaces two
-        # full re-hash passes of the batch text.
+        # full re-hash passes of the batch text. Pinned so that every
+        # exchange in `prepped`'s plan is a leaf stage: with this window
+        # shuffle below the singles anti-join, AQE planned that join's
+        # shuffle or dropped the join depending on which stage finished
+        # first, and the per-batch job count varied.
         w = Window.partitionBy("__fp").orderBy(F.asc(id_col))
         exact_kept = (
             batch_df.withColumn("__fp", doc_fingerprint(text_col))
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
+            .localCheckpoint(eager=False)
         )
         # 1b. within-batch near dedup (pairs → min-id cluster survivors).
         # The batch is tokenized/shingled/bucketed ONCE here (r16): the

@@ -10,12 +10,11 @@ per-replica join structure matches the original.
 TEXT queries (documents-only inputs) run on a ZIPF-REALISTIC synthetic
 corpus instead of replicated sf0.1 documents (r8: the driver corpus has a
 ~31-token vocabulary, which made the text-operator scale evidence
-degenerate — every BM25 query term matched every document, the
-max_df_ratio stop-term cut could not fire, and the q60 weight table was
-constant-size). The Zipf corpus: 20k-word vocabulary, exponent 1.07,
-English marker words at the head ranks (so language-id and quality gates
-see realistic signal), doc lengths 60-200 tokens, an exact re-ingest
-double every 100th doc and a 90%-overlap near-dup every 25th. The small
+degenerate — every token and n-gram statistic was constant-size). The
+Zipf corpus: 20k-word vocabulary, exponent 1.07, English marker words
+at the head ranks (so language-id and quality gates see realistic
+signal), doc lengths 60-200 tokens, an exact re-ingest double every
+100th doc and a 90%-overlap near-dup every 25th. The small
 corpus (5k docs — the sf0.1 document count) is the literal prefix of the
 big one (50k), so slopes measure pure 10x-corpus scaling on identical
 text statistics.
@@ -24,8 +23,7 @@ Runs every bench headline query at sf0.1 and at the synthetic sf1, one
 warm session, and prints per-query slopes (t_sf1 / t_sf0.1; linear
 scaling at 10x data = slope <= ~10 once the per-query fixed floor is
 subtracted). Also probes q22_doc_profile (not a bench row — folded
-registry row, still a charter surface) and q61 with the max_df_ratio
-stop-term cut ON, recording how many vocabulary terms the cut drops.
+registry row, still a charter surface).
 """
 
 from __future__ import annotations
@@ -71,17 +69,13 @@ TEXT_QUERIES = {
     "q55_curation_funnel",
     "q58_pack_documents",
     "q59_segment_dedup",
-    "q60_nb_quality",
-    "q71_bm25_indexed",
     "q63_incremental_dedup",
     "q64_streaming_ingest",
     "q22_doc_profile",
     # r10: contamination screens text — Zipf path so shingle df statistics
     # are realistic; the benchmark carve (doc_id < 5000) is the small
     # corpus' literal prefix, so the eval set is IDENTICAL at both scales
-    # (the workload-pinning property, by construction). q66_mixture_sample
-    # stays on the replica path: it reads only (doc_id, source) and the
-    # Zipf corpus has a single source value, which would zero out its mix.
+    # (the workload-pinning property, by construction).
     "q65_contamination",
     # r11: per-source length quantiles read only documents; Zipf's lengths
     # are the realistic fat-tailed distribution
@@ -227,26 +221,6 @@ def _gen_zipf() -> None:
         write_zipf_documents(path, texts, n)
 
 
-def _q61_dfcut(spark, sf_dir: str):
-    """q61's exact fixed workload with the max_df_ratio stop-term cut ON —
-    the scale lever the declared form documents but the old 31-token corpus
-    could not exercise without emptying the result."""
-    from pyspark.sql import functions as F
-
-    from crossbar_data_process_spark.functions.text import tokens
-    from crossbar_data_process_spark.operators.retrieval import bm25_topk
-    from crossbar_data_process_spark.plans.queries import _t
-
-    d = _t(spark, sf_dir, "documents")
-    q = d.filter((F.col("doc_id") % 97 == 0) & (F.col("doc_id") < 5000)).select(
-        F.col("doc_id").alias("query_id"),
-        F.array_join(F.slice(tokens(F.lower(F.col("text"))), 1, 4), " ").alias(
-            "query_text"
-        ),
-    )
-    return bm25_topk(d, q, top_k=10, max_df_ratio=0.05)
-
-
 def main() -> None:
     from crossbar_data_process_spark import get_spark
     from crossbar_data_process_spark.plans.queries import QUERIES
@@ -270,36 +244,19 @@ def main() -> None:
     QUERIES["q01_pricing_summary"](spark, SRC).limit(1).collect()  # warm
     QUERIES["q21_doc_exact_dedup"](spark, ZIPF_SMALL).limit(1).collect()  # warm
 
-    # corpus stats + how many terms the q61 df-cut actually drops (proof
-    # the stop-term bound is exercised, not vacuous)
+    # corpus stats: document count and vocabulary size of each Zipf corpus
     con = duckdb.connect()
     for label, p in (("small", ZIPF_SMALL), ("big", ZIPF_BIG)):
-        ndocs, nvocab, ncut = con.sql(
+        ndocs, nvocab = con.sql(
             f"""
-            WITH tf AS (
-              SELECT doc_id, tok, COUNT(*) AS tf
-              FROM (SELECT doc_id,
-                           unnest(string_split(trim(text), ' ')) AS tok
-                    FROM read_parquet('{p}/documents.parquet'))
-              GROUP BY doc_id, tok),
-            df AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok)
             SELECT (SELECT COUNT(*) FROM read_parquet('{p}/documents.parquet')),
-                   COUNT(*),
-                   COUNT(*) FILTER (WHERE df > 0.05 *
-                     (SELECT COUNT(*) FROM read_parquet('{p}/documents.parquet')))
-            FROM df
+                   COUNT(DISTINCT tok)
+            FROM (SELECT unnest(string_split(trim(text), ' ')) AS tok
+                  FROM read_parquet('{p}/documents.parquet'))
             """
         ).fetchall()[0]
         print(
-            json.dumps(
-                {
-                    f"zipf_{label}": {
-                        "docs": ndocs,
-                        "vocab": nvocab,
-                        "terms_cut_at_df5pct": ncut,
-                    }
-                }
-            ),
+            json.dumps({f"zipf_{label}": {"docs": ndocs, "vocab": nvocab}}),
             flush=True,
         )
 
@@ -307,11 +264,10 @@ def main() -> None:
 
     probe_fns = {name: _Q[name] for name in PROBE_QUERIES}
     probe_fns["q22_doc_profile"] = _Q["q22_doc_profile"]
-    probe_fns["q61_bm25_dfcut"] = _q61_dfcut
 
     out: dict[str, dict[str, float]] = {}
     for name, fn in probe_fns.items():
-        text = name in TEXT_QUERIES or name == "q61_bm25_dfcut"
+        text = name in TEXT_QUERIES
         pair = (
             (("sf0.1", ZIPF_SMALL), ("sf1", ZIPF_BIG))
             if text

@@ -4,6 +4,9 @@
   to a module or a top-level name that exists. The files are parsed with
   ``ast``, so imports inside functions that no test calls are checked too.
 - Importing the gold build does not load the query registry.
+- The package modules that no benchmark workload imports are exactly a
+  pinned list, so a new module lands together with a workload that runs
+  it, and each deletion of unmeasured code shrinks the list.
 """
 
 from __future__ import annotations
@@ -109,3 +112,73 @@ def test_gold_build_does_not_load_the_query_registry():
     )
     assert out.returncode == 0, out.stderr
     assert out.stdout.strip() == "False", out.stdout
+
+
+# Package modules that neither kgbench workload reaches by static import.
+# Deleting one of them shrinks this list; a new module must be reached by
+# a workload rather than be added here.
+_UNMEASURED_MODULES = {
+    "functions.ec",
+    "functions.pii",
+    "operators.diff",
+    "operators.packing",
+    "operators.rangejoin",
+    "operators.sampling",
+    "operators.sketches",
+    "operators.skew",
+    "plans.llm_curation",
+    "plans.queries",
+    "sources.disgenet",
+    "sources.landing",
+    "streaming.stateful",
+}
+
+
+def _package_imports(path: Path) -> set[str]:
+    """Package modules ``path`` imports anywhere in its body: ``import m``,
+    ``from m import x`` and, where ``m.x`` is itself a module, ``m.x``."""
+    out: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if isinstance(node, ast.Import):
+            out |= {a.name for a in node.names if a.name.split(".")[0] == PKG}
+        elif isinstance(node, ast.ImportFrom) and node.level == 0 and node.module:
+            if node.module.split(".")[0] != PKG:
+                continue
+            out.add(node.module)
+            for a in node.names:
+                if _module_file(f"{node.module}.{a.name}") is not None:
+                    out.add(f"{node.module}.{a.name}")
+    return out
+
+
+def _workload_reachable_modules() -> set[str]:
+    """Modules reachable from ``kgbench/*.py`` plus ``scripts/kg_build.py``
+    (kgbench imports ``kg_build`` by name). Reaching a module also runs
+    its parent packages' ``__init__``, so those are reached too."""
+    seen: set[str] = set()
+    todo: list[Path] = sorted((ROOT / "kgbench").glob("*.py"))
+    todo.append(ROOT / "scripts" / "kg_build.py")
+    while todo:
+        for module in _package_imports(todo.pop()):
+            parts = module.split(".")
+            for i in range(1, len(parts) + 1):
+                name = ".".join(parts[:i])
+                f = _module_file(name)
+                if name not in seen and f is not None:
+                    seen.add(name)
+                    todo.append(f)
+    return seen
+
+
+def test_unmeasured_modules_are_pinned():
+    reached = _workload_reachable_modules()
+    unreached = set()
+    for f in (ROOT / PKG).rglob("*.py"):
+        module = ".".join(f.relative_to(ROOT).with_suffix("").parts)
+        module = module.removesuffix(".__init__")
+        if module not in reached:
+            unreached.add(module.removeprefix(f"{PKG}."))
+    assert unreached == _UNMEASURED_MODULES, (
+        f"unreached but not pinned: {sorted(unreached - _UNMEASURED_MODULES)}; "
+        f"pinned but reached or gone: {sorted(_UNMEASURED_MODULES - unreached)}"
+    )

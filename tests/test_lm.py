@@ -54,6 +54,8 @@ def test_surprisal_partition_invariant(spark):
 
 def test_zero_token_docs_absent_and_left_joinable(spark):
     d = _docs(spark, [(1, "a b"), (2, "   "), (3, "")])
+    # an empty corpus scores nothing rather than dividing by a NULL mass
+    assert doc_surprisal(_docs(spark, [])).count() == 0
     got = doc_surprisal(d)
     assert {r.doc_id for r in got.collect()} == {1}
     rejoined = d.join(got, "doc_id", "left").select("doc_id", "log_ppl")

@@ -277,8 +277,8 @@ def test_json_extract_matches_oracle(spark):
 
 def test_min_cost_supplier_matches_oracle(spark):
     """keep_best over a join (the former q42 registry row, folded out in
-    r07 for q61_bm25 — REGISTRY.md): the former DuckDB oracle lives on
-    here as the expectation."""
+    r07 — REGISTRY.md): the former DuckDB oracle lives on here as the
+    expectation."""
     import duckdb
 
     from crossbar_data_process_spark.plans.queries import q42_min_cost_supplier
@@ -377,9 +377,9 @@ def test_keep_best_matches_oracle(spark):
 
 def test_collect_ordered_matches_oracle(spark):
     """Group + ordered collect (the former q35 registry row, folded out in
-    r10 for q66_mixture_sample — REGISTRY.md): the former DuckDB oracle
-    lives on here. A5 group+collect stays registry-oracled via
-    q09_provenance_union's collect_set pipe-union aggregation."""
+    r10 — REGISTRY.md): the former DuckDB oracle lives on here. A5
+    group+collect stays registry-oracled via q09_provenance_union's
+    collect_set pipe-union aggregation."""
     import duckdb
 
     from crossbar_data_process_spark.plans.queries import q35_collect_ordered
@@ -495,11 +495,11 @@ def test_suffix_groups_matches_oracle(spark):
 
 def test_pair_normalize_matches_oracle(spark):
     """Self-pair drop + plain dedup + first-xref (the former q47 registry
-    row, folded out in r12 for q70_rrf_fusion — REGISTRY.md): the former
-    DuckDB oracle lives on here verbatim (_PAIR_NORMALIZE_ORACLE). P8
-    stays registry-oracled via the <>-join predicates of q27/q54/q67/q69
-    and the strict a<b pair conditions of q25/q26/q49; A3 via q21/q45;
-    F2's split rides q09's split family."""
+    row, folded out in r12 — REGISTRY.md): the former DuckDB oracle lives
+    on here verbatim (_PAIR_NORMALIZE_ORACLE). P8 stays registry-oracled
+    via the <>-join predicates of q27/q54/q67/q69 and the strict a<b pair
+    conditions of q25/q26/q49; A3 via q21/q45; F2's split rides q09's
+    split family."""
     import duckdb
 
     from crossbar_data_process_spark.plans.queries import (

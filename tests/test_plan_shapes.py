@@ -48,16 +48,6 @@ def test_q02_broadcasts_are_dimension_sided(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_q66_mixture_is_pure_scan_side(spark):
-    """Deterministic mix membership + split assignment must stay a scan-side
-    filter/projection — zero shuffles, no Sample node (the whole point of
-    hash-bucket sampling over df.sample): at 100 TB the mix is predicate
-    work inside the scan stage, not a sampling job."""
-    plan = _plan(spark, "q66_mixture_sample")
-    assert "Exchange" not in plan
-    assert "Sample" not in plan
-
-
 def test_q65_contamination_corpus_is_never_shuffled_into_the_join(spark):
     """The benchmark shingle set must be the BROADCAST side — eval suites
     are fixed-size while the corpus is 100 TB, so a sort-merge join (both
@@ -67,15 +57,21 @@ def test_q65_contamination_corpus_is_never_shuffled_into_the_join(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_registry_is_exactly_fifty():
-    """The driver records CORRECTNESS rows for at most the first 50
-    registered queries (r02 silently skipped the rest). The declared set
-    must stay at EXACTLY 50 — add by folding, never by appending past 50
-    (see the registry comment in plans/queries.py)."""
-    from crossbar_data_process_spark.plans.queries import ORACLES
+def test_registry_size_is_pinned():
+    """The declared set is pinned at its size: a query added or retired
+    moves this pin in the same change, and REGISTRY.md records it. The
+    driver records CORRECTNESS rows for at most the first 50 registered
+    queries (r02 silently skipped the rest), so 50 stays a ceiling (see
+    the registry comment in plans/queries.py). Every oracle and every
+    bench.py query names a registered query (a stale bench entry would
+    otherwise only fail at run time, as a KeyError)."""
+    from crossbar_data_process_spark.plans.queries import BENCH_QUERIES, ORACLES
 
-    assert len(QUERIES) == 50, sorted(QUERIES)
+    assert len(QUERIES) == 46, sorted(QUERIES)
     assert set(ORACLES) <= set(QUERIES)
+    assert set(BENCH_QUERIES) <= set(QUERIES), sorted(
+        set(BENCH_QUERIES) - set(QUERIES)
+    )
 
 
 @pytest.mark.parametrize(
@@ -94,37 +90,23 @@ def test_no_cartesian_in_any_declared_query(spark, name):
     # - q55_curation_funnel: the 1-row funnel report attached to the
     #   survivors (a literal-key equi-join is constant-folded back to a
     #   nested loop, so the crossJoin states the intent).
-    # - q60_nb_quality: the classifier's corpus totals and class prior are
-    #   1-row aggregates attached by broadcast (the alternative — an
-    #   empty-partition window — serializes the whole vocab table through
-    #   one task).
     # - q22_doc_profile: the unigram-LM leg (log_ppl) attaches the corpus
-    #   token-mass/vocab totals the same way (operators/lm.py).
-    # - q71_bm25_indexed: the corpus scalars (N, avgdl — summed from the
-    #   persisted per-batch stats table) ride the same 1-row broadcast
-    #   into the idf table (operators/retrieval.py _score_from_stats,
-    #   shared with the batch path q70 exercises).
+    #   token-mass/vocab totals as 1-row aggregates by broadcast (the
+    #   alternative — an empty-partition window — serializes the whole
+    #   vocab table through one task; operators/lm.py).
     # - q67_pq_adc_topk: same contract as q27 — the 10-row query-LUT frame
     #   is broadcast against the encoded corpus on the non-equi
     #   self-exclusion; the corpus streams once and each pair costs m
     #   lookups, not O(dim) (the candidate-PRUNED variant is
     #   ivf_pq_topk_assigned, an equi-join on the cluster partition key —
     #   pinned in tests/test_pq.py).
-    # - q70_rrf_fusion: composes q61's BM25 (the 1-row corpus-scalars
-    #   broadcast) and q27's dense cosine arm (corpus × broadcast bounded
-    #   query set on the non-equi self-exclusion) — both already
-    #   sanctioned above; the fusion itself adds only an equi groupBy
-    #   over the Q×k rank tables.
     # Anything else is a plan regression.
     if name not in (
         "q38_pagerank",
         "q27_cosine_topk",
         "q55_curation_funnel",
-        "q60_nb_quality",
         "q22_doc_profile",
-        "q71_bm25_indexed",
         "q67_pq_adc_topk",
-        "q70_rrf_fusion",
     ):
         assert "BroadcastNestedLoopJoin" not in plan, name
 
@@ -177,16 +159,14 @@ def test_checkpoint_reuse_bounds_executed_work(spark, name, max_jobs, max_stages
 
 # -------- workload pinning at registration (VERDICT r7 #8): a benchmark
 # whose query/probe set derives from a corpus column measures WORKLOAD
-# growth, not engine scaling, the moment the corpus grows (the q61 lesson:
-# doc_id % 97 alone let the sf1 probe's 10x corpus bring 10x queries and
-# measured slope 45). Every declared query that builds a query/probe
-# workload from a corpus column must carry an explicit CONSTANT bound in
-# its source; new workload-deriving registrations must be added here
-# (REGISTRY.md "declared-form decisions" documents the rule).
+# growth, not engine scaling, the moment the corpus grows (the lesson of
+# the since-retired BM25 row: doc_id % 97 alone let the sf1 probe's 10x
+# corpus bring 10x queries and measured slope 45). Every declared query
+# that builds a query/probe workload from a corpus column must carry an
+# explicit CONSTANT bound in its source; new workload-deriving
+# registrations must be added here (REGISTRY.md "declared-form decisions"
+# documents the rule).
 _WORKLOAD_BOUNDS = {
-    # r13: q61_bm25 folded out (REGISTRY.md) — q71 carries the identical
-    # fixed query carve against the persisted index
-    "q71_bm25_indexed": r'F\.col\("doc_id"\)\s*<\s*5000',
     # the benchmark/eval set is a workload in the same sense: it must stay
     # fixed-size as the corpus grows or scale probes measure eval growth
     "q65_contamination": r'F\.col\("doc_id"\)\s*<\s*5000',
@@ -200,15 +180,8 @@ _WORKLOAD_BOUNDS = {
     # r11: q39_ann_lsh folded out of the registry (REGISTRY.md) — its bound
     # lives on in the property test; q67 carries the same 10-query carve
     "q67_pq_adc_topk": r'F\.col\("vec_id"\)\s*<\s*10',
-    # r12: the IVF-PQ silver path carries q67's 10-query carve; RRF fusion
-    # carries q61's query carve on BOTH arms — the lookaheads pin doc_id
-    # AND vec_id bounds (one unguarded arm would let the dense query set
-    # scale with the corpus, the q61 Q×N trap; r12 review)
+    # r12: the IVF-PQ silver path carries q67's 10-query carve
     "q69_ivfpq_silver": r'F\.col\("vec_id"\)\s*<\s*10',
-    "q70_rrf_fusion": (
-        r'(?s)(?=.*F\.col\("doc_id"\)\s*<\s*5000)'
-        r'(?=.*F\.col\("vec_id"\)\s*<\s*5000)'
-    ),
 }
 
 
@@ -234,10 +207,10 @@ def _builds_query_workload(src: str) -> bool:
        q(uery)?/probe + optional _?(id|text|key), e.g. query_id, qid,
        qtext, probe_id, probes;
     2. semantic: the source both FILTERS a corpus id column (the workload-
-       carving idiom ``F.col("<x>_id") <op> ...``) and calls a retrieval/
-       ANN operator that takes a query frame (bm25_topk, cosine_topk*,
-       ivf_topk*, pq_adc_topk, pq_query_lut, ivf_pq_topk*) — regardless of
-       what the frame is named.
+       carving idiom ``F.col("<x>_id") <op> ...``) and calls an ANN
+       operator that takes a query frame (cosine_topk*, ivf_topk*,
+       pq_adc_topk, pq_query_lut, ivf_pq_topk*) — regardless of what the
+       frame is named.
     """
     import re
 
@@ -249,7 +222,7 @@ def _builds_query_workload(src: str) -> bool:
         return True
     carves_ids = re.search(r'F\.col\(\s*"\w*_?id"\s*\)\s*[<>%=!]', src)
     takes_query_frame = re.search(
-        r"\b(bm25_topk\w*|cosine_topk\w*|ivf_topk\w*|pq_adc_topk|pq_query_lut"
+        r"\b(cosine_topk\w*|ivf_topk\w*|pq_adc_topk|pq_query_lut"
         r"|ivf_pq_topk\w*)\s*\(",
         src,
     )
@@ -260,7 +233,7 @@ def test_workload_rule_covers_known_deriving_queries():
     """Sweep: any registered query whose source builds a query/probe
     workload frame from a corpus column must be in _WORKLOAD_BOUNDS.
     Catches a new ANN/retrieval registration that forgot to pin its
-    workload (the q61 slope-45 lesson)."""
+    workload (the slope-45 lesson above)."""
     import inspect
 
     for name, fn in QUERIES.items():
@@ -285,7 +258,7 @@ def q99_sneaky(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     probes = d.filter(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("qid"), F.col("text").alias("qtext"))
-    return bm25_topk(d, probes)
+    return cosine_topk(d, probes)
 '''
     assert _builds_query_workload(flagged)
 

@@ -37,7 +37,7 @@ def clustered(spark):
     The planted dups give each query a ground-truth top-10 separated from
     the background by ~100× in squared distance — the tier structure the
     recall claim is about (and the shape of the real workload: near-dup
-    retrieval over a clustered corpus)."""
+    search over a clustered corpus)."""
     rng = np.random.default_rng(11)
     centers = rng.normal(size=(8, DIM)) * 4.0
     rows = []
@@ -190,9 +190,15 @@ def test_ivf_pq_silver_matches_full_adc_at_full_probe(spark, clustered, tmp_path
         K,
         k=10,
     )
-    assert {
-        (r.query_id, r.neighbor_id, r.adc, r.rnk) for r in assigned.collect()
-    } == {(r.query_id, r.neighbor_id, r.adc, r.rnk) for r in full.collect()}
+    got = assigned.collect()
+    assert {(r.query_id, r.neighbor_id, r.adc, r.rnk) for r in got} == {
+        (r.query_id, r.neighbor_id, r.adc, r.rnk) for r in full.collect()
+    }
+    # rnk is the 1-based dense rank a rank-fusion consumer expects
+    by_q = {}
+    for r in got:
+        by_q.setdefault(r.query_id, []).append(r.rnk)
+    assert by_q and all(sorted(v) == list(range(1, 11)) for v in by_q.values())
 
     pruned = ivf_pq_topk_assigned(
         spark, path, q, cents, books, k=10, nprobe=2

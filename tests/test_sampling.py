@@ -6,10 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from crossbar_data_process_spark.operators.sampling import (
-    deterministic_sample,
-    source_mix,
-)
+from crossbar_data_process_spark.operators.sampling import deterministic_sample
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -48,29 +45,6 @@ def test_sample_rejects_bad_fraction(spark):
         deterministic_sample(_docs(spark), 1.5, "doc_id")
 
 
-def test_source_mix_is_a_weighted_whitelist(spark):
-    d = _docs(spark)
-    sources = [r[0] for r in d.select("source").distinct().collect()]
-    assert len(sources) >= 2, sources
-    keep_full, keep_frac = sources[0], sources[1]
-    mixed = source_mix(d, {keep_full: 1.0, keep_frac: 0.2})
-    out = mixed.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    got = {r.source: r.n for r in out.collect()}
-    base = {
-        r.source: r.n
-        for r in d.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert set(got) == {keep_full, keep_frac}  # others dropped (whitelist)
-    assert got[keep_full] == base[keep_full]  # weight 1.0 keeps everything
-    assert 0 < got[keep_frac] < base[keep_frac]  # 0.2 really downsamples
-    # scan-side: no shuffle in the sampling filter itself
-    plan = (
-        source_mix(d, {keep_full: 1.0})
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-
-
 def test_null_keys_hash_to_sentinel_not_bare_salt(spark):
     """NULL keys are coalesced to a sentinel before hashing: they share ONE
     bucket (equal keys must draw identically) but that bucket must differ
@@ -89,121 +63,3 @@ def test_null_keys_hash_to_sentinel_not_bare_salt(spark):
     nd = spark.createDataFrame([(None, 1), (None, 2)], "k string, v int")
     kept = deterministic_sample(nd, 1.0, "k").count()
     assert kept == 2
-
-
-def test_assign_split_deterministic_and_stable(spark):
-    from crossbar_data_process_spark.operators.sampling import assign_split
-
-    df = spark.createDataFrame(
-        [(i,) for i in range(4000)], "doc_id long"
-    )
-    w = {"train": 0.8, "val": 0.1, "test": 0.1}
-    a = {r.doc_id: r.split for r in df.select("doc_id", assign_split("doc_id", w)).collect()}
-    b = {
-        r.doc_id: r.split
-        for r in df.repartition(13).select("doc_id", assign_split("doc_id", w)).collect()
-    }
-    assert a == b  # partitioning-invariant
-    from collections import Counter
-
-    frac = {k: v / 4000 for k, v in Counter(a.values()).items()}
-    for name, target in w.items():
-        assert abs(frac[name] - target) < 0.03, (name, frac)
-
-    # growth-stability: adding rows never migrates existing rows
-    grown = spark.createDataFrame([(i,) for i in range(8000)], "doc_id long")
-    g = {
-        r.doc_id: r.split
-        for r in grown.select("doc_id", assign_split("doc_id", w)).collect()
-    }
-    assert all(g[i] == a[i] for i in range(4000))
-
-
-def test_assign_split_validates_weights(spark):
-    import pytest as _pytest
-
-    from crossbar_data_process_spark.operators.sampling import assign_split
-
-    with _pytest.raises(ValueError):
-        assign_split("doc_id", {"train": 0.5, "test": 0.4})
-
-
-def test_source_mix_by_tokens_hits_budgets(spark):
-    """Budgets compile to fractions = budget/total; realized token counts
-    land within sampling noise; over-budget sources keep everything;
-    unbudgeted sources are dropped; the derived fractions are returned
-    for freezing."""
-    import random
-
-    from crossbar_data_process_spark.operators.sampling import (
-        source_mix_by_tokens,
-    )
-
-    rng = random.Random(3)
-    rows = [
-        (i, ["web", "papers", "code"][i % 3], rng.randint(50, 150))
-        for i in range(3000)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, source string, n_tokens long")
-    totals = {}
-    for _i, s, t in rows:
-        totals[s] = totals.get(s, 0) + t
-
-    budgets = {"web": totals["web"] // 4, "papers": totals["papers"] * 2}
-    out, fr = source_mix_by_tokens(docs, budgets, token_col="n_tokens")
-    assert fr["papers"] == 1.0
-    assert abs(fr["web"] - 0.25) < 0.01
-
-    got = {
-        r.source: r.toks
-        for r in out.groupBy("source")
-        .agg(F.sum("n_tokens").alias("toks"))
-        .collect()
-    }
-    assert set(got) == {"web", "papers"}  # code dropped (whitelist)
-    assert got["papers"] == totals["papers"]  # over-budget: all kept
-    # realized web tokens within 3 sigma of the budget (~1000 docs kept
-    # with fraction .25 -> sigma ~ sqrt(250)*100 tokens)
-    assert abs(got["web"] - budgets["web"]) < 5 * 100 * (250 ** 0.5)
-
-    # deterministic: same call, same rows
-    out2, _ = source_mix_by_tokens(docs, budgets, token_col="n_tokens")
-    assert sorted(r.doc_id for r in out.collect()) == sorted(
-        r.doc_id for r in out2.collect()
-    )
-
-
-def test_source_mix_by_tokens_zero_and_empty(spark):
-    from crossbar_data_process_spark.operators.sampling import (
-        source_mix_by_tokens,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "web", 10)], "doc_id long, source string, n_tokens long"
-    )
-    out, fr = source_mix_by_tokens(docs, {"web": 0}, token_col="n_tokens")
-    assert fr == {"web": 0.0} and out.count() == 0
-    # a budgeted source with NO rows at all freezes 1.0, symmetric with
-    # the present-but-zero-token case (both cost 0 tokens; r10 ADVICE) —
-    # there is still nothing to keep, so the sample is empty
-    out, fr = source_mix_by_tokens(docs, {"ghost": 5}, token_col="n_tokens")
-    assert fr == {"ghost": 1.0} and out.count() == 0
-
-
-def test_source_mix_by_tokens_zero_total_keeps_budgeted_source(spark):
-    """A source present with 0 measured tokens and a positive budget is
-    KEPT whole (budget >= total(0), per the contract; keeping costs 0
-    tokens) — not silently dropped (r10 review)."""
-    from crossbar_data_process_spark.operators.sampling import (
-        source_mix_by_tokens,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "empty", 0), (2, "empty", 0), (3, "web", 100)],
-        "doc_id long, source string, n_tokens long",
-    )
-    out, fr = source_mix_by_tokens(
-        docs, {"empty": 10, "web": 100}, token_col="n_tokens"
-    )
-    assert fr == {"empty": 1.0, "web": 1.0}
-    assert {r.doc_id for r in out.collect()} == {1, 2, 3}

@@ -133,50 +133,3 @@ def test_repetition_signals(spark):
     assert got[3] == (0.0, 0.0)
     assert got[4] == (0.0, 0.0)
     assert got[5] == (0.0, 0.0)
-
-
-def test_streaming_nb_scoring_matches_batch_classifier(spark, doc_chunks_dir):
-    """Train-offline / score-online: a model exported by nb_export_model
-    scores a document stream through the stateless nb_score_expr column —
-    and the streamed scores are BIT-identical to the batch join-based
-    nb_classify scores (integer-micro fold == DECIMAL join-sum)."""
-    from crossbar_data_process_spark.functions.text import quality_score
-    from crossbar_data_process_spark.operators.classifier import (
-        nb_classify,
-        nb_export_model,
-        nb_score_expr,
-    )
-
-    docs = spark.read.parquet(doc_chunks_dir)
-    lab = quality_score("text") >= 0.82
-    weights, prior = nb_export_model(docs, lab)
-    assert weights and isinstance(prior, float)
-
-    batch = {
-        r.doc_id: r.nb_score for r in nb_classify(docs, lab).collect()
-    }
-
-    schema = docs.schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(doc_chunks_dir)
-    )
-    q = (
-        stream.select("doc_id", nb_score_expr(weights, prior))
-        .writeStream.format("memory")
-        .queryName("nbscores")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r.doc_id: r.nb_score
-        for r in spark.sql("select * from nbscores").collect()
-    }
-    # every doc with >=1 token matches bit-exactly; zero-token docs score
-    # prior-only in the expr form and are absent from the join-based form
-    assert set(batch) <= set(got)
-    for did, s in batch.items():
-        assert got[did] == s, (did, got[did], s)
