@@ -16,10 +16,11 @@ Reference semantics per merge step, all on key (drugbank_id, uniprot_id):
 - per-source scalar columns (dgidb_score, stitch_combined_score,
   confidence_score, ...) pass through NULL-filled.
 
-Scale: the fold is one Catalyst plan; all six joins share the composite
-key so the exchange is reused across steps (one shuffle per source);
-bucketing silver DTI tables on (drugbank_id, uniprot_id) removes even
-those. Skewed hub targets (promiscuous kinases) are AQE-split.
+Scale: the fold is one Catalyst plan, but each added source costs two
+shuffles (2 x 5 for the six sources): a full outer join's key comes out as
+``coalesce(l.k, r.k)``, which is not hash-partitioned, so the next join
+re-shuffles both sides (``operators/merge.py``). Skewed hub targets
+(promiscuous kinases) are AQE-split.
 """
 
 from __future__ import annotations

@@ -18,9 +18,11 @@ silently fails to merge; canonical orientation makes the merge key
 deterministic and orientation-independent (SURVEY §7.2 hard-part d).
 
 Scale: every step is a declarative transform — semi-joins broadcast the
-whitelist, mapping joins broadcast the dictionaries, the merge chain
-shuffles once per source on the canonical pair key, AQE splits hub-protein
-skew.
+whitelist, mapping joins broadcast the dictionaries, and AQE splits
+hub-protein skew. The merge chain shuffles twice per added source on the
+canonical pair key: a full outer join's key comes out as a ``coalesce``,
+which is not hash-partitioned, so the next join re-shuffles both sides
+(``operators/merge.py``).
 """
 
 from __future__ import annotations

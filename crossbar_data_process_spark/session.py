@@ -1,14 +1,29 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory: one posture for every entry point.
 
-Tuned for correctness tests on ``local[N]`` but with every knob chosen so the
-same plan shape survives a 1000-executor cluster over 100 TB:
+Every session gets the same fixed settings:
 
-- AQE on (runtime re-plan: shuffle-partition coalescing, skew-join splitting,
-  sort-merge→broadcast demotion once post-filter stats are known);
-- skew-join handling explicitly enabled — protein hubs / hot disease ids in
-  the reference's domain are heavily skewed keys (SURVEY.md §4);
-- Arrow transfers for the few pandas-interop boundaries;
-- UTC session timezone so timestamp semantics match the DuckDB oracle.
+- AQE on, with shuffle-partition coalescing and skew-join splitting;
+- ``max(cpus // 2, 8)`` shuffle partitions and a 64 MiB broadcast
+  threshold;
+- ICU case mappings off: ``upper``/``lower`` use the JVM's mappings, which
+  give the same strings on this engine's data (``tests/test_session_margins``
+  pins them against Python's) without ICU's one-time table build;
+- Arrow transfers, UTC session time zone, snappy parquet, 128 MiB file
+  splits, TIMESTAMP(NANOS) read as long, no Spark UI, and no
+  ``InferFiltersFromGenerate``;
+- driver memory ``min(24g, 25% of available RAM, floor 4g)``.
+
+Two rules follow the input size, resolved once per session from
+``input_bytes``, else the parquet under ``input_dir``, else the parquet
+under ``$SPARK_GRAFT_SF_DIR``:
+
+- the AQE starting grain is ``ceil(input / 2 MiB)`` partitions, floored at
+  the shuffle-partition count and capped at 4×cpus (unknown input: the
+  cap);
+- input of at most 32 MiB runs interpreted: no whole-stage codegen and no
+  Janino-compiled expressions (unknown or larger input: codegen).
+
+``extra_conf`` overrides any of these.
 """
 
 from __future__ import annotations
@@ -90,6 +105,26 @@ def _initial_partitions(
     )
 
 
+# Input at or below this size runs interpreted (see the crossover table in
+# :func:`get_spark`).
+INTERPRET_MAX_BYTES = 32 * 1024 * 1024
+
+
+def _codegen_conf(input_bytes: int | None) -> dict[str, str]:
+    """Interpreted evaluation for known input of at most
+    ``INTERPRET_MAX_BYTES``; whole-stage codegen and compiled expressions
+    otherwise, unknown input included."""
+    if input_bytes is not None and input_bytes <= INTERPRET_MAX_BYTES:
+        return {
+            "spark.sql.codegen.wholeStage": "false",
+            "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+        }
+    return {
+        "spark.sql.codegen.wholeStage": "true",
+        "spark.sql.codegen.factoryMode": "FALLBACK",
+    }
+
+
 def get_spark(
     app_name: str = "crossbar-data-process-spark",
     master: str | None = None,
@@ -136,63 +171,99 @@ def get_spark(
     # bytes (~91 initial parts instead of ~8; harmless under AQE
     # coalescing, but the signal was wrong). Precedence: explicit
     # bytes > explicit dir > env dir > default dir.
+    #
+    # The same size picks how expressions are evaluated. On small input,
+    # compiling is most of an operator's cost: kg_build's timed phase at
+    # scale 0.3 (seed 7, 4 vCPU) compiled 296 classes with Janino, ~3.1 s
+    # by CodegenMetrics, and 1 when interpreting (no whole-stage codegen
+    # and the NO_CODEGEN expression factory; both are needed), which
+    # writes the same 23 gold tables. Compiling pays once a plan
+    # processes enough rows (Kohn, Leis & Neumann, "Adaptive Execution of
+    # Compiled Queries", ICDE 2018). Crossover probe: gen_sources +
+    # build_gold, then all 23 gold writes (17 light, then kg_build's 6
+    # timed ones), a fresh session per run, two runs per cell, 4 vCPU,
+    # ICU case mappings off in both modes; codegen -> interpreted, seconds:
+    #
+    #   scale  sources as parquet  all 23 writes          6 timed writes
+    #   0.3     0.8 MiB            22.1, 20.3 -> 16.7, 14.2   6.8, 6.5 -> 5.1, 4.0
+    #   3       5.3 MiB            29.0, 25.4 -> 23.6, 20.9  11.6, 9.5 -> 9.9, 7.9
+    #   10     17.4 MiB            35.5, 34.0 -> 33.7, 31.2  16.6, 16.4 -> 15.4, 14.1
+    #
+    # Interpreting wins at every measured size, by less as rows grow
+    # (-30% at 0.3, -8% at 10 on all 23 writes): compiling is a fixed cost
+    # and evaluating is per row. The cut sits at about twice the largest
+    # size measured. Tier-1 (sf0.001/sf0.01), bench.py (sf0.1, 17 MB) and
+    # kgbench (declared 10 and 2 MiB) all fall under it. Job, stage and
+    # task counts do not change; only how expressions are evaluated.
+    if input_bytes is None:
+        input_bytes = _input_parquet_bytes(input_dir)
     env_parts = os.environ.get("SPARK_GRAFT_INITIAL_PARTS")
-    if env_parts is not None:
-        initial_partitions = int(env_parts)
-    else:
-        initial_partitions = _initial_partitions(
-            cpus,
-            shuffle_partitions,
-            input_bytes
-            if input_bytes is not None
-            else _input_parquet_bytes(input_dir),
-        )
+    conf = _session_conf(
+        shuffle_partitions,
+        int(env_parts)
+        if env_parts is not None
+        else _initial_partitions(cpus, shuffle_partitions, input_bytes),
+        input_bytes,
+        extra_conf,
+    )
+    b = SparkSession.builder.appName(app_name).master(master)
+    for k, v in conf.items():
+        b = b.config(k, v)
+    return b.getOrCreate()
 
-    b = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+
+def _session_conf(
+    shuffle_partitions: int,
+    initial_partitions: int,
+    input_bytes: int | None,
+    extra_conf: dict[str, str] | None,
+) -> dict[str, str]:
+    """Every setting :func:`get_spark` gives its session; ``extra_conf``
+    wins over all of them."""
+    return {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
             str(initial_partitions),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.compression.codec", "snappy")
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.parquet.compression.codec": "snappy",
         # in local mode the driver JVM IS every executor — the old 8g
         # gave 32 task threads ~250 MB each, an order leaner than any
         # real cluster core and the proximate OOM in the r14 scale-1000
         # probe. Default = min(24g, 25% of physical RAM, floor 4g) so a
         # 16 GiB contributor box never launches an OOM-killer-bait -Xmx
-        # (r14 review); SPARK_GRAFT_DRIVER_MEM overrides.
-        .config(
-            "spark.driver.memory",
-            # helper only runs when the env override is absent — the env
-            # var must stay a working escape hatch even if the heuristic
-            # ever breaks (r14 review)
+        # (r14 review); SPARK_GRAFT_DRIVER_MEM overrides. The helper only
+        # runs when the env override is absent — the env var must stay a
+        # working escape hatch even if the heuristic ever breaks.
+        "spark.driver.memory":
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
+        "spark.ui.enabled": "false",
+        "spark.sql.files.maxPartitionBytes": "134217728",
         # some testdata generations ship events.ts as TIMESTAMP(NANOS), which
         # the Spark reader rejects by default; surfacing nanos as long is a
         # no-op for MICROS-era files, and sources.readers.load_events branches
         # on the actual footer type either way
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # InferFiltersFromGenerate duplicates the generator expression into a
         # pushed-down size()>0 filter; for heavyweight array builders
         # (shingling, minhash) that doubles per-row work and lands the copy
         # below the parallelizing exchange — explode already skips empty
         # arrays, so the inferred filter only costs
-        .config(
-            "spark.sql.optimizer.excludedRules",
+        "spark.sql.optimizer.excludedRules":
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-    )
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
-    return b.getOrCreate()
+        # With ICU case mappings on, a session's first upper/lower builds
+        # ICU's tables in CollationAwareUTF8String's class initializer, in
+        # one task, while the stage's other tasks wait on the class-init
+        # lock. kg_build's ppi_edges write (seed 7, 4 vCPU) went 2.4 ->
+        # 1.7 s interpreted and 3.4 -> 1.9 s with codegen with it off. The
+        # JVM's mappings give the same strings here
+        # (tests/test_session_margins.py), so every session, large or
+        # small, uses them and results never depend on the posture.
+        "spark.sql.icu.caseMappings.enabled": "false",
+        **_codegen_conf(input_bytes),
+        **(extra_conf or {}),
+    }

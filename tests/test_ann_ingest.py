@@ -4,6 +4,9 @@ and the distributed quantizer-drift gauge."""
 
 from __future__ import annotations
 
+import contextlib
+import warnings
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +23,17 @@ from crossbar_data_process_spark.streaming.ann_ingest import (
     ivf_ingest_writer,
     read_assigned_silver,
 )
+
+
+@contextlib.contextmanager
+def _warnings_as_errors():
+    """Every warning raises, except ResourceWarning: pyspark's collect()
+    (``pyspark/util.py`` ``_load_from_socket``) never closes its localhost
+    socket, so the garbage collector may report one at any point."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        warnings.simplefilter("ignore", ResourceWarning)
+        yield
 
 
 @pytest.fixture(scope="module")
@@ -145,7 +159,6 @@ def test_centroid_identity_guard(spark, clustered, centroids, tmp_path):
     refit) fails fast at factory time; a pre-fingerprint silver warns and
     stays unstamped."""
     import os
-    import warnings
 
     from crossbar_data_process_spark.streaming.ann_ingest import (
         centroid_fingerprint,
@@ -1444,8 +1457,6 @@ def test_suggest_nlist_posture_and_refit_sizing(
     suggest_nlist pins the arithmetic, refit_ivf_silver(nlist=None) sizes
     from what actually landed, and an explicit >4× overshoot warns with
     the measured 5M-probe negative instead of silently paying it."""
-    import warnings
-
     from crossbar_data_process_spark.operators.ivf import suggest_nlist
     from crossbar_data_process_spark.streaming.ann_ingest import (
         refit_ivf_silver,
@@ -1461,8 +1472,7 @@ def test_suggest_nlist_posture_and_refit_sizing(
     silver = str(tmp_path / "silver")
     ivf_ingest_writer(spark, centroids, silver)(clustered, 0)
     # None → sized from the landed 800 rows (suggest: floor 8), silently
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
+    with _warnings_as_errors():
         rep = refit_ivf_silver(
             spark,
             silver,
@@ -1482,8 +1492,7 @@ def test_suggest_nlist_posture_and_refit_sizing(
             require_clustered=False,
         )
     # within 4×: no warning
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
+    with _warnings_as_errors():
         refit_ivf_silver(
             spark,
             silver,
@@ -1631,8 +1640,6 @@ def test_refit_warn_respects_custom_cluster_target(
     """r16 review: an nlist the library itself suggested at a custom
     target_cluster_rows must not warn against the default posture when
     fed back to refit_ivf_silver with the same target."""
-    import warnings
-
     from crossbar_data_process_spark.operators.ivf import suggest_nlist
     from crossbar_data_process_spark.streaming.ann_ingest import (
         refit_ivf_silver,
@@ -1643,8 +1650,7 @@ def test_refit_warn_respects_custom_cluster_target(
     # finer grain chosen on purpose: 800 rows at E[cluster]=10 → 80
     fine = suggest_nlist(800, target_cluster_rows=10)
     assert fine == 80
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
+    with _warnings_as_errors():
         rep = refit_ivf_silver(
             spark,
             silver,

@@ -60,6 +60,23 @@ def _rows_and_digest(df) -> tuple[int, int]:
     return r.n, int(r.d)
 
 
+def _gold_digests(gold, registry) -> dict[str, tuple[int, int]]:
+    """(rows, digest) of every table, shaped and conformed; checks each
+    declared table's schema against the registry on the way."""
+    got = {}
+    for name, df in gold.items():
+        shaped = kg.to_gold_shape(name, df)
+        if name in registry.decls:
+            shaped = registry.conform(shaped, name)
+            want = registry.struct_type(name)
+            assert [
+                (f.name, f.dataType.simpleString()) for f in shaped.schema.fields
+            ] == [(f.name, f.dataType.simpleString()) for f in want.fields], name
+        got[name] = _rows_and_digest(shaped)
+        assert got[name][0] > 0, f"{name} is empty"
+    return got
+
+
 @pytest.fixture(scope="module")
 def gold(spark):
     return kg.build_gold(spark, gen_sources(spark, 0.03))
@@ -74,17 +91,7 @@ def test_full_build_composes_and_conforms(spark, gold):
     # every table except drug_nodes (map-typed props, documented) is declared
     assert set(gold) - set(registry.decls) == {"drug_nodes"}
 
-    got = {}
-    for name, df in gold.items():
-        shaped = kg.to_gold_shape(name, df)
-        if name in registry.decls:
-            shaped = registry.conform(shaped, name)
-            want = registry.struct_type(name)
-            assert [
-                (f.name, f.dataType.simpleString()) for f in shaped.schema.fields
-            ] == [(f.name, f.dataType.simpleString()) for f in want.fields], name
-        got[name] = _rows_and_digest(shaped)
-        assert got[name][0] > 0, f"{name} is empty"
+    got = _gold_digests(gold, registry)
     assert got == GOLD_PINS
     counts = {name: n for name, (n, _) in got.items()}
 
@@ -93,6 +100,30 @@ def test_full_build_composes_and_conforms(spark, gold):
     gold2 = kg.build_gold(spark, src2)
     for name in ("ppi_edges", "dti_edges", "gda_edges", "tf_gene_edges"):
         assert kg.to_gold_shape(name, gold2[name]).count() == counts[name]
+
+
+def test_digests_hold_with_codegen(spark):
+    """The test session reads sf0.001, so it evaluates interpreted; sessions
+    over larger input compile. Same build, same pins, with whole-stage
+    codegen and compiled expressions turned back on for this session."""
+    from crossbar_data_process_spark.schema.registry import SchemaRegistry
+    from crossbar_data_process_spark.session import _codegen_conf
+
+    codegen = _codegen_conf(None)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = {k: spark.conf.get(k) for k in codegen}
+    try:
+        for k, v in codegen.items():
+            spark.conf.set(k, v)
+        n0 = compiles.METRIC_COMPILATION_TIME().getCount()
+        gold = kg.build_gold(spark, gen_sources(spark, 0.03))
+        got = _gold_digests(gold, SchemaRegistry.from_yaml(kg.SCHEMA_PATH))
+        compiled = compiles.METRIC_COMPILATION_TIME().getCount() - n0
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    assert compiled > 0
+    assert got == GOLD_PINS
 
 
 def test_edge_tables_expose_curie_src_dst(gold):
