@@ -27,7 +27,10 @@ from crossbar_data_process_spark.plans import (
     side_effect, tf_gen, uniprot,
 )
 from crossbar_data_process_spark.schema.registry import SchemaRegistry
-from crossbar_data_process_spark.sources.synthetic import gen_sources
+from crossbar_data_process_spark.sources.synthetic import (
+    SOURCE_BYTES_PER_SCALE,
+    gen_sources,
+)
 
 SCHEMA_PATH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -248,7 +251,10 @@ def main() -> None:
     ap.add_argument("--show-schemas", action="store_true")
     args = ap.parse_args()
 
-    spark = get_spark(app_name="kg-build")
+    spark = get_spark(
+        app_name="kg-build",
+        input_bytes=int(args.scale * SOURCE_BYTES_PER_SCALE),
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     t0 = time.perf_counter()

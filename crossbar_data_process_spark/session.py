@@ -6,8 +6,9 @@ Every session gets the same fixed settings:
 - ``max(cpus // 2, 8)`` shuffle partitions and a 64 MiB broadcast
   threshold;
 - ICU case mappings off: ``upper``/``lower`` use the JVM's mappings, which
-  give the same strings on this engine's data (``tests/test_session_margins``
-  pins them against Python's) without ICU's one-time table build;
+  skip ICU's one-time table build and, in any default locale but Turkish,
+  Azeri or Lithuanian, give Python's strings (``tests/test_session_margins``
+  checks both);
 - Arrow transfers, UTC session time zone, snappy parquet, 128 MiB file
   splits, TIMESTAMP(NANOS) read as long, no Spark UI, and no
   ``InferFiltersFromGenerate``;
@@ -20,7 +21,7 @@ under ``$SPARK_GRAFT_SF_DIR``:
 - the AQE starting grain is ``ceil(input / 2 MiB)`` partitions, floored at
   the shuffle-partition count and capped at 4×cpus (unknown input: the
   cap);
-- input of at most 32 MiB runs interpreted: no whole-stage codegen and no
+- input of at most 64 MiB runs interpreted: no whole-stage codegen and no
   Janino-compiled expressions (unknown or larger input: codegen).
 
 ``extra_conf`` overrides any of these.
@@ -105,9 +106,10 @@ def _initial_partitions(
     )
 
 
-# Input at or below this size runs interpreted (see the crossover table in
-# :func:`get_spark`).
-INTERPRET_MAX_BYTES = 32 * 1024 * 1024
+# Input at or below this size runs interpreted: between the largest input
+# measured faster interpreted (52.9 MiB) and the smallest measured faster
+# compiled (88.7 MiB); see the crossover table in :func:`get_spark`.
+INTERPRET_MAX_BYTES = 64 * 1024 * 1024
 
 
 def _codegen_conf(input_bytes: int | None) -> dict[str, str]:
@@ -184,17 +186,22 @@ def get_spark(
     # timed ones), a fresh session per run, two runs per cell, 4 vCPU,
     # ICU case mappings off in both modes; codegen -> interpreted, seconds:
     #
-    #   scale  sources as parquet  all 23 writes          6 timed writes
-    #   0.3     0.8 MiB            22.1, 20.3 -> 16.7, 14.2   6.8, 6.5 -> 5.1, 4.0
-    #   3       5.3 MiB            29.0, 25.4 -> 23.6, 20.9  11.6, 9.5 -> 9.9, 7.9
-    #   10     17.4 MiB            35.5, 34.0 -> 33.7, 31.2  16.6, 16.4 -> 15.4, 14.1
+    #   scale  sources as parquet  all 23 writes             6 timed writes
+    #   0.3      0.8 MiB           22.1, 20.3 -> 16.7, 14.2   6.8,  6.5 ->  5.1,  4.0
+    #   3        5.3 MiB           29.0, 25.4 -> 23.6, 20.9  11.6,  9.5 ->  9.9,  7.9
+    #   10      17.4 MiB           35.5, 34.0 -> 33.7, 31.2  16.6, 16.4 -> 15.4, 14.1
+    #   30      52.9 MiB           38.3, 44.1 -> 36.8, 40.9  20.7, 24.4 -> 20.2, 22.1
+    #   50      88.7 MiB           64.0, 68.9 -> 67.1, 69.9  35.7, 39.5 -> 38.5, 41.8
+    #   70     125.8 MiB           73.4, 79.8 -> 86.0, 82.2  41.6, 47.4 -> 53.4, 50.7
+    #   100    180.5 MiB           71.0, 80.7 -> 76.5, 86.0  42.4, 46.7 -> 50.3, 58.7
     #
-    # Interpreting wins at every measured size, by less as rows grow
-    # (-30% at 0.3, -8% at 10 on all 23 writes): compiling is a fixed cost
-    # and evaluating is per row. The cut sits at about twice the largest
-    # size measured. Tier-1 (sf0.001/sf0.01), bench.py (sf0.1, 17 MB) and
-    # kgbench (declared 10 and 2 MiB) all fall under it. Job, stage and
-    # task counts do not change; only how expressions are evaluated.
+    # Compiling is a fixed cost and evaluating is per row, so interpreting
+    # wins by less as input grows (-27% at 0.3, -6% at 30 on all 23
+    # writes) and loses from scale 50 on. The cut sits between the last
+    # win and the first loss. Tier-1 (sf0.001/sf0.01), bench.py (sf0.1,
+    # 17 MB) and kgbench (declared 10 and 2 MiB) all fall under it. Job,
+    # stage and task counts do not change; only how expressions are
+    # evaluated.
     if input_bytes is None:
         input_bytes = _input_parquet_bytes(input_dir)
     env_parts = os.environ.get("SPARK_GRAFT_INITIAL_PARTS")
@@ -259,10 +266,13 @@ def _session_conf(
         # ICU's tables in CollationAwareUTF8String's class initializer, in
         # one task, while the stage's other tasks wait on the class-init
         # lock. kg_build's ppi_edges write (seed 7, 4 vCPU) went 2.4 ->
-        # 1.7 s interpreted and 3.4 -> 1.9 s with codegen with it off. The
-        # JVM's mappings give the same strings here
-        # (tests/test_session_margins.py), so every session, large or
-        # small, uses them and results never depend on the posture.
+        # 1.7 s interpreted and 3.4 -> 1.9 s with codegen with it off.
+        # Without ICU, non-ASCII text maps through the JVM's
+        # String.toUpperCase()/toLowerCase(), which follow its default
+        # locale: outside a Turkish, Azeri or Lithuanian locale they give
+        # Python's strings (tests/test_session_margins.py checks both the
+        # strings and the locale). Every session, large or small, uses
+        # them, so results never depend on the posture.
         "spark.sql.icu.caseMappings.enabled": "false",
         **_codegen_conf(input_bytes),
         **(extra_conf or {}),

@@ -15,6 +15,13 @@ from pyspark.sql import functions as F
 # below = pmod(xxhash64(i, lit(k)), m): a cheap deterministic hash stream.
 
 
+# Snappy parquet bytes gen_sources(spark, s) writes per unit of s: 52.9 MiB
+# at s=30, 88.7 at 50, 125.8 at 70 and 180.5 at 100 (measured). Sessions
+# that build from generated sources size themselves from it, as get_spark
+# cannot see them.
+SOURCE_BYTES_PER_SCALE = int(1.8 * 2**20)
+
+
 def _h(col, salt: int, m: int):
     return F.pmod(F.xxhash64(col, F.lit(salt)), F.lit(m))
 

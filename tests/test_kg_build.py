@@ -13,7 +13,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import MapType
 
 from crossbar_data_process_spark.plans import gold as kg
-from crossbar_data_process_spark.sources.synthetic import gen_sources
+from crossbar_data_process_spark.sources.synthetic import (
+    SOURCE_BYTES_PER_SCALE,
+    gen_sources,
+)
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -134,17 +137,29 @@ def test_edge_tables_expose_curie_src_dst(gold):
 
 
 def test_cli_keeps_unrelated_files_in_out(spark, tmp_path, monkeypatch):
-    """The CLI writes ``<out>/<name>.parquet`` and nothing else in ``--out``."""
+    """The CLI writes ``<out>/<name>.parquet`` and nothing else in ``--out``,
+    and sizes its session from ``--scale``: at 100 (180 MiB of sources) it
+    compiles."""
+    from crossbar_data_process_spark.session import _session_conf
+
     mine = tmp_path / "notes.txt"
     mine.write_text("keep me")
-    monkeypatch.setattr(kg, "get_spark", lambda **kw: spark)
+    session_kw = {}
+    monkeypatch.setattr(
+        kg, "get_spark", lambda **kw: session_kw.update(kw) or spark
+    )
     monkeypatch.setattr(spark, "stop", lambda: None)
     monkeypatch.setattr(kg, "gen_sources", lambda spark, s: {})
     monkeypatch.setattr(kg, "build_gold", lambda spark, src: {"tiny": spark.range(3)})
-    monkeypatch.setattr(sys, "argv", ["gold", "--out", str(tmp_path)])
+    monkeypatch.setattr(
+        sys, "argv", ["gold", "--scale", "100", "--out", str(tmp_path)]
+    )
     kg.main()
     assert mine.read_text() == "keep me"
     assert spark.read.parquet(str(tmp_path / "tiny.parquet")).count() == 3
+    assert session_kw["input_bytes"] == 100 * SOURCE_BYTES_PER_SCALE
+    conf = _session_conf(8, 8, session_kw["input_bytes"], None)
+    assert conf["spark.sql.codegen.wholeStage"] == "true"
 
 
 def test_script_shim_reexports_the_package_objects(monkeypatch):

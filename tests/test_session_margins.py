@@ -78,13 +78,17 @@ def test_input_bytes_follow_the_passed_dir():
 
 
 def test_small_known_input_runs_interpreted():
-    for size in (1, 466_976, INTERPRET_MAX_BYTES):
+    # 55_424_770: gen_sources at scale 30, the largest input the crossover
+    # probe measured faster interpreted
+    for size in (1, 466_976, 55_424_770, INTERPRET_MAX_BYTES):
         assert _codegen_keys(_session_conf(8, 8, size, None)) == _INTERPRETED
 
 
 def test_unknown_or_large_input_keeps_codegen():
     assert _codegen_keys(_session_conf(8, 8, None, None)) == _CODEGEN
-    for size in (INTERPRET_MAX_BYTES + 1, 1_780_000_000):
+    # 93_026_083: gen_sources at scale 50, the smallest input the probe
+    # measured faster compiled
+    for size in (INTERPRET_MAX_BYTES + 1, 93_026_083, 1_780_000_000):
         assert _codegen_keys(_session_conf(8, 8, size, None)) == _CODEGEN
 
 
@@ -135,8 +139,15 @@ _CASE_SAMPLES = [
 def test_case_mapping_matches_python(spark):
     """upper/lower without ICU equal Python's ``str.upper``/``str.lower``
     (the reference's pandas ``.str.upper()``/``.str.lower()``) on every
-    sample: no difference has been found to record."""
+    sample: no difference has been found to record.
+    Without ICU, Spark maps non-ASCII text with ``String.toUpperCase()``/
+    ``toLowerCase()``, which follow the JVM's default locale; Turkish,
+    Azeri and Lithuanian have their own rules for i/I and dotted letters,
+    so the match holds only in other locales, and this test fails in
+    those three."""
     assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    language = spark._jvm.java.util.Locale.getDefault().getLanguage()
+    assert language not in ("tr", "az", "lt"), language
     rows = (
         spark.createDataFrame([(s,) for s in _CASE_SAMPLES], "s string")
         .select("s", F.upper("s").alias("u"), F.lower("s").alias("l"))
