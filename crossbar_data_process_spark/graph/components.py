@@ -18,7 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crossbar_data_process_spark.graph.pregel import driver_graph, supersteps
+from crossbar_data_process_spark.graph.pregel import (
+    driver_graph,
+    local_frame,
+    supersteps,
+)
 
 
 def connected_components(
@@ -36,13 +40,14 @@ def connected_components(
 
     A graph within ``pregel.DRIVER_MAX_EDGES`` (``pregel.driver_graph``)
     is resolved by one min-root union-find over the collected edges, and
-    the result is a local DataFrame built from the collected ids: ~2 jobs
-    against ≥ 2 supersteps of joins, groupBys and counts. It returns the
-    loop's rows exactly (pinned in tests/test_graph_hygiene.py): only an
-    edge whose endpoints are both node ids links anything, since an
-    endpoint outside ``nodes`` never holds a label and a NULL one never
-    matches, and a NULL node keeps a NULL component. Larger graphs run
-    on ``pregel.supersteps``, which owns its cache hygiene.
+    the result returns through ``pregel.local_frame``, as Arrow columns
+    in the JVM: 2 jobs against ≥ 2 supersteps of joins, groupBys and
+    counts. It returns the loop's rows exactly (pinned in
+    tests/test_graph_hygiene.py): only an edge whose endpoints are both
+    node ids links anything, since an endpoint outside ``nodes`` never
+    holds a label and a NULL one never matches, and a NULL node keeps a
+    NULL component. Larger graphs run on ``pregel.supersteps``, which
+    owns its cache hygiene.
     """
     graph = driver_graph(nodes, edges, id_col, src_col, dst_col)
     if graph is not None:
@@ -66,8 +71,9 @@ def connected_components(
                 # min-id root so the representative IS the min label
                 parent[rb] = ra
         id_type = nodes.schema[id_col].dataType.simpleString()
-        return nodes.sparkSession.createDataFrame(
-            [(v, find(v) if v in parent else v) for v in ids],
+        return local_frame(
+            nodes.sparkSession,
+            [ids, [find(v) if v in parent else v for v in ids]],
             f"id {id_type}, component {id_type}",
         )
     sym = edges.select(

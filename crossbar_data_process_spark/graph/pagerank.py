@@ -17,7 +17,11 @@ from decimal import ROUND_HALF_UP, Decimal
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crossbar_data_process_spark.graph.pregel import driver_graph, supersteps
+from crossbar_data_process_spark.graph.pregel import (
+    driver_graph,
+    local_frame,
+    supersteps,
+)
 
 _UNITS = 10**18  # one DECIMAL(38,18) unit is 1 / _UNITS
 
@@ -31,13 +35,13 @@ def _dec(x: float) -> int:
 
 
 def _driver_ranks(ids: list, pairs: list[tuple], damping: float, iters: int) -> list:
-    """The loop's supersteps on collected ids and pairs, mirroring its
-    joins: a node row counts once per duplicate (in ``n`` and in what it
-    sends), a NULL id is dangling, a NULL endpoint never matches,
-    ``out_deg`` counts every edge of its ``src`` and contributions to ids
-    outside ``nodes`` are dropped. Decimal sums are exact integer sums of
-    units, and ``int / int`` rounds correctly, as BigDecimal's
-    ``doubleValue`` does."""
+    """The rank of each of ``ids``, in order: the loop's supersteps on
+    collected ids and pairs, mirroring its joins: a node row counts once
+    per duplicate (in ``n`` and in what it sends), a NULL id is dangling,
+    a NULL endpoint never matches, ``out_deg`` counts every edge of its
+    ``src`` and contributions to ids outside ``nodes`` are dropped.
+    Decimal sums are exact integer sums of units, and ``int / int``
+    rounds correctly, as BigDecimal's ``doubleValue`` does."""
     n = len(ids)
     mult = Counter(ids)
     out_deg = Counter(s for s, _ in pairs)
@@ -58,7 +62,7 @@ def _driver_ranks(ids: list, pairs: list[tuple], damping: float, iters: int) -> 
             v: base + damping * (recv[v] / _UNITS + dang / float(n))
             for v in mult
         }
-    return [(v, rank[v]) for v in ids]
+    return [rank[v] for v in ids]
 
 
 def pagerank(
@@ -76,14 +80,17 @@ def pagerank(
     engine's ``_dsum`` convention), which is what makes a cross-engine SQL
     oracle possible for an iterative float algorithm — and what lets the
     driver step reproduce the loop exactly, for the id types
-    ``pregel.driver_graph`` admits. Its result is a local DataFrame; the
-    loop's ``iters`` supersteps run on ``pregel.supersteps``, which owns
-    the cache hygiene."""
+    ``pregel.driver_graph`` admits. Its result returns through
+    ``pregel.local_frame``, as Arrow columns in the JVM; the loop's
+    ``iters`` supersteps run on ``pregel.supersteps``, which owns the
+    cache hygiene."""
     graph = driver_graph(nodes, edges, id_col, src_col, dst_col)
     if graph is not None:
         id_type = nodes.schema[id_col].dataType.simpleString()
-        return nodes.sparkSession.createDataFrame(
-            _driver_ranks(*graph, damping, iters), f"id {id_type}, rank double"
+        return local_frame(
+            nodes.sparkSession,
+            [graph[0], _driver_ranks(*graph, damping, iters)],
+            f"id {id_type}, rank double",
         )
     n_nodes = nodes.count()
     out_deg = edges.groupBy(F.col(src_col).alias("id")).agg(

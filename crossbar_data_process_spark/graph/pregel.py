@@ -15,18 +15,46 @@ blocks belong to the checkpointed RDD and are freed by the ContextCleaner.
 pick the physical plan by graph size). A graph within ``DRIVER_MAX_EDGES``
 is collected once and solved in Python, which reproduces the loop's
 output exactly; a larger one runs ``supersteps``.
+
+``local_frame`` is how a driver-mode result returns to the JVM: once, as
+Arrow columns (GraphX keeps its graph as JVM-resident tables). Spark
+turns the table into a ``LocalRelation``, or above
+``spark.sql.execution.arrow.localRelationThreshold`` into an Arrow RDD
+the JVM decodes. Neither path pickles a row or starts a Python worker,
+which a list-built ``createDataFrame`` does at its first action.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType, StringType
+from pyspark.sql.types import DataType, IntegralType, StringType
 
 CHECKPOINT_EVERY = 5
 DRIVER_MAX_EDGES = 500_000
+
+
+def local_frame(
+    spark: SparkSession, columns: Sequence[Sequence], ddl: str
+) -> DataFrame:
+    """A DataFrame of driver values: ``columns`` holds one sequence per
+    field of the DDL schema ``ddl``, in its order (a struct value is a
+    tuple). The values are typed by the schema, not inferred, and cross
+    into the JVM as one Arrow table."""
+    # imported on first use: a session that never builds a local frame
+    # never loads pyarrow
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = DataType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow, strict=True)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def driver_graph(

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from crossbar_data_process_spark.graph.pregel import local_frame
 from crossbar_data_process_spark.operators.materialize import materialize
 from crossbar_data_process_spark.operators.similarity import cosine, dot, norm
 from crossbar_data_process_spark.operators.topk import top_k_per_group
@@ -893,12 +894,14 @@ class TwoLevelQuantizer:
         arrays score through one transform and the (−score, id) struct
         min picks the leaf — flat ``ivf_assign`` tie-break exactly."""
         spark = df.sparkSession
-        rows = [
-            (g, [(j, [float(x) for x in self.centroids[j]]) for j in grp])
-            for g, grp in enumerate(self.groups)
+        leaves = [
+            [(j, [float(x) for x in self.centroids[j]]) for j in grp]
+            for grp in self.groups
         ]
-        leaf_tbl = spark.createDataFrame(
-            rows, "g int, leaves array<struct<j: int, c: array<double>>>"
+        leaf_tbl = local_frame(
+            spark,
+            [range(len(leaves)), leaves],
+            "g int, leaves array<struct<j: int, c: array<double>>>",
         )
         w = self.assign_probes
         out = df.withColumn(
@@ -1037,9 +1040,10 @@ def save_centroids(
     (cluster_id int, centroid array<double>) — the 100 TB contract is fit
     ONCE on a sample, then assign forever: the centroids must outlive the
     session that trained them."""
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    df = spark.createDataFrame(
-        rows, "cluster_id int, centroid array<double>"
+    df = local_frame(
+        spark,
+        [range(len(centroids)), [[float(x) for x in c] for c in centroids]],
+        "cluster_id int, centroid array<double>",
     )
     # nlist rows: one file is the right layout
     df.coalesce(1).write.mode("overwrite").parquet(path)

@@ -19,7 +19,9 @@ deterministic and orientation-independent (SURVEY §7.2 hard-part d).
 
 Scale: every step is a declarative transform — semi-joins broadcast the
 whitelist, mapping joins broadcast the dictionaries, and AQE splits
-hub-protein skew. The merge chain shuffles twice per added source on the
+hub-protein skew. IntAct and BioGRID are each read once: their
+per-directed-pair reduction is one window pass over the pair, one
+shuffle. The merge chain shuffles twice per added source on the
 canonical pair key: a full outer join's key comes out as a ``coalesce``,
 which is not hash-partitioned, so the next join re-shuffles both sides
 (``operators/merge.py``).
@@ -27,7 +29,7 @@ which is not hash-partitioned, so the next join re-shuffles both sides
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crossbar_data_process_spark.functions.ids import split_list
@@ -57,25 +59,38 @@ def _dedup_pair_keep_best(
     )
 
 
-def _directed_group_union(
-    df: DataFrame, order_by: list, value_cols: list[str]
-) -> DataFrame:
+def _directed_group_union(df: DataFrame, order_by: list) -> DataFrame:
     """The reference's per-*directed*-pair reduction (ppi.py:135-140,
     :248-252): group by (uniprot_a, uniprot_b) exactly as oriented, union
     pubmed ids within the group (set semantics; engine sorts the array for
     determinism where the reference's set order was unspecified), keep the
     best row's scalar columns. Empty union → NULL (the reference's
-    ``replace("", np.nan)``)."""
-    pubs = df.groupBy("uniprot_a", "uniprot_b").agg(
-        F.array_sort(
-            F.array_distinct(F.flatten(F.collect_list("pubmed_ids")))
-        ).alias("__pubs")
+    ``replace("", np.nan)``).
+
+    One pass: both window functions share ``partitionBy`` on the pair, so
+    the source is read once and shuffled once; the pubmed union spans the
+    whole group and ``row_number`` picks its best row. A pair with a NULL
+    endpoint is dropped, not grouped. The callers' swissprot semi-joins
+    drop such rows already, and Catalyst folds this filter into theirs."""
+    group = Window.partitionBy(*PPI_KEY)
+    rest = [c for c in df.columns if c not in (*PPI_KEY, "pubmed_ids")]
+    best = (
+        df.na.drop(subset=PPI_KEY)
+        .select(
+            "*",
+            F.collect_list("pubmed_ids").over(group).alias("__pubs"),
+            F.row_number().over(group.orderBy(*order_by)).alias("__rn"),
+        )
+        .filter(F.col("__rn") == 1)
+        .withColumn(
+            "__pubs", F.array_sort(F.array_distinct(F.flatten("__pubs")))
+        )
     )
-    best = keep_best(df.drop("pubmed_ids"), ["uniprot_a", "uniprot_b"], order_by)
-    merged = best.join(pubs, ["uniprot_a", "uniprot_b"])
-    return merged.withColumn(
-        "pubmed_ids", F.when(F.size("__pubs") > 0, F.col("__pubs"))
-    ).drop("__pubs")
+    return best.select(
+        *PPI_KEY,
+        *rest,
+        F.when(F.size("__pubs") > 0, F.col("__pubs")).alias("pubmed_ids"),
+    )
 
 
 def intact_process(intact: DataFrame, swissprot: DataFrame) -> DataFrame:
@@ -103,7 +118,6 @@ def intact_process(intact: DataFrame, swissprot: DataFrame) -> DataFrame:
     reduced = _directed_group_union(
         df,
         [F.desc("intact_score"), F.asc("method"), F.asc("interaction_type")],
-        ["source", "intact_score", "method", "interaction_type"],
     )
     return _dedup_pair_keep_best(
         reduced,
@@ -154,7 +168,6 @@ def biogrid_process(
     reduced = _directed_group_union(
         df.select("source", "uniprot_a", "uniprot_b", "pubmed_ids", "method"),
         [F.asc("method")],
-        ["source", "method"],
     )
     return _dedup_pair_keep_best(reduced, [F.asc("method")], extra_keys=["method"])
 

@@ -233,6 +233,36 @@ def test_graph_driver_path_job_counts(spark):
     assert {r.component for r in cc.collect()} == {0, n - 1}  # n-1 is isolated
 
 
+def test_driver_results_are_local_relations(spark):
+    """A driver-mode result crosses into the JVM as Arrow columns: a
+    ``LocalRelation`` leaf, not the ``LogicalRDD`` over a ``PythonRDD``
+    that a list-built frame plans, whose first action forks Python
+    workers. Above ``arrow.localRelationThreshold`` (forced here with 0,
+    the path of a graph near ``DRIVER_MAX_EDGES``) the leaf is an Arrow
+    RDD the JVM decodes, and the rows are the same."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+
+    def leaf_and_rows(df):
+        qe = df._jdf.queryExecution()
+        leaves = qe.analyzed().collectLeaves()
+        assert leaves.size() == 1
+        assert "PythonRDD" not in qe.toRdd().toDebugString()
+        return leaves.apply(0).nodeName(), Counter(map(tuple, df.collect()))
+
+    graphs = [_random_graph(spark, 0, "long"), _random_graph(spark, 3, "string")]
+    algorithms = (connected_components, lambda n, e: pagerank(n, e, iters=3))
+    local = [leaf_and_rows(f(n, e)) for n, e in graphs for f in algorithms]
+    assert {leaf for leaf, _ in local} == {"LocalRelation"}
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "0")
+    try:
+        forced = [leaf_and_rows(f(n, e)) for n, e in graphs for f in algorithms]
+    finally:
+        spark.conf.set(key, prev)
+    assert {leaf for leaf, _ in forced} == {"LogicalRDD"}
+    assert [rows for _, rows in forced] == [rows for _, rows in local]
+
+
 @pytest.mark.slow
 def test_pagerank_storage_bounded_and_converges(spark, monkeypatch):
     # a zero budget keeps this on the loop (see the components test above)

@@ -6,6 +6,8 @@ regress. These are the checks run inline during development, pinned."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from crossbar_data_process_spark.plans.queries import QUERIES
@@ -365,3 +367,51 @@ def test_curate_lsh_cap_gauge_adds_no_corpus_pass(spark):
     # zero extra text reads; the retired standalone form re-shingled
     # the whole corpus (+n text reads) and would fail this equality
     assert scans_gauged == scans_plain, (scans_plain, scans_gauged)
+
+
+def test_ppi_sources_are_read_once(spark):
+    """IntAct and BioGRID each read their source once: the per-directed-pair
+    reduction (pubmed union plus keep-best) is one window pass, so it adds
+    one exchange on the pair and joins nothing back on it. Each source is a
+    ``Range`` of its own length, so counting its leaves counts its scans."""
+    from pyspark.sql import functions as F
+
+    from crossbar_data_process_spark.plans.ppi import (
+        biogrid_process,
+        intact_process,
+    )
+
+    n = F.col("id")
+
+    def prot(e):
+        return F.concat(F.lit("P"), e.cast("string"))
+
+    swissprot = spark.range(6).select(prot(n).alias("uniprot"))
+    intact = spark.range(200).select(
+        prot(n % 7).alias("uniprot_a"),
+        prot(n % 5).alias("uniprot_b"),
+        F.concat_ws(";", n.cast("string"), (n + 1).cast("string")).alias("pubmed_id"),
+        ((n % 3) / 10).alias("intact_score"),
+        F.lit("y2h").alias("method"),
+        F.lit("direct").alias("interaction_type"),
+    )
+    biogrid = spark.range(300).select(
+        prot(n % 7).alias("partner_a"),
+        prot(n % 5).alias("partner_b"),
+        F.lit("9606").alias("tax_a"),
+        F.lit("9606").alias("tax_b"),
+        n.cast("string").alias("pmid"),
+        F.lit("Two-hybrid").alias("experimental_system"),
+    )
+    symbol_map = spark.range(7).select(
+        prot(n).alias("symbol"), F.lit("9606").alias("tax"), prot(n).alias("uniprot")
+    )
+    for rows, df in (
+        (200, intact_process(intact, swissprot)),
+        (300, biogrid_process(biogrid, symbol_map, swissprot)),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count(f"Range (0, {rows},") == 1, plan
+        pair_exchanges = re.findall(r"Exchange hashpartitioning\(uniprot_a#", plan)
+        assert len(pair_exchanges) == 1, plan
+        assert not re.search(r"Join \[uniprot_a#\d+, uniprot_b#", plan), plan
