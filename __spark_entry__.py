@@ -21,8 +21,9 @@ from crossbar_data_process_spark.plans.queries import ORACLES, QUERIES  # noqa: 
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return QUERIES["q01_pricing_summary"](spark, "/root/testdata/sf0.001")
+    """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
+    q17 is ``outer_merge``, CROssBAR's multi-source merge."""
+    return QUERIES["q17_multi_source_merge"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

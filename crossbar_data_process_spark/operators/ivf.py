@@ -787,7 +787,7 @@ class TwoLevelQuantizer:
     groups, and scoring ONLY their member leaves:
     O(√nlist·(1 + assign_probes)) dots per row instead of O(nlist) —
     O(n·√nlist) overall, and nlist's literal matrix leaves the per-row
-    hot path (the group literal is indexed, not scanned).
+    hot path (:meth:`assign_frame` joins the probed groups' leaves in).
 
     Exactness: with ``assign_probes == ntop`` every leaf is a candidate
     and the assignment (including the min-id tie-break) equals flat
@@ -831,61 +831,19 @@ class TwoLevelQuantizer:
         self.groups = groups
         self.assign_probes = min(assign_probes, len(top))
 
-    def _group_literal(self) -> Column:
-        """ntop-element literal: groups[g] = array<struct<j int, c array>>
-        of the leaves top centroid g owns. Constant-folded once — per-row
-        work only ever touches the probed groups' slices via element_at.
-        Built as one parsed SQL expression (the ``_centroid_matrix``
-        plan-build-speed rationale). For nlist past a few thousand prefer
-        :meth:`assign_frame`, whose PLAN carries no leaf literals at all."""
-
-        def leaf(j: int) -> str:
-            c = ",".join(_sql_double(x) for x in self.centroids[j])
-            return f"named_struct('j', {j}, 'c', array({c}))"
-
-        sql = "array(" + ",".join(
-            "array(" + ",".join(leaf(j) for j in g) + ")"
-            for g in self.groups
-        ) + ")"
-        return F.expr(sql)
-
-    def assign(self, vec: Column) -> Column:
-        """0-based leaf cluster id — drop-in for ``ivf_assign(vec,
-        centroids)`` with the two-level cost shape. Same caller contract:
-        bind any ``checked_vec`` guard in its own projection first (the
-        HOF no-CSE rule)."""
-        probe = _probe_list(vec, self.top, self.assign_probes)
-        cand = F.flatten(
-            F.transform(
-                probe, lambda g: F.element_at(self._group_literal(), g + 1)
-            )
-        )
-        # min of (-score, leaf id) structs == argmax score with the
-        # smallest-id tie-break — exactly flat ivf_assign's
-        # first-index-of-max rule
-        scored = F.transform(
-            cand,
-            lambda s: F.struct(
-                (-dot(vec, s["c"])).alias("s"), s["j"].alias("j")
-            ),
-        )
-        return F.array_min(scored)["j"].cast("int")
-
     def assign_frame(
         self, df: DataFrame, vec_col: str, out_col: str = "cluster"
     ) -> DataFrame:
-        """Two-level assignment as a BROADCAST-JOIN plan — identical
-        assignments to :meth:`assign` (pinned in tests/test_ivf_ann.py),
-        different transport: the leaf centroids ride a broadcast TABLE of
-        ntop rows (one array<struct<j,c>> per group) instead of living in
-        the expression tree. The plan stays O(ntop + assign_probes) nodes
-        no matter how large nlist grows — at nlist ≳ a few thousand the
-        literal form pays minutes of driver plan-build + analyzer
-        constant-folding over nlist×dim literal nodes PER ACTION
-        (measured r13: ~33 s build + ~20 s fold at nlist=4000, dim=64),
-        which this form never does; the broadcast ships the same bytes as
-        DATA. This is the production path ``neighbor_pairs_ivf`` /
-        ``write_assigned_corpus`` take when handed a two-level quantizer.
+        """Two-level assignment as a BROADCAST-JOIN plan, the one way the
+        quantizer assigns (``assign_clusters`` routes every two-level
+        consumer here). The leaf centroids ride a broadcast TABLE of ntop
+        rows (one array<struct<j,c>> per group) instead of living in the
+        expression tree, so the plan stays O(ntop + assign_probes) nodes
+        no matter how large nlist grows. A literal leaf matrix would pay
+        minutes of driver plan-build + analyzer constant-folding over
+        nlist×dim literal nodes PER ACTION at nlist ≳ a few thousand
+        (measured r13: ~33 s build + ~20 s fold at nlist=4000, dim=64);
+        the broadcast ships the same bytes as DATA.
 
         Mechanics: the per-row probe list (top-matrix literal — ntop×dim,
         small by construction) explodes into ``assign_probes`` join-key

@@ -90,7 +90,6 @@ BENCH_QUERIES = [
     "q73_semantic_dedup_ingest",
     # r04 additions
     "q54_ivf_topk",
-    "q55_curation_funnel",
     # r06 addition: bucketed range join, benchmarked from day one
     "q56_range_join",
     # r07 addition: two-table as-of join (q44_rollup's folded slot),
@@ -112,10 +111,9 @@ BENCH_QUERIES = [
     # r10 addition: benchmark decontamination (q04's folded slot),
     # benchmarked from day one
     "q65_contamination",
-    # r11 additions: PQ-ADC top-k (q39_ann_lsh's folded slot) and the
-    # quantile-sketch rollup (q31's folded slot), benchmarked from day one
+    # r11 addition: PQ-ADC top-k (q39_ann_lsh's folded slot), benchmarked
+    # from day one
     "q67_pq_adc_topk",
-    "q68_quantile_rollup",
     # r12 addition: the IVF-PQ production silver path (q32's folded slot),
     # benchmarked from day one
     "q69_ivfpq_silver",
@@ -451,8 +449,8 @@ def q11_effect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------- X1 median aggregate (compound.py:461-462) + X2 middle-row pick
 # (compound.py:464-474, len//2) in ONE query — both are single-groupBy custom
 # aggregates, so one pass over orders exercises both against one oracle
-# (r04 fold freeing a slot for q55; the former q12_median's agg_median and
-# q13_middle_row's agg_middle_row verbatim, same group keys).
+# (r04 fold; the former q12_median's agg_median and q13_middle_row's
+# agg_middle_row verbatim, same group keys).
 @query(
     "q12_median_middle",
     """
@@ -814,16 +812,15 @@ _QUALITY_SQL = """round(
          + 0.2, 6)"""
 
 
-def _profile_ctes(src: str = "documents") -> str:
-    """The s/h/best CTE chain behind the per-document profile (token count,
-    stopword/junk ratios, language-marker hits) — shared by the q22 profile
-    oracle and the q55 curation-funnel oracle so the gate expressions cannot
-    drift between them."""
+def _profile_ctes() -> str:
+    """The s/h/best CTE chain of the per-document profile (token count,
+    stopword/junk ratios, language-marker hits) behind the q22 profile
+    oracle."""
     selects = []
     for lang, words in sorted(LANG_MARKERS.items()):
         pat = r"\b(" + "|".join(words) + r")\b"
         selects.append(
-            f"SELECT doc_id, '{lang}' AS lang, len(regexp_extract_all(lower(text), '{pat}')) AS hits FROM {src}"
+            f"SELECT doc_id, '{lang}' AS lang, len(regexp_extract_all(lower(text), '{pat}')) AS hits FROM documents"
         )
     union = "\nUNION ALL\n".join(selects)
     return f"""s AS (
@@ -832,7 +829,7 @@ def _profile_ctes(src: str = "documents") -> str:
          len(regexp_extract_all(lower(text), '{_stop_pat()}')) AS swhits,
          length(text) AS nch,
          length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS njunk
-  FROM {src}),
+  FROM documents),
 h AS ({union}),
 best AS (
   SELECT doc_id, lang FROM h WHERE hits > 0
@@ -973,8 +970,8 @@ def q25_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_ctes(num_hashes: int = 12, bands: int = 6, src: str = "documents") -> str:
     """The shared CTE chain ending in ``j`` (candidate pairs + exact-Jaccard
     terms) — composed by the q26 oracle, the q53 cluster-resolution oracle,
-    and (over the gated/exact-deduped ``src`` CTE) the q55 curation-funnel
-    oracle, so Spark and SQL can never drift on the pair set."""
+    and (over their batch-union ``src`` CTE) the q63 and q64 ingest
+    oracles, so Spark and SQL can never drift on the pair set."""
     r = num_hashes // bands
     hash32 = (
         "list_sum(list_transform(range(1, 9), "
@@ -1060,10 +1057,10 @@ def q26_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every dedup returns surviving rows (edge_data/ppi.py:142).
 # r15: q53_neardup_resolve folded out of the registry → slot to
 # q73_semantic_dedup_ingest (REGISTRY.md fold table). The recursive
-# min-label component walk it oracled stays registry-checked THREE ways —
-# q55_curation_funnel and q64_streaming_ingest carry the identical
-# text-side walk composed in their oracles, and q73 now runs the SAME walk
-# over embedding pairs — and the former standalone oracle lives on
+# min-label component walk it oracled stays registry-checked two ways —
+# q64_streaming_ingest carries the identical text-side walk composed in
+# its oracle, and q73 runs the SAME walk over embedding pairs — and the
+# former standalone oracle lives on
 # verbatim in tests/test_operator_properties.py::
 # test_neardup_resolve_matches_oracle.
 def q53_neardup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1072,83 +1069,6 @@ def q53_neardup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(d, n=3, num_hashes=12, bands=6, threshold=0.5)
     return resolve_neardups(d, pairs)
-
-
-# ---------- end-to-end curation funnel (plans/llm_curation.py): profile →
-# quality/language gate → exact dedup → MinHash-LSH near-dup resolution,
-# plus the funnel report, all in ONE oracle — the composed CTE chain reuses
-# _profile_ctes (gate expressions) and _minhash_ctes (pair set) verbatim,
-# so no stage can drift from its individually-oracled form (q22/q21/q26/q53).
-def _curation_funnel_oracle(
-    min_quality: float = 0.4, language: str = "en", threshold: float = 0.5
-) -> str:
-    return f"""
-WITH RECURSIVE {_profile_ctes()},
-profiled AS (
-  SELECT s.doc_id, s.text,
-         CAST(ntok AS BIGINT) AS n_tokens,
-         {_QUALITY_SQL} AS quality,
-         COALESCE(best.lang, 'und') AS lang_detected,
-         {_FP_SQL} AS fp
-  FROM s LEFT JOIN best ON s.doc_id = best.doc_id),
-gated AS (
-  SELECT * FROM profiled
-  WHERE quality >= {min_quality} AND lang_detected IN ('{language}')),
-exact AS (
-  SELECT doc_id, text, n_tokens, quality, lang_detected FROM gated
-  QUALIFY row_number() OVER (PARTITION BY fp ORDER BY doc_id) = 1),
-{_minhash_ctes(src='exact')},
-pairs AS (
-  SELECT doc_a, doc_b FROM j
-  WHERE round(i * 1.0 / (na + nb - i), 6) >= {threshold}),
-sym AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-pnodes AS (SELECT DISTINCT a AS id FROM sym),
-walk(id, r) AS (
-  SELECT id, id FROM pnodes
-  UNION
-  SELECT w.id, sy.b FROM walk w JOIN sym sy ON w.r = sy.a),
-comp AS (SELECT id, MIN(r) AS component FROM walk GROUP BY id),
-clusters AS (SELECT MIN(id) AS doc_id, COUNT(*) AS cluster_size
-             FROM comp GROUP BY component),
-survivors AS (
-  SELECT doc_id, CAST(cluster_size AS BIGINT) AS cluster_size FROM clusters
-  UNION ALL
-  SELECT doc_id, CAST(1 AS BIGINT) AS cluster_size FROM exact
-  WHERE doc_id NOT IN (SELECT id FROM pnodes)),
-curated AS (
-  SELECT e.doc_id, e.n_tokens, e.quality, e.lang_detected, sv.cluster_size
-  FROM survivors sv JOIN exact e USING (doc_id)),
-report AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_input,
-         CAST(SUM(CASE WHEN quality >= {min_quality}
-                        AND lang_detected IN ('{language}')
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_after_gate
-  FROM profiled),
-surv_agg AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_survivors,
-         CAST(SUM(cluster_size) AS BIGINT) AS n_represented
-  FROM curated)
-SELECT c.doc_id, c.n_tokens, c.quality, c.lang_detected, c.cluster_size,
-       r.n_input, r.n_after_gate, sa.n_survivors, sa.n_represented
-FROM curated c CROSS JOIN report r CROSS JOIN surv_agg sa
-"""
-
-
-@query("q55_curation_funnel", _curation_funnel_oracle())
-def q55_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crossbar_data_process_spark.plans.llm_curation import (
-        curate_documents,
-        curation_report,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    curated = curate_documents(d)
-    report = curation_report(d, curated)
-    # the report is ONE row — broadcasting it onto the survivors is the
-    # sanctioned bounded nested-loop case (a literal-key equi-join gets
-    # constant-folded back to a nested loop, so say what we mean)
-    return curated.drop("text").crossJoin(F.broadcast(report))
 
 
 # ---------- KG path motifs (plans/kg.py): depth 2 is the named
@@ -1775,10 +1695,10 @@ def q30_supplier_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------- connected components via iterative min-label propagation
 # r11 fold: the q31 registry row moved to tests/test_operator_properties.py::
 # test_connected_components_matches_oracle (the former DuckDB oracle lives on
-# there verbatim); its slot went to q68_quantile_rollup (REGISTRY.md). The
-# iterative min-label component family stays registry-oracled via
-# q53_neardup_resolve, whose DuckDB oracle walks the same components
-# recursively over the LSH pair graph — the richer, production surface.
+# there verbatim); its slot went to q68_quantile_rollup, since retired
+# (REGISTRY.md). The iterative min-label component family stays
+# registry-oracled via q64 and q73, whose DuckDB oracles walk the same
+# components recursively over their pair graphs.
 def q31_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation")
     a = n.alias("a")
@@ -2160,89 +2080,6 @@ def q67_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = pq_adc_topk(codes, luts, m=4, k_codes=16, k=5)
     return out.select(
         "query_id", "neighbor_id", "adc", F.col("rnk").cast("long").alias("rnk")
-    )
-
-
-# -------- mergeable quantile-sketch rollup (operators/sketches.py, r11):
-# log-spaced bin counts per (source) cell, quantiles read from summed bins
-# — the distribution silver a 100 TB profiler rolls up instead of sorting
-# the corpus. The whole chain is pure arithmetic (floor(log10·B) binning,
-# window cumsum, relative-epsilon rank, 10^((bin+1)/B) edge), so the
-# DuckDB oracle replicates it term by term; the edge goes through the
-# floor-based _fround on BOTH sides (pow differs by ≤1 ulp between libms —
-# the r7 rounding rule), and the binned value is length(text)+0.5 so no
-# input sits on an exact power-of-ten bin boundary.
-def _quantile_rollup_oracle(b: int = 20, qs=(0.5, 0.9, 0.99)) -> str:
-    eps = repr(1.0 - 1e-12)
-    qb_cols = []
-    for q in qs:
-        name = f"q_{str(q).replace('.', '_')}"
-        rank = (
-            f"ceil((CAST('{q!r}' AS DOUBLE) * CAST(n AS DOUBLE)) "
-            f"* CAST('{eps}' AS DOUBLE))"
-        )
-        qb_cols.append(
-            f"MIN(CASE WHEN cum >= {rank} THEN bin END) AS qb_{name}"
-        )
-    edge_cols = ", ".join(
-        f"floor(pow(10.0, CAST(qb_q_{s} + 1 AS DOUBLE) / CAST({b} AS DOUBLE))"
-        f" * 1000000 + 0.5) / 1000000 AS q_{s}"
-        for s in (str(q).replace(".", "_") for q in qs)
-    )
-    return f"""
-WITH vals AS (
-  -- NULL text is dropped on the Spark side too (histogram_sketch_table
-  -- filters isNotNull): without this, a NULL-length row would join the
-  -- oracle's window SUM as a NULL bin and shift every rank
-  SELECT source, CAST(length(text) AS DOUBLE) + 0.5 AS v
-  FROM documents WHERE text IS NOT NULL),
-bins AS (
-  SELECT source, CAST(floor(log10(v) * CAST({b} AS DOUBLE)) AS INT) AS bin,
-         COUNT(*) AS cnt
-  FROM vals GROUP BY source, bin),
-c AS (
-  SELECT source, bin, cnt,
-         SUM(cnt) OVER (PARTITION BY source ORDER BY bin) AS cum,
-         SUM(cnt) OVER (PARTITION BY source) AS n
-  FROM bins),
-g AS (
-  SELECT source, CAST(MAX(n) AS BIGINT) AS n, {', '.join(qb_cols)}
-  FROM c GROUP BY source)
-SELECT source, n, CAST(0 AS BIGINT) AS n_nonpositive,
-       CAST(0 AS BIGINT) AS n_nan, {edge_cols}
-FROM g
-"""
-
-
-@query("q68_quantile_rollup", _quantile_rollup_oracle())
-def q68_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source doc-length p50/p90/p99 via the mergeable log-histogram
-    silver (histogram_sketch_table → rollup_quantiles): one (source, bin)
-    groupBy over the corpus, then quantiles from the cell-count-sized bin
-    table. Binned value = length(text) + 0.5 (never on a 10^(k/B)
-    boundary); edges rounded with the engine-portable _fround."""
-    from crossbar_data_process_spark.operators.lm import _fround
-    from crossbar_data_process_spark.operators.sketches import (
-        histogram_sketch_table,
-        rollup_quantiles,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    vals = d.select(
-        "source",
-        (F.length("text").cast("double") + F.lit(0.5)).alias("doclen"),
-    )
-    hist = histogram_sketch_table(vals, ["source"], "doclen", bins_per_decade=20)
-    out = rollup_quantiles(hist, ["source"], [0.5, 0.9, 0.99])
-    return out.select(
-        "source",
-        "n",
-        F.col("n_nonpositive").cast("long").alias("n_nonpositive"),
-        F.col("n_nan").cast("long").alias("n_nan"),
-        *[
-            _fround(F.col(c), 6).alias(c)
-            for c in ("q_0_5", "q_0_9", "q_0_99")
-        ],
     )
 
 
@@ -3063,11 +2900,11 @@ def q64_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------- benchmark decontamination, driver-oracled (r10)
 # Training-data hygiene charter surface (operators/textdedup.contamination_
-# flags), previously pytest-only (tests/test_neardup_resolution.py) and an
-# optional q55 stage: flag corpus documents sharing any 8-token n-gram with
-# an evaluation/benchmark set — the screen every pretraining mix runs before
-# freezing. The benchmark is carved from the corpus by a CONSTANT-bounded
-# predicate (doc_id % 7 = 0 AND doc_id < 5000 — the workload-pinning
+# flags), previously pytest-only (tests/test_neardup_resolution.py): flag
+# corpus documents sharing any 8-token n-gram with an evaluation/benchmark
+# set — the screen every pretraining mix runs before freezing. The
+# benchmark is carved from the corpus by a CONSTANT-bounded predicate
+# (doc_id % 7 = 0 AND doc_id < 5000 — the workload-pinning
 # rule: the eval suite must NOT grow with the corpus, or scale probes
 # measure benchmark growth instead of engine scaling; real eval suites are
 # fixed-size by nature). Scale shape: the benchmark side is shingled,
@@ -3121,7 +2958,6 @@ _FRONT = [
     # r12 new surfaces
     "q69_ivfpq_silver",
     # r11 new surfaces
-    "q68_quantile_rollup",
     "q67_pq_adc_topk",
     # r10 new surfaces
     "q65_contamination",
@@ -3142,7 +2978,6 @@ _FRONT = [
     "q26b_simhash",
     "q52_kg_paths",
     "q54_ivf_topk",
-    "q55_curation_funnel",
     "q05_membership_filters",
     "q12_median_middle",
     "q22_doc_profile",

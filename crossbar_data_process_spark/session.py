@@ -163,8 +163,8 @@ def get_spark(
     # death) — floored at shuffle_partitions (the r13 small-scale shape,
     # 18% measurement) and capped at the old protective margin. Unknown
     # input (no SF dir, e.g. a probe generating /tmp corpora) keeps the
-    # full margin; scale scripts pass `input_bytes` (or the env override)
-    # for corpora the SF dir can't see.
+    # full margin; scale scripts pass `input_bytes` for corpora the SF dir
+    # can't see.
     #
     # r16 (VERDICT r15 #4): entry points that know their real data dir
     # pass `input_dir` so the signal follows the data the session will
@@ -204,12 +204,9 @@ def get_spark(
     # evaluated.
     if input_bytes is None:
         input_bytes = _input_parquet_bytes(input_dir)
-    env_parts = os.environ.get("SPARK_GRAFT_INITIAL_PARTS")
     conf = _session_conf(
         shuffle_partitions,
-        int(env_parts)
-        if env_parts is not None
-        else _initial_partitions(cpus, shuffle_partitions, input_bytes),
+        _initial_partitions(cpus, shuffle_partitions, input_bytes),
         input_bytes,
         extra_conf,
     )

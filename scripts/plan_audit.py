@@ -51,7 +51,7 @@ def main() -> None:
         "`push` = a parquet scan carries pushed filters; `py` = "
         "Arrow/Python stages (none allowed in a declared query).",
         "",
-        "NOTE on multi-consumer pipelines (q55/q26b/q63/...): the engine "
+        "NOTE on multi-consumer pipelines (q26b/q63/...): the engine "
         "materializes shared intermediates via lazy localCheckpoint "
         "(operators/materialize.py), so the STATIC plan string repeats the "
         "shared subtree once per consumer — the printed exchange count is an "

@@ -66,7 +66,6 @@ TEXT_QUERIES = {
     "q26b_simhash",
     # r15: q53 folded out of BENCH_QUERIES (REGISTRY.md) — its successor
     # q73 reads embeddings, so it stays on the replica path
-    "q55_curation_funnel",
     "q58_pack_documents",
     "q59_segment_dedup",
     "q63_incremental_dedup",
@@ -77,9 +76,6 @@ TEXT_QUERIES = {
     # corpus' literal prefix, so the eval set is IDENTICAL at both scales
     # (the workload-pinning property, by construction).
     "q65_contamination",
-    # r11: per-source length quantiles read only documents; Zipf's lengths
-    # are the realistic fat-tailed distribution
-    "q68_quantile_rollup",
 }
 
 # key -> offset unit must exceed the key's max at sf0.1

@@ -119,14 +119,10 @@ def test_gold_build_does_not_load_the_query_registry():
 # a workload rather than be added here.
 _UNMEASURED_MODULES = {
     "functions.ec",
-    "functions.pii",
     "operators.diff",
     "operators.packing",
     "operators.rangejoin",
-    "operators.sampling",
-    "operators.sketches",
     "operators.skew",
-    "plans.llm_curation",
     "plans.queries",
     "sources.disgenet",
     "sources.landing",

@@ -380,11 +380,14 @@ def test_two_level_full_probes_equals_flat_exactly(spark, clustered):
     cents = ivf_fit(clustered, dim=32, nlist=16, iters=2, driver_fit_rows=2048)
     tl = fit_two_level(cents)
     tl_full = fit_two_level(cents, assign_probes=len(tl.top))
-    rows = clustered.select(
-        "vec_id",
-        ivf_assign(F.col("embedding"), cents).alias("flat"),
-        tl_full.assign(F.col("embedding")).alias("two"),
+    rows = tl_full.assign_frame(
+        clustered.select(
+            "vec_id", "embedding", ivf_assign(F.col("embedding"), cents).alias("flat")
+        ),
+        "embedding",
+        out_col="two",
     ).collect()
+    assert len(rows) == clustered.count()
     assert all(r.flat == r.two for r in rows)
 
 
@@ -397,9 +400,12 @@ def test_two_level_default_probes_agreement_and_recall(spark, clustered):
 
     cents = ivf_fit(clustered, dim=32, nlist=16, iters=2, driver_fit_rows=2048)
     tl = fit_two_level(cents)
-    rows = clustered.select(
-        ivf_assign(F.col("embedding"), cents).alias("flat"),
-        tl.assign(F.col("embedding")).alias("two"),
+    rows = tl.assign_frame(
+        clustered.select(
+            "embedding", ivf_assign(F.col("embedding"), cents).alias("flat")
+        ),
+        "embedding",
+        out_col="two",
     ).collect()
     agree = sum(1 for r in rows if r.flat == r.two) / len(rows)
     assert agree >= 0.99, agree
@@ -501,30 +507,6 @@ def test_md5_smallest_filtered_plan_is_exact(spark, clustered):
         got = [r["__u"] for r in _md5_smallest(train, n)]
         assert got == naive, n
         assert len(got) == min(n, 1200)
-
-
-def test_assign_frame_equals_assign_expression(spark, clustered):
-    """The broadcast-join transport (assign_frame — the production path
-    for big nlist, plan size O(ntop)) must produce IDENTICAL assignments
-    to the literal-expression form at the same probe budget."""
-    from crossbar_data_process_spark.operators.ivf import fit_two_level
-
-    cents = ivf_fit(clustered, dim=32, nlist=16, iters=2, driver_fit_rows=2048)
-    for probes in (1, 2, 16):
-        tl = fit_two_level(cents, assign_probes=probes)
-        expr = {
-            r.vec_id: r.c
-            for r in clustered.select(
-                "vec_id", tl.assign(F.col("embedding")).alias("c")
-            ).collect()
-        }
-        framed = {
-            r.vec_id: r.cluster
-            for r in tl.assign_frame(
-                clustered.select("vec_id", "embedding"), "embedding"
-            ).collect()
-        }
-        assert expr == framed, f"probes={probes}"
 
 
 def test_nan_vectors_refused_on_both_backends(spark, clustered):

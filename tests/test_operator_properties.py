@@ -436,11 +436,11 @@ def test_ann_lsh_matches_oracle(spark):
 
 def test_connected_components_matches_oracle(spark):
     """Connected components over region-cliques (the former q31 registry
-    row, folded out in r11 for q68_quantile_rollup — REGISTRY.md): the
-    former DuckDB oracle lives on here verbatim. The iterative min-label
-    component family stays registry-oracled via the recursive component
-    walks composed in q55/q64 (text LSH pair graph) and q73 (embedding
-    pairs); the standalone q53 form is pinned below in
+    row, folded out in r11 — REGISTRY.md): the former DuckDB oracle lives
+    on here verbatim. The iterative min-label component family stays
+    registry-oracled via the recursive component walks composed in q64
+    (text LSH pair graph) and q73 (embedding pairs); the standalone q53
+    form is pinned below in
     test_neardup_resolve_matches_oracle (folded out r15)."""
     import duckdb
 
@@ -554,8 +554,8 @@ def test_neardup_resolve_matches_oracle(spark):
     r15 for q73_semantic_dedup_ingest — REGISTRY.md): the recursive
     min-label component oracle lives on here verbatim
     (_neardup_resolve_oracle), and the walk itself stays registry-oracled
-    THREE ways — composed in q55/q64's text oracles and in q73's
-    embedding-pair oracle."""
+    two ways — composed in q64's text oracle and in q73's embedding-pair
+    oracle."""
     import duckdb
 
     from crossbar_data_process_spark.plans.queries import (

@@ -69,7 +69,7 @@ def test_registry_size_is_pinned():
     otherwise only fail at run time, as a KeyError)."""
     from crossbar_data_process_spark.plans.queries import BENCH_QUERIES, ORACLES
 
-    assert len(QUERIES) == 46, sorted(QUERIES)
+    assert len(QUERIES) == 44, sorted(QUERIES)
     assert set(ORACLES) <= set(QUERIES)
     assert set(BENCH_QUERIES) <= set(QUERIES), sorted(
         set(BENCH_QUERIES) - set(QUERIES)
@@ -89,9 +89,6 @@ def test_no_cartesian_in_any_declared_query(spark, name):
     # - q27_cosine_topk: the brute-force baseline's contract IS corpus ×
     #   broadcast(query set) on a non-equi self-exclusion — Q is small and
     #   broadcast, the corpus streams once (the scale path is q39/IVF);
-    # - q55_curation_funnel: the 1-row funnel report attached to the
-    #   survivors (a literal-key equi-join is constant-folded back to a
-    #   nested loop, so the crossJoin states the intent).
     # - q22_doc_profile: the unigram-LM leg (log_ppl) attaches the corpus
     #   token-mass/vocab totals as 1-row aggregates by broadcast (the
     #   alternative — an empty-partition window — serializes the whole
@@ -106,7 +103,6 @@ def test_no_cartesian_in_any_declared_query(spark, name):
     if name not in (
         "q38_pagerank",
         "q27_cosine_topk",
-        "q55_curation_funnel",
         "q22_doc_profile",
         "q67_pq_adc_topk",
     ):
@@ -119,7 +115,7 @@ def test_no_cartesian_in_any_declared_query(spark, name):
 # jobs/stages, so a future materialize() regression that silently multiplies
 # work (every consumer re-running the shared subtree) trips a bound instead
 # of only showing up as a bench slowdown. Bounds are measured-at-sf0.001
-# (q55: 33 jobs/82 stages, q53: 27/65, q63: 16/30) with ~1.5x headroom —
+# (q53: 27 jobs/65 stages, q63: 16/30) with ~1.5x headroom —
 # a reuse regression at least doubles the shared-subtree stages.
 def _executed_jobs_stages(spark, name: str) -> tuple[int, int]:
     # folded-out queries (q53, r15) keep their executed-work pin: the
@@ -148,7 +144,6 @@ def _executed_jobs_stages(spark, name: str) -> tuple[int, int]:
 @pytest.mark.parametrize(
     "name,max_jobs,max_stages",
     [
-        ("q55_curation_funnel", 50, 125),
         ("q53_neardup_resolve", 40, 100),
         ("q63_incremental_dedup", 25, 45),
     ],
@@ -287,9 +282,9 @@ def q01_agg(spark, sf_dir):
 # report on them) — is equality-pinned for VALUES elsewhere, but nothing
 # pinned the COST. Job/stage counts CANNOT pin it: measured at sf0.001,
 # the retired re-run form counts the same stages as the side-product
-# form (sd 16 jobs/28 stages either way; curate 32/79 vs 33/81) because
-# a corpus re-pass is still "one aggregate" in stage terms — its price
-# is BYTES RE-READ, not stage count. So the pin counts corpus SCANS
+# form (sd 16 jobs/28 stages either way) because a corpus re-pass is
+# still "one aggregate" in stage terms — its price is BYTES RE-READ, not
+# stage count. So the pin counts corpus SCANS
 # directly: the input column rides an accumulator-bumping UDF (a row
 # UDF is the right instrument here precisely BECAUSE it is the slow
 # path — it cannot be optimized away, and this is a test, not engine
@@ -339,11 +334,9 @@ def test_semantic_dedup_cap_gauge_adds_no_corpus_pass(spark):
     assert scans_gauged == scans_plain, (scans_plain, scans_gauged)
 
 
-def test_curate_lsh_cap_gauge_adds_no_corpus_pass(spark):
-    from pyspark.sql import functions as F
-
-    from crossbar_data_process_spark.plans.llm_curation import (
-        curate_documents,
+def test_lsh_cap_gauge_adds_no_corpus_pass(spark):
+    from crossbar_data_process_spark.operators.textdedup import (
+        minhash_lsh_pairs,
     )
 
     docs = spark.read.parquet(
@@ -353,8 +346,8 @@ def test_curate_lsh_cap_gauge_adds_no_corpus_pass(spark):
 
     def run(sink):
         acc.value = 0
-        curate_documents(
-            counted, lsh_max_bucket_size=64, lsh_cap_stats_sink=sink
+        minhash_lsh_pairs(
+            counted, max_bucket_size=64, cap_stats_sink=sink
         ).count()
         return acc.value
 
