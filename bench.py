@@ -59,7 +59,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the JVM + parquet footers with one tiny action (not timed)
-    QUERIES["q01_pricing_summary"](spark, sf_dir).limit(1).collect()
+    QUERIES["q17_multi_source_merge"](spark, sf_dir).limit(1).collect()
 
     calibration = _calibration(spark)
 

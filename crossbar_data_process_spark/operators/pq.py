@@ -15,7 +15,7 @@ code is built once (m·k fold evaluations), after which scoring a corpus
 row is m array lookups + (m−1) adds — no per-pair O(dim) arithmetic.
 
 Determinism contract (what makes the plan SQL-oracle-able, the q67
-registry row): every per-code distance goes through ``lm._fround`` —
+registry row): every per-code distance goes through ``_fround`` —
 floor-based half-up rounding, exact in Spark and DuckDB alike — BEFORE
 the argmin/sum, and ties take the FIRST code index in both engines
 (``array_position``/``list_position`` are both first-occurrence). Codes
@@ -45,8 +45,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from crossbar_data_process_spark.operators.lm import _fround
 from crossbar_data_process_spark.operators.topk import top_k_per_group
+
+
+def _fround(x, scale: int):
+    """floor(x·10^s + 0.5)/10^s — fixed round-half-up via floor, which is
+    exact in every engine. Plain round() resolves x.xxxxxx5 half-cases
+    differently across engines (Spark BigDecimal HALF_UP on the binary
+    double vs DuckDB's decimal-string path) — measured: two sf0.1 docs
+    whose mean-NLL quotient lands exactly on a 1e-6 boundary hashed
+    differently until this form (the int8 quantizer uses the same trick)."""
+    p = float(10 ** scale)
+    return F.floor(x * p + F.lit(0.5)) / F.lit(p)
 
 
 def pq_codebooks_fixed(

@@ -236,9 +236,9 @@ def _band_buckets(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(doc, band, key) LSH band-bucket memberships from a (doc, sig)
     signature frame: band key = ``rows_per_band`` consecutive min-hashes
     concatenated. One definition shared by :func:`minhash_lsh_pairs`,
-    :func:`dedup_index`, :func:`flag_against_index`, and
-    :func:`lsh_cap_stats` — the band layout is part of the index
-    contract, so it must be impossible for two call sites to drift."""
+    :func:`dedup_index` and :func:`flag_against_index` — the band layout
+    is part of the index contract, so it must be impossible for two call
+    sites to drift."""
     r = num_hashes // bands
     band_arr = F.array(
         *[
@@ -256,82 +256,6 @@ def _band_buckets(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     )
 
 
-def lsh_cap_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 12,
-    bands: int = 6,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """The `no silent caps` report for ``minhash_lsh_pairs``'s
-    ``max_bucket_size`` lever (VERDICT r12 #3): the cap silently DROPS
-    candidate pairs (members of over-cap band buckets are never
-    compared), and a curation funnel that doesn't say how much mass that
-    touched reads as 'covered everything' when it didn't.
-
-    ONE row: n_buckets, max_bucket, n_dropped_buckets (buckets over the
-    cap), n_dropped_memberships ((doc, bucket) rows dropped), and
-    n_docs_affected (DISTINCT docs appearing in ≥1 dropped bucket — each
-    such doc lost at least one candidate source; it may still pair
-    through its other bands). Zeros when ``max_bucket_size`` is None.
-
-    Cost: the signature/bucket build is the same linear scan the pair
-    stage runs, plus one (band, key) groupBy and one small join against
-    the over-cap bucket list (bounded by the number of mega-buckets).
-
-    At pipeline scale prefer the SIDE-PRODUCT form (VERDICT r14 #2):
-    ``minhash_lsh_pairs(..., cap_stats_sink=d)`` fills the same numbers
-    from the bucket table the pair stage already materialized — this
-    standalone function re-runs the signature pipeline, which at 5M docs
-    cost as much as the curation it reported on."""
-    idx = _shingle_index(docs, text_col, id_col, n)
-    sigs = _signatures_from_index(idx, num_hashes)
-    buckets = materialize(_band_buckets(sigs, num_hashes, bands))
-    return _lsh_cap_totals(buckets, max_bucket_size)
-
-
-def _lsh_cap_totals(
-    buckets: DataFrame, max_bucket_size: int | None
-) -> DataFrame:
-    """The `no silent caps` aggregate over an already-built (doc, band,
-    key) bucket table — shared by the standalone re-run form
-    (:func:`lsh_cap_stats`) and the side-product form inside
-    :func:`minhash_lsh_pairs`, so the two can never drift."""
-    sizes = buckets.groupBy("band", "key").agg(
-        F.count(F.lit(1)).alias("bsz")
-    )
-    dropped = (
-        (F.col("bsz") > max_bucket_size)
-        if max_bucket_size is not None
-        else F.lit(False)
-    )
-    totals = sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.max("bsz").alias("max_bucket"),
-        F.sum(dropped.cast("long")).alias("n_dropped_buckets"),
-        F.sum(F.when(dropped, F.col("bsz")).otherwise(F.lit(0))).alias(
-            "n_dropped_memberships"
-        ),
-    )
-    if max_bucket_size is None:
-        return totals.withColumn("n_docs_affected", F.lit(0).cast("long"))
-    affected = (
-        buckets.join(
-            F.broadcast(
-                sizes.filter(F.col("bsz") > max_bucket_size).select(
-                    "band", "key"
-                )
-            ),
-            ["band", "key"],
-        )
-        .agg(F.countDistinct("doc").alias("n_docs_affected"))
-    )
-    # two 1-row frames — the sanctioned 1-row report crossJoin
-    return totals.crossJoin(affected)
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -340,9 +264,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 12,
     bands: int = 6,
     threshold: float = 0.2,
-    max_bucket_size: int | None = None,
-    cap_mode: str = "drop",
-    cap_stats_sink: dict | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates, verified with exact Jaccard.
 
@@ -351,66 +272,19 @@ def minhash_lsh_pairs(
     At scale: the bucket join shuffles on band-key (uniform by construction);
     candidate verification touches only bucket-collision pairs, never n².
 
-    Skew levers, in order (decision r04, VERDICT r03 #5): band keys
-    concatenate ``rows_per_band`` independent min-hashes, so a hot bucket
-    requires many documents agreeing on ALL of them — i.e. a genuinely
-    giant near-dup cluster, which is a DATA fact to cap, not a shuffle to
-    salt: use ``ngram_jaccard_pairs``'s ``max_doc_freq`` stop-shingle cap
-    upstream, or ``max_bucket_size`` here — buckets with more members are
-    dropped BEFORE the self-join (they are boilerplate clusters by
-    definition: a b-member bucket contributes b(b-1)/2 candidate pairs,
-    so one 10⁶-doc boilerplate bucket is 5·10¹¹ pairs — the cap turns
-    that into zero work while every normal bucket is untouched; recall
-    loss is confined to members of the dropped mega-clusters, which at
-    100 TB you handle by exact-fingerprint or URL dedup, not MinHash).
+    Skew (decision r04, VERDICT r03 #5): band keys concatenate
+    ``rows_per_band`` independent min-hashes, so a hot bucket requires many
+    documents agreeing on ALL of them — i.e. a genuinely giant near-dup
+    cluster, which is a DATA fact to cap, not a shuffle to salt: use
+    ``ngram_jaccard_pairs``'s ``max_doc_freq`` stop-shingle cap upstream.
     ``operators.skew.salted_join`` is NOT wired here deliberately: salting
     a self-join replicates the bucket's rows salt× on the other side,
     which multiplies the quadratic in-bucket pair work it was meant to
-    spread; AQE skew splitting handles the residual imbalance.
-
-    ``cap_mode`` picks what happens to over-cap buckets (r13 VERDICT #4):
-
-    - ``"drop"`` (default — the registry-oracled semantics): members are
-      never compared; recall loss confined to mega-clusters, quantified
-      by :func:`lsh_cap_stats`;
-    - ``"anchor"``: each over-cap bucket contributes ``(min member,
-      other member)`` STAR pairs instead of its b(b−1)/2 all-pairs —
-      b−1 candidates per bucket, LINEAR in bucket size, each still
-      exact-Jaccard-verified. For dedup resolution
-      (:func:`resolve_neardups` keeps per-component min ids) a verified
-      star edge joins the member to the anchor's component, so a true
-      boilerplate cluster still collapses; what anchor mode can miss vs
-      uncapped is a member-to-member near-dup pair where NEITHER member
-      verifies against the anchor (survivor/recall deltas measured in
-      BASELINE.md's r14 LSH cap probe). Grid-sharding the all-pairs
-      work (the ``semantic_dedup`` ``shard_target`` precedent) was
-      REJECTED here: it preserves the pair set but also its Σb² cost —
-      one 10⁶-member boilerplate bucket is 5·10¹¹ verify pairs no matter
-      how evenly they shard; star linking is the form that bounds WORK,
-      not just stragglers.
-
-    ``cap_stats_sink`` (VERDICT r14 #2 — gauges as side-products): pass a
-    dict and the `no silent caps` numbers (:func:`lsh_cap_stats` columns)
-    are filled EAGERLY from the bucket table this pair stage already
-    materialized — one aggregate over checkpoint blocks, instead of the
-    standalone gauge's full signature-pipeline re-run (which at 5M docs
-    cost as much as the curation it reported on). Values are identical to
-    the standalone form over the same input by construction (shared
-    ``_lsh_cap_totals`` over the same deterministic bucket build; pinned
-    in tests/test_neardup_resolution.py::
-    test_lsh_cap_side_product_matches_standalone)."""
-    if cap_mode not in ("drop", "anchor"):
-        raise ValueError(
-            f"cap_mode must be 'drop' or 'anchor', got {cap_mode!r}"
-        )
+    spread; AQE skew splitting handles the residual imbalance."""
     idx, buckets = _lsh_index_and_buckets(
         docs, text_col, id_col, n, num_hashes, bands
     )
-    return _lsh_pairs_from_index(
-        idx, buckets, threshold,
-        max_bucket_size=max_bucket_size, cap_mode=cap_mode,
-        cap_stats_sink=cap_stats_sink,
-    )
+    return _lsh_pairs_from_index(idx, buckets, threshold)
 
 
 def _lsh_index_and_buckets(
@@ -443,40 +317,9 @@ def _lsh_pairs_from_index(
     idx: DataFrame,
     buckets: DataFrame,
     threshold: float,
-    max_bucket_size: int | None = None,
-    cap_mode: str = "drop",
-    cap_stats_sink: dict | None = None,
 ) -> DataFrame:
     """Candidate generation + exact-Jaccard verify over prebuilt
     (idx, buckets) tables — the tail of :func:`minhash_lsh_pairs`."""
-    if cap_stats_sink is not None:
-        cap_stats_sink.update(
-            _lsh_cap_totals(buckets, max_bucket_size).collect()[0].asDict()
-        )
-    anchor_pairs = None
-    if max_bucket_size is not None:
-        # one count per (band, key) over a window — same partitioning as
-        # the self-join shuffle, so the cap costs no extra exchange shape
-        wb = Window.partitionBy("band", "key")
-        sized = buckets.withColumn("__bsz", F.count(F.lit(1)).over(wb))
-        if cap_mode == "anchor":
-            # star edges for over-cap buckets: (bucket-min doc, member) —
-            # b−1 linear pairs; doc_a < doc_b holds by construction
-            # (anchor IS the min). Both aux columns ride ONE window
-            # projection so the cap filter below and this branch consume
-            # the IDENTICAL window subtree — one (band, key) shuffle,
-            # reused exchange, not two (r14 review).
-            sized = sized.withColumn("__anchor", F.min("doc").over(wb))
-            anchor_pairs = sized.filter(
-                (F.col("__bsz") > max_bucket_size)
-                & (F.col("doc") != F.col("__anchor"))
-            ).select(
-                F.col("__anchor").alias("doc_a"),
-                F.col("doc").alias("doc_b"),
-            )
-        buckets = sized.filter(
-            F.col("__bsz") <= max_bucket_size
-        ).select("doc", "band", "key")
     a = buckets.alias("a")
     b = buckets.alias("b")
     cand = (
@@ -489,8 +332,6 @@ def _lsh_pairs_from_index(
         )
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
     )
-    if anchor_pairs is not None:
-        cand = cand.unionByName(anchor_pairs)
     cand = cand.distinct()
     # exact verify: join the SAME materialized shingle index back on
     ia = idx.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"), F.col("nsh").alias("na"))

@@ -63,14 +63,11 @@ ORACLES: dict[str, str] = {}
 
 # headline queries timed by bench.py at sf0.1
 BENCH_QUERIES = [
-    "q01_pricing_summary",
     "q02_nation_revenue",
-    "q03_shipping_priority",
     "q07_undirected_dedup",
     # r04: q13_middle_row folded into q12_median_middle (same orders groupBy
     # plus the median column) — the bench slot follows the fold
     "q12_median_middle",
-    "q16_brand_revenue",
     "q17_multi_source_merge",
     "q21_doc_exact_dedup",
     "q25_ngram_jaccard",
@@ -79,8 +76,6 @@ BENCH_QUERIES = [
     # ANN ingest silver (2 sink batches + replay + full probe priced from
     # day one)
     "q72_ann_streaming_ingest",
-    "q28_events_hourly",
-    "q41_sessionize",
     "q43_ddi_merge",
     # r03 additions: the new named surfaces, benchmarked from day one
     "q52_kg_paths",
@@ -95,9 +90,6 @@ BENCH_QUERIES = [
     # r07 addition: two-table as-of join (q44_rollup's folded slot),
     # benchmarked from day one
     "q57_asof_two_table",
-    # r07 addition: sequence packing (q20_running_total's folded slot),
-    # benchmarked from day one
-    "q58_pack_documents",
     # r07 addition: span-level segment dedup (q30_supplier_degree's folded
     # slot), benchmarked from day one
     "q59_segment_dedup",
@@ -147,37 +139,6 @@ def query(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-# ---------------------------------------------------------------- A1: groupBy
-# with multi-column aggregation (reference ppi.py:137-140, compound.py:202-211)
-@query(
-    "q01_pricing_summary",
-    f"""
-SELECT l_returnflag, l_linestatus,
-       {_dsum_sql('l_quantity')} AS sum_qty,
-       {_dsum_sql('l_extendedprice')} AS sum_base_price,
-       {_dsum_sql('l_extendedprice * (1 - l_discount)', 6)} AS sum_disc_price,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
-       COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '2001-06-01 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-""",
-)
-def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("2001-06-01 00:00:00").cast("timestamp")
-    )
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        _dsum("l_quantity").alias("sum_qty"),
-        _dsum("l_extendedprice").alias("sum_base_price"),
-        _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6).alias(
-            "sum_disc_price"
-        ),
-        (_dsum("l_quantity") / F.count(F.lit(1))).alias("avg_qty"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
 
 
 # ------------------------------------------------- J1 multi-join + A1 rollup
@@ -233,50 +194,6 @@ def q02_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "revenue"
             )
         )
-    )
-
-
-# --------------------------------------- O1/top-k + join pipeline (TPC-H Q3)
-@query(
-    "q03_shipping_priority",
-    f"""
-SELECT l_orderkey, {_dsum_sql('l_extendedprice * (1 - l_discount)', 6)} AS revenue,
-       strftime(o_orderdate, '%Y-%m-%d') AS orderdate, o_orderpriority
-FROM customer JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-  AND l_shipdate  > TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey
-LIMIT 10
-""",
-)
-def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6).alias(
-                "revenue"
-            )
-        )
-        .select(
-            "l_orderkey",
-            "revenue",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "o_orderpriority",
-        )
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
     )
 
 
@@ -551,34 +468,6 @@ def q15_curie_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------- J4 broadcast mapping join (ppi.py:209-226 as a join)
-@query(
-    "q16_brand_revenue",
-    f"""
-SELECT p_brand,
-       {_dsum_sql('l_extendedprice * (1 - l_discount)', 6)} AS revenue,
-       {_dsum_sql('l_quantity')} AS qty,
-       COUNT(*) AS n
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY p_brand
-""",
-)
-def q16_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand")
-        .agg(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6).alias(
-                "revenue"
-            ),
-            _dsum("l_quantity").alias("qty"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
 # ------- J1/J2 flagship: multi-source outer merge with coalescers + X4 union
 @query(
     "q17_multi_source_merge",
@@ -687,56 +576,6 @@ def q56_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("band_id").agg(
         F.count(F.lit(1)).alias("n_orders"), _dsum("o_totalprice").alias("total")
-    )
-
-
-# ------------- W: sequence packing over a running-total window (r07 fold:
-# q20_running_total's cumsum-window coverage lives on INSIDE this oracle —
-# the exclusive running sum is the same window family, now composed into
-# the training-prep packing operator; see REGISTRY.md)
-@query(
-    "q58_pack_documents",
-    r"""
-WITH toks AS (
-  SELECT doc_id,
-         CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                              x -> x <> '')) AS BIGINT) AS n_tokens,
-         CAST(doc_id % 8 AS INTEGER) AS bucket,
-         md5(CAST(doc_id AS VARCHAR)) AS k
-  FROM documents
-), cums AS (
-  SELECT doc_id, n_tokens, bucket, k,
-         SUM(n_tokens) OVER (PARTITION BY bucket ORDER BY k
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS ce
-  FROM toks
-)
-SELECT doc_id, n_tokens, bucket,
-       CAST(CAST(bucket AS BIGINT) * 1099511627776 + (ce // 512) AS BIGINT) AS pack_id,
-       CAST(ROW_NUMBER() OVER (PARTITION BY CAST(bucket AS BIGINT) * 1099511627776 + (ce // 512)
-                               ORDER BY ce, k) - 1 AS BIGINT) AS pack_pos
-FROM cums
-""",
-)
-def q58_pack_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-budget sequence packing (operators/packing.pack_documents):
-    whole documents greedily packed to a 512-token budget inside 8
-    deterministic buckets via ONE exclusive running-sum window. The
-    oracle replays the identical md5-ordered window in DuckDB, so the
-    greedy assignment itself — not just row counts — is hash-pinned.
-    Bucket = doc_id % 8 here (both engines share it exactly); the
-    operator's default crc32(md5) bucket has no DuckDB twin."""
-    from crossbar_data_process_spark.operators.packing import pack_documents
-
-    d = _t(spark, sf_dir, "documents").withColumn(
-        "bucket", F.pmod(F.col("doc_id"), F.lit(8)).cast("int")
-    )
-    out = pack_documents(d, budget=512, n_buckets=8, bucket_col="bucket")
-    return out.select(
-        "doc_id",
-        "n_tokens",
-        "bucket",
-        "pack_id",
-        F.col("pack_pos").cast("long").alias("pack_pos"),
     )
 
 
@@ -852,34 +691,8 @@ def _doc_profile_oracle() -> str:
         "FROM (SELECT list_filter(regexp_split_to_array(trim(s.text), "
         "'\\s+'), x -> x <> '') AS t2))"
     )
-    # r07-late: + log_ppl (corpus unigram-LM surprisal, the CCNet
-    # perplexity-filter analogue — operators/lm.py). The LM CTEs mirror
-    # doc_surprisal exactly: Lidstone α=0.5, logp rounded 1e-6, DECIMAL
-    # accumulation, one IEEE division; perplexity = e^log_ppl (log form
-    # reported so no cross-engine exp() enters the hash).
     return f"""
-WITH {_profile_ctes()},
-tok2 AS (
-  SELECT doc_id,
-         unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                            x -> x <> '')) AS token
-  FROM documents),
-cnt2 AS (SELECT token, COUNT(*) AS c FROM tok2 GROUP BY token),
-tot2 AS (
-  SELECT CAST(SUM(c) AS DOUBLE) AS t_mass, CAST(COUNT(*) AS DOUBLE) AS vocab
-  FROM cnt2),
-lp AS (
-  -- floor-based fixed rounding: round()'s x.xxxxxx5 half-cases resolve
-  -- differently across engines (measured at sf0.1); floor is exact in both
-  SELECT token,
-         floor(ln((c + 0.5) / (t_mass + 0.5 * vocab)) * 1000000.0 + 0.5)
-           / 1000000.0 AS logp
-  FROM cnt2, tot2),
-ppl AS (
-  SELECT doc_id,
-         floor((-CAST(SUM(CAST(logp AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*))
-               * 1000000.0 + 0.5) / 1000000.0 AS log_ppl
-  FROM tok2 JOIN lp USING (token) GROUP BY doc_id)
+WITH {_profile_ctes()}
 SELECT s.doc_id,
        CAST(ntok AS BIGINT) AS n_tokens,
        CAST(len(regexp_extract_all(text, '{bpe}')) AS BIGINT) AS bpe_tokens,
@@ -887,11 +700,9 @@ SELECT s.doc_id,
        n_chars,
        {_QUALITY_SQL} AS quality,
        {dup3} AS dup_3gram_ratio,
-       ppl.log_ppl AS log_ppl,
        COALESCE(best.lang, 'und') AS lang_detected,
        s.lang AS lang_labeled
 FROM s LEFT JOIN best ON s.doc_id = best.doc_id
-       LEFT JOIN ppl ON s.doc_id = ppl.doc_id
 """
 
 
@@ -901,10 +712,9 @@ def q22_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_token_count,
         duplicate_ngram_ratio,
     )
-    from crossbar_data_process_spark.operators.lm import doc_surprisal
 
     d = _t(spark, sf_dir, "documents")
-    profile = d.select(
+    return d.select(
         "doc_id",
         token_count("text").cast("long").alias("n_tokens"),
         bpe_token_count("text").cast("long").alias("bpe_tokens"),
@@ -914,12 +724,6 @@ def q22_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         duplicate_ngram_ratio("text", n=3).alias("dup_3gram_ratio"),
         language_id("text").alias("lang_detected"),
         F.col("lang").alias("lang_labeled"),
-    )
-    # r07-late: + unigram-LM surprisal (left join keeps zero-token docs)
-    ppl = doc_surprisal(d).select("doc_id", "log_ppl")
-    return profile.join(ppl, "doc_id", "left").select(
-        "doc_id", "n_tokens", "bpe_tokens", "fp", "n_chars", "quality",
-        "dup_3gram_ratio", "log_ppl", "lang_detected", "lang_labeled",
     )
 
 
@@ -1615,31 +1419,6 @@ def q48_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # all-pairs plan — the declared near-dup surface is q49 (neighbor_pairs_lsh).
 
 
-# --------------------- streaming surface, batch-equivalent form (SURVEY §2.10)
-@query(
-    "q28_events_hourly",
-    f"""
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type, COUNT(*) AS n, {_dsum_sql('value', 6)} AS sum_value
-FROM events GROUP BY window_start, event_type
-""",
-)
-def q28_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), _dsum("value", 6).alias("sum_value"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
 # --------------------- hierarchy closure (ontology ancestors, SURVEY §1.1)
 @query(
     "q29_hierarchy_rollup",
@@ -1721,7 +1500,7 @@ def q31_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r12: folded out of the registry → slot to q69_ivfpq_silver (REGISTRY.md).
 # The derived-key extraction (element_at(split)) stays registry-oracled via
 # q09's split family and q15's suffix surgery; the groupBy-count family via
-# q01/q29; the former DuckDB oracle lives on VERBATIM in
+# q29; the former DuckDB oracle lives on VERBATIM in
 # tests/test_operator_properties.py::test_suffix_groups_matches_oracle.
 _SUFFIX_GROUPS_ORACLE = """
 SELECT suffix, COUNT(*) AS n_parts,
@@ -1998,7 +1777,7 @@ def q39_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # take the first code index in both engines — codes and ADC scores are
 # bit-identical. Data-adaptive pq_fit recall is measured in tests/test_pq.py.
 def _pq_fround_sql(x: str) -> str:
-    """floor-based half-up at 1e-6 — exact in both engines (lm._fround)."""
+    """floor-based half-up at 1e-6 — exact in both engines (pq._fround)."""
     return f"floor(({x}) * 1000000 + 0.5) / 1000000"
 
 
@@ -2266,58 +2045,9 @@ def q40_ordered_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------- W: gap-based sessionization (lag + running sum windows)
-@query(
-    "q41_sessionize",
-    """
-WITH g AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-s AS (
-  SELECT user_id, ts,
-         SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_id
-  FROM g)
-SELECT user_id, CAST(session_id AS BIGINT) AS session_id, COUNT(*) AS n,
-       strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS session_end
-FROM s GROUP BY user_id, session_id
-""",
-)
-def q41_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    prev = F.lag("ts").over(w)
-    new_sess = F.when(
-        prev.isNull()
-        | (F.unix_micros(F.col("ts")) - F.unix_micros(prev) > 1_800_000_000),
-        1,
-    ).otherwise(0)
-    return (
-        e.withColumn("session_id", F.sum(new_sess).over(run).cast("long"))
-        .groupBy("user_id", "session_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias(
-                "session_start"
-            ),
-            F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-        )
-    )
-
-
 # --------- A2 over a join (TPC-H Q2 pattern: min-cost supplier per part).
 # r07 fold: the q42 registry row (keep_best-over-join — the same A2 window
-# q04 keeps oracled, plus a distinct q45 still covers) moved to
+# q04 keeps oracled) moved to
 # tests/test_operator_properties.py::test_min_cost_supplier_matches_oracle;
 # REGISTRY.md has the fold. The function stays for tests.
 def q42_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2448,65 +2178,12 @@ def q57_asof_two_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------- U2 relational set ops (EXCEPT / INTERSECT, SURVEY §2.7) feeding
-# a J3 plain left-outer attach (disease.py:832 citation join) — one pipeline,
-# one oracle (r02 consolidation: the former q45 + q46 folded so the declared
-# set fits the driver's 50-row CORRECTNESS window; both operators still
-# hash-checked, now compositionally)
-@query(
-    "q45_set_ops_attach",
-    f"""
-WITH building AS (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'),
-     urgent AS (SELECT DISTINCT o_custkey AS c_custkey FROM orders
-                WHERE o_orderpriority = '1-URGENT'),
-     only_building AS (SELECT c_custkey FROM building EXCEPT SELECT c_custkey FROM urgent),
-     both_sets AS (SELECT c_custkey FROM building INTERSECT SELECT c_custkey FROM urgent),
-     tagged AS (SELECT c_custkey, 'building_minus_urgent' AS tag FROM only_building
-                UNION ALL
-                SELECT c_custkey, 'building_and_urgent' AS tag FROM both_sets),
-     stats AS (SELECT o_custkey, COUNT(*) AS n_orders,
-                      {_dsum_sql('o_totalprice')} AS total_spent
-               FROM orders GROUP BY o_custkey)
-SELECT c_custkey, tag, COALESCE(n_orders, 0) AS n_orders, total_spent
-FROM tagged LEFT JOIN stats ON c_custkey = o_custkey
-""",
-)
-def q45_set_ops_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    building = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    urgent = (
-        o.filter(F.col("o_orderpriority") == "1-URGENT")
-        .select(F.col("o_custkey").alias("c_custkey"))
-        .distinct()
-    )
-    # subtract = EXCEPT DISTINCT (exact U2 semantics; customer keys are
-    # unique so bag/set agree, but the operator declared is the set form)
-    minus = building.subtract(urgent).withColumn(
-        "tag", F.lit("building_minus_urgent")
-    )
-    inter = building.intersect(urgent).withColumn(
-        "tag", F.lit("building_and_urgent")
-    )
-    tagged = minus.unionByName(inter)
-    stats = o.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        _dsum("o_totalprice").alias("total_spent"),
-    )
-    return tagged.join(stats, tagged.c_custkey == stats.o_custkey, "left").select(
-        "c_custkey",
-        "tag",
-        F.coalesce("n_orders", F.lit(0)).alias("n_orders"),
-        "total_spent",
-    )
-
-
 # ------ P8 self-pair drop + A3 plain dedup + F2 first-xref pick combined
 # r12: folded out of the registry (REGISTRY.md).
 # P8 self-pair exclusion stays registry-oracled via the `neighbor_id <>
 # query_id` join predicates of q27/q54/q67/q69 and the strict `a < b`
 # pair conditions of q25/q26/q49; A3 plain dedup via q21's exact-dedup
-# groupBy and q45's DISTINCT scans; the F2 first-xref split rides q09's
+# groupBy; the F2 first-xref split rides q09's
 # split family. The former DuckDB oracle lives on VERBATIM in
 # tests/test_operator_properties.py::test_pair_normalize_matches_oracle.
 _PAIR_NORMALIZE_ORACLE = """
@@ -2969,7 +2646,6 @@ _FRONT = [
     "q34_blacklist_topk",
     # r07 new/reshaped surfaces
     "q59_segment_dedup",
-    "q58_pack_documents",
     "q57_asof_two_table",
     "q25_ngram_jaccard",
     "q15_curie_ids",
@@ -2981,7 +2657,6 @@ _FRONT = [
     "q05_membership_filters",
     "q12_median_middle",
     "q22_doc_profile",
-    "q45_set_ops_attach",
 ]
 
 

@@ -5,7 +5,7 @@ jobs *outside* the query engine: they land raw payloads in a bronze
 directory, and everything after that is ``spark.read``. This package covers
 the Spark-side surface: tabular readers (parquet/csv/json/text with explicit
 schemas), the KEGG-style flat-text record parser as DataFrame expressions,
-sinks (chunked CSV, BioCypher tuple iterator, training shards), and
+sinks (chunked CSV, BioCypher tuple iterator), and
 ``synthetic.gen_sources``, the deterministic raw tables the composed gold
 build (``plans/gold.py``) runs on.
 """

@@ -68,8 +68,8 @@ def windowed_counts(
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Watermarked tumbling/sliding window aggregation (streaming A1):
-    same output schema as the batch q28_events_hourly rollup, so batch and
-    stream results are directly comparable in tests."""
+    same output schema as the batch ``F.window`` groupBy over the same
+    events, so batch and stream results are directly comparable in tests."""
     w = (
         F.window("ts", window, slide) if slide else F.window("ts", window)
     )
@@ -98,12 +98,12 @@ def session_counts(
     gap: str = "30 minutes",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Watermarked SESSION-window aggregation (streaming analogue of the
-    batch q41_sessionize gap logic): ``F.session_window`` merges events per
-    user into dynamic windows that close after ``gap`` of inactivity. State
-    is per OPEN session, evicted once the watermark passes a session's end
-    — the streaming answer to q41's lag-over-window batch formulation,
-    which needs the whole history sorted per user."""
+    """Watermarked SESSION-window aggregation (gap-based sessionization):
+    ``F.session_window`` merges events per user into dynamic windows that
+    close after ``gap`` of inactivity. State is per OPEN session, evicted
+    once the watermark passes a session's end — unlike a batch
+    lag-over-window formulation, which needs the whole history sorted per
+    user."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")

@@ -43,7 +43,7 @@ def main() -> None:
     from crossbar_data_process_spark.plans.queries import QUERIES
 
     # warm the JVM + parquet footers the way bench.py does (not timed)
-    QUERIES["q01_pricing_summary"](spark, sf_dir).limit(1).collect()
+    QUERIES["q17_multi_source_merge"](spark, sf_dir).limit(1).collect()
     cutoff_ms = int(time.time() * 1000)
     t0 = time.perf_counter()
     QUERIES[name](spark, sf_dir).count()

@@ -22,8 +22,7 @@ text statistics.
 Runs every bench headline query at sf0.1 and at the synthetic sf1, one
 warm session, and prints per-query slopes (t_sf1 / t_sf0.1; linear
 scaling at 10x data = slope <= ~10 once the per-query fixed floor is
-subtracted). Also probes q22_doc_profile (not a bench row — folded
-registry row, still a charter surface).
+subtracted).
 """
 
 from __future__ import annotations
@@ -66,11 +65,9 @@ TEXT_QUERIES = {
     "q26b_simhash",
     # r15: q53 folded out of BENCH_QUERIES (REGISTRY.md) — its successor
     # q73 reads embeddings, so it stays on the replica path
-    "q58_pack_documents",
     "q59_segment_dedup",
     "q63_incremental_dedup",
     "q64_streaming_ingest",
-    "q22_doc_profile",
     # r10: contamination screens text — Zipf path so shingle df statistics
     # are realistic; the benchmark carve (doc_id < 5000) is the small
     # corpus' literal prefix, so the eval set is IDENTICAL at both scales
@@ -237,7 +234,7 @@ def main() -> None:
     )
     spark = get_spark(app_name="sf1-probe", input_bytes=replica_bytes)
     spark.sparkContext.setLogLevel("ERROR")
-    QUERIES["q01_pricing_summary"](spark, SRC).limit(1).collect()  # warm
+    QUERIES["q17_multi_source_merge"](spark, SRC).limit(1).collect()  # warm
     QUERIES["q21_doc_exact_dedup"](spark, ZIPF_SMALL).limit(1).collect()  # warm
 
     # corpus stats: document count and vocabulary size of each Zipf corpus
@@ -259,7 +256,6 @@ def main() -> None:
     from crossbar_data_process_spark.plans.queries import QUERIES as _Q
 
     probe_fns = {name: _Q[name] for name in PROBE_QUERIES}
-    probe_fns["q22_doc_profile"] = _Q["q22_doc_profile"]
 
     out: dict[str, dict[str, float]] = {}
     for name, fn in probe_fns.items():

@@ -120,7 +120,6 @@ def test_gold_build_does_not_load_the_query_registry():
 _UNMEASURED_MODULES = {
     "functions.ec",
     "operators.diff",
-    "operators.packing",
     "operators.rangejoin",
     "operators.skew",
     "plans.queries",

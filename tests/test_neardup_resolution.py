@@ -167,73 +167,6 @@ def test_spread_is_plan_side_only(spark):
     assert _spread(stream) is stream
 
 
-def test_max_bucket_size_drops_mega_buckets_only(spark):
-    """The LSH skew lever: identical boilerplate docs form one giant band
-    bucket; with the cap they contribute ZERO candidate pairs while a
-    normal near-dup pair elsewhere still surfaces."""
-    boiler = [(i, "lorem ipsum dolor sit amet consectetur adipiscing elit")
-              for i in range(1, 21)]
-    near = [
-        (100, "the quick brown fox jumps over the lazy dog today"),
-        (101, "the quick brown fox jumps over the lazy dog tonight"),
-    ]
-    docs = _docs(spark, boiler + near)
-
-    uncapped = minhash_lsh_pairs(docs, threshold=0.5)
-    capped = minhash_lsh_pairs(docs, threshold=0.5, max_bucket_size=10)
-
-    unc = {(r.doc_a, r.doc_b) for r in uncapped.collect()}
-    cap = {(r.doc_a, r.doc_b) for r in capped.collect()}
-    assert (100, 101) in unc and (100, 101) in cap  # normal pair survives
-    # the 20-doc boilerplate cluster: 190 pairs uncapped, none capped
-    assert any(a < 100 and b < 100 for a, b in unc)
-    assert not any(a < 100 and b < 100 for a, b in cap)
-
-
-def test_cap_mode_anchor_star_links_mega_buckets(spark):
-    """cap_mode='anchor' (r14, VERDICT r13 #4): over-cap buckets emit
-    (min member, other member) star edges — linear per-bucket work — and
-    after resolve_neardups the survivor set equals the UNCAPPED truth on
-    a boilerplate cluster, where drop mode keeps every member."""
-    from crossbar_data_process_spark.operators.textdedup import (
-        resolve_neardups,
-    )
-
-    boiler = [(i, "lorem ipsum dolor sit amet consectetur adipiscing elit")
-              for i in range(1, 21)]
-    near = [
-        (100, "the quick brown fox jumps over the lazy dog today"),
-        (101, "the quick brown fox jumps over the lazy dog tonight"),
-    ]
-    docs = _docs(spark, boiler + near)
-
-    anchored = minhash_lsh_pairs(
-        docs, threshold=0.5, max_bucket_size=10, cap_mode="anchor"
-    )
-    anc = {(r.doc_a, r.doc_b) for r in anchored.collect()}
-    assert (100, 101) in anc  # normal pair untouched
-    # star edges only: every boilerplate pair has the anchor (min id 1)
-    # on the left — 19 edges, not the 190 all-pairs
-    boiler_pairs = {(a, b) for a, b in anc if a < 100 and b < 100}
-    assert boiler_pairs == {(1, b) for b in range(2, 21)}
-    # end-to-end: anchor-mode survivors == uncapped truth; drop mode
-    # keeps the whole mega-cluster
-    def survivors(pairs):
-        return {r.doc_id for r in resolve_neardups(docs, pairs).collect()}
-
-    truth = survivors(minhash_lsh_pairs(docs, threshold=0.5))
-    assert survivors(anchored) == truth == {1, 100}
-    dropped = survivors(
-        minhash_lsh_pairs(docs, threshold=0.5, max_bucket_size=10)
-    )
-    assert dropped == set(range(1, 21)) | {100}
-
-    import pytest
-
-    with pytest.raises(ValueError, match="cap_mode"):
-        minhash_lsh_pairs(docs, max_bucket_size=10, cap_mode="shard")
-
-
 def test_simhash_pairs_exact_vs_bruteforce(spark):
     """With max_hamming < bands the banded candidate generation is EXACT
     (pigeonhole), so the operator must equal brute-force all-pairs
@@ -429,68 +362,3 @@ def test_segment_dedup_min_doc_freq_threshold(spark):
         3: ("y1 y2", 1),
         4: ("solo a b c", 0),
     }
-
-
-def test_lsh_cap_stats_quantifies_dropped_mass(spark):
-    """`no silent caps` (VERDICT r12 #3): the stats row must put numbers
-    on exactly what max_bucket_size excluded — the 20-doc boilerplate
-    cluster's buckets — and report zeros when the cap is off."""
-    from crossbar_data_process_spark.operators.textdedup import lsh_cap_stats
-
-    boiler = [(i, "lorem ipsum dolor sit amet consectetur adipiscing elit")
-              for i in range(1, 21)]
-    near = [
-        (100, "the quick brown fox jumps over the lazy dog today"),
-        (101, "the quick brown fox jumps over the lazy dog tonight"),
-    ]
-    docs = _docs(spark, boiler + near)
-
-    off = lsh_cap_stats(docs, max_bucket_size=None).collect()[0]
-    assert off.n_dropped_buckets == 0
-    assert off.n_dropped_memberships == 0
-    assert off.n_docs_affected == 0
-    assert off.max_bucket >= 20  # the boilerplate mega-bucket exists
-
-    capped = lsh_cap_stats(docs, max_bucket_size=10).collect()[0]
-    assert capped.n_buckets == off.n_buckets
-    # identical docs agree on every band: 6 bands × 20 members
-    assert capped.n_dropped_buckets == 6
-    assert capped.n_dropped_memberships == 120
-    assert capped.n_docs_affected == 20
-
-
-def test_lsh_cap_side_product_matches_standalone(spark):
-    """VERDICT r14 #2: minhash_lsh_pairs(..., cap_stats_sink=d) must fill
-    the EXACT numbers the standalone lsh_cap_stats re-run reports over
-    the same input — and the pair set must be untouched by the sink."""
-    from crossbar_data_process_spark.operators.textdedup import (
-        lsh_cap_stats,
-        minhash_lsh_pairs,
-    )
-
-    boiler = [(i, "lorem ipsum dolor sit amet consectetur adipiscing elit")
-              for i in range(1, 21)]
-    near = [
-        (100, "the quick brown fox jumps over the lazy dog today"),
-        (101, "the quick brown fox jumps over the lazy dog tonight"),
-    ]
-    docs = _docs(spark, boiler + near)
-    standalone = lsh_cap_stats(docs, max_bucket_size=10).collect()[0].asDict()
-    sink: dict = {}
-    with_sink = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_lsh_pairs(
-            docs, max_bucket_size=10, cap_stats_sink=sink
-        ).collect()
-    }
-    assert sink == standalone
-    without = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_lsh_pairs(docs, max_bucket_size=10).collect()
-    }
-    assert with_sink == without
-    # cap off: zeros, and the sink still reports the bucket landscape
-    sink_off: dict = {}
-    minhash_lsh_pairs(docs, cap_stats_sink=sink_off).count()
-    assert sink_off["n_dropped_buckets"] == 0
-    assert sink_off["max_bucket"] >= 20

@@ -471,7 +471,7 @@ def test_suffix_groups_matches_oracle(spark):
     r12 for q69_ivfpq_silver — REGISTRY.md): the former DuckDB oracle
     lives on here verbatim (_SUFFIX_GROUPS_ORACLE). The split/element_at
     family stays registry-oracled via q09/q15; the groupBy-count family
-    via q01/q29."""
+    via q29."""
     import duckdb
 
     from crossbar_data_process_spark.plans.queries import (
@@ -498,7 +498,7 @@ def test_pair_normalize_matches_oracle(spark):
     row, folded out in r12 — REGISTRY.md): the former DuckDB oracle lives
     on here verbatim (_PAIR_NORMALIZE_ORACLE). P8 stays registry-oracled
     via the <>-join predicates of q27/q54/q67/q69 and the strict a<b pair
-    conditions of q25/q26/q49; A3 via q21/q45; F2's split rides q09's
+    conditions of q25/q26/q49; A3 via q21; F2's split rides q09's
     split family."""
     import duckdb
 

@@ -152,8 +152,8 @@ def test_streaming_dedup_drops_duplicates(spark, event_chunks_dir):
 
 
 def test_session_window_matches_batch(spark, event_chunks_dir):
-    """Session-window aggregation (dynamic-gap windows, the streaming
-    analogue of batch q41): replayed as ONE micro-batch in complete mode
+    """Session-window aggregation (dynamic-gap windows, gap-based
+    sessionization in streaming form): replayed as ONE micro-batch in complete mode
     (session windows support append/complete, not update), the final
     state equals the batch session_window result over the same data."""
     import shutil

@@ -65,236 +65,3 @@ def test_biocypher_tuples_struct_props(spark):
         None, "drugbank:DB1", "uniprot:P1", "drug_targets_protein",
         {"pchembl": "6.1"},
     )
-
-
-def _shard_rows(path):
-    """Per-shard row sequences in on-disk file order (one file per shard)."""
-    import pyarrow.parquet as pq
-
-    out = {}
-    for d in sorted(glob.glob(f"{path}/shard=*")):
-        shard = int(d.rsplit("=", 1)[1])
-        files = sorted(glob.glob(f"{d}/*.parquet"))
-        assert len(files) == 1, (shard, files)  # one writer task per shard
-        t = pq.read_table(files[0])
-        out[shard] = list(zip(*[t.column(c).to_pylist() for c in t.column_names]))
-    return out
-
-
-def test_training_shards_deterministic_across_partitionings(spark, tmp_path):
-    from crossbar_data_process_spark.sources.writers import write_training_shards
-
-    rows = [(i, f"doc {i} text") for i in range(500)]
-    df1 = spark.createDataFrame(rows, "doc_id long, text string").repartition(1)
-    df2 = spark.createDataFrame(list(reversed(rows)), "doc_id long, text string").repartition(11)
-    c1 = write_training_shards(df1, str(tmp_path / "a"), n_shards=4)
-    c2 = write_training_shards(df2, str(tmp_path / "b"), n_shards=4)
-    assert c1 == c2
-    assert _shard_rows(str(tmp_path / "a")) == _shard_rows(str(tmp_path / "b"))
-
-
-def test_training_shards_cover_and_balance(spark, tmp_path):
-    import json
-
-    from crossbar_data_process_spark.sources.writers import write_training_shards
-
-    rows = [(i, f"doc {i}") for i in range(1000)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    counts = write_training_shards(df, str(tmp_path / "s"), n_shards=8)
-    assert sum(counts.values()) == 1000
-    assert set(counts) == set(range(8))
-    assert min(counts.values()) > 1000 / 8 * 0.6  # md5 spreads evenly
-    got = {r[0] for rows_ in _shard_rows(str(tmp_path / "s")).values() for r in rows_}
-    assert got == set(range(1000))  # no loss, no duplication
-    manifest = json.load(open(tmp_path / "s" / "manifest.json"))
-    assert manifest["n_shards"] == 8
-    assert {int(k): v for k, v in manifest["shards"].items()} == counts
-
-
-def test_training_shards_salt_changes_order_not_content(spark, tmp_path):
-    from crossbar_data_process_spark.sources.writers import write_training_shards
-
-    rows = [(i, f"doc {i}") for i in range(300)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    write_training_shards(df, str(tmp_path / "e0"), n_shards=4, salt="epoch0")
-    write_training_shards(df, str(tmp_path / "e1"), n_shards=4, salt="epoch1")
-    a = _shard_rows(str(tmp_path / "e0"))
-    b = _shard_rows(str(tmp_path / "e1"))
-    flat = lambda m: {r for rs in m.values() for r in rs}
-    assert flat(a) == flat(b)  # same corpus
-    assert a != b  # fresh permutation per epoch
-
-
-def _per_file_spans(path, cols):
-    """Per-file (min, max) spans from parquet footer stats, per column."""
-    import pyarrow.parquet as pq
-
-    spans = {c: [] for c in cols}
-    for fp in glob.glob(f"{path}/*.parquet"):
-        md = pq.read_metadata(fp)
-        lo = {c: None for c in cols}
-        hi = {c: None for c in cols}
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                name = col.path_in_schema
-                if name in cols and col.statistics is not None:
-                    s = col.statistics
-                    lo[name] = s.min if lo[name] is None else min(lo[name], s.min)
-                    hi[name] = s.max if hi[name] is None else max(hi[name], s.max)
-        for c in cols:
-            if lo[c] is not None:
-                spans[c].append(hi[c] - lo[c])
-    return spans
-
-
-def test_zorder_narrows_every_clustered_column(spark, tmp_path):
-    """Z-order vs single-column sort: the sorted layout only prunes its
-    leading column; the z-ordered layout gives BOTH columns per-file spans
-    well under the global range — the multi-dimensional pruning win."""
-    from crossbar_data_process_spark.sources.writers import write_zordered
-
-    li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    n = li.count()
-    cols = ["l_orderkey", "l_partkey"]
-    zpath = str(tmp_path / "zorder")
-    spath = str(tmp_path / "sorted")
-    write_zordered(li, zpath, cols, target_files=16)
-    (
-        li.repartitionByRange(16, "l_orderkey")
-        .sortWithinPartitions("l_orderkey")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-    assert spark.read.parquet(zpath).count() == n  # lossless
-
-    glob_span = {
-        c: v
-        for c, v in zip(
-            cols,
-            li.agg(
-                *[
-                    (F.max(c).cast("double") - F.min(c).cast("double")).alias(c)
-                    for c in cols
-                ]
-            ).collect()[0],
-        )
-    }
-    zs = _per_file_spans(zpath, cols)
-    ss = _per_file_spans(spath, cols)
-    avg = lambda xs: sum(xs) / len(xs)
-    for c in cols:
-        # every clustered dim is localized: mean per-file span < 45% of global
-        assert avg(zs[c]) < 0.45 * glob_span[c], (c, avg(zs[c]), glob_span[c])
-    # the single-sort layout localizes its leading column BETTER than
-    # z-order (that's the trade) but leaves the other column unclustered
-    assert avg(ss["l_orderkey"]) < avg(zs["l_orderkey"])
-    assert avg(ss["l_partkey"]) > 0.9 * glob_span["l_partkey"]
-
-
-def test_jsonl_shards_roundtrip_and_determinism(spark, tmp_path):
-    """JSONL export: reading the shards back yields exactly the input rows;
-    the same corpus written from a different input partitioning produces
-    byte-identical shard files (the training-reproducibility contract the
-    parquet writer already carries)."""
-    import glob
-
-    from crossbar_data_process_spark.sources.writers import write_jsonl_shards
-
-    df1 = spark.range(0, 500).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("text-"), F.col("id")).alias("text"),
-    )
-    df2 = df1.repartition(13)
-    c1 = write_jsonl_shards(df1, str(tmp_path / "a"), n_shards=4)
-    c2 = write_jsonl_shards(df2, str(tmp_path / "b"), n_shards=4)
-    assert c1 == c2 and sum(c1.values()) == 500
-
-    def shard_bytes(root):
-        out = {}
-        for d in sorted(glob.glob(f"{root}/shard=*")):
-            files = sorted(glob.glob(f"{d}/part-*"))
-            assert len(files) == 1, files  # one file per shard
-            out[d.rsplit("=", 1)[1]] = open(files[0], "rb").read()
-        return out
-
-    assert shard_bytes(tmp_path / "a") == shard_bytes(tmp_path / "b")
-
-    back = spark.read.json(str(tmp_path / "a") + "/shard=*")
-    got = {(r.doc_id, r.text) for r in back.collect()}
-    want = {(r.doc_id, r.text) for r in df1.collect()}
-    assert got == want
-
-
-def test_jsonl_shards_gzip_compression(spark, tmp_path):
-    import glob
-    import gzip
-    import json
-
-    from crossbar_data_process_spark.sources.writers import write_jsonl_shards
-
-    df = spark.range(0, 100).select(
-        F.col("id").alias("doc_id"), F.lit("payload").alias("text")
-    )
-    counts = write_jsonl_shards(
-        df, str(tmp_path / "z"), n_shards=2, compression="gzip"
-    )
-    assert sum(counts.values()) == 100
-    files = glob.glob(f"{tmp_path}/z/shard=*/part-*.gz")
-    assert files, "expected gzip-suffixed shard files"
-    with gzip.open(files[0], "rt") as fh:
-        row = json.loads(fh.readline())
-    assert set(row) == {"doc_id", "text"}
-    manifest = json.loads((tmp_path / "z" / "manifest.json").read_text())
-    assert manifest["compression"] == "gzip" and manifest["format"] == "jsonl"
-
-
-def test_jsonl_manifest_counts_modes(spark, tmp_path):
-    """Default manifest counts come from the WRITTEN output (always
-    consistent with the files); manifest_counts='input' is the cheap
-    deterministic-lineage path and must agree here; bad mode raises."""
-    import json
-
-    from crossbar_data_process_spark.sources.writers import write_jsonl_shards
-
-    df = spark.range(0, 300).select(
-        F.col("id").alias("doc_id"), F.lit("t").alias("text")
-    )
-    c_out = write_jsonl_shards(df, str(tmp_path / "o"), n_shards=4)
-    c_in = write_jsonl_shards(
-        df, str(tmp_path / "i"), n_shards=4, manifest_counts="input"
-    )
-    assert c_out == c_in and sum(c_out.values()) == 300
-    m = json.loads((tmp_path / "o" / "manifest.json").read_text())
-    assert sum(m["shards"].values()) == 300
-    # the manifest records its counts' provenance (r11 ADVICE): the
-    # training job can tell verified-output from recomputed-input numbers
-    assert m["counts_mode"] == "output"
-    m_in = json.loads((tmp_path / "i" / "manifest.json").read_text())
-    assert m_in["counts_mode"] == "input"
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="manifest_counts"):
-        write_jsonl_shards(
-            df, str(tmp_path / "x"), n_shards=4, manifest_counts="bogus"
-        )
-
-
-def test_jsonl_empty_export_writes_empty_manifest(spark, tmp_path):
-    """r11 review round 5: an export whose input matched nothing must
-    still land a (empty) manifest instead of raising PATH_NOT_FOUND on
-    the shard glob after the destructive overwrite."""
-    import json
-
-    from crossbar_data_process_spark.sources.writers import write_jsonl_shards
-
-    df = spark.range(0, 10).select(
-        F.col("id").alias("doc_id"), F.lit("t").alias("text")
-    ).filter(F.col("doc_id") < 0)
-    counts = write_jsonl_shards(df, str(tmp_path / "e"), n_shards=4)
-    assert counts == {}
-    m = json.loads((tmp_path / "e" / "manifest.json").read_text())
-    assert m["shards"] == {}
