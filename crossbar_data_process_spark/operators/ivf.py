@@ -30,13 +30,22 @@ the same candidate budget buys higher recall. Recall is measured in
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from crossbar_data_process_spark.graph.pregel import local_frame
 from crossbar_data_process_spark.operators.materialize import materialize
 from crossbar_data_process_spark.operators.similarity import cosine, dot, norm
 from crossbar_data_process_spark.operators.topk import top_k_per_group
+from crossbar_data_process_spark.sources.writers import (
+    _fs_and_path,
+    _hadoop_read_text,
+    _hadoop_write_text,
+    _partition_value_int,
+)
 
 
 def _sql_double(x: float) -> str:
@@ -183,45 +192,12 @@ def suggest_nlist(
     partition, and the fit sample's 8-per-centroid rule needs somewhere
     to stand). Callers that size nlist themselves should stay within
     ~4× of this or expect the measured overshoot wall (see
-    ``_TARGET_CLUSTER_ROWS`` above); :func:`refit_ivf_silver` warns."""
+    ``_TARGET_CLUSTER_ROWS`` above)."""
     if target_cluster_rows <= 0:
         raise ValueError(
             f"target_cluster_rows must be positive, got {target_cluster_rows}"
         )
     return max(floor, int(n_rows) // int(target_cluster_rows))
-
-
-def warn_nlist_overshoot(
-    nlist: int,
-    n_rows: int,
-    where: str,
-    target_cluster_rows: int = _TARGET_CLUSTER_ROWS,
-) -> None:
-    """One warning when a caller's explicit ``nlist`` overshoots the
-    posture by >4× — i.e. E[cluster] < ~62 rows at the default target:
-    past that point extra lists stop cutting dense work (cells are
-    already tiny) and start costing real wall in files, tasks, and
-    shuffle floor (the r15 5M probe's honest negative: refit to 16384
-    lists at a 3M silver doubled the next batch wall). A warning, not an
-    error: skew-heavy corpora can legitimately want finer grain — a
-    caller that CHOSE a finer grain passes its own
-    ``target_cluster_rows`` (the same knob ``suggest_nlist`` takes), so
-    a value the library itself suggested never warns against itself
-    (r16 review)."""
-    suggested = suggest_nlist(n_rows, target_cluster_rows=target_cluster_rows)
-    if nlist > 4 * suggested:
-        import warnings
-
-        warnings.warn(
-            f"{where}: nlist={nlist} overshoots the E[cluster]≈"
-            f"{target_cluster_rows} posture for {n_rows} rows "
-            f"(suggest_nlist → {suggested}) by more than 4×. Measured at "
-            "5M rows: candidate volume shrinks but per-batch wall "
-            "DOUBLES on the file-count/shuffle floor (BASELINE.md r15). "
-            "Size with suggest_nlist() unless the cluster-size skew "
-            "stats say otherwise.",
-            stacklevel=3,
-        )
 
 
 def ivf_fit(
@@ -531,6 +507,119 @@ def ivf_fit_diagnostics(
     return _diagnostics_from_sample(x, centroids)
 
 
+# nlist at/above which write_assigned_corpus shuffles on the cluster id
+# before its partitioned write: an unshuffled partitionBy write emits
+# ~tasks×nlist files, the shuffled one ≤ nlist; below it the shuffle
+# only costs parallelism
+_CLUSTER_SHUFFLE_MIN_NLIST = 64
+# the silver's stamp: quantizer identity and the written frame's schema
+_CENTROID_META = "_centroid_meta.json"
+
+
+def centroid_fingerprint(centroids: list[list[float]]) -> str:
+    """Deterministic identity of a centroid matrix: md5 over the JSON
+    rendering of the float values. Two quantizers that assign even one
+    vector differently have different matrices, hence different
+    fingerprints; the same fitted matrix always reproduces the same
+    digest (json float repr is deterministic)."""
+    import hashlib
+
+    payload = json.dumps(
+        [[float(x) for x in row] for row in centroids]
+    ).encode("utf-8")
+    return hashlib.md5(payload).hexdigest()
+
+
+def _quantizer_identity(centroids: list[list[float]]) -> dict:
+    return {
+        "fingerprint": centroid_fingerprint(centroids),
+        "nlist": len(centroids),
+        "dim": len(centroids[0]),
+    }
+
+
+def _write_silver_stamp(
+    written: DataFrame, silver_dir: str, centroids: list[list[float]]
+) -> None:
+    """Stamp a silver just written from ``written`` (call it AFTER the
+    overwrite, which wipes the directory) with the quantizer's identity
+    and the frame's schema: :func:`read_silver` checks the one and reads
+    with the other, so no probe infers a schema."""
+    _hadoop_write_text(
+        written.sparkSession,
+        f"{silver_dir}/{_CENTROID_META}",
+        json.dumps(
+            dict(_quantizer_identity(centroids), schema=written.schema.json())
+        ),
+    )
+
+
+def check_centroid_meta(
+    spark, silver_dir: str, centroids: list[list[float]]
+) -> dict:
+    """The silver's stamp, checked against ``centroids``. The centroid
+    matrix is part of the silver's identity: a probe whose centroids
+    differ from the ones the silver was assigned under picks lists whose
+    ids mean something else, and pruned-probe (nprobe < nlist) recall
+    collapses with no error anywhere. Raises ValueError on a mismatch."""
+    stamp = json.loads(
+        _hadoop_read_text(spark, f"{silver_dir}/{_CENTROID_META}")
+    )
+    want = _quantizer_identity(centroids)
+    got = {k: stamp.get(k) for k in want}
+    if got != want:
+        raise ValueError(
+            f"IVF silver at {silver_dir} was built with a different "
+            f"quantizer (stored {got}, probe has {want}): its lists mean "
+            "something else under these centroids — probe with the "
+            "silver's own centroids, or rebuild the silver"
+        )
+    return stamp
+
+
+def read_silver(
+    spark,
+    silver_dir: str,
+    centroids: list[list[float]],
+    clusters=None,
+) -> DataFrame:
+    """A :func:`write_assigned_corpus` or ``pq.write_pq_corpus`` silver
+    as a DataFrame, after :func:`check_centroid_meta` has checked
+    ``centroids`` against its stamp. One ``listStatus`` of the root gives
+    the ``cluster=`` directories and the stamp, and the stamp gives the
+    schema, so the read starts no schema-inference job.
+
+    ``clusters`` restricts the read to those lists' directories: static
+    partition pruning, the scan's file index names only them. A list
+    with no directory (no rows were filed under it) reads as empty. A
+    silver without a stamp that carries its schema is refused."""
+    fs, root = _fs_and_path(spark, silver_dir)
+    dirs: dict[int, str] = {}
+    stamped = False
+    for st in fs.listStatus(root) if fs.exists(root) else ():
+        name = st.getPath().getName()
+        if name == _CENTROID_META:
+            stamped = True
+        elif st.isDirectory() and name.startswith("cluster="):
+            dirs[_partition_value_int(name, st.getPath())] = (
+                st.getPath().toString()
+            )
+    stamp = check_centroid_meta(spark, silver_dir, centroids) if stamped else {}
+    if "schema" not in stamp:
+        raise ValueError(
+            f"IVF silver at {silver_dir} has no {_CENTROID_META} stamp "
+            "with its schema (it was not written by write_assigned_corpus "
+            "or write_pq_corpus, or predates schema stamps) — rebuild it "
+            "with one of them"
+        )
+    picked = sorted(dirs if clusters is None else set(clusters) & set(dirs))
+    return (
+        spark.read.schema(StructType.fromJson(json.loads(stamp["schema"])))
+        .option("basePath", silver_dir)
+        .parquet(*[dirs[c] for c in picked])
+    )
+
+
 def write_assigned_corpus(
     vectors: DataFrame,
     centroids: list[list[float]],
@@ -541,23 +630,13 @@ def write_assigned_corpus(
     diagnostics: dict[str, float] | None = None,
     require_clustered: bool = False,
     two_level: "TwoLevelQuantizer | None" = None,
-    stream_seed_batch_id: int | None = None,
 ) -> None:
     """The 100 TB silver layout: assign every vector to its list ONCE (a
     pure projection — no join) and write partitioned BY the cluster id.
     Probe-time reads then touch only the probed lists' directories (static
     partition pruning, :func:`ivf_topk_assigned`) instead of scanning the
-    corpus.
-
-    ``stream_seed_batch_id`` writes the STREAMED layout instead —
-    ``(cluster, __batch_id=<seed>)`` — so a streaming sink
-    (``ann_ingest.ivf_ingest_writer``) can keep appending batches after
-    this one-shot write (the sink refuses mixing streamed leaves into a
-    flat silver). Use a NEGATIVE seed id (the text index's ``-1``
-    convention): real streaming batch ids are ≥ 0, so the seed can never
-    collide with — or be excluded as — a replayed batch. This is the
-    write :func:`streaming.ann_ingest.refit_ivf_silver` lands its
-    re-assigned corpus with.
+    corpus. The stamp (:func:`_write_silver_stamp`) lands next to the
+    data.
 
     ``quantize=True`` stores int8 codes + qscale instead of the float
     vector (similarity.quantize_embeddings): a 4x smaller silver table,
@@ -607,10 +686,6 @@ def write_assigned_corpus(
         )
 
         assigned = quantize_embeddings(assigned, vec_col=vec_col)
-    from crossbar_data_process_spark.streaming.ann_ingest import (
-        _CLUSTER_SHUFFLE_MIN_NLIST,
-    )
-
     if len(centroids) >= _CLUSTER_SHUFFLE_MIN_NLIST:
         # co-locate each cluster in ONE write task (r14): an unshuffled
         # partitionBy write emits ~tasks×nlist files — the file-count
@@ -619,44 +694,11 @@ def write_assigned_corpus(
     # static per-write (writers.py:144 convention): a session-level
     # dynamic overwrite would leave stale cluster partitions from a prior
     # assignment alive under the fresh centroid stamp
-    if stream_seed_batch_id is not None:
-        if stream_seed_batch_id >= 0:
-            raise ValueError(
-                f"stream_seed_batch_id must be negative (got "
-                f"{stream_seed_batch_id}): streaming batch ids are ≥ 0, "
-                "and a colliding seed would be replay-excluded as if it "
-                "were that batch's own previous attempt"
-            )
-        from crossbar_data_process_spark.streaming.ingest import BATCH_COL
-
-        (
-            assigned.withColumn(BATCH_COL, F.lit(int(stream_seed_batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("cluster", BATCH_COL)
-            .parquet(path)
-        )
-    else:
-        assigned.write.mode("overwrite").option(
-            "partitionOverwriteMode", "static"
-        ).partitionBy("cluster").parquet(path)
-    # stamp the quantizer's identity next to the data (after the
-    # overwrite, which wipes the dir): probes and auditors can verify
-    # their centroid matrix against the one the silver was assigned
-    # under — a mismatch means pruned-probe recall is silently wrong
-    # (streaming.ann_ingest.check_centroid_meta, r9 ADVICE)
-    from crossbar_data_process_spark.streaming.ann_ingest import (
-        _write_centroid_meta,
-    )
-
-    _write_centroid_meta(vectors.sparkSession, path, centroids)
+    assigned.write.mode("overwrite").option(
+        "partitionOverwriteMode", "static"
+    ).partitionBy("cluster").parquet(path)
+    _write_silver_stamp(assigned, path, centroids)
     if metadata is not None:
-        import json
-
-        from crossbar_data_process_spark.sources.writers import (
-            _hadoop_write_text,
-        )
-
         # after the parquet overwrite — mode("overwrite") wipes the dir
         _hadoop_write_text(
             vectors.sparkSession,
@@ -697,23 +739,13 @@ def ivf_topk_assigned(
     ranks against the raw codes — cosine is scale-invariant, so qscale
     never enters the hot path; only quantization rounding costs recall.
 
-    The read goes through ``streaming.ann_ingest.read_assigned_silver``
-    so a STREAMED silver is exactly-once even inside
-    ``compact_ivf_silver``'s crash window (r10 review: a raw parquet
-    read would score every vector of a half-compacted cluster twice —
-    the same neighbor occupying two top-k ranks — until the next
-    compaction's recovery ran). For a one-shot ``write_assigned_corpus``
-    silver the reader is a plain scan: no manifest, no batch column,
-    nothing added to the plan."""
-    from crossbar_data_process_spark.streaming.ann_ingest import (
-        read_assigned_silver,
-    )
-
+    The read goes through :func:`read_silver`, which refuses a silver
+    stamped under other centroids."""
     q = queries.select(id_col, vec_col)
     rows = q.collect()
     probes = _driver_probe_lists([r[1] for r in rows], centroids, nprobe)
-    corpus = read_assigned_silver(
-        spark, path, clusters={c for p in probes for c in p}
+    corpus = read_silver(
+        spark, path, centroids, clusters={c for p in probes for c in p}
     ).select(
         F.col(id_col).alias("neighbor_id"),
         F.col("qvec" if quantized else vec_col).alias("cv"),
@@ -750,8 +782,6 @@ def _probing_queries(ids, vecs, probes, id_type) -> Column:
     the same values as SQL literals would be analysed node by node — 5 s
     for 1000 × 64 queries. ``repr``-exact floats and NaN/±Infinity
     round-trip through JSON unchanged."""
-    import json
-
     n_lists = 1 + max((c for p in probes for c in p), default=-1)
     by_list: list[list[int]] = [[] for _ in range(n_lists)]
     for qi, p in enumerate(probes):
@@ -947,9 +977,9 @@ def assign_clusters(
 ) -> DataFrame:
     """THE corpus assignment: ``df`` plus ``out_col``, the 0-based list
     each ``vec_col`` vector is filed under. Every consumer —
-    ``write_assigned_corpus``, the streaming sink, ``neighbor_pairs_ivf``,
-    ``cluster_cap_stats``, ``flag_semantic_dups`` — routes through it, so
-    its guards cannot be dropped at any single call site:
+    ``write_assigned_corpus``, ``neighbor_pairs_ivf`` and
+    ``cluster_cap_stats`` — routes through it, so its guards cannot be
+    dropped at any single call site:
 
     - a centroid with a NaN/inf component is refused with ValueError
       (centroids can come from ``load_centroids``; Spark orders NaN

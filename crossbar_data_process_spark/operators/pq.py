@@ -484,7 +484,8 @@ def write_pq_corpus(
     corpus. The quantizer identity (centroids + codebooks + residual
     centers) is stamped next to the data: a probe against the wrong
     codebooks — or raw codes probed as residual codes — is silently
-    wrong, same failure mode as ``_write_centroid_meta`` guards.
+    wrong, the failure mode ``ivf.check_centroid_meta`` guards for the
+    centroids.
 
     ``residual_centers`` (from :func:`pq_fit_residual`) switches to
     residual encoding ``x − center[cluster]`` (the FAISS IVFPQ design):
@@ -493,11 +494,11 @@ def write_pq_corpus(
     (measured in tests/test_pq.py). Assignment still uses ``centroids``
     (the spherical quantizer); only the subtraction uses the positional
     centers."""
-    from crossbar_data_process_spark.operators.ivf import ivf_assign
-    from crossbar_data_process_spark.sources.writers import _hadoop_write_text
-    from crossbar_data_process_spark.streaming.ann_ingest import (
-        _write_centroid_meta,
+    from crossbar_data_process_spark.operators.ivf import (
+        _write_silver_stamp,
+        ivf_assign,
     )
+    from crossbar_data_process_spark.sources.writers import _hadoop_write_text
 
     assigned = vectors.withColumn(
         "cluster", ivf_assign(F.col(vec_col), centroids)
@@ -521,7 +522,7 @@ def write_pq_corpus(
         "partitionOverwriteMode", "static"
     ).partitionBy("cluster").parquet(path)
     # stamps go AFTER the overwrite (which wipes the dir)
-    _write_centroid_meta(vectors.sparkSession, path, centroids)
+    _write_silver_stamp(encoded, path, centroids)
     _hadoop_write_text(
         vectors.sparkSession,
         f"{path}/_pq_codebooks.json",
@@ -534,15 +535,9 @@ def load_pq_meta(spark, path: str) -> dict:
     shape) a PQ silver was encoded under."""
     import json
 
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/_pq_codebooks.json")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(jpath)
-    try:
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    meta = json.loads(data.decode("utf-8"))
+    from crossbar_data_process_spark.sources.writers import _hadoop_read_text
+
+    meta = json.loads(_hadoop_read_text(spark, f"{path}/_pq_codebooks.json"))
     meta.setdefault("residual", False)  # pre-r11 stamps predate the flag
     meta.setdefault("residual_centers", None)
     return meta
@@ -582,9 +577,9 @@ def ivf_pq_topk_assigned(
     (query, probed list) — built from ``q − center[list]`` AFTER the
     probe explode (nprobe small LUTs per query; the corpus-side cost is
     unchanged: m lookups per candidate)."""
-    from crossbar_data_process_spark.operators.ivf import _probe_list
-    from crossbar_data_process_spark.streaming.ann_ingest import (
-        read_assigned_silver,
+    from crossbar_data_process_spark.operators.ivf import (
+        _probe_list,
+        read_silver,
     )
 
     meta = load_pq_meta(spark, path)
@@ -597,15 +592,6 @@ def ivf_pq_topk_assigned(
             "than the probe's — ADC against mixed codes is silently "
             "wrong; pass the silver's own books (pq.load_pq_codebooks)"
         )
-    # same for the CENTROIDS: foreign/refit centroids route probes to
-    # partitions whose ids mean something else — pruned-probe recall
-    # silently collapses. check_centroid_meta raises on a fingerprint
-    # mismatch and tolerates a stamp-less silver (r11 review round 2).
-    from crossbar_data_process_spark.streaming.ann_ingest import (
-        check_centroid_meta,
-    )
-
-    check_centroid_meta(spark, path, centroids)
     stamped = meta.get("residual", False)
     if residual is None:
         residual = stamped
@@ -625,7 +611,8 @@ def ivf_pq_topk_assigned(
 
     m, k_codes = len(codebooks), len(codebooks[0])
     dsub = len(codebooks[0][0])
-    corpus = read_assigned_silver(spark, path).select(
+    # read_silver checks the CENTROIDS against the stamp the same way
+    corpus = read_silver(spark, path, centroids).select(
         F.col(id_col).alias("neighbor_id"),
         F.col("codes").alias("__codes"),
         F.col("cluster").cast("int").alias("cluster"),

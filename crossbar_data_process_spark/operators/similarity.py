@@ -370,7 +370,6 @@ def neighbor_pairs_ivf(
     shard_target: int | None = 2000,
     two_level=None,
     cap_stats_sink: dict | None = None,
-    cluster_col: str | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs, k-means-bucketed (the SemDeDup shape:
     Abbas et al. 2023 — cluster the corpus once, compare only WITHIN a
@@ -437,35 +436,19 @@ def neighbor_pairs_ivf(
     # ATTRIBUTE_NOT_FOUND on generated-expression sources.)
     # Materialized: the assignment (the expensive part) feeds the size
     # count AND both self-join sides — three consumers.
-    if cluster_col is not None:
-        # PRE-ASSIGNED input (r16 optimization round): the caller already
-        # holds this batch's cluster assignment — materialized, computed
-        # through the same assign_clusters entry (the dedup sink
-        # assigns ONCE per batch and shares it with the flag and the
-        # write). Re-assigning here would be a second full pass of the
-        # most expensive per-row arithmetic in the pipeline. The caller
-        # contract mirrors cap_stats' "assignment is deterministic": the
-        # column must be assign_clusters' own output for these centroids.
-        assigned = vectors.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            norm(F.col(vec_col)).alias("n"),
-            F.col(cluster_col).alias("cluster"),
-        )
-    else:
-        base_cols = vectors.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            norm(F.col(vec_col)).alias("n"),
-        )
-        # ONE entry for all assignment consumers (r13 review): the vector
-        # and centroid guards and the two_level centroid-identity guard
-        # live in assign_clusters so no call site can drop them. (Two-level
-        # rides the broadcast-join transport — plan size stays O(ntop)
-        # however large nlist grows.)
-        assigned = materialize(
-            assign_clusters(base_cols, "v", centroids, two_level=two_level)
-        )
+    base_cols = vectors.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("v"),
+        norm(F.col(vec_col)).alias("n"),
+    )
+    # ONE entry for all assignment consumers (r13 review): the vector
+    # and centroid guards and the two_level centroid-identity guard
+    # live in assign_clusters so no call site can drop them. (Two-level
+    # rides the broadcast-join transport — plan size stays O(ntop)
+    # however large nlist grows.)
+    assigned = materialize(
+        assign_clusters(base_cols, "v", centroids, two_level=two_level)
+    )
     need_sizes = max_cluster_size is not None or shard_target is not None
     if need_sizes or cap_stats_sink is not None:
         sizes = assigned.groupBy("cluster").agg(
@@ -644,7 +627,6 @@ def semantic_dedup(
     shard_target: int | None = 2000,
     two_level=None,
     cap_stats_sink: dict | None = None,
-    cluster_col: str | None = None,
 ) -> DataFrame:
     """SemDeDup end-to-end: k-means-bucketed cosine pairs →
     connected components → one surviving representative per semantic
@@ -675,7 +657,6 @@ def semantic_dedup(
         shard_target=shard_target,
         two_level=two_level,
         cap_stats_sink=cap_stats_sink,
-        cluster_col=cluster_col,
     )
     return resolve_neardups(
         vectors.select(id_col), pairs, id_col, "vec_a", "vec_b"

@@ -72,17 +72,9 @@ BENCH_QUERIES = [
     "q21_doc_exact_dedup",
     "q25_ngram_jaccard",
     "q26b_simhash",
-    # r14: q27_cosine_topk's bench slot follows the fold to the streaming
-    # ANN ingest silver (2 sink batches + replay + full probe priced from
-    # day one)
-    "q72_ann_streaming_ingest",
     "q43_ddi_merge",
     # r03 additions: the new named surfaces, benchmarked from day one
     "q52_kg_paths",
-    # r15: q53_neardup_resolve's bench slot follows the fold to the
-    # streaming semantic-dedup ingest (2 dedup-sink batches + replay +
-    # full probe priced from day one — the q72 convention)
-    "q73_semantic_dedup_ingest",
     # r04 additions
     "q54_ivf_topk",
     # r06 addition: bucketed range join, benchmarked from day one
@@ -859,12 +851,10 @@ def q26_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # min-id representative (carrying the member count) or passes through with
 # cluster_size 1. Mirrors dedup_exact's survivors shape; the reference's
 # every dedup returns surviving rows (edge_data/ppi.py:142).
-# r15: q53_neardup_resolve folded out of the registry → slot to
-# q73_semantic_dedup_ingest (REGISTRY.md fold table). The recursive
-# min-label component walk it oracled stays registry-checked two ways —
-# q64_streaming_ingest carries the identical text-side walk composed in
-# its oracle, and q73 runs the SAME walk over embedding pairs — and the
-# former standalone oracle lives on
+# r15: q53_neardup_resolve folded out of the registry (REGISTRY.md fold
+# table). The recursive min-label component walk it oracled stays
+# registry-checked: q64_streaming_ingest carries the identical text-side
+# walk composed in its oracle, and the former standalone oracle lives on
 # verbatim in tests/test_operator_properties.py::
 # test_neardup_resolve_matches_oracle.
 def q53_neardup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1088,9 +1078,8 @@ SELECT query_id, neighbor_id, cosine, CAST(rnk AS BIGINT) AS rnk FROM (
 """
 
 
-# r14: q27_cosine_topk folded out of the registry → slot to
-# q72_ann_streaming_ingest (REGISTRY.md fold table). The brute-force
-# ranking stays registry-oracled TWICE over — q54 and q72 both probe at
+# r14: q27_cosine_topk folded out of the registry (REGISTRY.md fold
+# table). The brute-force ranking stays registry-oracled — q54 probes at
 # nprobe == nlist against the SAME _COSINE_TOPK_ORACLE text — and the
 # operator itself keeps this oracle verbatim in
 # tests/test_operator_properties.py::test_cosine_topk_matches_oracle.
@@ -1157,225 +1146,6 @@ def q54_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     atexit.register(shutil.rmtree, silver, ignore_errors=True)
     write_assigned_corpus(e, cents, silver, diagnostics=diag)
     out = ivf_topk_assigned(spark, silver, q, cents, k=5, nprobe=8)
-    return out.select(
-        "query_id", "neighbor_id", "cosine", F.col("rnk").cast("long").alias("rnk")
-    )
-
-
-# ---------- STREAMING ANN ingest under the hash gate (r14, VERDICT r13
-# #6 — the q64/q54 tricks composed): two disjoint micro-batches land
-# through the production foreachBatch sink (`ann_ingest.ivf_ingest_writer`
-# — per-batch assignment projection, (cluster, __batch_id) dynamic
-# partition overwrite, centroid identity stamped and re-verified), batch 1
-# is then REPLAYED (the Structured Streaming recovery contract), and the
-# streamed silver is probed at nprobe == nlist. Full probes make the
-# candidate set the whole corpus, so the result is brute-force-exact and
-# _COSINE_TOPK_ORACLE applies VERBATIM (the q54 identity trick) — while a
-# sink that double-landed the replayed batch would duplicate neighbors
-# into distinct rnk rows and fail the hash, so exactly-once replay is
-# checked by the driver, not just pytest. Pruned-probe recall and the
-# drift→refit maintenance path stay pinned in tests/test_ann_ingest.py.
-@query("q72_ann_streaming_ingest", _COSINE_TOPK_ORACLE)
-def q72_ann_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ingest (2 disjoint micro-batches) → replay batch 1 → full-probe
-    top-k over the streamed silver. Fresh pid-scoped silver per
-    invocation (a silver assigned under a previous corpus' centroids
-    would — correctly — trip the identity stamp)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from crossbar_data_process_spark.operators.ivf import (
-        ivf_fit,
-        ivf_topk_assigned,
-    )
-    from crossbar_data_process_spark.streaming.ann_ingest import (
-        ivf_ingest_writer,
-    )
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 10)
-    # ONE setup job (r16): dim + row count (saves the fit sample's own
-    # count scan) in the same aggregate
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"), F.first(F.size("embedding")).alias("d")
-    ).first()
-    n, dim = int(row["n"]), int(row["d"])
-    cents = ivf_fit(
-        e, dim=dim, nlist=8, iters=2, driver_fit_rows=2048, n_rows=n
-    )
-    silver = os.path.join(
-        tempfile.gettempdir(), f"ann_stream_silver_q72_{os.getpid()}"
-    )
-    shutil.rmtree(silver, ignore_errors=True)
-    atexit.register(shutil.rmtree, silver, ignore_errors=True)
-    sink = ivf_ingest_writer(spark, cents, silver)
-    b0 = e.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 0)
-    b1 = e.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 1)
-    sink(b0, 0)
-    sink(b1, 1)
-    sink(b1, 1)  # replay — dynamic overwrite must replace, not append
-    out = ivf_topk_assigned(spark, silver, q, cents, k=5, nprobe=8)
-    return out.select(
-        "query_id", "neighbor_id", "cosine", F.col("rnk").cast("long").alias("rnk")
-    )
-
-
-# ---------- streaming SEMANTIC-DEDUP ingest under the hash gate (r15,
-# VERDICT r14 #4 — the q64/q72 tricks composed for the dedup-mode sink,
-# the engine's production semantic-ingest path). Two micro-batches land
-# through `ivf_ingest_writer(dedup_threshold=τ)`; batch 1 carries planted
-# EXACT copies — of batch-0 residents (the cross-silver flag must drop
-# them against the landed silver), of its own residents (within-batch
-# `semantic_dedup` must collapse them to the min-id original), and a
-# double-copy pair whose within-batch survivor must STILL be flagged
-# cross-silver — then batch 1 is replayed (`exclude_batch_id` recovery
-# contract) and the landed silver is probed at nprobe == nlist.
-#
-# Why the oracle needs no quantizer: candidacy inside the sink is
-# same-cluster only, but at τ = 0.999 every ≥τ pair in this corpus is a
-# planted IDENTICAL copy (max natural pairwise cosine measured 0.60 at
-# sf0.1) and identical vectors assign identically (same scores, same
-# argmax/tie-break), so same-cluster candidacy ≡ full candidacy and the
-# SQL replay below — full-cross cosine pairs at τ per batch, the q53-form
-# recursive min-label walk (the fold's coverage moving in), min-id
-# survivors, cross-silver flag, then the q54-form full-probe window —
-# reproduces the sink bit-for-bit. A sink that misses a within-batch dup,
-# misses a cross-batch dup, drops an original, or double-lands the replay
-# each perturbs the survivor corpus and fails the hash.
-def _semantic_dedup_ingest_oracle(tau: float = 0.999) -> str:
-    cos_ab = _cosine_sql("a.embedding", "b.embedding")
-    cos_cross = _cosine_sql("y.embedding", "x.embedding")
-    cos_probe = _cosine_sql("qv", "c.embedding")
-
-    def _batch_dedup(tag: str, src: str) -> str:
-        """Within-batch semantic dedup in SQL: cosine pairs at τ →
-        recursive min-label components → min-id survivor per component +
-        singleton pass-through (operators.similarity.semantic_dedup)."""
-        return f"""p{tag} AS (
-  SELECT a.vec_id AS va, b.vec_id AS vb FROM {src} a JOIN {src} b
-    ON a.vec_id < b.vec_id AND {cos_ab} >= {tau}),
-sym{tag} AS (SELECT va AS x, vb AS y FROM p{tag}
-             UNION SELECT vb, va FROM p{tag}),
-n{tag} AS (SELECT DISTINCT x AS id FROM sym{tag}),
-walk{tag}(id, r) AS (
-  SELECT id, id FROM n{tag}
-  UNION
-  SELECT w.id, s.y FROM walk{tag} w JOIN sym{tag} s ON w.r = s.x),
-s{tag} AS (
-  SELECT MIN(id) AS vec_id
-  FROM (SELECT id, MIN(r) AS component FROM walk{tag} GROUP BY id)
-  GROUP BY component
-  UNION ALL
-  SELECT vec_id FROM {src}
-  WHERE vec_id NOT IN (SELECT id FROM n{tag}))"""
-
-    return f"""
-WITH RECURSIVE
-b0 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0),
-b1 AS (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 1
-  UNION ALL
-  SELECT vec_id + 100000, embedding FROM embeddings WHERE vec_id < 10
-  UNION ALL
-  SELECT vec_id + 200000, embedding FROM embeddings WHERE vec_id < 2),
-{_batch_dedup("0", "b0")},
-{_batch_dedup("1", "b1")},
-silver0 AS (
-  SELECT e.vec_id, e.embedding FROM b0 e JOIN s0 ON e.vec_id = s0.vec_id),
-surv1 AS (
-  SELECT e.vec_id, e.embedding FROM b1 e JOIN s1 ON e.vec_id = s1.vec_id),
-flagged AS (
-  SELECT DISTINCT y.vec_id
-  FROM surv1 y JOIN silver0 x ON {cos_cross} >= {tau}),
-corpus AS (
-  SELECT vec_id, embedding FROM silver0
-  UNION ALL
-  SELECT vec_id, embedding FROM surv1
-  WHERE vec_id NOT IN (SELECT vec_id FROM flagged)),
-q AS (SELECT vec_id AS query_id, embedding AS qv
-      FROM embeddings WHERE vec_id < 10),
-scored AS (
-  SELECT query_id, c.vec_id AS neighbor_id, {cos_probe} AS cosine
-  FROM q JOIN corpus c ON c.vec_id <> q.query_id)
-SELECT query_id, neighbor_id, cosine, CAST(rnk AS BIGINT) AS rnk FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored) WHERE rnk <= 5
-"""
-
-
-@query("q73_semantic_dedup_ingest", _semantic_dedup_ingest_oracle())
-def q73_semantic_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup-mode ingest: batch 0 (evens) → batch 1 (odds + planted exact
-    copies) → replay batch 1 → full-probe top-k over the landed silver.
-    The workload is constant-bounded (vec_id < 10 — _WORKLOAD_BOUNDS);
-    the plants are query-synthesized from that same carve, so the corpus
-    stays the driver's table plus a fixed-size planted set."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from crossbar_data_process_spark.operators.ivf import (
-        ivf_fit,
-        ivf_topk_assigned,
-    )
-    from crossbar_data_process_spark.streaming.ann_ingest import (
-        ivf_ingest_writer,
-    )
-
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = e.filter(F.col("vec_id") < 10)
-    # nlist scales with the corpus via THE codified posture (r16,
-    # VERDICT r15 #2: suggest_nlist is the one definition of
-    # E[cluster] ≈ 250 — the sink's within-batch pair stage is
-    # Σ cluster², so a PINNED nlist would make this row quadratic in
-    # corpus size on scale probes). Safe under the hash: the oracle is
-    # quantizer-free (see above) — nlist moves candidacy, and every ≥τ
-    # pair co-clusters at ANY nlist because the plants are identical
-    # vectors.
-    from crossbar_data_process_spark.operators.ivf import suggest_nlist
-
-    # ONE setup job instead of two (r16 optimization round): the corpus
-    # count (sizes nlist) and the vector dim ride the same aggregate
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"), F.first(F.size("embedding")).alias("d")
-    ).first()
-    n, dim = int(row["n"]), int(row["d"])
-    nl = suggest_nlist(n)
-    # n_rows=n: the fit's sample path would otherwise re-count the frame
-    # this query just counted to size nlist (r15 review pass 2)
-    cents = ivf_fit(
-        e,
-        dim=dim,
-        nlist=nl,
-        iters=2,
-        driver_fit_rows=max(2048, 8 * nl),
-        n_rows=n,
-    )
-    silver = os.path.join(
-        tempfile.gettempdir(), f"ann_dedup_silver_q73_{os.getpid()}"
-    )
-    shutil.rmtree(silver, ignore_errors=True)
-    atexit.register(shutil.rmtree, silver, ignore_errors=True)
-    # the production dedup-mode sink on the engine's only IVF arithmetic
-    sink = ivf_ingest_writer(spark, cents, silver, dedup_threshold=0.999)
-    plants = (
-        q.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-        .unionByName(
-            e.filter(F.col("vec_id") < 2).select(
-                (F.col("vec_id") + 200000).alias("vec_id"), "embedding"
-            )
-        )
-    )
-    b0 = e.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 0)
-    b1 = e.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 1).unionByName(plants)
-    sink(b0, 0)
-    sink(b1, 1)
-    sink(b1, 1)  # replay — exclude_batch_id keeps the flag exactly-once
-    out = ivf_topk_assigned(spark, silver, q, cents, k=5, nprobe=nl)
     return out.select(
         "query_id", "neighbor_id", "cosine", F.col("rnk").cast("long").alias("rnk")
     )
@@ -1476,8 +1246,8 @@ def q30_supplier_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 # test_connected_components_matches_oracle (the former DuckDB oracle lives on
 # there verbatim); its slot went to q68_quantile_rollup, since retired
 # (REGISTRY.md). The iterative min-label component family stays
-# registry-oracled via q64 and q73, whose DuckDB oracles walk the same
-# components recursively over their pair graphs.
+# registry-oracled via q64, whose DuckDB oracle walks the same components
+# recursively over its pair graph.
 def q31_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation")
     a = n.alias("a")
@@ -2628,10 +2398,6 @@ def q65_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # order, so any harness truncation falls on queries with multi-round green
 # history rather than the coverage-critical ones.
 _FRONT = [
-    # r15 new surface first
-    "q73_semantic_dedup_ingest",
-    # r14 new surface
-    "q72_ann_streaming_ingest",
     # r12 new surfaces
     "q69_ivfpq_silver",
     # r11 new surfaces

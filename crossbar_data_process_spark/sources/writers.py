@@ -65,16 +65,52 @@ def biocypher_tuples(
             yield (None, row["src"], row["tgt"], row["label"], props)
 
 
+def _fs_and_path(spark, uri: str):
+    """The Hadoop FileSystem for ``uri``'s scheme (local, hdfs, s3a, …) —
+    the one Spark's own readers and writers resolve — and ``uri`` as a
+    Hadoop ``Path``."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(uri)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
 def _hadoop_write_text(spark, uri: str, text: str) -> None:
-    """Overwrite ``uri`` with ``text`` via the Hadoop FileSystem for the
-    URI's scheme (local, hdfs, s3a, …) — the filesystem Spark's own
-    writers resolve, so manifests land next to their data everywhere."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(uri)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Overwrite ``uri`` with ``text`` through :func:`_fs_and_path`, so
+    manifests and stamps land next to their data everywhere."""
+    fs, jpath = _fs_and_path(spark, uri)
     stream = fs.create(jpath, True)
     try:
         stream.write(bytearray(text.encode("utf-8")))
     finally:
         stream.close()
 
+
+def _hadoop_read_text(spark, uri: str) -> str:
+    fs, jpath = _fs_and_path(spark, uri)
+    stream = fs.open(jpath)
+    try:
+        return bytes(stream.readAllBytes()).decode("utf-8")
+    finally:
+        stream.close()
+
+
+def _partition_value_int(dirname: str, path) -> int:
+    """Parse the integer value of a ``key=value`` partition directory name,
+    failing with a DIAGNOSABLE error on non-integer values. The poisonous
+    case is ``cluster=__HIVE_DEFAULT_PARTITION__``: rows with a NULL
+    partition key (e.g. a NULL vector assigned a NULL cluster by a writer
+    without input validation) land there, after which a bare ``int()``
+    dies with 'invalid literal' and no path anywhere. Rejecting — not
+    skipping — is deliberate: such a leaf holds REAL rows of broken
+    provenance; silently dropping them would turn a data bug into a
+    partial corpus."""
+    key, val = dirname.split("=", 1)
+    try:
+        return int(val)
+    except ValueError:
+        raise ValueError(
+            f"partition directory {path} has a non-integer {key}= value "
+            f"{val!r} — a __HIVE_DEFAULT_PARTITION__ leaf means rows with "
+            f"a NULL {key} landed (e.g. a NULL vector assigned a NULL "
+            "cluster by a writer without input validation); inspect the "
+            "leaf and rebuild or remove it"
+        ) from None

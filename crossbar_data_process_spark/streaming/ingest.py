@@ -46,6 +46,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from crossbar_data_process_spark.sources.writers import (
+    _fs_and_path,
+    _hadoop_read_text,
+    _hadoop_write_text,
+    _partition_value_int,
+)
+
 BATCH_COL = "__batch_id"
 _INDEX_TABLES = ("fingerprints", "buckets", "shingles")
 _META_FILE = "_index_meta.json"
@@ -53,49 +60,10 @@ _MANIFEST_FILE = "_compaction_manifest.json"
 _STAGING_PREFIX = ".compaction_staging_"
 
 
-def _fs_and_path(spark: SparkSession, uri: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(uri)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _partition_value_int(dirname: str, path) -> int:
-    """Parse the integer value of a ``key=value`` partition directory name,
-    failing with a DIAGNOSABLE error on non-integer values. The poisonous
-    case is ``cluster=__HIVE_DEFAULT_PARTITION__``: a NULL partition key
-    (e.g. a NULL embedding whose ``ivf_assign`` is NULL in a sink path
-    that predates vector validation) lands there, after which a bare
-    ``int()`` dies with 'invalid literal' and no path anywhere (r11
-    ADVICE). Rejecting — not skipping — is deliberate: such a leaf holds
-    REAL rows of broken provenance; silently dropping them would turn a
-    data bug into a partial corpus."""
-    key, val = dirname.split("=", 1)
-    try:
-        return int(val)
-    except ValueError:
-        raise ValueError(
-            f"partition directory {path} has a non-integer {key}= value "
-            f"{val!r} — a __HIVE_DEFAULT_PARTITION__ leaf means rows with "
-            f"a NULL {key} landed (e.g. a NULL vector assigned a NULL "
-            "cluster by a writer without input validation); inspect the "
-            "leaf and rebuild or remove it"
-        ) from None
-
-
-def _hadoop_read_text(spark: SparkSession, uri: str) -> str:
-    fs, jpath = _fs_and_path(spark, uri)
-    stream = fs.open(jpath)
-    try:
-        return bytes(stream.readAllBytes()).decode("utf-8")
-    finally:
-        stream.close()
-
-
 def _write_index_meta(
     spark: SparkSession, index_dir: str, n: int, num_hashes: int, bands: int
 ) -> None:
     import json
-
-    from crossbar_data_process_spark.sources.writers import _hadoop_write_text
 
     _hadoop_write_text(
         spark,
@@ -537,8 +505,6 @@ def compact_batch_partitions(
     consolidated.write.mode("overwrite").parquet(f"{path}/{staging_name}")
     n = int(obs.get["rows"])
     # 2. COMMIT: the manifest's single-file creation
-    from crossbar_data_process_spark.sources.writers import _hadoop_write_text
-
     _hadoop_write_text(
         spark,
         f"{path}/{_MANIFEST_FILE}",

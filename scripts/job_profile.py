@@ -4,7 +4,7 @@ first). Runs the query exactly the way bench.py does (same session
 factory, same count() action) with the Spark event log enabled, then
 parses the log into a job table: job id, submit→end wall, call site.
 
-Usage: python scripts/job_profile.py q73_semantic_dedup_ingest [sf_dir]
+Usage: python scripts/job_profile.py q54_ivf_topk [sf_dir]
 
 The event log lands in a pid-scoped /tmp dir wiped on exit. This is a
 diagnosis tool — it changes nothing about bench methodology.

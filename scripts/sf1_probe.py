@@ -63,8 +63,8 @@ TEXT_QUERIES = {
     "q21_doc_exact_dedup",
     "q25_ngram_jaccard",
     "q26b_simhash",
-    # r15: q53 folded out of BENCH_QUERIES (REGISTRY.md) — its successor
-    # q73 reads embeddings, so it stays on the replica path
+    # r15: q53 folded out of BENCH_QUERIES (REGISTRY.md); the embedding
+    # rows (q54, q67, q69) stay on the replica path
     "q59_segment_dedup",
     "q63_incremental_dedup",
     "q64_streaming_ingest",

@@ -120,11 +120,16 @@ def test_gold_build_does_not_load_the_query_registry():
 _UNMEASURED_MODULES = {
     "functions.ec",
     "operators.diff",
+    "operators.pq",
     "operators.rangejoin",
     "operators.skew",
+    "parallel",
     "plans.queries",
     "sources.disgenet",
     "sources.landing",
+    "streaming",
+    "streaming.ingest",
+    "streaming.pipelines",
     "streaming.stateful",
 }
 

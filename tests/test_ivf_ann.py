@@ -621,28 +621,23 @@ def test_filing_matches_probing_on_the_summation_order_vector(
     spark, tmp_path
 ):
     """A silver files each vector under the list a probe picks first for
-    it: the one-shot write and a streaming batch both hold the vector of
-    the test above under list 1, where _driver_probe_lists points an
-    nprobe=1 probe. Filing by a blocked BLAS dot would score centroid 0
-    at 11-13 and put the vector where that probe never looks."""
+    it: the one-shot write holds the vector of the test above under list
+    1, where _driver_probe_lists points an nprobe=1 probe. Filing by a
+    blocked BLAS dot would score centroid 0 at 11-13 and put the vector
+    where that probe never looks."""
     from crossbar_data_process_spark.operators.ivf import (
         _driver_probe_lists,
         write_assigned_corpus,
-    )
-    from crossbar_data_process_spark.streaming.ann_ingest import (
-        ivf_ingest_writer,
     )
 
     q = [1e16] + [1.0] * 7 + [-1e16] + [1.0] * 7
     cents = [[1.0] * 16, [0.0, 8.0] + [0.0] * 14]
     assert _driver_probe_lists([q], cents, 1) == [[1]]
     df = spark.createDataFrame([(0, q)], "vec_id long, embedding array<double>")
-    oneshot, streamed = str(tmp_path / "oneshot"), str(tmp_path / "streamed")
-    write_assigned_corpus(df, cents, oneshot)
-    ivf_ingest_writer(spark, cents, streamed)(df, 0)
-    for path in (oneshot, streamed):
-        rows = spark.read.parquet(path).select("vec_id", "cluster").collect()
-        assert [(r.vec_id, r.cluster) for r in rows] == [(0, 1)], path
+    path = str(tmp_path / "oneshot")
+    write_assigned_corpus(df, cents, path)
+    rows = spark.read.parquet(path).select("vec_id", "cluster").collect()
+    assert [(r.vec_id, r.cluster) for r in rows] == [(0, 1)]
 
 
 def _join_probe_topk(spark, path, queries, centroids, k, nprobe, quantized):
@@ -716,16 +711,80 @@ def test_malformed_query_vectors_fail_loudly(spark, clustered, tmp_path):
             ivf_topk_assigned(spark, path, q, fitted)
 
 
-def test_probe_sees_silver_rewritten_with_new_schema(spark, clustered, tmp_path):
-    """The silver's schema is memoised per listing snapshot: a warm probe
-    launches no schema job, and a silver overwritten at the same path
-    with another schema (float → int8 codes) is read with the new one."""
+def test_probe_of_empty_lists_returns_no_rows(spark, clustered, tmp_path):
+    """A query whose probed lists hold no rows (no ``cluster=`` directory
+    was written for them) gets zero rows back, not an error."""
+    from crossbar_data_process_spark.operators.ivf import (
+        _driver_probe_lists,
+        assign_clusters,
+        ivf_topk_assigned,
+        write_assigned_corpus,
+    )
+
+    fitted = ivf_fit(clustered, dim=32, nlist=8, iters=2)
+    q = clustered.filter(F.col("vec_id") == 0)
+    [[probed]] = _driver_probe_lists(
+        [r.embedding for r in q.collect()], fitted, 1
+    )
+    rest = (
+        assign_clusters(clustered, "embedding", fitted)
+        .filter(F.col("cluster") != probed)
+        .drop("cluster")
+    )
+    path = str(tmp_path / "silver")
+    write_assigned_corpus(rest, fitted, path)
+    got = ivf_topk_assigned(spark, path, q, fitted, k=5, nprobe=1)
+    assert got.collect() == []
+    assert ivf_topk_assigned(spark, path, q, fitted, k=5, nprobe=2).count() == 5
+
+
+def test_probe_refuses_foreign_centroids_and_unstamped_silvers(
+    spark, clustered, tmp_path
+):
+    """Probing with centroids other than the silver's would pick lists
+    whose ids mean something else: refused. So is a silver without its
+    stamp, with a message to rebuild it."""
+    import os
+
     from crossbar_data_process_spark.operators.ivf import (
         ivf_topk_assigned,
         write_assigned_corpus,
     )
-    from crossbar_data_process_spark.streaming.ann_ingest import (
-        read_assigned_silver,
+
+    fitted = ivf_fit(clustered, dim=32, nlist=8, iters=2)
+    path = str(tmp_path / "silver")
+    write_assigned_corpus(clustered, fitted, path)
+    q = clustered.filter(F.col("vec_id") == 0)
+    shifted = [[float(x) + 0.25 for x in row] for row in fitted]
+    with pytest.raises(ValueError, match="different quantizer"):
+        ivf_topk_assigned(spark, path, q, shifted, k=5, nprobe=2)
+    assert ivf_topk_assigned(spark, path, q, fitted, k=5, nprobe=2).count() == 5
+    os.remove(os.path.join(path, "_centroid_meta.json"))
+    with pytest.raises(ValueError, match="rebuild it"):
+        ivf_topk_assigned(spark, path, q, fitted, k=5, nprobe=2)
+
+
+def test_suggest_nlist_posture():
+    """ONE definition of the E[cluster]≈250 posture, with its floor."""
+    from crossbar_data_process_spark.operators.ivf import suggest_nlist
+
+    assert suggest_nlist(0) == 8  # floor
+    assert suggest_nlist(2_000) == 8  # 2000//250 = 8 — exactly the floor
+    assert suggest_nlist(1_000_000) == 4_000
+    assert suggest_nlist(5_000_000) == 20_000
+    assert suggest_nlist(1_000_000, target_cluster_rows=500) == 2_000
+    with pytest.raises(ValueError, match="target_cluster_rows"):
+        suggest_nlist(100, target_cluster_rows=0)
+
+
+def test_probe_sees_silver_rewritten_with_new_schema(spark, clustered, tmp_path):
+    """The silver's schema comes from its stamp: no probe, cold or warm,
+    launches a schema job, and a silver overwritten at the same path
+    with another schema (float → int8 codes) is read with the new one."""
+    from crossbar_data_process_spark.operators.ivf import (
+        ivf_topk_assigned,
+        read_silver,
+        write_assigned_corpus,
     )
 
     fitted = ivf_fit(clustered, dim=32, nlist=8, iters=2)
@@ -742,10 +801,10 @@ def test_probe_sees_silver_rewritten_with_new_schema(spark, clustered, tmp_path)
         return len(set(st_.getJobIdsForGroup(None)) - before)
 
     write_assigned_corpus(clustered, fitted, path)
-    assert jobs_to_plan(False) == 2  # query collect + schema inference
     assert jobs_to_plan(False) == 1  # query collect only
+    assert jobs_to_plan(False) == 1
     write_assigned_corpus(clustered, fitted, path, quantize=True)
-    assert "qvec" in read_assigned_silver(spark, path).columns
+    assert "qvec" in read_silver(spark, path, fitted).columns
     got = ivf_topk_assigned(
         spark, path, q, fitted, k=5, nprobe=2, quantized=True
     ).collect()

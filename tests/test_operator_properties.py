@@ -438,9 +438,8 @@ def test_connected_components_matches_oracle(spark):
     """Connected components over region-cliques (the former q31 registry
     row, folded out in r11 — REGISTRY.md): the former DuckDB oracle lives
     on here verbatim. The iterative min-label component family stays
-    registry-oracled via the recursive component walks composed in q64
-    (text LSH pair graph) and q73 (embedding pairs); the standalone q53
-    form is pinned below in
+    registry-oracled via the recursive component walk composed in q64
+    (text LSH pair graph); the standalone q53 form is pinned below in
     test_neardup_resolve_matches_oracle (folded out r15)."""
     import duckdb
 
@@ -524,9 +523,9 @@ def test_pair_normalize_matches_oracle(spark):
 
 def test_cosine_topk_matches_oracle(spark):
     """Brute-force cosine top-k (the former q27 registry row, folded out
-    in r14 for q72_ann_streaming_ingest — REGISTRY.md): the oracle lives
-    on here verbatim (_COSINE_TOPK_ORACLE) AND stays registry-shared by
-    q54/q72, whose nprobe == nlist probes are brute-force-identical."""
+    in r14 — REGISTRY.md): the oracle lives on here verbatim
+    (_COSINE_TOPK_ORACLE) AND stays registry-shared by q54, whose
+    nprobe == nlist probe is brute-force-identical."""
     import duckdb
 
     from crossbar_data_process_spark.plans.queries import (
@@ -551,11 +550,9 @@ def test_cosine_topk_matches_oracle(spark):
 
 def test_neardup_resolve_matches_oracle(spark):
     """Near-dup resolution (the former q53 registry row, folded out in
-    r15 for q73_semantic_dedup_ingest — REGISTRY.md): the recursive
-    min-label component oracle lives on here verbatim
-    (_neardup_resolve_oracle), and the walk itself stays registry-oracled
-    two ways — composed in q64's text oracle and in q73's embedding-pair
-    oracle."""
+    r15 — REGISTRY.md): the recursive min-label component oracle lives
+    on here verbatim (_neardup_resolve_oracle), and the walk itself stays
+    registry-oracled, composed in q64's text oracle."""
     import duckdb
 
     from crossbar_data_process_spark.plans.queries import (

@@ -50,8 +50,8 @@ def test_registry_size_is_pinned():
     otherwise only fail at run time, as a KeyError)."""
     from crossbar_data_process_spark.plans.queries import BENCH_QUERIES, ORACLES
 
-    assert len(QUERIES) == 37, sorted(QUERIES)
-    assert len(BENCH_QUERIES) == 21, BENCH_QUERIES
+    assert len(QUERIES) == 35, sorted(QUERIES)
+    assert len(BENCH_QUERIES) == 19, BENCH_QUERIES
     assert set(ORACLES) <= set(QUERIES)
     assert set(BENCH_QUERIES) <= set(QUERIES), sorted(
         set(BENCH_QUERIES) - set(QUERIES)
@@ -145,11 +145,7 @@ _WORKLOAD_BOUNDS = {
     # fixed-size as the corpus grows or scale probes measure eval growth
     "q65_contamination": r'F\.col\("doc_id"\)\s*<\s*5000',
     # r14: q27_cosine_topk folded out (REGISTRY.md) — its bound lives on
-    # in the property test; q72 carries the same 10-query carve
-    "q72_ann_streaming_ingest": r'F\.col\("vec_id"\)\s*<\s*10',
-    # r15: the dedup-mode sink row — same 10-query carve; its plants are
-    # synthesized FROM the carve, so the planted set is fixed-size too
-    "q73_semantic_dedup_ingest": r'F\.col\("vec_id"\)\s*<\s*10',
+    # in the property test; q54 carries the same 10-query carve
     "q54_ivf_topk": r'F\.col\("vec_id"\)\s*<\s*10',
     # r11: q39_ann_lsh folded out of the registry (REGISTRY.md) — its bound
     # lives on in the property test; q67 carries the same 10-query carve

@@ -374,52 +374,6 @@ def test_residual_stamp_guards_probe_space(spark, clustered, tmp_path):
         )
 
 
-def test_residual_streamed_silver_equals_batch(spark, clustered, tmp_path):
-    """pq_residual through the streaming sink: codes are deterministic, so
-    the streamed residual silver must equal the one-shot
-    write_pq_corpus(residual=True) layout for the probe; a factory with
-    the opposite residual flag against the stamped silver fails fast."""
-    from crossbar_data_process_spark.operators.ivf import ivf_fit
-    from crossbar_data_process_spark.streaming.ann_ingest import (
-        ivf_ingest_writer,
-    )
-
-    from crossbar_data_process_spark.operators.pq import pq_fit_residual
-
-    cents = ivf_fit(clustered, dim=DIM, nlist=8, iters=2)
-    centers, books = pq_fit_residual(
-        clustered, dim=DIM, centroids=cents, m=M, k=K, iters=4
-    )
-    streamed = str(tmp_path / "streamed_res")
-    oneshot = str(tmp_path / "oneshot_res")
-    sink = ivf_ingest_writer(
-        spark, cents, streamed, pq_codebooks=books,
-        pq_residual_centers=centers,
-    )
-    sink(clustered.filter(F.col("vec_id") % 2 == 0), 0)
-    sink(clustered.filter(F.col("vec_id") % 2 == 1), 1)
-    write_pq_corpus(
-        clustered, cents, books, oneshot, residual_centers=centers
-    )
-
-    q = clustered.filter((F.col("vec_id") % 150 == 0) & (F.col("vec_id") < 1200))
-    got = {
-        (r.query_id, r.rnk, r.neighbor_id, r.adc)
-        for r in ivf_pq_topk_assigned(
-            spark, streamed, q, cents, books, k=5, nprobe=3
-        ).collect()
-    }
-    want = {
-        (r.query_id, r.rnk, r.neighbor_id, r.adc)
-        for r in ivf_pq_topk_assigned(
-            spark, oneshot, q, cents, books, k=5, nprobe=3
-        ).collect()
-    }
-    assert got == want and len(got) > 0
-    with pytest.raises(ValueError, match="DIFFERENT codebooks"):
-        ivf_ingest_writer(spark, cents, streamed, pq_codebooks=books)
-
-
 def test_pq_encode_rejects_dim_mismatch(spark):
     """Books whose m·dsub disagrees with the corpus dim must fail loudly —
     a silent prefix encode (or NULL codes from out-of-range slices)
