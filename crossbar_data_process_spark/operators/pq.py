@@ -445,10 +445,9 @@ def pq_meta_json(
     codebooks: list[list[list[float]]],
     residual_centers: list[list[float]] | None = None,
 ) -> str:
-    """The ``_pq_codebooks.json`` stamp payload — shared by
-    :func:`write_pq_corpus` and the streaming ingest writer so the two
-    paths can never stamp diverging formats. The residual centers travel
-    WITH the books: residual codes are only meaningful against both.
+    """The ``_pq_codebooks.json`` stamp payload that :func:`write_pq_corpus`
+    writes. The residual centers travel WITH the books: residual codes are
+    only meaningful against both.
     Values are canonicalized (nested Python-float lists) so numpy/tuple
     inputs serialize and stamp-vs-caller comparisons are structural."""
     import json

@@ -39,11 +39,10 @@ def norm(a: Column) -> Column:
 def cosine(a: Column, b: Column, scale: int = 6) -> Column:
     """NULL (not an error) when either vector has zero norm: the session
     runs ANSI mode, where a plain ``/`` on a 0 divisor is DIVIDE_BY_ZERO
-    and aborts the job — in a streaming dedup sink, a wedged stream
-    (r10 review). ``try_divide`` keeps one evaluation of the norms and
-    identical values whenever the divisor is nonzero, so every oracle
-    hash is unchanged; downstream threshold filters drop the NULLs
-    (zero vectors have no direction)."""
+    and aborts the job (r10 review). ``try_divide`` keeps one evaluation
+    of the norms and identical values whenever the divisor is nonzero, so
+    every oracle hash is unchanged; downstream threshold filters drop the
+    NULLs (zero vectors have no direction)."""
     return F.round(F.try_divide(dot(a, b), norm(a) * norm(b)), scale)
 
 

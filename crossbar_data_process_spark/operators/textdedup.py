@@ -281,45 +281,13 @@ def minhash_lsh_pairs(
     a self-join replicates the bucket's rows salt× on the other side,
     which multiplies the quadratic in-bucket pair work it was meant to
     spread; AQE skew splitting handles the residual imbalance."""
-    idx, buckets = _lsh_index_and_buckets(
-        docs, text_col, id_col, n, num_hashes, bands
-    )
-    return _lsh_pairs_from_index(idx, buckets, threshold)
-
-
-def _lsh_index_and_buckets(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    num_hashes: int,
-    bands: int,
-) -> tuple[DataFrame, DataFrame]:
-    """The MinHash pipeline's two materialized tables — the shingle index
-    (doc, sh, nsh) and the band buckets (doc, band, key) — split out of
-    :func:`minhash_lsh_pairs` (r16 optimization round) so an ingest sink
-    that needs the SAME per-doc tables again (the flag's novel side, the
-    index delta) can filter these instead of re-tokenizing the batch:
-    both are row-wise deterministic per doc, so a semi-join on the doc id
-    is value-identical to recomputation over the subset.
-
-    ONE shingle pass feeds both the signature path and the exact-Jaccard
-    verify (r02 computed the index twice — a second full tokenize+shingle
-    scan of the corpus). GC-managed materialization, multi-consumer."""
+    # ONE shingle pass feeds both the signature path and the exact-Jaccard
+    # verify (r02 computed the index twice — a second full tokenize+shingle
+    # scan of the corpus). GC-managed materialization, multi-consumer.
     idx = materialize(_shingle_index(docs, text_col, id_col, n))
     sigs = _signatures_from_index(idx, num_hashes)
     # GC-managed materialization — see the ngram_jaccard_pairs comment
     buckets = materialize(_band_buckets(sigs, num_hashes, bands))
-    return idx, buckets
-
-
-def _lsh_pairs_from_index(
-    idx: DataFrame,
-    buckets: DataFrame,
-    threshold: float,
-) -> DataFrame:
-    """Candidate generation + exact-Jaccard verify over prebuilt
-    (idx, buckets) tables — the tail of :func:`minhash_lsh_pairs`."""
     a = buckets.alias("a")
     b = buckets.alias("b")
     cand = (
@@ -643,10 +611,10 @@ def dedup_index(
     bands: int = 6,
 ) -> dict[str, DataFrame]:
     """The INCREMENTAL-dedup silver index: three tables built in one pass
-    over the corpus, persisted once, appended per ingest batch. Production
-    pipelines never re-dedup the whole corpus when a batch lands — they
-    check the batch against this index (:func:`flag_against_index`) and
-    append the survivors' rows.
+    over the corpus, persisted once, extended by each later batch. A batch
+    is never re-deduplicated against the whole corpus: it is checked
+    against this index (:func:`flag_against_index`) and the survivors'
+    rows are appended (q63 oracles both steps).
 
     - ``fingerprints`` (fp, doc): exact-dup membership, one anti-join;
     - ``buckets`` (band, key, doc): the LSH band-bucket table — the same
@@ -678,7 +646,6 @@ def flag_against_index(
     num_hashes: int = 12,
     bands: int = 6,
     threshold: float = 0.2,
-    pre: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
     """Check an ingest batch against a :func:`dedup_index`: returns one row
     per DUPLICATE new document — (id, dup_kind 'exact'|'near', matched_doc,
@@ -693,26 +660,10 @@ def flag_against_index(
     the verify joins the corpus shingle table only for collided docs.
     (n / num_hashes / bands must match the index build — same permutation
     constants, same band keys.)
-
-    ``pre`` (r16 optimization round): a caller that ALREADY built this
-    batch's per-doc tables (the streaming sink tokenizes once per batch
-    via ``_lsh_index_and_buckets`` + carries the fingerprint column) can
-    pass ``{"fingerprints": (doc, fp), "shingles": (doc, sh, nsh),
-    "buckets": (doc, band, key)}`` frames covering a SUPERSET of
-    ``new_docs`` — each is semi-join-filtered to the relevant doc set
-    here instead of re-tokenizing/re-hashing the batch. All three are
-    row-wise deterministic per doc (same expressions, same parameters),
-    so filtering is value-identical to recomputation; the caller must
-    have built them with the SAME (n, num_hashes, bands).
     """
-    if pre is not None:
-        new_fp = pre["fingerprints"].join(
-            new_docs.select(F.col(id_col).alias("doc")), "doc", "left_semi"
-        )
-    else:
-        new_fp = new_docs.select(
-            F.col(id_col).alias("doc"), doc_fingerprint(text_col).alias("fp")
-        )
+    new_fp = new_docs.select(
+        F.col(id_col).alias("doc"), doc_fingerprint(text_col).alias("fp")
+    )
     exact = (
         new_fp.join(
             index["fingerprints"].select(
@@ -734,22 +685,11 @@ def flag_against_index(
     novel = new_docs.join(
         exact.select(F.col(id_col)), id_col, "left_anti"
     )
-    if pre is not None:
-        novel_ids = novel.select(F.col(id_col).alias("doc"))
-        # filtered views of the caller's materialized tables — consumed
-        # once each, so no extra checkpoint on top of the caller's
-        new_idx = pre["shingles"].join(novel_ids, "doc", "left_semi")
-        new_buckets = (
-            pre["buckets"]
-            .join(novel_ids, "doc", "left_semi")
-            .select(F.col("doc").alias("new_doc"), "band", "key")
-        )
-    else:
-        new_idx = materialize(_shingle_index(novel, text_col, id_col, n))
-        new_sigs = _signatures_from_index(new_idx, num_hashes)
-        new_buckets = _band_buckets(new_sigs, num_hashes, bands).select(
-            F.col("doc").alias("new_doc"), "band", "key"
-        )
+    new_idx = materialize(_shingle_index(novel, text_col, id_col, n))
+    new_sigs = _signatures_from_index(new_idx, num_hashes)
+    new_buckets = _band_buckets(new_sigs, num_hashes, bands).select(
+        F.col("doc").alias("new_doc"), "band", "key"
+    )
     cand = (
         new_buckets.join(
             index["buckets"].select(

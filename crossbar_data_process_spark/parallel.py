@@ -1,20 +1,20 @@
 """Concurrent execution of INDEPENDENT Spark actions (optimization
 guide §2.6 "Overlap independent jobs"): Spark's scheduler happily runs
 several jobs at once inside one application — actions are only
-sequential because driver code calls them sequentially. A multi-table
-sink (dedup index: fingerprints/buckets/shingles) writes tables that
-share nothing but an ALREADY-MATERIALIZED upstream block set, so submitting them from a small thread pool lets the
+sequential because driver code calls them sequentially. Writes of
+tables that share nothing but an ALREADY-MATERIALIZED upstream block set
+(the gold tables, say) can be submitted from a small thread pool: the
 next write's tasks back-fill executors freed by the current write's
 straggler tail — wall time approaches max(write) instead of Σ(write),
 at identical results (disjoint output paths, deterministic inputs).
+No package code calls it today.
 
 Caller contract (race hygiene): any LAZY shared intermediate
 (non-eager ``materialize``/``localCheckpoint``) must be materialized by
 a job that runs BEFORE the fork — two concurrent first-consumers would
 each compute the shared blocks (correct via block-manager locking, but
-duplicated work at exactly the scale where this helper pays). The call
-sites stage their writes so the shared checkpoint's first consumer runs
-alone.
+duplicated work at exactly the scale where this helper pays). A caller
+stages its writes so the shared checkpoint's first consumer runs alone.
 """
 
 from __future__ import annotations

@@ -89,9 +89,6 @@ BENCH_QUERIES = [
     # vs persisted index (q33's folded slot), benchmarked from day one
     "q62_snapshot_diff",
     "q63_incremental_dedup",
-    # r09 addition: end-to-end streaming ingest (q48_asof_join's folded
-    # slot), benchmarked from day one
-    "q64_streaming_ingest",
     # r10 addition: benchmark decontamination (q04's folded slot),
     # benchmarked from day one
     "q65_contamination",
@@ -766,8 +763,8 @@ def q25_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_ctes(num_hashes: int = 12, bands: int = 6, src: str = "documents") -> str:
     """The shared CTE chain ending in ``j`` (candidate pairs + exact-Jaccard
     terms) — composed by the q26 oracle, the q53 cluster-resolution oracle,
-    and (over their batch-union ``src`` CTE) the q63 and q64 ingest
-    oracles, so Spark and SQL can never drift on the pair set."""
+    and (over its batch-union ``src`` CTE) the q63 ingest oracle, so Spark
+    and SQL can never drift on the pair set."""
     r = num_hashes // bands
     hash32 = (
         "list_sum(list_transform(range(1, 9), "
@@ -852,10 +849,8 @@ def q26_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cluster_size 1. Mirrors dedup_exact's survivors shape; the reference's
 # every dedup returns surviving rows (edge_data/ppi.py:142).
 # r15: q53_neardup_resolve folded out of the registry (REGISTRY.md fold
-# table). The recursive min-label component walk it oracled stays
-# registry-checked: q64_streaming_ingest carries the identical text-side
-# walk composed in its oracle, and the former standalone oracle lives on
-# verbatim in tests/test_operator_properties.py::
+# table). The former standalone oracle of its recursive min-label
+# component walk lives on verbatim in tests/test_operator_properties.py::
 # test_neardup_resolve_matches_oracle.
 def q53_neardup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crossbar_data_process_spark.operators.textdedup import resolve_neardups
@@ -1154,7 +1149,7 @@ def q54_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------- as-of join (time-series family; SURVEY §2.3 notes these are
 # out of the reference's contract but native to Spark — implemented as the
 # union + last-ignoring-nulls window, the shuffle-once as-of pattern).
-# r09: folded out of the registry → slot to q64_streaming_ingest
+# r09: folded out of the registry → slot to q64, since retired
 # (REGISTRY.md). The as-of FAMILY stays registry-oracled via
 # q57_asof_two_table (native DuckDB ASOF LEFT JOIN oracle); this
 # single-table form's last-ignoring-nulls window and its former DuckDB
@@ -1245,9 +1240,9 @@ def q30_supplier_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r11 fold: the q31 registry row moved to tests/test_operator_properties.py::
 # test_connected_components_matches_oracle (the former DuckDB oracle lives on
 # there verbatim); its slot went to q68_quantile_rollup, since retired
-# (REGISTRY.md). The iterative min-label component family stays
-# registry-oracled via q64, whose DuckDB oracle walks the same components
-# recursively over its pair graph.
+# (REGISTRY.md). The same components are also walked recursively by the
+# q53 oracle in test_neardup_resolve_matches_oracle, and kgbench checks
+# the graph invariants.
 def q31_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation")
     a = n.alias("a")
@@ -2124,227 +2119,6 @@ def q63_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------- streaming incremental-dedup ingest, END TO END
-# (streaming/ingest.py) — r09: the former q48_asof_join's folded slot
-# (REGISTRY.md). q63 oracles the batch-shaped flag_against_index call; THIS
-# row runs the actual Structured Streaming path — a bounded 2-file parquet
-# stream (maxFilesPerTrigger=1, mtime-ordered so file→batch mapping is
-# deterministic) through writeStream.foreachBatch(dedup_ingest_writer)
-# with availableNow — so the exactly-once gold contract (within-batch exact
-# + near dedup, cross-batch dedup via the GROWING persisted index, seeded-
-# corpus dedup, dynamic partition overwrite) is hash-checked by the driver,
-# not just pytest (VERDICT r8 #6). Batch composition: batch 0 carries
-# %10==8 docs + exact re-ingests of corpus %40==0 (flagged vs the seeded
-# index) + within-batch copies of %40==8 docs (within-batch min-id dedup);
-# batch 1 carries %10==9 docs + fresh copies of the SAME %40==8 texts —
-# flagged ONLY because batch 0's survivors extended the index between
-# micro-batches, which is the property that separates streaming ingest from
-# a stateless per-batch job. The oracle replays the two batches in SQL:
-# _minhash_ctes over corpus∪batch0∪batch1 (ids are disjoint by
-# construction) + the q53-style recursive component walk per batch + the
-# q63-style fp/near flag logic per batch, with batch 1 flagging against
-# corpus ∪ survivors(batch 0).
-def _streaming_ingest_oracle(threshold: float = 0.5) -> str:
-    return f"""
-WITH RECURSIVE corpus AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 10 < 4),
-b0 AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 10 = 8
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM corpus WHERE doc_id % 40 = 0
-  UNION ALL
-  SELECT doc_id + 1500000 AS doc_id, text FROM documents WHERE doc_id % 40 = 8),
-b1 AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 10 = 9
-  UNION ALL
-  SELECT doc_id + 2000000 AS doc_id, text FROM documents WHERE doc_id % 40 = 8),
-uni AS (
-  SELECT doc_id, text, 0 AS side FROM corpus
-  UNION ALL SELECT doc_id, text, 1 AS side FROM b0
-  UNION ALL SELECT doc_id, text, 2 AS side FROM b1),
-{_minhash_ctes(src="uni")},
-side AS (SELECT doc_id, side FROM uni),
-fps AS (SELECT doc_id, {_FP_SQL} AS fp FROM uni),
-jac AS (
-  SELECT doc_a AS a, doc_b AS b,
-         round(i * 1.0 / (na + nb - i), 6) AS jc FROM j
-  UNION ALL
-  SELECT doc_b, doc_a, round(i * 1.0 / (na + nb - i), 6) FROM j),
-b0x AS (
-  SELECT f.doc_id FROM fps f JOIN side s USING (doc_id) WHERE s.side = 1
-  QUALIFY row_number() OVER (PARTITION BY f.fp ORDER BY f.doc_id) = 1),
-p0 AS (
-  SELECT a, b FROM jac
-  WHERE jc >= {threshold} AND a < b
-    AND a IN (SELECT doc_id FROM b0x) AND b IN (SELECT doc_id FROM b0x)),
-sym0 AS (SELECT a, b FROM p0 UNION SELECT b, a FROM p0),
-pn0 AS (SELECT DISTINCT a AS id FROM sym0),
-walk0(id, r) AS (
-  SELECT id, id FROM pn0
-  UNION
-  SELECT w.id, s.b FROM walk0 w JOIN sym0 s ON w.r = s.a),
-keep0 AS (
-  SELECT MIN(id) AS doc_id FROM (
-    SELECT id, MIN(r) AS component FROM walk0 GROUP BY id) GROUP BY component),
-b0p AS (
-  SELECT doc_id FROM b0x WHERE doc_id NOT IN (SELECT id FROM pn0)
-  UNION ALL SELECT doc_id FROM keep0),
-idx0fp AS (
-  SELECT DISTINCT f.fp FROM fps f JOIN side s USING (doc_id) WHERE s.side = 0),
-f0x AS (
-  SELECT f.doc_id FROM fps f JOIN b0p USING (doc_id)
-  WHERE f.fp IN (SELECT fp FROM idx0fp)),
-f0n AS (
-  SELECT DISTINCT jac.a AS doc_id FROM jac
-  JOIN side sb ON sb.doc_id = jac.b AND sb.side = 0
-  WHERE jc >= {threshold}
-    AND jac.a IN (SELECT doc_id FROM b0p)
-    AND jac.a NOT IN (SELECT doc_id FROM f0x)),
-s0 AS (
-  SELECT doc_id FROM b0p
-  WHERE doc_id NOT IN (SELECT doc_id FROM f0x)
-    AND doc_id NOT IN (SELECT doc_id FROM f0n)),
-b1x AS (
-  SELECT f.doc_id FROM fps f JOIN side s USING (doc_id) WHERE s.side = 2
-  QUALIFY row_number() OVER (PARTITION BY f.fp ORDER BY f.doc_id) = 1),
-p1 AS (
-  SELECT a, b FROM jac
-  WHERE jc >= {threshold} AND a < b
-    AND a IN (SELECT doc_id FROM b1x) AND b IN (SELECT doc_id FROM b1x)),
-sym1 AS (SELECT a, b FROM p1 UNION SELECT b, a FROM p1),
-pn1 AS (SELECT DISTINCT a AS id FROM sym1),
-walk1(id, r) AS (
-  SELECT id, id FROM pn1
-  UNION
-  SELECT w.id, s.b FROM walk1 w JOIN sym1 s ON w.r = s.a),
-keep1 AS (
-  SELECT MIN(id) AS doc_id FROM (
-    SELECT id, MIN(r) AS component FROM walk1 GROUP BY id) GROUP BY component),
-b1p AS (
-  SELECT doc_id FROM b1x WHERE doc_id NOT IN (SELECT id FROM pn1)
-  UNION ALL SELECT doc_id FROM keep1),
-idx1 AS (
-  SELECT doc_id FROM side WHERE side = 0
-  UNION ALL SELECT doc_id FROM s0),
-idx1fp AS (SELECT DISTINCT f.fp FROM fps f JOIN idx1 USING (doc_id)),
-f1x AS (
-  SELECT f.doc_id FROM fps f JOIN b1p USING (doc_id)
-  WHERE f.fp IN (SELECT fp FROM idx1fp)),
-f1n AS (
-  SELECT DISTINCT jac.a AS doc_id FROM jac
-  JOIN idx1 ON idx1.doc_id = jac.b
-  WHERE jc >= {threshold}
-    AND jac.a IN (SELECT doc_id FROM b1p)
-    AND jac.a NOT IN (SELECT doc_id FROM f1x)),
-s1 AS (
-  SELECT doc_id FROM b1p
-  WHERE doc_id NOT IN (SELECT doc_id FROM f1x)
-    AND doc_id NOT IN (SELECT doc_id FROM f1n))
-SELECT doc_id, CAST(0 AS BIGINT) AS batch_id FROM s0
-UNION ALL
-SELECT doc_id, CAST(1 AS BIGINT) AS batch_id FROM s1
-"""
-
-
-@query("q64_streaming_ingest", _streaming_ingest_oracle())
-def q64_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ACTUAL streaming path — readStream over a 2-file bounded parquet
-    stream, foreachBatch(dedup_ingest_writer), availableNow — then read the
-    gold table back. Checkpoint dir is FRESH per invocation (a reused one
-    would make the replayed stream a committed no-op); gold/index live in a
-    pid-scoped root wiped per invocation so repeated bench/correctness runs
-    never accumulate state."""
-    import atexit
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from crossbar_data_process_spark.streaming.ingest import (
-        dedup_ingest_writer,
-        seed_dedup_index,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # seed corpus is %10<4 (not q63's %10<8): the NEW surface here is the
-    # streaming machinery + cross-batch index growth, not batch-vs-large-
-    # corpus probing (q63 owns that); the smaller seed halves the one-off
-    # index-build cost in every bench/correctness run
-    corpus = d.filter(F.col("doc_id") % 10 < 4)
-    batch0 = (
-        d.filter(F.col("doc_id") % 10 == 8)
-        .unionByName(
-            corpus.filter(F.col("doc_id") % 40 == 0).select(
-                (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            d.filter(F.col("doc_id") % 40 == 8).select(
-                (F.col("doc_id") + 1500000).alias("doc_id"), "text"
-            )
-        )
-    )
-    batch1 = d.filter(F.col("doc_id") % 10 == 9).unionByName(
-        d.filter(F.col("doc_id") % 40 == 8).select(
-            (F.col("doc_id") + 2000000).alias("doc_id"), "text"
-        )
-    )
-
-    root = os.path.join(
-        tempfile.gettempdir(), f"stream_ingest_q64_{os.getpid()}"
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    shutil.rmtree(root, ignore_errors=True)
-    input_dir = os.path.join(root, "input")
-    index_dir = os.path.join(root, "index")
-    gold_dir = os.path.join(root, "gold")
-    ckpt_dir = os.path.join(root, "ckpt")
-    os.makedirs(input_dir)
-
-    # seed build and the two input-file stagings are mutually
-    # independent jobs — overlap them (guide §2.6, r16 optimization
-    # round); byte-wise identical outputs at identical paths
-    from crossbar_data_process_spark.parallel import run_concurrently
-
-    def _stage(i: int, b: DataFrame) -> None:
-        # one parquet FILE per micro-batch, mtimes 1000 s apart: the
-        # file stream source admits files oldest-first, so file i IS
-        # batch i
-        staging = os.path.join(root, f"stage{i}")
-        b.coalesce(1).write.mode("overwrite").parquet(staging)
-        part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-        dst = os.path.join(input_dir, f"batch{i}.parquet")
-        shutil.copyfile(part, dst)
-        os.utime(dst, (1_700_000_000 + i * 1000,) * 2)
-
-    run_concurrently(
-        [
-            lambda: seed_dedup_index(corpus, index_dir),
-            lambda: _stage(0, batch0),
-            lambda: _stage(1, batch1),
-        ]
-    )
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    sq = (
-        stream.writeStream.foreachBatch(
-            dedup_ingest_writer(spark, index_dir, gold_dir, threshold=0.5)
-        )
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-
-    return spark.read.parquet(gold_dir).select(
-        "doc_id", F.col("__batch_id").cast("long").alias("batch_id")
-    )
-
-
 # --------------------- benchmark decontamination, driver-oracled (r10)
 # Training-data hygiene charter surface (operators/textdedup.contamination_
 # flags), previously pytest-only (tests/test_neardup_resolution.py): flag
@@ -2404,8 +2178,6 @@ _FRONT = [
     "q67_pq_adc_topk",
     # r10 new surfaces
     "q65_contamination",
-    # r09 new surface
-    "q64_streaming_ingest",
     # r08 new/reshaped surfaces
     "q63_incremental_dedup",
     "q62_snapshot_diff",

@@ -58,14 +58,6 @@ def main() -> None:
         "upper bound; at runtime the checkpoint materializes the subtree "
         "once and consumers reuse its blocks.",
         "",
-        "NOTE on q64_streaming_ingest: the audited plan is the final gold "
-        "parquet read — the real work runs EAGERLY inside the Structured "
-        "Streaming foreachBatch sink during query construction, so its "
-        "row reads 0 exchanges. The sink's executed work is pinned by "
-        "tests/test_incremental_dedup.py (per-batch jobs/stages constant "
-        "as the index grows) and its wall-clock curve by "
-        "git show 8f7ca59:scripts/ingest_probe.py (BASELINE.md).",
-        "",
         "| query | exch | bcast | smj | shj | nlj | cart | py | push | oracle |",
         "|---|---|---|---|---|---|---|---|---|---|",
     ]

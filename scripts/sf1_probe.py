@@ -67,7 +67,6 @@ TEXT_QUERIES = {
     # rows (q54, q67, q69) stay on the replica path
     "q59_segment_dedup",
     "q63_incremental_dedup",
-    "q64_streaming_ingest",
     # r10: contamination screens text — Zipf path so shingle df statistics
     # are realistic; the benchmark carve (doc_id < 5000) is the small
     # corpus' literal prefix, so the eval set is IDENTICAL at both scales

@@ -127,10 +127,6 @@ _UNMEASURED_MODULES = {
     "plans.queries",
     "sources.disgenet",
     "sources.landing",
-    "streaming",
-    "streaming.ingest",
-    "streaming.pipelines",
-    "streaming.stateful",
 }
 
 

@@ -218,6 +218,39 @@ def test_segment_dedup_matches_reference(spark, docs_tokens):
     assert got == want
 
 
+def test_repetition_signals(spark):
+    """Gopher-style repetition ratios (r07): duplicate lines and duplicate
+    non-distinct n-grams, crafted cases with hand-computed expectations."""
+    from crossbar_data_process_spark.functions.text import (
+        duplicate_line_ratio,
+        duplicate_ngram_ratio,
+    )
+
+    rows = [
+        # 4 non-blank lines, 'menu' twice -> 1 dup / 4
+        (1, "menu\nhome\n\nmenu\nabout"),
+        # 'a b c' x2: grams of 'a b c a b c' = [abc, bca, cab, abc] -> 1/4
+        (2, "a b c a b c"),
+        (3, "x y"),          # shorter than n=3 -> 0.0
+        (4, ""),             # empty -> 0.0
+        (5, "all distinct words here now"),  # no repeats -> 0.0
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r.doc_id: (r.dl, r.dg)
+        for r in df.select(
+            "doc_id",
+            duplicate_line_ratio("text").alias("dl"),
+            duplicate_ngram_ratio("text", n=3).alias("dg"),
+        ).collect()
+    }
+    assert got[1][0] == 0.25
+    assert got[2][1] == 0.25
+    assert got[3] == (0.0, 0.0)
+    assert got[4] == (0.0, 0.0)
+    assert got[5] == (0.0, 0.0)
+
+
 def test_explode_tokens_matches_oracle(spark):
     """Explode + token aggregation (the former q14 registry row, folded out
     in r08 for q62_snapshot_diff — REGISTRY.md): the former DuckDB oracle
@@ -308,7 +341,7 @@ def test_min_cost_supplier_matches_oracle(spark):
 
 def test_asof_single_table_matches_oracle(spark):
     """Single-table as-of (the former q48 registry row, folded out in r09
-    for q64_streaming_ingest — REGISTRY.md): the former DuckDB oracle
+    for q64, since retired — REGISTRY.md): the former DuckDB oracle
     lives on here. The as-of FAMILY stays registry-oracled via
     q57_asof_two_table's native ASOF LEFT JOIN oracle."""
     import duckdb
@@ -437,10 +470,10 @@ def test_ann_lsh_matches_oracle(spark):
 def test_connected_components_matches_oracle(spark):
     """Connected components over region-cliques (the former q31 registry
     row, folded out in r11 — REGISTRY.md): the former DuckDB oracle lives
-    on here verbatim. The iterative min-label component family stays
-    registry-oracled via the recursive component walk composed in q64
-    (text LSH pair graph); the standalone q53 form is pinned below in
-    test_neardup_resolve_matches_oracle (folded out r15)."""
+    on here verbatim. The iterative min-label component family is also
+    checked by the recursive component walk of the q53 oracle, pinned
+    below in test_neardup_resolve_matches_oracle (folded out r15), and
+    by kgbench's graph invariants."""
     import duckdb
 
     from crossbar_data_process_spark.plans.queries import (
@@ -551,8 +584,9 @@ def test_cosine_topk_matches_oracle(spark):
 def test_neardup_resolve_matches_oracle(spark):
     """Near-dup resolution (the former q53 registry row, folded out in
     r15 — REGISTRY.md): the recursive min-label component oracle lives
-    on here verbatim (_neardup_resolve_oracle), and the walk itself stays
-    registry-oracled, composed in q64's text oracle."""
+    on here verbatim (_neardup_resolve_oracle). With q64 retired, this
+    test and test_connected_components_matches_oracle are where the walk
+    is checked."""
     import duckdb
 
     from crossbar_data_process_spark.plans.queries import (

@@ -39,22 +39,7 @@ def _canon(df):
     return sorted(rows)
 
 
-# Oracles whose DUCKDB side alone runs for minutes (q64's recursive
-# jaccard walk + NULL-aware NOT INs plan to ~2 min at sf0.001 — measured
-# r17; the oracle text is a declared-query identity and cannot change).
-# The driver's own t2 gate re-runs these against the same oracle every
-# round, so the local replay is opt-in (slow marker) rather than a cost
-# every CI run pays.
-_SLOW_ORACLES = {"q64_streaming_ingest"}
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        pytest.param(n, marks=pytest.mark.slow) if n in _SLOW_ORACLES else n
-        for n in sorted(ORACLES.keys())
-    ],
-)
+@pytest.mark.parametrize("name", sorted(ORACLES.keys()))
 def test_query_matches_oracle(spark, name):
     con = duckdb.connect()
     register_views(con, SF_DIR)

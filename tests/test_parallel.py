@@ -1,6 +1,6 @@
 """``parallel.run_concurrently``: jobs started inside its pool threads
-belong to the caller's job group, so per-group job counts (the ingest
-per-batch pins, kgbench's traced layers) see the concurrent writes."""
+belong to the caller's job group, so per-group job counts (kgbench's
+traced layers) see the concurrent writes."""
 
 from __future__ import annotations
 

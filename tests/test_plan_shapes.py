@@ -50,8 +50,8 @@ def test_registry_size_is_pinned():
     otherwise only fail at run time, as a KeyError)."""
     from crossbar_data_process_spark.plans.queries import BENCH_QUERIES, ORACLES
 
-    assert len(QUERIES) == 35, sorted(QUERIES)
-    assert len(BENCH_QUERIES) == 19, BENCH_QUERIES
+    assert len(QUERIES) == 34, sorted(QUERIES)
+    assert len(BENCH_QUERIES) == 18, BENCH_QUERIES
     assert set(ORACLES) <= set(QUERIES)
     assert set(BENCH_QUERIES) <= set(QUERIES), sorted(
         set(BENCH_QUERIES) - set(QUERIES)

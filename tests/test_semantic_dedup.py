@@ -131,8 +131,8 @@ def test_partition_invariance(spark, corpus, cents):
 
 def test_zero_vector_does_not_abort_ansi(spark, cents):
     """ANSI mode: a zero-norm embedding must yield NULL cosine (paired
-    with nothing), never DIVIDE_BY_ZERO (r10 review — in the streaming
-    dedup sink that exception wedges the stream on every replay)."""
+    with nothing), never DIVIDE_BY_ZERO, which aborts the whole job
+    (r10 review)."""
     rows = [
         (1, [1.0] * DIM),
         (2, [1.0] * DIM),          # near-dup of 1
